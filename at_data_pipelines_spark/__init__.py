@@ -18,8 +18,9 @@ pipeline stack) re-expressed Spark-first:
 - ``pipelines`` — the reference's daily flows re-expressed as Spark jobs.
 - ``streaming`` — Structured Streaming ops over the events table.
 - ``llmops``    — LLM-training-data operators: dedup (exact/MinHash-LSH/
-                  SimHash/Jaccard/embedding), similarity search, text
-                  analysis, multimodal column plumbing.
+                  SimHash/Jaccard/embedding), exact similarity search and
+                  the IVF-PQ index, BM25, sampling, chunking, text
+                  analysis.
 - ``queries``   — the registry of driver-checkable queries with DuckDB
                   oracle SQL (the correctness gate).
 

@@ -769,6 +769,17 @@ def _hive_rel(keys: list[str], vals) -> str:
     return "/".join(f"{k}={_escape_partition_value(v)}" for k, v in zip(keys, vals))
 
 
+def _sql_ident(name: str) -> str:
+    """Spark SQL quoted identifier: a literal backtick is doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _col(name: str) -> "F.Column":
+    """Column by its exact name: quoted, so a backtick or dot inside a
+    user column name is not parsed as SQL."""
+    return F.col(_sql_ident(name))
+
+
 def _uri_unquote(s: str) -> str:
     """Strip the URI percent-encoding layer off a path derived from
     ``_metadata.file_path`` (r13 review find — a verified wrong answer):
@@ -3533,7 +3544,7 @@ class Lakehouse:
             if self._fast_insert(name, meta, df, mode, properties, before):
                 return
         declared = meta.schema
-        cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in declared.fields]
+        cols = [_col(f.name).cast(f.dataType).alias(f.name) for f in declared.fields]
         seq = self._reserve_seq(name, meta)
         token = self._write_seq(name, meta, df.select(*cols), seq)
         if token is not None:
@@ -3628,14 +3639,14 @@ class Lakehouse:
         rels = list(rels)
         keys = meta.partition_keys
         if len(keys) == 1 and rels:
-            k = keys[0]
+            k = _col(keys[0])
             vals = [_unescape_partition_value(r.partition("=")[2]) for r in rels]
             present = [v for v in vals if v is not None]
             cond = None
             if present:
-                cond = F.col(k).cast("string").isin(present)
+                cond = k.cast("string").isin(present)
             if len(present) < len(vals):  # a null/empty sentinel dir
-                nullc = F.col(k).isNull() | (F.col(k).cast("string") == F.lit(""))
+                nullc = k.isNull() | (k.cast("string") == F.lit(""))
                 cond = nullc if cond is None else (cond | nullc)
             return cond
 
@@ -3648,8 +3659,9 @@ class Lakehouse:
         for rel in rels:
             comps = []
             for comp in rel.split("/"):
+                # Spark hive-escapes key names in directory names too
                 k, _, raw = comp.partition("=")
-                comps.append((k, _unescape_partition_value(raw)))
+                comps.append((_unescape_partition_value(k), _unescape_partition_value(raw)))
             if (
                 len(comps) == len(keys)
                 and all(k == mk for (k, _), mk in zip(comps, keys))
@@ -3662,13 +3674,15 @@ class Lakehouse:
         if plain_tuples:
             lhs = (
                 "named_struct("
-                + ", ".join(f"'{k}', cast(`{k}` as string)" for k in keys)
+                + ", ".join(
+                    f"{_sql_str(k)}, cast({_sql_ident(k)} as string)" for k in keys
+                )
                 + ")"
             )
             lits = ", ".join(
                 "named_struct("
                 + ", ".join(
-                    f"'{k}', {_sql_str(v)}" for k, v in zip(keys, tup)
+                    f"{_sql_str(k)}, {_sql_str(v)}" for k, v in zip(keys, tup)
                 )
                 + ")"
                 for tup in plain_tuples
@@ -3679,9 +3693,9 @@ class Lakehouse:
             for k, v in comps:
                 if v is None:
                     # null and empty string share the sentinel directory
-                    c = F.col(k).isNull() | (F.col(k).cast("string") == F.lit(""))
+                    c = _col(k).isNull() | (_col(k).cast("string") == F.lit(""))
                 else:
-                    c = F.col(k).cast("string") == F.lit(v)
+                    c = _col(k).cast("string") == F.lit(v)
                 cond = cond & c
             conds.append(cond)
         while len(conds) > 1:  # balanced OR fold: depth O(log n)
@@ -5842,7 +5856,7 @@ class Lakehouse:
         snapshots, logical reads — shares this one window so the tie
         rule can never drift between them. Input must carry ``_seq``;
         it is preserved in the output."""
-        w = W.partitionBy(*primary_keys).orderBy(F.desc(_SEQ_COL))
+        w = W.partitionBy(*map(_col, primary_keys)).orderBy(F.desc(_SEQ_COL))
         return (
             df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
@@ -6419,10 +6433,10 @@ class Lakehouse:
             # Delta OPTIMIZE ZORDER gives, for the single-key-prefix case.
             cluster = list(meta.partition_keys) + list(meta.primary_keys)
             out = (
-                out.repartition(*[F.col(k) for k in meta.partition_keys])
+                out.repartition(*map(_col, meta.partition_keys))
                 if meta.partition_keys
                 else out
-            ).sortWithinPartitions(*cluster)
+            ).sortWithinPartitions(*map(_col, cluster))
         else:
             # compact(): no PK to cluster by — AQE-rebalance so a skewed
             # hive partition splits into advisory-sized files instead of

@@ -1,14 +1,17 @@
 """LLM-training-data operators (north-star extension, BASELINE.json).
 
-- ``dedup``      — exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding
-                   cosine near-dup.
-- ``similarity`` — brute-force cosine top-k (exact baseline) and
-                   random-hyperplane LSH ANN (scale path).
+- ``dedup``      — exact, MinHash+LSH, SimHash, n-gram Jaccard, duplicate
+                   n-gram spans, connected-component clustering.
+- ``similarity`` — exact cosine top-k and threshold join, plus the IVF-PQ
+                   quantizer behind ``ann_index``.
+- ``ann_index``  — the lakehouse-persisted IVF-PQ index the streaming ANN
+                   sink maintains.
 - ``text``       — tokenization, quality scoring, language-ID heuristic,
-                   fingerprinting.
-- ``multimodal`` — binary media columns with typed metadata; decode /
-                   feature plumbing via mapInPandas (codecs stubbed —
-                   not in this container).
+                   repetition and decontamination metrics.
+- ``retrieval``  — BM25 ranked retrieval.
+- ``sampling``   — deterministic hash-threshold splits and mixtures.
+- ``packing``    — overlapping document chunking.
+- ``curate``     — the curation funnel behind the ``curate`` CLI command.
 """
 
-from . import ann_index, curate, dedup, multimodal, quality, sampling, similarity, text  # noqa: F401
+from . import ann_index, curate, dedup, sampling, similarity, text  # noqa: F401

@@ -20,7 +20,7 @@ corpus stay versioned together under the same commit protocol.
 
 Scale: probes read ``{prefix}_codes`` — a partition-prunable scan of m
 small ints per vector instead of d floats — and the few-KB quantizer
-state is closure-broadcast exactly as in ``similarity.ivfpq_topk``.
+state is closure-broadcast into ``similarity.ivfpq_probe``.
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ from dataclasses import dataclass
 import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import Lakehouse

@@ -35,13 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 
-def hash64(col: Column, seed: int | None = None) -> Column:
-    """Deterministic 60-bit positive int64 hash of a string column
-    (md5 hex prefix). Engine-independent, unlike murmur/xxhash."""
-    s = col if seed is None else F.concat(F.lit(f"{seed}:"), col)
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-
-
 def hash32(col: Column) -> Column:
     """32-bit variant (for SimHash bit sampling)."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
@@ -561,8 +554,8 @@ def connected_components(
     join/agg plans and Catalyst re-optimization cost (and driver heap)
     grows superlinearly — measured as a driver OOM near round ~10 on a
     plain 1 GiB driver. Checkpointing cuts the lineage so every round
-    plans against a leaf. For graphs DEEPER than ``max_iter`` rounds use
-    ``connected_components_star`` (O(log²) rounds by contraction).
+    plans against a leaf. Graphs DEEPER than ``max_iter`` rounds raise
+    rather than return a split labeling.
     """
     bi = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -598,110 +591,9 @@ def connected_components(
         # under-dedup with no signal — refuse instead
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds the iteration budget); raise "
-            "max_iter or use connected_components_star (O(log^2) rounds)"
+            "(component diameter exceeds the iteration budget); raise max_iter"
         )
     return labels.select(F.col("node").alias(node_col), F.col("label").alias("cluster"))
-
-
-def connected_components_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    node_col: str = "id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — O(log² n) rounds regardless of component DIAMETER, vs the
-    O(diameter) of min-label propagation (``connected_components``).
-
-    Per round (each a groupBy + join on uniform node keys):
-
-    - **large-star**: every node points its LARGER neighbors at the
-      minimum of its closed neighborhood — E' = {(v, m(u)) : v ∈ Γ(u),
-      v > u}, m(u) = min(Γ(u) ∪ {u});
-    - **small-star**: edges oriented big→small, every node and its
-      smaller neighbors all point at the neighborhood minimum.
-
-    Fixpoint = star graphs whose centers are the component minima (the
-    same unique labeling min-label converges to). Convergence is
-    detected by (count, hash-sum) stability of the canonical edge set;
-    each round is ``localCheckpoint``-ed so the plan/lineage stays flat
-    across iterations — at cluster scale a 30-round nested plan is an
-    optimizer blowup, not just a recompute risk.
-
-    Use this over ``connected_components`` when components can be DEEP
-    (transitive chains of pairwise near-dups, entity-resolution graphs);
-    for shallow near-dup clusters min-label converges in fewer shuffles.
-    """
-    e = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-    def signature(df: DataFrame) -> tuple[int, int]:
-        r = (
-            df.select(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"))
-            .distinct()
-            .agg(
-                F.count("*").alias("n"),
-                # sum the 64-bit hashes in decimal(38,0): a long sum would
-                # overflow, which ANSI mode turns into a runtime error
-                F.coalesce(
-                    F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")), F.lit(0)
-                ).alias("h"),
-            )
-            .collect()[0]
-        )
-        return int(r.n), int(r.h)
-
-    def large_star(df: DataFrame) -> DataFrame:
-        bi = df.unionByName(df.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = bi.groupBy("u").agg(F.min("v").alias("_mn"))
-        mins = mins.select("u", F.least("_mn", F.col("u")).alias("m"))
-        return (
-            bi.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def small_star(df: DataFrame) -> DataFrame:
-        oriented = df.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        pointed = (
-            oriented.join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(mins.select("u", F.col("m").alias("v")))
-        )
-        return pointed.filter(F.col("u") != F.col("v")).distinct()
-
-    e = e.localCheckpoint(eager=True)
-    sig = signature(e)
-    for _ in range(max_iter):
-        e = small_star(large_star(e)).localCheckpoint(eager=True)
-        new_sig = signature(e)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    # fixpoint stars: u → center (v is the component min on every edge)
-    labels = e.groupBy("u").agg(F.min("v").alias("cluster")).select(
-        F.col("u").alias("node"), "cluster"
-    )
-    return (
-        nodes.select(F.col(node_col).alias("node"))
-        .join(labels, "node", "left")
-        .select(
-            F.col("node").alias(node_col),
-            F.coalesce(F.col("cluster"), F.col("node")).alias("cluster"),
-        )
-    )
 
 
 def dedup_clusters(
@@ -784,57 +676,6 @@ def simhash_near_dups(
         cand.withColumn("hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
-    )
-
-
-def paragraph_dedup(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    sep: str = "\n\n",
-    min_chars: int = 0,
-) -> DataFrame:
-    """Paragraph-granular exact dedup and reassembly — the C4/RefinedWeb
-    repeated-boilerplate removal move: split every document on ``sep``,
-    keep only the FIRST occurrence of each distinct paragraph corpus-wide
-    (lowest ``id_col``, then position — a total order, so the survivor
-    set is deterministic), and rebuild each document from its surviving
-    paragraphs in original order. Documents whose paragraphs all lose
-    disappear from the output. ``min_chars`` exempts short paragraphs
-    (headers, list markers) from dedup — they survive in place.
-
-    Scale shape: one posexplode (map-side), one md5-hash shuffle for the
-    first-occurrence window — the same uniform-digest groupBy plan as
-    exact_dedup — and one groupBy(id) to reassemble. No skew beyond
-    genuinely viral paragraphs, which the hash shuffle spreads by
-    paragraph, not by document."""
-    # F.split takes a REGEX; the rejoin emits the separator literally —
-    # quote it so metachar separators ('. ', '|', '***') split on the
-    # literal string they rejoin with
-    import re as _re
-
-    parts = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), _re.escape(sep))).alias("pos", "para"),
-    )
-    w = W.partitionBy(F.md5(F.col("para"))).orderBy(F.col(id_col), F.col("pos"))
-    exempt = F.length(F.col("para")) < F.lit(min_chars)
-    kept = parts.withColumn("_rn", F.row_number().over(w)).filter(
-        (F.col("_rn") == 1) | exempt
-    )
-    return (
-        kept.groupBy(id_col)
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("pos"), F.col("para")))
-                    ),
-                    lambda s: s["para"],
-                ),
-                sep,
-            ).alias(text_col)
-        )
     )
 
 
@@ -961,44 +802,4 @@ def duplicate_ngram_spans(
         ).alias("spans"),
         F.count("*").alias("n_spans"),
         F.sum(F.col("span_end") - F.col("span_start")).alias("dup_tokens"),
-    )
-
-
-def strip_duplicate_ngrams(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 8
-) -> DataFrame:
-    """Exact substring dedup, removal half: cut every duplicated span
-    EXCEPT its canonical first occurrence (``mark="keep_first"``), so each
-    repeated passage survives exactly once corpus-wide. Documents whose
-    tokens are all duplicated drop out of the output entirely (their text
-    would be empty).
-
-    Rebuild is a left join of spans back onto the token arrays, then a
-    pure-codegen filter: keep token i unless some span covers it. The
-    per-row cost is O(tokens × spans) inside whole-stage codegen — spans
-    per doc are few, and no Python touches the hot path.
-    """
-    spans = duplicate_ngram_spans(df, text_col, id_col, n, mark="keep_first")
-    toks = df.select(
-        F.col(id_col),
-        F.col(text_col).alias("_orig"),
-        _ws_tokens(F.col(text_col)).alias("_w"),
-    )
-    joined = toks.join(spans.select(id_col, "spans"), id_col, "left")
-    idx = F.sequence(F.lit(1), F.size("_w"))
-    keep = F.filter(
-        idx,
-        lambda i: ~F.exists(
-            F.col("spans"),
-            lambda s: (i - 1 >= s["span_start"]) & (i - 1 < s["span_end"]),
-        ),
-    )
-    # untouched docs keep their ORIGINAL text byte-for-byte (no silent
-    # whitespace normalization); only docs that actually lost a span are
-    # rebuilt from their surviving tokens, and rebuilt-to-empty docs drop
-    rebuilt = F.when(F.col("spans").isNull(), F.col("_orig")).otherwise(
-        F.concat_ws(" ", F.transform(keep, lambda i: F.element_at(F.col("_w"), i)))
-    )
-    return joined.select(F.col(id_col), rebuilt.alias(text_col)).where(
-        F.col("spans").isNull() | (F.length(text_col) > 0)
     )

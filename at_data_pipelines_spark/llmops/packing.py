@@ -1,122 +1,12 @@
-"""Sequence packing: bin documents into fixed-token-budget training
-sequences (the pre-tokenization packing step of an LLM training run —
-short documents share a sequence, so padding waste stays low).
-
-Packing is inherently order-dependent (a greedy packer is sequential),
-which does not distribute naively. The shape here:
-
-1. documents get a DETERMINISTIC pseudo-random order key
-   (``xxhash64(id, salt)``) and an explicit bin
-   (``pmod(key, n_bins)`` — a pure column function of the data, never
-   ``spark_partition_id``, whose value after a range partition depends
-   on sampled bounds and cluster size) — every bin holds a
-   statistically similar length mix, and the layout is a function of
-   (corpus, salt, n_bins) only;
-2. each bin packs ITS documents greedily (first-fit in hash order)
-   inside one ``applyInPandas`` group — sequential where it must be,
-   parallel across bins, zero coordination between sequences of
-   different bins;
-3. sequence ids are globally unique by construction:
-   ``bin·2⁴⁰ + local_seq``.
-
-Documents longer than the budget get a single-document sequence with
-``overflow = true`` (the caller decides truncate/split — that is a
-tokenizer-level policy, not an engine one).
-
-Determinism: same corpus + salt + n_bins ⇒ bit-identical packing on any
-cluster and any input file layout (bin and order are both pure column
-functions of the row). Efficiency: greedy first-fit over hash order
-lands ~85-95% fill at typical budgets (asserted in tests against a
-floor, not an exact value — fill depends on the length distribution).
+"""Document chunking for retrieval indexing: split long documents into
+fixed-width overlapping character windows (q70). Pure codegen, no
+shuffle.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_SEQ_STRIDE = 1 << 40
-
-
-def pack_sequences(
-    df: DataFrame,
-    max_tokens: int,
-    id_col: str = "doc_id",
-    n_tokens_col: str | None = None,
-    text_col: str = "text",
-    n_bins: int | None = None,
-    salt: str = "pack-v1",
-) -> DataFrame:
-    """Assign every document to a packed sequence: returns
-    ``(id, seq_id, pos, n_tokens, overflow)`` where ``pos`` is the
-    document's position within its sequence and sequences respect
-    ``Σ n_tokens ≤ max_tokens`` (unless a single document overflows).
-
-    ``n_tokens_col`` names a precomputed token-count column; when None,
-    whitespace token counts are derived from ``text_col``.
-    """
-    # constant default so the layout does not depend on cluster size;
-    # 256 bins keeps per-bin state small while leaving plenty of
-    # parallelism (raise for very large corpora — layout changes with it)
-    bins = n_bins or 256
-    n_tok = (
-        F.col(n_tokens_col)
-        if n_tokens_col
-        else F.size(F.split(F.col(text_col), " "))
-    )
-    order_key = F.xxhash64(F.col(id_col), F.lit(salt))
-    keyed = df.select(
-        F.col(id_col),
-        n_tok.cast("long").alias("n_tokens"),
-        order_key.alias("_ord"),
-        F.pmod(order_key, F.lit(bins)).cast("int").alias("_pid"),
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_ord", kind="mergesort")
-        pid = int(pdf["_pid"].iloc[0]) if len(pdf) else 0
-        seq_base = pid * _SEQ_STRIDE
-        out_seq, out_pos, out_over = [], [], []
-        cur_seq, cur_fill, cur_pos = 0, 0, 0
-        for n in pdf["n_tokens"]:
-            n = int(n)
-            if n > max_tokens:
-                # oversized doc: its own flagged sequence; current fill
-                # resets so the next doc opens a fresh sequence
-                cur_seq += 1
-                out_seq.append(seq_base + cur_seq)
-                out_pos.append(0)
-                out_over.append(True)
-                cur_fill, cur_pos = 0, 0
-                continue
-            if cur_fill == 0 or cur_fill + n > max_tokens:
-                cur_seq += 1
-                cur_fill, cur_pos = 0, 0
-            out_seq.append(seq_base + cur_seq)
-            out_pos.append(cur_pos)
-            out_over.append(False)
-            cur_fill += n
-            cur_pos += 1
-        res = pd.DataFrame(
-            {
-                id_col: pdf[id_col].to_numpy(),
-                "n_tokens": pdf["n_tokens"].to_numpy(),
-                "seq_id": pd.array(out_seq, dtype="int64"),
-                "pos": pd.array(out_pos, dtype="int32"),
-                "overflow": pd.array(out_over, dtype="bool"),
-            }
-        )
-        return res
-
-    # pass the id through with its INPUT type — corpora with string/UUID
-    # ids are first-class everywhere else in llmops
-    id_dt = df.schema[id_col].dataType.simpleString()
-    out_schema = (
-        f"{id_col} {id_dt}, n_tokens long, seq_id long, pos int, overflow boolean"
-    )
-    return keyed.groupBy("_pid").applyInPandas(pack, out_schema)
 
 
 def chunk_documents(
@@ -127,8 +17,7 @@ def chunk_documents(
     text_col: str = "text",
 ) -> DataFrame:
     """Fixed-width overlapping character chunks — the retrieval-prep
-    sibling of ``pack_sequences`` (packing joins short docs for
-    TRAINING; chunking splits long docs for INDEXING/RAG). Chunk i of a
+    split of long documents for INDEXING/RAG. Chunk i of a
     document covers ``[i·s, i·s + chunk_chars)`` with stride
     ``s = chunk_chars - overlap``; the last chunk is the first one
     whose window reaches the end, so every character is covered and

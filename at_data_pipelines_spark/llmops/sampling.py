@@ -56,17 +56,6 @@ def deterministic_split(
     return df.withColumn(out_col, label)
 
 
-def sample_fraction(
-    df: DataFrame,
-    frac: float,
-    id_col: str = "doc_id",
-    salt: str = "sample-v1",
-) -> DataFrame:
-    """Deterministic ~frac sample. Nesting: ``sample_fraction(f1)`` ⊆
-    ``sample_fraction(f2)`` whenever f1 ≤ f2 (same salt)."""
-    return df.filter(_bucket(id_col, salt) < int(frac * _M))
-
-
 def stratified_sample(
     df: DataFrame,
     fractions: dict[str, float],
@@ -115,34 +104,6 @@ def mixture_fractions(
     return {s: min(1.0, w * t / counts[s]) for s, w in weights.items()}
 
 
-def cap_per_key(
-    df: DataFrame,
-    max_rows: int,
-    key_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "cap-v1",
-) -> DataFrame:
-    """Keep at most ``max_rows`` documents per key (domain caps in web
-    curation — no single site may dominate the corpus). Selection is a
-    deterministic per-key hash order (``xxhash64(id, salt)``), so the
-    kept set is stable across runs and partitionings, and growing other
-    keys never changes this key's winners.
-
-    One window over a hash shuffle on the key; heavy keys are exactly
-    the ones being capped, and row_number short-circuits nothing — for
-    corpora where single keys are shuffle-hostile, pre-filter with
-    ``sample_fraction`` first.
-    """
-    from pyspark.sql.window import Window as W
-
-    w = W.partitionBy(key_col).orderBy(_bucket(id_col, salt), F.col(id_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_rows)
-        .drop("_rn")
-    )
-
-
 def mixture_sample(
     df: DataFrame,
     target_weights: dict[str, float],
@@ -174,22 +135,6 @@ def temperature_weights(
     raw = {s: float(n) ** temperature for s, n in counts.items()}
     z = sum(raw.values())
     return {s: w / z for s, w in raw.items()}
-
-
-def temperature_mixture_sample(
-    df: DataFrame,
-    temperature: float,
-    strata_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "mixture-v1",
-) -> DataFrame:
-    """Resample to the temperature-flattened mixture, downsampling only
-    (the largest-T-no-upsampling construction of ``mixture_fractions``):
-    over-represented sources shrink toward the flattened target while
-    the rarest source is kept whole."""
-    return mixture_sample(
-        df, temperature_weights(df, temperature, strata_col), strata_col, id_col, salt
-    )
 
 
 def weighted_sample(

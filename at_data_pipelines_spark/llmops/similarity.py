@@ -1,16 +1,14 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths:
-
-- **Exact baseline** (``cosine_topk``): brute-force cosine via JVM-side
+- **Exact top-k** (``cosine_topk``, q48): brute-force cosine via JVM-side
   sequential fold (``zip_with`` + ``aggregate``) — deterministic,
   oracle-matchable, stays in codegen. Cost O(|queries| × |corpus| × d):
   right when the query set is small/broadcastable.
-- **Scale paths**: ``cosine_topk_arrow`` — Arrow-batched numpy matmul
-  (vectorized, ~10-100× the fold path, fp-reassociated so not
-  bit-deterministic); ``ann_hyperplane_topk`` — random-hyperplane LSH
-  bucketing + exact re-rank, turning all-pairs into per-bucket work the
-  way IVF/LSH indexes do.
+- **Exact threshold join** (``cosine_threshold_pairs_blocked``, q49):
+  all pairs with cosine ≥ t as a blocked distributed GEMM.
+- **IVF-PQ index** (``ivfpq_train`` / ``ivfpq_encode`` / ``ivfpq_probe``):
+  the approximate index that ``ann_index`` persists and the streaming
+  ANN sink maintains.
 """
 
 from __future__ import annotations
@@ -60,45 +58,6 @@ def cosine_topk(
     pairs = c.crossJoin(F.broadcast(q)).filter(F.col("neighbor_id") != F.col("query_id"))
     cos = dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))
     ranked = pairs.select("query_id", "neighbor_id", cos.alias("cosine")).withColumn(
-        "rank",
-        F.row_number().over(
-            W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-        ),
-    )
-    return ranked.filter(F.col("rank") <= k)
-
-
-def cosine_topk_arrow(
-    corpus: DataFrame,
-    query_vecs: np.ndarray,
-    query_ids: np.ndarray,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Vectorized brute-force top-k: numpy matmul per Arrow batch, then a
-    global top-k reduce. The bench/production path (not bit-deterministic)."""
-    qm = np.asarray(query_vecs, dtype=np.float64)
-    qm = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-    qids = np.asarray(query_ids)
-    out_schema = "query_id long, neighbor_id long, cosine double"
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
-            sims = m @ qm.T  # (batch, nq)
-            nids = pdf[id_col].to_numpy()
-            top = min(k + 1, len(nids))
-            part = np.argpartition(-sims, top - 1, axis=0)[:top]
-            rows = []
-            for j in range(qm.shape[0]):
-                for i in part[:, j]:
-                    rows.append((int(qids[j]), int(nids[i]), float(sims[i, j])))
-            yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cosine"])
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
-    ranked = partial.filter(F.col("neighbor_id") != F.col("query_id")).withColumn(
         "rank",
         F.row_number().over(
             W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -208,57 +167,6 @@ def cosine_threshold_pairs_blocked(
     )
 
 
-def embedding_near_dups_lsh(
-    corpus: DataFrame,
-    threshold: float,
-    n_planes: int = 4,
-    n_tables: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate-candidate cosine threshold self-join: multi-table
-    hyperplane-LSH buckets (OR-amplified) generate candidate pairs via
-    per-(table, bucket) equi-joins; the exact fold cosine verifies.
-
-    Probabilistic recall (a pair missed by every table is lost —
-    p_miss = (1 − p₁^planes)^tables), so this is the PRODUCTION
-    near-dup path for the high-similarity regime where p₁ is large, not
-    the exact contract (``cosine_threshold_pairs_blocked``). The seeded
-    default (4 planes × 16 tables) finds 100% of ≥0.45 pairs on the
-    test fixture — asserted by the recall test, not assumed.
-    """
-    from functools import reduce
-
-    dim = len(corpus.select(vec_col).first()[0])
-    parts = []
-    for t in range(n_tables):
-        bkt = hyperplane_buckets(corpus, n_planes, seed + 1000 * t, id_col, vec_col, dim)
-        parts.append(bkt.select(F.col(id_col), F.lit(t).alias("table"), "bucket"))
-    tabs = reduce(DataFrame.unionByName, parts)
-    a_t, b_t = tabs.alias("a"), tabs.alias("b")
-    cand = (
-        a_t.join(
-            b_t,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    emb = corpus.select(F.col(id_col), F.col(vec_col))
-    a = emb.select(F.col(id_col).alias("id_a"), _as_double(vec_col).alias("ea"))
-    b = emb.select(F.col(id_col).alias("id_b"), _as_double(vec_col).alias("eb"))
-    cos = dot(F.col("ea"), F.col("eb")) / (norm(F.col("ea")) * norm(F.col("eb")))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
 def _train_sample_vectors(
     corpus: DataFrame, vec_col: str, n: int, seed: int
 ) -> np.ndarray:
@@ -300,86 +208,6 @@ def kmeans_fit(vectors: np.ndarray, k: int, iters: int = 20, seed: int = 42) -> 
     return C
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    train_sample: int = 2048,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF approximate top-k: k-means coarse quantizer → corpus assigned to
-    its nearest centroid (one list per centroid) → each query probes its
-    ``n_probe`` nearest lists → exact cosine re-rank on the probed union.
-
-    Scale shape: assignment is one Arrow pass (numpy matmul per batch);
-    the probe join is an equi-join on centroid id (uniform-ish keys);
-    recall/cost dial = n_probe/n_centroids. This is the learned-structure
-    counterpart of ``ann_hyperplane_topk`` — better when the corpus
-    actually clusters.
-    """
-    sample = _train_sample_vectors(corpus, vec_col, train_sample, seed)
-    C = kmeans_fit(sample, n_centroids, seed=seed)
-
-    def assign_factory(top_m: int):
-        def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                M = M / np.linalg.norm(M, axis=1, keepdims=True)
-                sims = M @ C.T
-                order = np.argsort(-sims, axis=1)[:, :top_m]
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].to_numpy().repeat(top_m),
-                        vec_col: [v for v in pdf[vec_col] for _ in range(top_m)],
-                        "centroid": order.ravel(),
-                    }
-                )
-
-        return assign
-
-    # derive the pass-through types from the INPUT schemas: pinning
-    # array<float> would silently truncate an array<double> corpus and
-    # perturb the "exact" re-rank cosines (~1e-7 — enough to swap
-    # near-tied neighbors), and pinning a long id would crash string ids
-    def _schema_for(df: DataFrame) -> str:
-        idt = df.schema[id_col].dataType.simpleString()
-        vdt = df.schema[vec_col].dataType.simpleString()
-        return f"{id_col} {idt}, {vec_col} {vdt}, centroid long"
-
-    cassign = corpus.select(id_col, vec_col).mapInPandas(
-        assign_factory(1), _schema_for(corpus)
-    )
-    qassign = queries.select(id_col, vec_col).mapInPandas(
-        assign_factory(n_probe), _schema_for(queries)
-    )
-
-    cb = cassign.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("ce_raw"), "centroid"
-    )
-    qb = qassign.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe_raw"), "centroid"
-    )
-    pairs = (
-        cb.join(F.broadcast(qb), "centroid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    qe = F.col("qe_raw").cast("array<double>")
-    ce = F.col("ce_raw").cast("array<double>")
-    cos = dot(qe, ce) / (norm(qe) * norm(ce))
-    ranked = pairs.select("query_id", "neighbor_id", cos.alias("cosine")).withColumn(
-        "rank",
-        F.row_number().over(
-            W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-        ),
-    )
-    return ranked.filter(F.col("rank") <= k)
-
-
 def pq_fit(
     vectors: np.ndarray, m: int = 8, k: int = 16, iters: int = 15, seed: int = 42
 ) -> np.ndarray:
@@ -407,151 +235,6 @@ def pq_fit(
                     C[c] = members.mean(axis=0)
         books[j] = C
     return books
-
-
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Encode each vector as its per-subspace nearest-centroid codes —
-    one Arrow pass, output (id, codes array<int>): m small ints instead
-    of d floats, the compressed representation the ADC scan reads."""
-    m, k, dsub = codebooks.shape
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            X = X / np.linalg.norm(X, axis=1, keepdims=True)
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for j in range(m):
-                sub = X[:, j * dsub : (j + 1) * dsub]
-                d2 = ((sub[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "codes": list(codes)}
-            )
-
-    return corpus.select(id_col, vec_col).mapInPandas(enc, f"{id_col} long, codes array<int>")
-
-
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    codebooks: np.ndarray,
-    topk: int = 10,
-    n_candidates: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k via PQ asymmetric distance computation (ADC) +
-    exact cosine re-rank.
-
-    Scan stage: per Arrow batch of ENCODED corpus rows, each query
-    builds an (m, k) table of squared distances from its subvectors to
-    every centroid once, then a corpus vector's approximate distance is
-    m table lookups summed — no float vector is read in the scan. The
-    ``n_candidates`` best per (query, batch) survive to a global
-    per-query top-``n_candidates`` reduce, and only those join back to
-    the original vectors for the exact order-deterministic cosine
-    re-rank (same verify expression as everywhere else).
-
-    Recall dial = n_candidates/topk; compression = m·log2(k) bits per
-    vector vs 32·d."""
-    m, k, dsub = codebooks.shape
-    q = queries.select(F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qe"))
-    qrows = q.collect()
-    qids = np.array([r.query_id for r in qrows])
-    Q = np.array([r.qe for r in qrows], dtype=np.float64)
-    Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    # per-query distance tables (nq, m, k), built once on the driver
-    tables = np.empty((len(Q), m, k))
-    for j in range(m):
-        sub = Q[:, j * dsub : (j + 1) * dsub]
-        tables[:, j, :] = ((sub[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(axis=2)
-
-    enc = pq_encode(corpus, codebooks, id_col, vec_col)
-
-    def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            codes = np.stack(pdf["codes"].to_numpy())  # (b, m)
-            nids = pdf[id_col].to_numpy()
-            # dist[row, q] = Σ_j tables[q, j, codes[row, j]] — one gather
-            # per subspace (m is small; a fused fancy-index is not clearer
-            # and easy to get wrong)
-            dist = np.zeros((len(nids), len(qids)))
-            for j in range(m):
-                dist += tables[:, j, codes[:, j]].T
-            keep = min(n_candidates, len(nids))
-            part = np.argpartition(dist, keep - 1, axis=0)[:keep]
-            rows = []
-            for qi in range(len(qids)):
-                for r in part[:, qi]:
-                    rows.append((int(qids[qi]), int(nids[r]), float(dist[r, qi])))
-            yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "adc"])
-
-    partial = enc.mapInPandas(adc, "query_id long, neighbor_id long, adc double")
-    cand = (
-        partial.filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                W.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-            ),
-        )
-        .filter(F.col("rank") <= n_candidates)
-        .select("query_id", "neighbor_id")
-    )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("ce"))
-    cos = dot(F.col("qe"), F.col("ce")) / (norm(F.col("qe")) * norm(F.col("ce")))
-    return (
-        cand.join(c, "neighbor_id")
-        .join(q, "query_id")
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-            ),
-        )
-        .filter(F.col("rank") <= topk)
-    )
-
-
-def ivfpq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    topk: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    m: int = 8,
-    k: int = 16,
-    n_candidates: int = 100,
-    train_sample: int = 2048,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF+PQ — the production billion-scale ANN composition (FAISS
-    IVFPQ): a coarse k-means quantizer routes vectors into inverted
-    lists, vectors are stored as PQ codes of their RESIDUAL from the
-    list centroid (residuals are smaller and better centered than raw
-    vectors, so the same code budget quantizes finer), and a query scans
-    only its ``n_probe`` nearest lists via ADC lookups before an exact
-    re-rank of the candidate budget.
-
-    Scale shape: one Arrow pass assigns+encodes the corpus (per-row
-    centroid argmax + m subspace argmins); the probe is an equi-join on
-    centroid id; the ADC scan reads codes only; the exact fold-cosine
-    re-rank touches ``n_candidates`` real vectors per query. Training
-    state (centroids + codebooks) is a few KB broadcast in closures.
-    """
-    C, books = ivfpq_train(corpus, n_centroids, m, k, train_sample, seed, vec_col)
-    enc = ivfpq_encode(corpus, C, books, id_col, vec_col)
-    return ivfpq_probe(
-        enc, corpus, queries, C, books, topk, n_probe, n_candidates, id_col, vec_col
-    )
 
 
 def ivfpq_train(
@@ -689,192 +372,3 @@ def ivfpq_probe(
         )
         .filter(F.col("rank") <= topk)
     )
-
-
-def semantic_dedup_pairs(
-    corpus: DataFrame,
-    threshold: float,
-    n_clusters: int = 16,
-    train_sample: int = 2048,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """SemDeDup-style semantic near-dup pairs (Abbas et al. 2023,
-    arXiv:2303.09540): k-means cluster the embedding space, then find
-    cosine-≥-threshold pairs ONLY within each cluster — the production
-    semantic-dedup recipe for web-scale corpora, where the exact
-    threshold join (``cosine_threshold_pairs_blocked``) is unaffordable.
-
-    Semantics are the published method's: a qualifying pair split across
-    two clusters is NOT reported (that approximation is the entire cost
-    model — candidate work drops from O(n²) to Σ|cluster|²). Pick
-    ``n_clusters ≈ n / target_cluster_size`` so each per-cluster GEMM
-    task fits an executor; a corpus that collapses into one giant
-    cluster is the known failure mode of the method itself, not of this
-    plan. Reported cosines come from the same order-deterministic
-    JVM-side fold verify as every other pair operator here.
-
-    Shape: one driver k-means on a sample (tiny), one Arrow assignment
-    pass, one shuffle on cluster id, per-cluster numpy GEMM, broadcast
-    fold-cosine verify. No all-pairs join anywhere.
-    """
-    sample = _train_sample_vectors(corpus, vec_col, train_sample, seed)
-    C = kmeans_fit(sample, n_clusters, seed=seed)
-    lo_t = float(threshold) - 1e-9
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            M = M / np.linalg.norm(M, axis=1, keepdims=True)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    # float64 passthrough: an array<float> schema here
-                    # would truncate double-typed source embeddings, and
-                    # the candidate GEMM could then miss pairs within
-                    # ~1e-7 of the threshold that the exact verify join
-                    # (which reads the original column) would accept
-                    vec_col: [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]],
-                    "cluster": (M @ C.T).argmax(axis=1),
-                }
-            )
-
-    keyed = corpus.select(id_col, vec_col).mapInPandas(
-        assign, f"{id_col} long, {vec_col} array<double>, cluster long"
-    )
-
-    def gemm(pdf: pd.DataFrame) -> pd.DataFrame:
-        M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        M = M / np.linalg.norm(M, axis=1, keepdims=True)
-        ids = pdf[id_col].to_numpy()
-        ii, jj = np.nonzero(np.triu(M @ M.T >= lo_t, k=1))
-        ia, ib = ids[ii], ids[jj]
-        a_first = ia <= ib
-        return pd.DataFrame(
-            {
-                "id_a": np.where(a_first, ia, ib),
-                "id_b": np.where(a_first, ib, ia),
-            }
-        )
-
-    cand = keyed.groupBy("cluster").applyInPandas(gemm, "id_a long, id_b long")
-    a = corpus.select(F.col(id_col).alias("id_a"), _as_double(vec_col).alias("ea"))
-    b = corpus.select(F.col(id_col).alias("id_b"), _as_double(vec_col).alias("eb"))
-    cos = dot(F.col("ea"), F.col("eb")) / (norm(F.col("ea")) * norm(F.col("eb")))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
-def semantic_dedup(
-    corpus: DataFrame,
-    threshold: float,
-    n_clusters: int = 16,
-    train_sample: int = 2048,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """SemDeDup keep-list: collapse each within-cluster semantic
-    near-dup group to its min-id representative. Returns the corpus rows
-    that survive (same columns as the input)."""
-    from .dedup import connected_components
-
-    pairs = semantic_dedup_pairs(
-        corpus, threshold, n_clusters, train_sample, seed, id_col, vec_col
-    )
-    comps = connected_components(
-        corpus.select(id_col), pairs.select("id_a", "id_b"), id_col
-    )
-    reps = comps.filter(F.col(id_col) == F.col("cluster")).select(id_col)
-    return corpus.join(reps, id_col, "left_semi")
-
-
-def hyperplane_buckets(
-    df: DataFrame,
-    n_planes: int = 12,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Sign-of-projection LSH bucket per vector (deterministic seed).
-
-    The plane matrix is tiny (n_planes × d) and closure-captured; the
-    bucket id is built JVM-side from fold dot-products.
-    """
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    e = _as_double(vec_col)
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        arr = F.array([F.lit(float(x)) for x in p])
-        bucket = bucket + F.when(dot(e, arr) > 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return df.select(F.col(id_col), F.col(vec_col), bucket.alias("bucket"))
-
-
-def ann_hyperplane_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_planes: int = 3,
-    n_tables: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k via multi-table hyperplane LSH (OR-amplification):
-    candidates = corpus vectors sharing the query's bucket in ANY of
-    ``n_tables`` independent tables; exact cosine re-rank on the candidate
-    union. Recall/cost dial: more planes → smaller buckets (cheaper, lower
-    recall); more tables → higher recall (more candidates).
-
-    Scale shape: each table is an equi-join on (table, bucket) — a hash
-    shuffle with uniform keys; the blob never moves more than once per
-    table. For genuinely clustered embeddings a learned IVF (k-means
-    coarse quantizer) beats data-oblivious LSH — same join shape on
-    centroid id."""
-    from functools import reduce
-
-    dim = len(corpus.select(vec_col).first()[0])
-
-    def tables(df: DataFrame, out_id: str, vec_alias: str) -> DataFrame:
-        parts = []
-        for t in range(n_tables):
-            b = hyperplane_buckets(df, n_planes, seed + 1000 * t, id_col, vec_col, dim)
-            parts.append(
-                b.select(
-                    F.col(id_col).alias(out_id),
-                    F.col(vec_col).alias(vec_alias),
-                    F.lit(t).alias("table"),
-                    "bucket",
-                )
-            )
-        return reduce(DataFrame.unionByName, parts)
-
-    cb = tables(corpus, "neighbor_id", "ce_raw")
-    qb = tables(queries, "query_id", "qe_raw")
-    pairs = (
-        cb.join(F.broadcast(qb), ["table", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", "qe_raw", "ce_raw")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    qe = F.col("qe_raw").cast("array<double>")
-    ce = F.col("ce_raw").cast("array<double>")
-    cos = dot(qe, ce) / (norm(qe) * norm(ce))
-    ranked = pairs.select("query_id", "neighbor_id", cos.alias("cosine")).withColumn(
-        "rank",
-        F.row_number().over(
-            W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-        ),
-    )
-    return ranked.filter(F.col("rank") <= k)

@@ -1,5 +1,5 @@
 """Text analysis operators: tokenization, quality scoring, language ID,
-fingerprinting. All built-in-function expressions (JVM-side, codegen) —
+PII redaction. All built-in-function expressions (JVM-side, codegen) —
 no Python in the hot path."""
 
 from __future__ import annotations
@@ -21,10 +21,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 def tokens(text_col: str | Column) -> Column:
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.split(c, " ")
-
-
-def token_count(text_col: str | Column) -> Column:
-    return F.size(tokens(text_col))
 
 
 # BPE-ish pre-tokenization: letter runs, digit runs, single non-alnum marks
@@ -240,15 +236,3 @@ def unigram_logprob_score(
     return scored.groupBy(id_col).agg(
         F.avg("_lp").alias("mean_logprob"), F.count("*").alias("n_scored_tokens")
     )
-
-
-def content_fingerprint(text_col: str | Column = "text") -> Column:
-    """Full-content digest (exact-dedup key)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.md5(c)
-
-
-def prefix_fingerprint(text_col: str | Column = "text", n_tokens: int = 5) -> Column:
-    """Digest of the first n tokens — cheap near-dup candidate key."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.md5(F.array_join(F.slice(F.split(c, " "), 1, n_tokens), " "))

@@ -1,7 +1,7 @@
 """Distributed PageRank by power iteration over an edge DataFrame.
 
 The companion of the dedup pipeline's connected components
-(llmops/dedup.py: min-label + large/small-star contraction) for rank-
+(llmops/dedup.py: min-label propagation) for rank-
 style graph analytics — e.g. scoring documents by citation/link
 structure when curating a corpus, the original use of the algorithm
 (Page et al. 1999).

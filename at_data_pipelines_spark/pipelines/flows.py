@@ -485,8 +485,16 @@ def _run_stage_groups(groups: list[list[tuple[str, object]]], clock=None) -> Non
     benchmark). With one writer per table the lakehouse commits never
     conflict; concurrent commits to DISTINCT tables are independent
     manifests (the protocol tests drive the harder same-table case).
-    Exceptions propagate from the failing stage exactly as in the
-    sequential order. ``clock(name, fn)`` wraps each stage for the
+
+    Failure is NOT sequential-equivalent. A failing stage cancels
+    nothing: its siblings in the same group still run to the end and
+    commit their tables. Once the group drains, the first failing stage
+    in submission order raises (a second failure in the same group is
+    not reported), and later groups never start. A rerun of the whole
+    DAG converges, because every stage writes by PK upsert and
+    re-committing the siblings' rows is idempotent.
+
+    ``clock(name, fn)`` wraps each stage for the
     bench's per-stage breakdown — with overlap the per-stage walls sum
     to more than the group wall (each clock measures its own span)."""
     from concurrent.futures import ThreadPoolExecutor

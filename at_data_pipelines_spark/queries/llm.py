@@ -452,8 +452,7 @@ def q42_quality_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
 #        NOT used here: at t=0.45 on near-isotropic embeddings the LSH
 #        exponent is ρ≈0.62 (p₁≈0.65 vs p₂=0.5 per hyperplane bit), so any
 #        affordable table count leaves a miss probability that would break
-#        the exact oracle contract; the probabilistic path lives in
-#        llmops.similarity.embedding_near_dups_lsh with a recall test.
+#        the exact oracle contract.
 # --------------------------------------------------------------------------
 @register(
     "q49_embedding_near_dups",

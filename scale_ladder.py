@@ -366,20 +366,6 @@ def main() -> None:
     spark = get_spark(app_name="scale_ladder")
     out: dict = {}
 
-    def ann_ivf_top5(spark_, sf_dir):
-        """The approximate counterpart of q48 — same 20 queries / top-5,
-        through the IVF quantizer + probe path instead of the exact scan,
-        so the ladder shows the ANN scale path's growth next to the
-        exact baseline's."""
-        from pyspark.sql import functions as F
-
-        from at_data_pipelines_spark.io import load_table
-        from at_data_pipelines_spark.llmops.similarity import ivf_topk
-
-        emb = load_table(spark_, sf_dir, "embeddings")
-        queries = emb.filter(F.col("vec_id") < 20)
-        return ivf_topk(emb, queries, 5, n_centroids=16, n_probe=4)
-
     def q46_persist(spark_, sf_dir):
         """q46 under the persist_shingles strategy (the documented
         large-corpus opt-in): one cached ranked-shingle materialization
@@ -430,7 +416,6 @@ def main() -> None:
     if "queries" in sections:
         _section_control(spark, out, "queries")
         callables = {q: QUERIES[q] for q in LADDER_QUERIES}
-        callables["ann_ivf_top5"] = ann_ivf_top5
         if args.only:
             keep = set(args.only.split(","))
             unknown = keep - set(callables)

@@ -500,6 +500,36 @@ def test_rel_filter_survives_thousands_of_dirty_partitions(spark, tmp_path):
     assert got == [("", 0.2), ("x7", 0.1)]
 
 
+def test_upsert_with_quote_and_backtick_partition_key(spark, tmp_path):
+    """Partition-key NAMES reach the multi-key dirty-partition predicate
+    as SQL text: a key holding a backtick and a single quote must be
+    quoted as an identifier and as a struct field name, not spliced in
+    raw. Several dirty partitions force the struct-IN shape, and
+    ``hint="large"`` keeps the upserts off the driver-side fast path
+    (which never builds the predicate)."""
+    key = "re`gi'on"
+    schema = T.StructType(
+        [
+            T.StructField("id", T.IntegerType()),
+            T.StructField("year", T.IntegerType()),
+            T.StructField(key, T.StringType()),
+            T.StructField("v", T.DoubleType()),
+        ]
+    )
+    lake = Lakehouse(spark, str(tmp_path / "lake"))
+    lake.create("t", schema, ["year", key], ["id", "year", key])
+    first = [(i, 2020 + i % 3, f"r{i % 2}", float(i)) for i in range(12)]
+    lake.upsert("t", spark.createDataFrame(first, schema), hint="large")
+    second = [(i, 2020 + i % 3, f"r{i % 2}", 100.0 + i) for i in range(0, 12, 2)]
+    second += [(20, 2021, "r0", 7.0)]
+    lake.upsert("t", spark.createDataFrame(second, schema), hint="large")
+
+    want = {(i, y, r): v for i, y, r, v in first}
+    want.update({(i, y, r): v for i, y, r, v in second})
+    got = {(r["id"], r["year"], r[key]): r["v"] for r in lake.table("t").collect()}
+    assert got == want
+
+
 def test_compact_zorder_layout_on_pkless_table(lake, spark):
     """compact(zorder_by=...) lays a PK-less table out Morton-ordered
     with per-file zone maps, preserving every row — the re-clustering

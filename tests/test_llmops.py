@@ -1,6 +1,6 @@
 """Behavioral tests for the LLM-data operators (beyond oracle parity):
-does MinHash-LSH actually find the planted near-dups, does ANN recall
-hold, does the multimodal plumbing move binary batches correctly."""
+does MinHash-LSH actually find the planted near-dups, does IVF-PQ recall
+hold, does the persisted ANN index probe like the in-memory one."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from at_data_pipelines_spark.io import load_table
-from at_data_pipelines_spark.llmops import dedup, multimodal, similarity, text
+from at_data_pipelines_spark.llmops import dedup, similarity, text
 
 
 def test_minhash_recovers_high_jaccard_pairs(spark, sf_dir):
@@ -168,37 +168,6 @@ def test_jaccard_accepts_lsh_candidates(spark, sf_dir):
     assert via_lsh == exact
 
 
-def test_star_cc_matches_minlabel_and_handles_deep_chains(spark):
-    """large-star/small-star CC must agree with min-label propagation on a
-    random graph, and must converge on a 200-node PATH — diameter 200,
-    where min-label's default 25 rounds cannot finish (the deep-component
-    case star contraction exists for)."""
-    import random
-
-    rng = random.Random(3)
-    nodes = spark.createDataFrame([(i,) for i in range(120)], ["id"])
-    edges = spark.createDataFrame(
-        [(rng.randrange(120), rng.randrange(120)) for _ in range(90)], ["id_a", "id_b"]
-    ).filter("id_a != id_b")
-    via_min = {
-        (r.id, r.cluster)
-        for r in dedup.connected_components(nodes, edges, "id").collect()
-    }
-    via_star = {
-        (r.id, r.cluster)
-        for r in dedup.connected_components_star(nodes, edges, "id").collect()
-    }
-    assert via_star == via_min
-
-    chain_nodes = spark.createDataFrame([(i,) for i in range(200)], ["id"])
-    chain_edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(199)], ["id_a", "id_b"]
-    )
-    got = dedup.connected_components_star(chain_nodes, chain_edges, "id").collect()
-    assert all(r.cluster == 0 for r in got)  # one component, min label 0
-    assert len(got) == 200
-
-
 def test_repetition_metrics_known_values(spark):
     from at_data_pipelines_spark.llmops.text import repetition_metrics
 
@@ -264,55 +233,6 @@ def test_blocked_gemm_threshold_join_is_exact(spark, sf_dir):
             ).collect()
         }
         assert got == want, f"n_blocks={n_blocks}"
-
-
-def test_embedding_lsh_near_dups_full_recall_on_fixture(spark, sf_dir):
-    """The seeded LSH-candidate path must find 100% of the >=0.45 pairs on
-    the fixture (the verify stage makes precision exact, so full recall
-    means set equality with the exact blocked join)."""
-    from at_data_pipelines_spark.llmops.similarity import (
-        cosine_threshold_pairs_blocked,
-        embedding_near_dups_lsh,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    exact = {
-        (r.id_a, r.id_b, r.cosine)
-        for r in cosine_threshold_pairs_blocked(emb, 0.45, n_blocks=4).collect()
-    }
-    via_lsh = {
-        (r.id_a, r.id_b, r.cosine)
-        for r in embedding_near_dups_lsh(emb, 0.45).collect()
-    }
-    assert via_lsh == exact
-
-
-def test_ann_recall_vs_brute_force(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = similarity.cosine_topk(emb, queries, k=5)
-    approx = similarity.ann_hyperplane_topk(emb, queries, k=5, n_planes=3, n_tables=8)
-    e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
-    a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    # synthetic embeddings are near-isotropic (NN cosine ≈ 0.37 over a ~0
-    # background), so LSH signal is weak; 8 tables × 3 planes still has to
-    # clearly beat the ~65% candidate-fraction baseline
-    assert recall >= 0.7, f"ANN recall too low: {recall}"
-
-
-def test_arrow_topk_matches_fold_topk(spark, sf_dir):
-    import numpy as np
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).collect()
-    qv = np.array([r.embedding for r in q])
-    qi = np.array([r.vec_id for r in q])
-    fast = similarity.cosine_topk_arrow(emb, qv, qi, k=5)
-    exact = similarity.cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=5)
-    f = {(r.query_id, r.neighbor_id) for r in fast.collect()}
-    e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
-    assert f == e  # same neighbors (scores fp-differ, ranking identical)
 
 
 def test_curate_corpus_funnel(spark, sf_dir):
@@ -393,20 +313,6 @@ def test_dedup_clusters_group_planted_dups(spark, sf_dir):
     assert len(cl) == d.count()
 
 
-def test_ivf_topk_recall(spark, sf_dir):
-    from pyspark.sql import functions as F2
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F2.col("vec_id") < 10)
-    exact = similarity.cosine_topk(emb, queries, k=5)
-    # near-isotropic data: probe half the lists for meaningful recall
-    approx = similarity.ivf_topk(emb, queries, k=5, n_centroids=8, n_probe=4)
-    e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
-    a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.5, f"IVF recall too low: {recall}"
-
-
 def test_bpe_tokens(spark):
     from at_data_pipelines_spark.llmops.text import bpe_tokens
     from pyspark.sql import functions as F2
@@ -428,235 +334,6 @@ def test_quality_features_and_langid(spark):
     assert feats[1].stopword_ratio > 0.4
     langs = {r.doc_id: r.lang_pred for r in text.langid(df).collect()}
     assert langs[1] == "en" and langs[2] == "de" and langs[3] == "und"
-
-
-def test_multimodal_decode_plumbing(spark):
-    rows = [
-        (1, "image", multimodal.make_fake_image(640, 480, 3, b"x" * 100), ("s3", "fake")),
-        (2, "image", multimodal.make_fake_image(32, 32, 1), ("s3", "fake")),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    feats = {r.media_id: r for r in multimodal.decode_image_meta(df).collect()}
-    assert feats[1].width == 640 and feats[1].height == 480 and feats[1].mode == "RGB"
-    assert feats[1].payload_bytes == 13 + 100
-    assert feats[2].mode == "L"
-    kept = multimodal.filter_by_min_resolution(
-        multimodal.decode_image_meta(df), 100, 100
-    ).collect()
-    assert [r.media_id for r in kept] == [1]
-
-
-def test_multimodal_real_codec_stubbed(spark):
-    # genuinely unsupported container (GIF) must refuse honestly, and a
-    # truncated/corrupt JPEG must error rather than return garbage
-    df = spark.createDataFrame(
-        [(1, "image", b"GIF89a" + b"0" * 50, ("s3", "image/gif"))],
-        multimodal.MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception, match="NotImplementedError|not available"):
-        multimodal.decode_image_meta(df).collect()
-    corrupt = spark.createDataFrame(
-        [(1, "image", b"\xff\xd8\xff\xe0" + b"0" * 50, ("s3", "image/jpeg"))],
-        multimodal.MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception):
-        multimodal.decode_image_meta(corrupt).collect()
-
-
-def test_png_roundtrip_all_filters():
-    """PNG encode → decode is the identity on pixels for gray and RGB,
-    with every scanline filter type (None/Sub/Up/Average/Paeth) exercised
-    via the encoder's row_filters knob; unsupported variants refuse."""
-    import numpy as np
-
-    rng = np.random.default_rng(13)
-    rgb = rng.integers(0, 256, size=(9, 7, 3), dtype=np.uint8)
-    gray = rng.integers(0, 256, size=(6, 11), dtype=np.uint8)
-    for px, mode in [(rgb, "RGB"), (gray, "L")]:
-        for filters in (None, [1], [2], [3], [4], [0, 1, 2, 3, 4]):
-            buf = multimodal.encode_png(px, row_filters=filters)
-            w, h, m, out = multimodal.decode_image(buf)
-            assert (w, h, m) == (px.shape[1], px.shape[0], mode), filters
-            assert np.array_equal(out, px), f"filters={filters} mode={mode}"
-    # 16-bit depth is outside the supported subset — must refuse, not garble
-    buf = bytearray(multimodal.encode_png(gray))
-    depth_off = buf.index(b"IHDR") + 4 + 8
-    buf[depth_off] = 16
-    with pytest.raises(NotImplementedError, match="PNG variant"):
-        multimodal.decode_image(bytes(buf))
-
-
-def test_png_embedding_matches_bmp_at_cosine_one(spark):
-    """The same pixels in PNG and BMP containers must produce the
-    identical pixel-derived embedding (cosine exactly 1): decode →
-    embed → ANN is container-invariant."""
-    import numpy as np
-
-    rng = np.random.default_rng(17)
-    img = rng.integers(0, 256, size=(24, 32, 3), dtype=np.uint8)
-    other = rng.integers(0, 256, size=(24, 32, 3), dtype=np.uint8)
-    media = spark.createDataFrame(
-        [
-            (1, "image", multimodal.encode_bmp(img), ("s", "image/bmp")),
-            (2, "image", multimodal.encode_png(img, row_filters=[0, 1, 2, 3, 4]),
-             ("s", "image/png")),
-            (3, "image", multimodal.encode_png(other), ("s", "image/png")),
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    vecs = {
-        r.media_id: np.array(r.embedding, dtype=np.float64)
-        for r in multimodal.extract_embeddings(media, dim=64).collect()
-    }
-    assert np.array_equal(vecs[1], vecs[2]), "same pixels → identical embedding"
-    assert float(vecs[1] @ vecs[3]) < 0.9
-    meta = {r.media_id: (r.width, r.height, r.mode)
-            for r in multimodal.decode_image_meta(media).collect()}
-    assert meta[2] == (32, 24, "RGB")
-
-
-def test_bmp_ppm_roundtrip():
-    """Pure codec check: encode → decode is the identity on pixels for
-    every supported raster variant."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    rgb = rng.integers(0, 256, size=(5, 7, 3), dtype=np.uint8)  # odd width → stride pad
-    gray = rng.integers(0, 256, size=(4, 6), dtype=np.uint8)
-    for enc, px, mode in [
-        (multimodal.encode_bmp, rgb, "RGB"),
-        (multimodal.encode_bmp, gray, "L"),
-        (multimodal.encode_ppm, rgb, "RGB"),
-        (multimodal.encode_ppm, gray, "L"),
-    ]:
-        w, h, m, out = multimodal.decode_image(enc(px))
-        assert (w, h, m) == (px.shape[1], px.shape[0], mode)
-        assert np.array_equal(out, px)
-
-
-def test_real_format_decode_filter_embed_ann(spark):
-    """End-to-end on REAL bytes: BMP/PPM payloads → decode_image_meta →
-    resolution filter → pixel-based extract_embeddings → ANN. The same
-    image re-encoded in a different container format must land at
-    cosine ≈ 1, an unrelated image must not."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    img_a = rng.integers(0, 256, size=(24, 32, 3), dtype=np.uint8)
-    img_b = rng.integers(0, 256, size=(24, 32, 3), dtype=np.uint8)
-    tiny = rng.integers(0, 256, size=(4, 4), dtype=np.uint8)
-    media = spark.createDataFrame(
-        [
-            (1, "image", multimodal.encode_bmp(img_a), ("s", "image/bmp")),
-            (2, "image", multimodal.encode_ppm(img_a), ("s", "image/x-ppm")),  # re-encode of 1
-            (3, "image", multimodal.encode_ppm(img_b), ("s", "image/x-ppm")),
-            (4, "image", multimodal.encode_bmp(tiny), ("s", "image/bmp")),  # below min res
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    feats = {r.media_id: r for r in multimodal.decode_image_meta(media).collect()}
-    assert (feats[1].width, feats[1].height, feats[1].mode) == (32, 24, "RGB")
-    assert feats[4].mode == "L"
-    kept_ids = {
-        r.media_id
-        for r in multimodal.filter_by_min_resolution(
-            multimodal.decode_image_meta(media), 16, 16
-        ).collect()
-    }
-    assert kept_ids == {1, 2, 3}
-    kept = media.join(
-        spark.createDataFrame([(i,) for i in sorted(kept_ids)], ["media_id"]), "media_id"
-    )
-    emb = multimodal.extract_embeddings(kept)
-    pairs = {
-        (r.id_a, r.id_b): r.cosine
-        for r in similarity.cosine_threshold_pairs_blocked(
-            emb, threshold=0.99, n_blocks=2, id_col="media_id", vec_col="embedding"
-        ).collect()
-    }
-    assert set(pairs) == {(1, 2)}  # same pixels, different container
-    assert pairs[(1, 2)] == pytest.approx(1.0)
-
-
-def test_wav_decode_meta(spark):
-    """RIFF PCM decode: header fields, duration and RMS from real bytes;
-    stereo and mono; compressed audio refuses."""
-    import numpy as np
-
-    t = np.arange(16000)
-    mono = (np.sin(2 * np.pi * 440 * t / 16000) * 20000).astype(np.int16)
-    stereo = np.stack([mono, np.zeros_like(mono)], axis=1)
-    media = spark.createDataFrame(
-        [
-            (1, "audio", multimodal.encode_wav_pcm16(mono, 16000), ("s", "audio/wav")),
-            (2, "audio", multimodal.encode_wav_pcm16(stereo, 8000), ("s", "audio/wav")),
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    feats = {r.media_id: r for r in multimodal.decode_audio_meta(media).collect()}
-    assert feats[1].channels == 1 and feats[1].sample_rate == 16000
-    assert feats[1].duration_s == pytest.approx(1.0)
-    # sine RMS ≈ amplitude/√2 = (20000/32768)/1.414 ≈ 0.432
-    assert feats[1].rms == pytest.approx(0.4316, abs=0.01)
-    assert feats[2].channels == 2 and feats[2].duration_s == pytest.approx(2.0)
-    with pytest.raises(Exception, match="NotImplementedError|RIFF"):
-        bad = spark.createDataFrame(
-            [(9, "audio", b"ID3\x04" + b"0" * 40, ("s", "audio/mpeg"))],
-            multimodal.MEDIA_SCHEMA,
-        )
-        multimodal.decode_audio_meta(bad).collect()
-
-
-def test_frame_sampling(spark):
-    frames = spark.createDataFrame(
-        [(1, i) for i in range(30)], ["video_id", "frame_idx"]
-    )
-    kept = multimodal.sample_frames(frames, every_n=10).collect()
-    assert sorted(r.frame_idx for r in kept) == [0, 10, 20]
-
-
-def test_multimodal_embeddings_feed_ann(spark):
-    """extract_embeddings output plugs straight into the similarity layer:
-    duplicate payloads land at cosine 1.0, and vectors are payload-
-    deterministic across calls."""
-    media = spark.createDataFrame(
-        [
-            (1, "image", multimodal.make_fake_image(64, 64, payload=b"cat"), ("s", "m")),
-            (2, "image", multimodal.make_fake_image(64, 64, payload=b"dog"), ("s", "m")),
-            (3, "image", multimodal.make_fake_image(64, 64, payload=b"cat"), ("s", "m")),  # dup of 1
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    emb = multimodal.extract_embeddings(media)
-    again = {r.media_id: list(r.embedding) for r in multimodal.extract_embeddings(media).collect()}
-    first = {r.media_id: list(r.embedding) for r in emb.collect()}
-    assert first == again  # payload-deterministic stub
-    pairs = similarity.cosine_threshold_pairs_blocked(
-        emb, threshold=0.99, n_blocks=2, id_col="media_id", vec_col="embedding"
-    ).collect()
-    assert {(r.id_a, r.id_b) for r in pairs} == {(1, 3)}
-    assert pairs[0].cosine == pytest.approx(1.0)
-
-
-def test_chunk_audio_roundtrip(spark):
-    """Chunks must cover the payload exactly: concat in chunk order equals
-    the original bytes, all JVM-side."""
-    payloads = [
-        (1, "audio", b"x" * 100 + b"y" * 150, ("s", "m")),   # 250 B -> 3 chunks of 100
-        (2, "audio", b"ab", ("s", "m")),                      # shorter than one chunk
-        (3, "audio", b"", ("s", "m")),                        # empty payload -> zero chunks
-    ]
-    media = spark.createDataFrame(payloads, multimodal.MEDIA_SCHEMA)
-    chunks = multimodal.chunk_audio(media, chunk_bytes=100)
-    rows = chunks.collect()
-    by_id = {}
-    for r in sorted(rows, key=lambda r: (r.media_id, r.chunk_idx)):
-        by_id.setdefault(r.media_id, b"")
-        by_id[r.media_id] += bytes(r.chunk)
-    assert by_id[1] == b"x" * 100 + b"y" * 150
-    assert by_id[2] == b"ab"
-    assert 3 not in by_id  # empty payload contributes no chunk rows
-    assert max(len(bytes(r.chunk)) for r in rows) <= 100
 
 
 def test_unigram_logprob_score_reference(spark):
@@ -702,32 +379,6 @@ def test_redact_pii_known_strings(spark):
         assert got[i] == want, (i, got[i])
 
 
-def test_pq_adc_recall_and_compression(spark, sf_dir):
-    """PQ codes + ADC scan + exact re-rank: recall@10 against brute force
-    rises with the candidate budget (0.96 measured at 200 on this
-    fixture's near-isotropic vectors — the hard case for ANN), and the
-    encoding is m small codes per vector."""
-    import numpy as np
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    sample = np.stack([r[0] for r in emb.select("embedding").limit(500).collect()])
-    books = similarity.pq_fit(sample, m=8, k=16)
-    assert books.shape == (8, 16, sample.shape[1] // 8)
-    codes = similarity.pq_encode(emb, books).collect()
-    assert all(len(r.codes) == 8 and max(r.codes) < 16 for r in codes[:20])
-
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.cosine_topk(emb, queries, 10).collect()
-    }
-    approx = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.pq_topk(emb, queries, books, topk=10, n_candidates=200).collect()
-    }
-    assert len(exact & approx) / len(exact) >= 0.9
-
-
 def test_curate_corpus_redact_and_lm_floor(spark, sf_dir):
     from at_data_pipelines_spark.llmops.curate import curate_corpus
 
@@ -755,12 +406,14 @@ def test_ivfpq_recall_rises_with_probe_budget(spark, sf_dir):
         (r.query_id, r.neighbor_id)
         for r in similarity.cosine_topk(emb, queries, 10).collect()
     }
+    C, books = similarity.ivfpq_train(emb, n_centroids=16)
+    enc = similarity.ivfpq_encode(emb, C, books)
     recalls = []
     for n_probe in (4, 16):
         a = {
             (r.query_id, r.neighbor_id)
-            for r in similarity.ivfpq_topk(
-                emb, queries, 10, n_centroids=16, n_probe=n_probe, n_candidates=100
+            for r in similarity.ivfpq_probe(
+                enc, emb, queries, C, books, 10, n_probe=n_probe, n_candidates=100
             ).collect()
         }
         recalls.append(len(exact & a) / len(exact))
@@ -887,133 +540,11 @@ def test_ann_index_quantizer_only_save_clears_stale_codes(spark, sf_dir, tmp_pat
     assert reloaded.centroids.shape == new.centroids.shape
 
 
-def test_semantic_dedup_within_cluster(spark, sf_dir):
-    """SemDeDup: planted near-identical embeddings collapse; reported
-    pairs are a subset of the exact threshold join (the cross-cluster
-    misses are the method's documented approximation); the keep-list
-    drops exactly one of each planted pair."""
-    import numpy as np
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").limit(200)
-    base = emb.toPandas()
-    rng = np.random.default_rng(3)
-    clones = []
-    for i, (vid, vec) in enumerate(zip(base.vec_id[:5], base.embedding[:5])):
-        v = np.array(vec, dtype=np.float32)
-        v = v + rng.normal(0, 1e-4, size=len(v)).astype(np.float32)  # ≈ dup
-        clones.append((int(1_000_000 + i), [float(x) for x in v]))
-    corpus = emb.unionByName(
-        spark.createDataFrame(clones, "vec_id long, embedding array<float>")
-    )
-    sem = {
-        (r.id_a, r.id_b)
-        for r in similarity.semantic_dedup_pairs(
-            corpus, threshold=0.95, n_clusters=8, seed=42
-        ).collect()
-    }
-    exact = {
-        (r.id_a, r.id_b)
-        for r in similarity.cosine_threshold_pairs_blocked(
-            corpus, threshold=0.95, n_blocks=4
-        ).collect()
-    }
-    assert sem <= exact  # never invents a pair
-    # a clone lands in its source's cluster (identical direction), so all
-    # planted pairs are found
-    expected = {(int(base.vec_id[i]), 1_000_000 + i) for i in range(5)}
-    assert expected <= sem
-    kept = similarity.semantic_dedup(corpus, threshold=0.95, n_clusters=8, seed=42)
-    kept_ids = {r.vec_id for r in kept.select("vec_id").collect()}
-    for a, b in expected:
-        assert (a in kept_ids) != (b in kept_ids)  # exactly one survives
-    assert kept.count() == corpus.count() - len(expected)
-
-
-def test_quality_classifier_separates_and_scales(spark):
-    """Closed-form NB over hashed tokens: train on labeled docs, score
-    held-out docs — positive-style docs must score above negative-style;
-    filter_by_quality keeps the good ones; scoring is deterministic."""
-    import random
-
-    from at_data_pipelines_spark.llmops import quality
-
-    rng = random.Random(5)
-    good_vocab = ["the", "research", "model", "data", "method", "result",
-                  "analysis", "study", "shows", "evidence"]
-    bad_vocab = ["click", "free", "winner", "casino", "pills", "xxx",
-                 "buy", "now", "limited", "offer"]
-
-    def doc(vocab, n=30):
-        return " ".join(rng.choices(vocab, k=n))
-
-    train = [(i, doc(good_vocab), 1) for i in range(40)] + [
-        (100 + i, doc(bad_vocab), 0) for i in range(40)
-    ]
-    train_df = spark.createDataFrame(train, ["doc_id", "text", "label"])
-    clf = quality.train_token_classifier(train_df)
-
-    held = [(1000 + i, doc(good_vocab)) for i in range(10)] + [
-        (2000 + i, doc(bad_vocab)) for i in range(10)
-    ]
-    held_df = spark.createDataFrame(held, ["doc_id", "text"])
-    scores = {r.doc_id: r.quality_logit
-              for r in quality.score_token_classifier(held_df, clf).collect()}
-    assert min(scores[i] for i in scores if i < 2000) > max(
-        scores[i] for i in scores if i >= 2000
-    )
-    kept = quality.filter_by_quality(held_df, clf, min_logit=0.0)
-    assert {r.doc_id for r in kept.collect()} == {i for i, _ in held if i < 2000}
-    again = {r.doc_id: r.quality_logit
-             for r in quality.score_token_classifier(held_df, clf).collect()}
-    assert scores == again  # deterministic
-
-    with pytest.raises(ValueError, match="BOTH classes"):
-        quality.train_token_classifier(
-            spark.createDataFrame([(1, "only one class", 1)], ["doc_id", "text", "label"])
-        )
-
-
-def test_quality_scores_tokenless_docs_at_prior(spark):
-    """Token-less documents (empty / whitespace-only text) must receive a
-    score row equal to the class-prior logit — and filter_by_quality must
-    keep them under a permissive min_logit instead of silently dropping
-    them (a left_semi against token-derived scores would)."""
-    import math
-
-    from at_data_pipelines_spark.llmops import quality
-
-    train = [(i, "good clean prose " * 3, 1) for i in range(10)] + [
-        (100 + i, "spam junk noise " * 3, 0) for i in range(10)
-    ]
-    clf = quality.train_token_classifier(
-        spark.createDataFrame(train, ["doc_id", "text", "label"])
-    )
-    corpus = spark.createDataFrame(
-        [(1, "good clean prose"), (2, ""), (3, "   "), (4, "spam junk")],
-        ["doc_id", "text"],
-    )
-    scores = {
-        r.doc_id: r.quality_logit
-        for r in quality.score_token_classifier(corpus, clf).collect()
-    }
-    assert set(scores) == {1, 2, 3, 4}, "every corpus doc must get a score row"
-    assert math.isclose(scores[2], clf.prior_logit, rel_tol=1e-12)
-    assert math.isclose(scores[3], clf.prior_logit, rel_tol=1e-12)
-
-    kept = {
-        r.doc_id
-        for r in quality.filter_by_quality(
-            corpus, clf, min_logit=clf.prior_logit - 1e-9
-        ).collect()
-    }
-    assert {2, 3} <= kept, "token-less docs must pass a permissive min_logit"
-    assert 4 not in kept
-
-
 def test_train_sample_is_layout_independent(spark):
     """Adversarial layout: the SAME corpus sorted by cluster (so limit(n)
     would see only one cluster's partitions) versus shuffled must yield
-    the IDENTICAL training draw — and therefore identical IVF results."""
+    the IDENTICAL training draw — and therefore an identical IVF-PQ
+    quantizer."""
     import numpy as np
 
     from at_data_pipelines_spark.llmops import similarity
@@ -1047,49 +578,10 @@ def test_train_sample_is_layout_independent(spark):
     }
     assert hit_clusters == {0, 1, 2, 3}
 
-    queries = shuffled.filter(F.col("vec_id") % 100 == 7)
-    r1 = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.ivf_topk(clustered, queries, 5, n_centroids=4).collect()
-    }
-    r2 = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.ivf_topk(shuffled, queries, 5, n_centroids=4).collect()
-    }
-    assert r1 == r2
-
-
-def test_semantic_dedup_threshold_marginal_pair_survives(spark):
-    """A pair whose cosine exceeds the threshold by ~1e-9 must be reported:
-    the candidate GEMM runs on float64 passthrough vectors (an
-    array<float> hop would perturb the cosine by ~1e-7 and could drop it
-    before the exact verify ever sees it)."""
-    import numpy as np
-
-    from at_data_pipelines_spark.llmops import similarity
-
-    threshold = 0.99
-    d = 16
-    e1 = np.zeros(d); e1[0] = 1.0
-    e2 = np.zeros(d); e2[1] = 1.0
-    cos_t = threshold + 1e-9
-    a = e1
-    b = cos_t * e1 + np.sqrt(1.0 - cos_t * cos_t) * e2
-    rng = np.random.default_rng(5)
-    filler = [
-        (100 + i, [float(x) for x in (-e1 + rng.normal(0, 0.01, size=d))])
-        for i in range(20)
-    ]
-    rows = [(1, [float(x) for x in a]), (2, [float(x) for x in b])] + filler
-    corpus = spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in similarity.semantic_dedup_pairs(
-            corpus, threshold, n_clusters=2, train_sample=64
-        ).collect()
-    }
-    assert (1, 2) in pairs
+    c1, b1 = similarity.ivfpq_train(clustered, n_centroids=4, train_sample=64)
+    c2, b2 = similarity.ivfpq_train(shuffled, n_centroids=4, train_sample=64)
+    assert np.array_equal(c1, c2)
+    assert np.array_equal(b1, b2)
 
 
 def test_shingle_cache_lifecycle(spark, sf_dir):
@@ -1119,257 +611,8 @@ def test_shingle_cache_lifecycle(spark, sf_dir):
     assert len(cached_ids() - base) == 0
 
 
-def _psnr(a, b):
-    import numpy as np
-
-    mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
-    return 10 * np.log10(255**2 / mse) if mse else 99.0
-
-
-def test_jpeg_roundtrip_variants():
-    """Baseline JPEG encode → decode at high quality reconstructs smooth
-    images faithfully (lossy codec — PSNR threshold, not equality), for
-    gray / RGB 4:4:4 / RGB 4:2:0 / restart markers / odd block-unaligned
-    sizes; unsupported progressive streams refuse honestly."""
-    import numpy as np
-    import pytest
-
-    from at_data_pipelines_spark.llmops.jpeg import decode_jpeg, encode_jpeg
-
-    gray = (np.add.outer(np.linspace(0, 200, 48), np.linspace(0, 55, 80))).astype(
-        np.uint8
-    )
-    rgb = np.stack(
-        [
-            np.add.outer(np.linspace(0, 255, 41), np.zeros(67)),
-            np.add.outer(np.zeros(41), np.linspace(0, 255, 67)),
-            np.full((41, 67), 128.0),
-        ],
-        axis=-1,
-    ).astype(np.uint8)
-
-    cases = [
-        (gray, dict(quality=90), "L", 45),
-        (rgb, dict(quality=90), "RGB", 42),
-        (rgb, dict(quality=90, subsample=True), "RGB", 35),
-        (rgb, dict(quality=90, restart_interval=3), "RGB", 42),
-        (rgb, dict(quality=90, subsample=True, restart_interval=2), "RGB", 35),
-    ]
-    for px, kw, mode, min_psnr in cases:
-        w, h, m, out = decode_jpeg(encode_jpeg(px, **kw))
-        assert (w, h, m) == (px.shape[1], px.shape[0], mode), kw
-        assert out.shape == px.shape
-        p = _psnr(px, out)
-        assert p >= min_psnr, f"{kw}: psnr {p:.1f} < {min_psnr}"
-
-    # arithmetic-coded (SOF9) still refuses instead of garbling
-    buf = bytearray(encode_jpeg(gray))
-    sof_at = buf.index(b"\xff\xc0")
-    buf[sof_at + 1] = 0xC9
-    with pytest.raises(NotImplementedError, match="SOF2"):
-        decode_jpeg(bytes(buf))
-    # a baseline stream relabeled SOF2 is malformed (a progressive DC
-    # scan cannot carry Se=63) — corrupt, not silently garbled
-    buf[sof_at + 1] = 0xC2
-    with pytest.raises(ValueError, match="Se=0"):
-        decode_jpeg(bytes(buf))
-
-
-def test_jpeg_progressive_decodes_identically_to_baseline():
-    """r6 verdict #9 (stretch): SOF2 progressive support. Baseline and
-    progressive encodes of the same image carry the SAME quantized
-    coefficients, so they must decode to IDENTICAL pixels — an exact
-    differential covering DC first+refine, AC spectral bands, EOB runs,
-    and two successive-approximation refinement rounds (the jpegtran
-    scan script), across gray/RGB, 4:4:4/4:2:0, smooth and dense-noise
-    content."""
-    import numpy as np
-
-    from at_data_pipelines_spark.llmops.jpeg import decode_jpeg, encode_jpeg
-
-    rng = np.random.default_rng(7)
-    gray = (np.add.outer(np.linspace(0, 200, 48), np.linspace(0, 55, 80))).astype(
-        np.uint8
-    )
-    noise = rng.integers(0, 256, (37, 53), dtype=np.uint8)
-    rgb = np.stack(
-        [
-            np.add.outer(np.linspace(0, 255, 41), np.zeros(67)),
-            np.add.outer(np.zeros(41), np.linspace(0, 255, 67)),
-            np.full((41, 67), 128.0),
-        ],
-        axis=-1,
-    ).astype(np.uint8)
-    rgb_noise = rng.integers(0, 256, (24, 31, 3), dtype=np.uint8)
-    cases = [
-        (gray, dict(quality=90)),
-        (noise, dict(quality=40)),  # dense coefficients: EOB runs + refinements
-        (noise, dict(quality=10)),  # sparse coefficients: long EOB runs
-        (rgb, dict(quality=90)),
-        (rgb, dict(quality=90, subsample=True)),
-        (rgb_noise, dict(quality=75, subsample=True)),
-    ]
-    for px, kw in cases:
-        base = decode_jpeg(encode_jpeg(px, **kw))
-        prog_bytes = encode_jpeg(px, progressive=True, **kw)
-        prog = decode_jpeg(prog_bytes)
-        assert base[:3] == prog[:3], kw
-        assert np.array_equal(base[3], prog[3]), f"pixel mismatch for {kw}"
-        # and it really is an SOF2 multi-scan stream
-        assert b"\xff\xc2" in prog_bytes and prog_bytes.count(b"\xff\xda") > 3
-
-    # truncation ANYWHERE keeps the ValueError contract (corrupt input
-    # must never surface as IndexError/struct.error) — sweep every cut
-    # point of a progressive stream and of a restart-interval baseline
-    # stream (the RST-consume path was a second review finding)
-    import pytest
-
-    for full in (
-        encode_jpeg(gray, progressive=True, quality=90),
-        encode_jpeg(gray, quality=90, restart_interval=2),
-    ):
-        for cut in range(2, len(full) - 1):
-            try:
-                decode_jpeg(full[:cut])
-            except (ValueError, NotImplementedError):
-                pass  # the documented contract
-    # internally-short (but seglen-consistent) segment bodies too
-    with pytest.raises(ValueError):
-        decode_jpeg(b"\xff\xd8\xff\xdd\x00\x02\xff\xd9")  # empty DRI body
-    sof = encode_jpeg(gray, quality=90)
-    sos_at = sof.index(b"\xff\xda")
-    with pytest.raises(ValueError):
-        # SOS with an empty body
-        decode_jpeg(sof[:sos_at] + b"\xff\xda\x00\x02" + b"\xff\xd9")
-
-
-def test_jpeg_decode_filter_embed_ann(spark):
-    """Real JPEG bytes through the full pipeline: decode_image sniffs the
-    SOI marker, metadata extraction and pixel embeddings run in the same
-    mapInPandas passes as the other raster formats, and a JPEG of the
-    SAME image lands nearest its PNG twin in the ANN layer (high cosine —
-    lossy codec, so not exactly 1)."""
-    import numpy as np
-
-    from at_data_pipelines_spark.llmops.jpeg import encode_jpeg
-
-    rng = np.random.default_rng(23)
-    # smooth image (JPEG-friendly): low-frequency mixture
-    yy, xx = np.mgrid[0:24, 0:32]
-    img = np.stack(
-        [
-            128 + 100 * np.sin(xx / 7.0),
-            128 + 90 * np.cos(yy / 5.0),
-            np.clip(4 * (xx + yy), 0, 255),
-        ],
-        axis=-1,
-    ).astype(np.uint8)
-    other = rng.integers(0, 256, size=(24, 32, 3), dtype=np.uint8)
-    media = spark.createDataFrame(
-        [
-            (1, "image", multimodal.encode_png(img), ("s", "image/png")),
-            (2, "image", encode_jpeg(img, quality=95), ("s", "image/jpeg")),
-            (3, "image", multimodal.encode_png(other), ("s", "image/png")),
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    meta = {
-        r.media_id: (r.width, r.height, r.mode)
-        for r in multimodal.decode_image_meta(media).collect()
-    }
-    assert meta[2] == (32, 24, "RGB")
-    vecs = {
-        r.media_id: np.array(r.embedding, dtype=np.float64)
-        for r in multimodal.extract_embeddings(media, dim=64).collect()
-    }
-    assert float(vecs[1] @ vecs[2]) > 0.99, "JPEG of same image far from its PNG twin"
-    assert float(vecs[1] @ vecs[3]) < 0.9
-
-
-def test_jpeg_review_regressions():
-    """r6 review: (a) 0xFF fill bytes before markers are legal (T.81
-    B.1.1.2) and must parse; (b) a single-component frame declaring
-    sampling factors > 1 is a NON-interleaved scan (MCU = 1 data unit,
-    raster order) and must decode identically to the 1x1 declaration;
-    (c) multi-scan baseline files refuse honestly, not KeyError."""
-    import numpy as np
-    import pytest
-
-    from at_data_pipelines_spark.llmops.jpeg import decode_jpeg, encode_jpeg
-
-    gray = (np.add.outer(np.linspace(0, 200, 40), np.linspace(0, 55, 56))).astype(
-        np.uint8
-    )
-    buf = encode_jpeg(gray, quality=90)
-    base = decode_jpeg(buf)
-
-    # (a) insert fill bytes before the DQT marker
-    dqt_at = buf.index(b"\xff\xdb")
-    padded = buf[:dqt_at] + b"\xff\xff\xff" + buf[dqt_at:]
-    w, h, m, out = decode_jpeg(padded)
-    assert (w, h, m) == base[:3]
-    assert np.array_equal(out, base[3])
-
-    # (b) patch the lone component's sampling factors to 2x2: the scan is
-    # single-component hence non-interleaved — identical pixels
-    sof_at = buf.index(b"\xff\xc0")
-    patched = bytearray(buf)
-    assert patched[sof_at + 11] == 0x11  # id, THEN hv byte
-    patched[sof_at + 11] = 0x22
-    w2, h2, m2, out2 = decode_jpeg(bytes(patched))
-    assert (w2, h2, m2) == base[:3]
-    assert np.array_equal(out2, base[3])
-
-    # (c) RGB file whose SOS names only one component => multi-scan file
-    rgb = np.dstack([gray, gray, gray])
-    rbuf = encode_jpeg(rgb, quality=90)
-    sos_at = rbuf.index(b"\xff\xda")
-    seglen = int.from_bytes(rbuf[sos_at + 2 : sos_at + 4], "big")
-    seg = rbuf[sos_at + 4 : sos_at + 2 + seglen]
-    ns = seg[0]
-    assert ns == 3
-    new_seg = bytes([1]) + seg[1:3] + seg[1 + 2 * ns :]
-    new = (
-        rbuf[:sos_at + 2]
-        + (len(new_seg) + 2).to_bytes(2, "big")
-        + new_seg
-        + rbuf[sos_at + 2 + seglen :]
-    )
-    with pytest.raises(NotImplementedError, match="multi-scan"):
-        decode_jpeg(new)
-
-
-def test_quality_classifier_unseen_tokens_push_to_minority_class(spark):
-    """r6 review: with imbalanced class token totals, a document of
-    entirely UNSEEN tokens must score the smoothed NB unseen term per
-    token (toward the smaller class), not the bare prior."""
-    import math
-
-    from at_data_pipelines_spark.llmops import quality
-
-    # positives have 10x the token mass of negatives
-    rows = [(1, "good solid prose " * 20)] * 10 + [(0, "spam junk")] * 2
-    clf = quality.train_token_classifier(
-        spark.createDataFrame(
-            [(i, y, t) for i, (y, t) in enumerate(rows)], ["doc_id", "label", "text"]
-        )
-    )
-    assert clf.unseen_log_odds < 0  # tp >> tn => unseen leans negative
-    held = spark.createDataFrame(
-        [(0, "zzz qqq vvv www"), (1, "")], ["doc_id", "text"]
-    )
-    got = {r.doc_id: r.quality_logit for r in
-           quality.score_token_classifier(held, clf).collect()}
-    # empty doc = pure prior; unseen-token doc = prior + 4 * unseen term
-    assert math.isclose(got[1], clf.prior_logit, rel_tol=1e-12)
-    assert math.isclose(
-        got[0], clf.prior_logit + 4 * clf.unseen_log_odds, rel_tol=1e-9
-    )
-    assert got[0] < got[1]
-
-
 # ---------------------------------------------------------------------------
-# exact substring dedup (duplicate_ngram_spans / strip_duplicate_ngrams)
+# exact substring dedup (duplicate_ngram_spans)
 # ---------------------------------------------------------------------------
 
 def _py_dup_spans(docs, n, mark):
@@ -1447,44 +690,6 @@ def test_duplicate_ngram_spans_keep_first_is_subset_of_all(spark, sf_dir):
     assert set(kf_rows) <= set(all_rows)
     assert all(kf_rows[i] <= all_rows[i] for i in kf_rows)
     assert all_rows, "fixture should contain duplicated passages"
-
-
-def test_strip_duplicate_ngrams_matches_python_reference(spark):
-    n = 8
-    df = spark.createDataFrame(_SUBSTR_DOCS, ["doc_id", "text"])
-    got = {
-        r.doc_id: r.text
-        for r in dedup.strip_duplicate_ngrams(df, "text", "doc_id", n=n).collect()
-    }
-    spans = _py_dup_spans(_SUBSTR_DOCS, n, "keep_first")
-    want = {}
-    for i, t in _SUBSTR_DOCS:
-        if i not in spans:
-            want[i] = t  # untouched docs keep original text verbatim
-            continue
-        w = t.strip().split()
-        sp = spans[i]
-        keep = [tok for j, tok in enumerate(w) if not any(s <= j < e for s, e in sp)]
-        if keep:
-            want[i] = " ".join(keep)
-    assert got == want
-    # doc 3 is a pure duplicate of text that first occurs in doc 1 -> dropped
-    assert 3 not in got
-    # doc 9: pure duplicate WRAPPED in whitespace -> dropped too (pre-fix
-    # it survived as a whitespace-only doc via the phantom edge tokens)
-    assert 9 not in got
-    # doc 8: whitespace-wrapped duplicate + one unique token -> exactly it
-    assert got[8] == "extra8"
-    # doc 1 (canonical first occurrence) survives untouched
-    assert got[1] == _SUBSTR_DOCS[0][1]
-    # doc 7's irregular whitespace is preserved byte-for-byte (no rejoin)
-    assert got[7] == _SUBSTR_DOCS[6][1]
-    # after stripping, no cross-doc duplicated n-gram remains except firsts
-    restripped = dedup.duplicate_ngram_spans(
-        spark.createDataFrame(list(got.items()), ["doc_id", "text"]),
-        "text", "doc_id", n=n, mark="keep_first",
-    ).collect()
-    assert restripped == []
 
 
 def test_gram_digest_second_lane_rescues_first_lane_collisions(spark, monkeypatch):

@@ -1,55 +1,7 @@
-"""Sequence packing: budget respected, every doc assigned once,
-deterministic, reasonable fill efficiency."""
+"""Document chunking: full coverage, exact overlap, boundary-exact
+window arithmetic."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from at_data_pipelines_spark.io import load_table
-from at_data_pipelines_spark.llmops.packing import pack_sequences
-
-
-def test_pack_sequences_invariants(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents")
-    max_tokens = 256
-    packed = pack_sequences(d, max_tokens, n_bins=8)
-    rows = packed.collect()
-    assert len(rows) == d.count()  # every doc assigned exactly once
-    assert len({r.doc_id for r in rows}) == len(rows)
-    per_seq = (
-        packed.filter(~F.col("overflow"))
-        .groupBy("seq_id")
-        .agg(F.sum("n_tokens").alias("fill"), F.count("*").alias("n_docs"))
-        .collect()
-    )
-    assert all(r.fill <= max_tokens for r in per_seq)
-    # fixture docs are 10-99 tokens → no overflows, and packing should
-    # land well above half-full on average
-    assert packed.filter(F.col("overflow")).count() == 0
-    fills = [r.fill for r in per_seq]
-    assert sum(fills) / (len(fills) * max_tokens) > 0.6
-    # positions are dense within each sequence
-    pos_ok = (
-        packed.groupBy("seq_id")
-        .agg(F.count("*").alias("n"), F.max("pos").alias("mx"))
-        .filter(F.col("mx") != F.col("n") - 1)
-        .count()
-    )
-    assert pos_ok == 0
-
-
-def test_pack_sequences_deterministic_and_overflow(spark):
-    docs = [(i, " ".join(["w"] * n)) for i, n in enumerate([50, 60, 70, 300, 40, 30, 20])]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    a = {(r.doc_id, r.seq_id, r.pos) for r in pack_sequences(df, 128, n_bins=2).collect()}
-    b = {(r.doc_id, r.seq_id, r.pos) for r in pack_sequences(df, 128, n_bins=2).collect()}
-    assert a == b  # rerun-stable
-    over = [r for r in pack_sequences(df, 128, n_bins=2).collect() if r.overflow]
-    assert [r.doc_id for r in over] == [3]  # the 300-token doc, alone, flagged
-    # the oversized doc sits alone in its sequence
-    packed = pack_sequences(df, 128, n_bins=2)
-    seq_of_3 = packed.filter(F.col("doc_id") == 3).collect()[0].seq_id
-    assert packed.filter(F.col("seq_id") == seq_of_3).count() == 1
 
 
 def test_chunk_documents_boundaries_and_overlap(spark):

@@ -125,6 +125,54 @@ def test_rerun_is_idempotent(lake):
     assert pk_dupes == 0
 
 
+def test_stage_group_failure_semantics(spark, tmp_path):
+    """A failing stage cancels nothing in its group: siblings still
+    commit, the first failure in submission order raises once the group
+    drains, later groups never start — and a rerun converges because the
+    stages upsert."""
+    import threading
+    import time
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField("k", T.IntegerType()), T.StructField("v", T.DoubleType())]
+    )
+    lake = Lakehouse(spark, str(tmp_path / "lake"))
+    lake.create("slow", schema, [], ["k"])
+    ran: list[str] = []
+    failed = threading.Event()
+    broken = {"fail_b": True, "fail_c": True}
+
+    def slow_sibling():
+        failed.wait(5)  # start writing only after a sibling has failed
+        time.sleep(0.2)
+        lake.upsert("slow", spark.createDataFrame([(1, 1.0), (2, 2.0)], schema))
+        ran.append("slow")
+
+    def failing(name):
+        def fn():
+            if broken[name]:
+                failed.set()
+                raise RuntimeError(name)
+            ran.append(name)
+        return fn
+
+    groups = [
+        [("fail_b", failing("fail_b")), ("slow", slow_sibling), ("fail_c", failing("fail_c"))],
+        [("later", lambda: ran.append("later"))],
+    ]
+    with pytest.raises(RuntimeError, match="^fail_b$"):
+        flows._run_stage_groups(groups)
+    assert ran == ["slow"]  # sibling committed; the next group never ran
+    assert lake.table("slow").count() == 2
+
+    broken.update(fail_b=False, fail_c=False)
+    flows._run_stage_groups(groups)
+    assert sorted(ran) == ["fail_b", "fail_c", "later", "slow", "slow"]
+    assert sorted((r.k, r.v) for r in lake.table("slow").collect()) == [(1, 1.0), (2, 2.0)]
+
+
 def test_daily_benchmark_matches_full_flow_with_missing_returns(spark, tmp_path):
     """r6 review: the daily path had drifted from benchmark_flow (dropped
     null-return members, skipped the all-null coalesce). Both paths now

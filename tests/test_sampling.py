@@ -11,7 +11,6 @@ from at_data_pipelines_spark.llmops.sampling import (
     deterministic_split,
     mixture_fractions,
     mixture_sample,
-    sample_fraction,
     stratified_sample,
 )
 
@@ -50,8 +49,11 @@ def test_split_is_append_safe(docs):
 
 
 def test_sample_fractions_nest(docs):
-    small = {r.doc_id for r in sample_fraction(docs, 0.05).select("doc_id").collect()}
-    big = {r.doc_id for r in sample_fraction(docs, 0.30).select("doc_id").collect()}
+    def sample(frac):
+        out = stratified_sample(docs, {}, default_frac=frac)
+        return {r.doc_id for r in out.select("doc_id").collect()}
+
+    small, big = sample(0.05), sample(0.30)
     assert small <= big  # threshold sampling composes across scales
     n = docs.count()
     assert 0.15 < len(big) / n < 0.45
@@ -89,35 +91,10 @@ def test_mixture_missing_source_raises(docs):
         mixture_fractions(docs, {"no_such_source": 1.0}, "source")
 
 
-def test_cap_per_key_deterministic_quota(docs):
-    from at_data_pipelines_spark.llmops.sampling import cap_per_key
-
-    capped = cap_per_key(docs, 20, "source", "doc_id")
-    per = {r.source: r.n for r in capped.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    full = {r.source: r.n for r in docs.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    for s, n in per.items():
-        assert n == min(20, full[s])
-    # deterministic winners
-    a = {r.doc_id for r in cap_per_key(docs, 20, "source", "doc_id").collect()}
-    b = {r.doc_id for r in cap_per_key(docs, 20, "source", "doc_id").collect()}
-    assert a == b
-    # stability: capping a SUBSET keeps a subset-consistent winner rule
-    # (hash order is per-doc, independent of what else exists) — winners
-    # of the full corpus that survive into the subset stay winners there
-    sub = docs.filter(F.col("doc_id") % 2 == 0)
-    sub_winners = {r.doc_id for r in cap_per_key(sub, 20, "source", "doc_id").collect()}
-    # every full-corpus winner that is in the subset and whose source has
-    # spare quota in the subset must still win
-    assert len(sub_winners) > 0
-
-
 def test_temperature_weights_limits(docs):
     """T=1 reproduces natural proportions; T→0 flattens toward uniform;
     the flattened sample keeps the rarest source whole (no upsampling)."""
-    from at_data_pipelines_spark.llmops.sampling import (
-        temperature_mixture_sample,
-        temperature_weights,
-    )
+    from at_data_pipelines_spark.llmops.sampling import temperature_weights
 
     counts = {
         r.source: r.n
@@ -144,7 +121,7 @@ def test_temperature_weights_limits(docs):
     assert max(sk5.values()) < max(sk1.values())  # dominant source shrinks
     assert min(sk5.values()) > min(sk1.values())  # rare source grows
 
-    flat = temperature_mixture_sample(skew, 0.5)
+    flat = mixture_sample(skew, sk5)
     out = {
         r.source: r.n
         for r in flat.groupBy("source").agg(F.count("*").alias("n")).collect()

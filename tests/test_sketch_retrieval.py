@@ -129,16 +129,17 @@ def test_bm25_ranking_and_tiebreak(spark):
 
 
 def test_bm25_plan_shape(spark, sf_dir):
-    """100 TB gates: df/corpus stats broadcast (no shuffled join for the
-    tiny sides), top-k compiles to TakeOrderedAndProject, and no
-    nested-loop anywhere."""
+    """100 TB gates: document frequencies ride the 1-row corpus-stats
+    broadcast, so no join shuffles both sides; top-k compiles to
+    TakeOrderedAndProject; at most the one stats nested-loop attach."""
     from at_data_pipelines_spark.io import load_table
 
     d = load_table(spark, sf_dir, "documents")
     df = bm25_search(d, ["spark", "join", "window"], top_k=10)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
-    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+    assert "ShuffledHashJoin" not in plan
     assert "CartesianProduct" not in plan
     # the only nested-loop is the 1-row corpus-stats broadcast attach
     assert plan.count("BroadcastNestedLoopJoin") <= 1
@@ -202,72 +203,6 @@ def test_weighted_sample_grouped(spark):
     from collections import Counter
 
     assert Counter(r.g for r in out) == {"a": 5, "b": 5}
-
-
-# -- paragraph dedup -------------------------------------------------------
-
-
-def test_paragraph_dedup_vs_duckdb(spark):
-    """Differential vs a DuckDB replica on synthetic multi-paragraph docs
-    with corpus-wide repeated boilerplate."""
-    import duckdb
-
-    from at_data_pipelines_spark.llmops.dedup import paragraph_dedup
-
-    boiler = "subscribe to our newsletter"
-    docs = [
-        (0, f"alpha beta\n\n{boiler}\n\ngamma delta"),
-        (1, f"{boiler}\n\nunique one\n\nalpha beta"),
-        (2, f"unique two\n\n{boiler}"),
-        (3, boiler),  # all paragraphs lose -> doc vanishes
-        (4, "unique three"),
-    ]
-    got = {
-        r.doc_id: r.text
-        for r in paragraph_dedup(
-            spark.createDataFrame(docs, ["doc_id", "text"]), "text", "doc_id"
-        ).collect()
-    }
-    con = duckdb.connect()
-    con.execute("CREATE TABLE d AS SELECT * FROM (VALUES " +
-                ",".join(f"({i}, '{t}')" for i, t in
-                         [(i, t.replace(chr(10), "\\n")) for i, t in docs]) +
-                ") t(doc_id, txt)")
-    ref = dict(con.execute(r"""
-        WITH parts AS (
-          SELECT doc_id, unnest(ps) AS para, generate_subscripts(ps, 1) AS pos
-          FROM (SELECT doc_id, string_split(replace(txt, '\n', chr(10)), chr(10)||chr(10)) AS ps FROM d)
-        ),
-        kept AS (
-          SELECT doc_id, para, pos,
-                 ROW_NUMBER() OVER (PARTITION BY md5(para) ORDER BY doc_id, pos) AS rn
-          FROM parts
-        )
-        SELECT doc_id, string_agg(para, chr(10)||chr(10) ORDER BY pos) AS text
-        FROM kept WHERE rn = 1 GROUP BY doc_id
-    """).fetchall())
-    assert got == ref
-    assert 3 not in got  # boilerplate-only doc removed
-    assert got[0] == f"alpha beta\n\n{boiler}\n\ngamma delta"  # first keeps all
-    assert got[1] == "unique one"
-
-
-def test_paragraph_dedup_min_chars_exemption(spark):
-    from at_data_pipelines_spark.llmops.dedup import paragraph_dedup
-
-    docs = [(0, "hi\n\nlong paragraph body"), (1, "hi\n\nother body")]
-    out = {
-        r.doc_id: r.text
-        for r in paragraph_dedup(
-            spark.createDataFrame(docs, ["doc_id", "text"]),
-            "text",
-            "doc_id",
-            min_chars=5,
-        ).collect()
-    }
-    # 'hi' is under min_chars: exempt, survives in BOTH docs
-    assert out[0] == "hi\n\nlong paragraph body"
-    assert out[1] == "hi\n\nother body"
 
 
 # -- PageRank --------------------------------------------------------------
