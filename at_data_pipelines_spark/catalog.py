@@ -133,7 +133,9 @@ class LegacyLayoutError(RuntimeError):
     out directly under hive partition dirs, no ``_seq=K`` generations).
     Reading it through the manifest would silently return 0 rows, so we
     refuse instead: re-create the table and re-insert, or rewrite the old
-    parquet into a ``_seq=0`` generation and add the manifest fields."""
+    parquet into a ``_seq=0`` generation and add the manifest fields.
+    Also raised when a manifest carries a deletion-vector sidecar entry
+    in a retired (pre-``_DV_SIDECAR_FORMAT``) layout."""
 
 
 class CheckViolationError(RuntimeError):
@@ -1363,9 +1365,10 @@ class TableMeta:
     # files for read-path confinement (None past their caps), and
     # ``finfo`` (r14) maps each touched file to [position count, runs]
     # for the fully-deleted-file proof and the NOT-BETWEEN fast path
-    # (see _sidecar_finfo). Readers union the sidecars into the same
-    # broadcast anti-join as the inline vectors. Older entries (3-5
-    # fields) stay readable; every absent field degrades to mask-more.
+    # (see _sidecar_finfo); e[6] is _DV_SIDECAR_FORMAT, the one layout
+    # _meta_from_raw accepts. Readers union the sidecars into the same
+    # broadcast anti-join as the inline vectors; a capped None field
+    # degrades to mask-more.
     dv_sidecars: list[list] = field(default_factory=list)
     # Per-file TOTAL row counts for files carrying deletion vectors
     # (r14): DECODED data-relative file path -> the file's immutable
@@ -1464,12 +1467,11 @@ class Lakehouse:
         # and committed generations are immutable, so the routing of one
         # manifest version never changes. Plain lists, no Spark state.
         self._dv_split_cache: dict[tuple, tuple[list[str], list[str]]] = {}
-        # content-addressed per-version routing memo (r14 review find:
-        # the pruned readers sit outside the plan memo, so CDC polling
-        # re-paid the inline decode per call) — see _dv_file_routing
+        # content-addressed per-version routing memo — see _dv_file_routing
         self._dv_routing_cache: dict[tuple, dict] = {}
-        # raw-plan memo (r13, _read_raw): content-addressed constructed
-        # reader DataFrames — plan objects only, no persisted blocks
+        # reader-plan memo (_plan_memo): content-addressed constructed
+        # reader DataFrames — plan objects only, no persisted blocks.
+        # All four stores go through _memo's LRU.
         self._plan_cache: dict[tuple, DataFrame] = {}
 
     # fsspec/Polars-style option names → Hadoop s3a configuration keys
@@ -1833,6 +1835,15 @@ class Lakehouse:
     def _meta_from_raw(raw: dict) -> TableMeta:
         known = {f.name for f in dataclass_fields(TableMeta)}
         meta = TableMeta(**{k: v for k, v in raw.items() if k in known})
+        # ONE accepted sidecar-entry layout (7 fields, the format marker
+        # last), checked here once so readers index e[0..6] directly
+        for e in meta.dv_sidecars:
+            if e[6:] != [Lakehouse._DV_SIDECAR_FORMAT]:
+                raise LegacyLayoutError(
+                    f"table {meta.name!r}: deletion-vector sidecar entry "
+                    f"{e[0]!r} has a retired layout; re-create the table "
+                    "and re-insert"
+                )
         # pre-r4 metas recorded dirty partitions as value tuples; rel strings now
         meta.dirty_partitions = [
             d if isinstance(d, str) else _hive_rel(meta.partition_keys, d)
@@ -2032,12 +2043,12 @@ class Lakehouse:
             if n.startswith("v") and n.endswith(".json")
         )
 
-    def _load_version(self, name: str, version: int) -> tuple[TableMeta, dict]:
+    def _load_version(self, name: str, version: int) -> dict:
+        """Raw manifest dict of commit ``version`` (unvalidated: the log
+        fold reads it as-is; readers go through ``_version_meta``)."""
         p = f"{self._history_dir(name)}/v{version:012d}.json"
         if self.fs.exists(p):
-            raw = self._read_json_retry(p)
-            known = {f.name for f in dataclass_fields(TableMeta)}
-            return TableMeta(**{k: v for k, v in raw.items() if k in known}), raw
+            return self._read_json_retry(p)
         # segmented mode archives only every checkpoint; intermediate
         # versions reconstruct as nearest archived anchor ≤ version plus
         # the diff segments up to it (segments are relocated to
@@ -2053,8 +2064,7 @@ class Lakehouse:
                 )
                 for v in range(w + 1, version + 1):
                     raw = self._apply_segment(raw, self._read_segment(name, v))
-                known = {f.name for f in dataclass_fields(TableMeta)}
-                return TableMeta(**{k: v for k, v in raw.items() if k in known}), raw
+                return raw
         raise SnapshotExpiredError(
             f"table {name!r} has no archived manifest for version {version} "
             f"(known anchors: {self._history_versions(name)})"
@@ -2077,7 +2087,7 @@ class Lakehouse:
             elif cur is not None and v == cur.get("version", -1) + 1:
                 cur = self._apply_segment(cur, self._read_segment(name, v))
             else:
-                cur = self._load_version(name, v)[1]
+                cur = self._load_version(name, v)
             yield v, cur
 
     def history(self, name: str, limit: int | None = None) -> list[dict]:
@@ -3182,8 +3192,8 @@ class Lakehouse:
             # manifest-side, no data read: how close the table is to
             # the vector budget (past it, deletes force a rewrite) and
             # how its touched files will route at read time. files_*
-            # are None when per-file evidence is incomplete (legacy
-            # entries / caps) — the reader then keeps the anti-join.
+            # are None when per-file evidence is incomplete (capped
+            # entries) — the reader then keeps the anti-join.
             inline, side = self._dv_position_totals(meta)
             dv: dict = {
                 "positions": inline + side,
@@ -3402,12 +3412,8 @@ class Lakehouse:
                 if (e in old_meta.dv_sidecars) != (e in new_meta.dv_sidecars)
             ]
             if side_diff:
-                if all(len(e) >= 4 and e[3] is not None for e in side_diff):
-                    changed |= {
-                        r if len(e) >= 5 else _uri_unquote(r)
-                        for e in side_diff
-                        for r in e[3]
-                    }
+                if all(e[3] is not None for e in side_diff):
+                    changed |= {r for e in side_diff for r in e[3]}
                 else:
                     # rel list capped/absent: one tiny distinct read
                     changed |= self._sidecar_rels(name, side_diff)
@@ -4377,8 +4383,8 @@ class Lakehouse:
     def _dv_affected_rels(self, meta: TableMeta) -> "set[str] | None":
         """Partition rels that can hold vectored rows — from the manifest
         alone, zero I/O. ``None`` = cannot confine (unpartitioned table,
-        a legacy/capped sidecar entry without a rel list, or a key shape
-        we don't recognize): the caller must mask every path. Fail-safe
+        a capped sidecar entry without a rel list, or a key shape we
+        don't recognize): the caller must mask every path. Fail-safe
         direction is always "mask more"."""
         if not meta.partition_keys:
             return None
@@ -4394,11 +4400,9 @@ class Lakehouse:
             # vectored partition scanned CLEAN)
             rels.add(_uri_unquote(rel))
         for e in meta.dv_sidecars:
-            if len(e) < 4 or e[3] is None:
+            if e[3] is None:
                 return None
-            # r13+ entries (5 fields) store rels already decoded; r12
-            # 4-field entries stored them encoded
-            rels.update(e[3] if len(e) >= 5 else (_uri_unquote(r) for r in e[3]))
+            rels.update(e[3])  # stored decoded by _write_dv_sidecar
         return rels
 
     @staticmethod
@@ -4427,29 +4431,26 @@ class Lakehouse:
         only, zero I/O. Inline vector keys ARE file paths, so they are
         always exact; sidecar entries contribute their recorded file
         list (r13, ``_write_dv_sidecar``). ``None`` = at least one entry
-        has no complete list (legacy pre-r13 entry, or one past the
-        _DV_SIDECAR_FILE_CAP): callers must fall back to directory-level
-        confinement — mask more, never less."""
+        has no complete list (one past the _DV_SIDECAR_FILE_CAP): callers
+        must fall back to directory-level confinement — mask more, never
+        less."""
         # decoded to the RAW namespace: the split compares against fs
         # listings (inline keys are _metadata-derived/URI-encoded; r13
         # sidecar file lists are stored decoded at write time)
         out: set[str] = {_uri_unquote(f) for f in meta.deletion_vectors or ()}
         for e in meta.dv_sidecars or []:
-            if len(e) < 5 or e[4] is None:
+            if e[4] is None:
                 return None
             out.update(e[4])
         return out or None
 
     def _dv_file_stats(self, meta: TableMeta) -> "dict[str, list] | None":
         """Cumulative per-file deletion-vector stats, manifest-only:
-        ``{decoded file rel: [total vectored positions | None, merged
-        runs | None]}``. A whole-result ``None`` means some entry has no
-        file list at all (legacy 4-field, or capped files=None) — no
-        per-file reasoning is possible and the caller keeps the plain
-        anti-join. A per-file count of ``None`` means the file appears
-        in an r13 5-field entry (file list but no per-file counts): it
-        can be neither proven dead nor range-filtered, and stays in the
-        join. Summing per-entry counts is EXACT because (file, position)
+        ``{decoded file rel: [total vectored positions, merged runs |
+        None]}``. A whole-result ``None`` means some entry is capped
+        (files=None, and so finfo=None) — no per-file reasoning is
+        possible and the caller keeps the plain anti-join. Summing
+        per-entry counts is EXACT because (file, position)
         pairs never repeat across entries (the sidecar-merge canary's
         invariant). Runs merge across entries and survive only if every
         contributing entry recorded them and the coalesced total stays
@@ -4460,11 +4461,8 @@ class Lakehouse:
         cap = self._DV_RANGE_MAX_RUNS
         stats: dict[str, list] = {}
 
-        def merge(f: str, cnt, runs) -> None:
+        def merge(f: str, cnt: int, runs) -> None:
             ent = stats.setdefault(f, [0, []])
-            if cnt is None or ent[0] is None:
-                ent[0] = ent[1] = None
-                return
             ent[0] += cnt
             if runs is None or ent[1] is None:
                 ent[1] = None
@@ -4475,12 +4473,8 @@ class Lakehouse:
             pos = _dv_decode(e)
             merge(_uri_unquote(key), len(pos), _runs_of(pos, cap))
         for e in meta.dv_sidecars:
-            if len(e) < 5 or e[4] is None:
+            if e[5] is None:
                 return None
-            if len(e) < 6 or e[5] is None:
-                for f in e[4]:
-                    merge(f, None, None)
-                continue
             for f, ent in e[5].items():
                 merge(f, ent[0], ent[1])
         for ent in stats.values():
@@ -4507,7 +4501,7 @@ class Lakehouse:
         files onto the join); 'join' = the broadcast anti-join. ``None`` = no per-file evidence at all
         (no recorded row counts, or an entry without per-file stats) —
         nothing can route and the caller skips the classification
-        entirely. THE single source both `_read_raw_build` routes on
+        entirely. THE single source both `_dv_branch_union` routes on
         and the scale ladder reports from, so published routing
         evidence can never drift from the executed plan. (The
         _DV_RANGE_MAX_FILES plan-width cap is applied by the reader,
@@ -4517,32 +4511,36 @@ class Lakehouse:
             # while the r15 range path COULD (runs need no counts), a
             # table with per-file run stats but zero recorded counts
             # only arises at the dv_file_rows cap overflow — too rare to
-            # pay the inline decode for on every legacy-table plan-cache
-            # miss (review find: legacy tables paid it per miss)
+            # pay the inline decode for on every count-less plan-memo miss
             return None
         # content-addressed memo: routing is a pure function of the DV
-        # tiers + file rows (all inside the digest), and the pruned
-        # readers (_read_rels, scan — CDC's poll loop) sit OUTSIDE the
-        # plan memo, so without this they re-paid the driver-side
-        # inline decode per call. Callers treat the dict as read-only.
+        # tiers + file rows (all inside the digest); each plan-memo miss
+        # (and analyze(), the ladder) would otherwise re-pay the
+        # driver-side inline decode. Callers treat the dict as read-only.
         key = (
             meta.name,
             meta.table_uuid,
             meta.version,
             digest if digest is not None else self._dv_state_digest(meta),
         )
-        with self._dv_cache_mu:
-            hit = self._dv_routing_cache.pop(key, None)
-            if hit is not None:
-                self._dv_routing_cache[key] = hit  # re-insert: LRU
-                return hit
+        return self._memo(
+            self._dv_routing_cache,
+            key,
+            lambda: self._dv_route_files(meta),
+            self._DV_ROUTING_CACHE_MAX,
+        )
+
+    def _dv_route_files(
+        self, meta: TableMeta
+    ) -> "dict[str, tuple[str, list | None]] | None":
+        """`_dv_file_routing`'s uncached classification."""
         stats = self._dv_file_stats(meta)
         if stats is None:
             return None
         out: "dict[str, tuple[str, list | None]]" = {}
         for rf, st in stats.items():
             rows = meta.dv_file_rows.get(rf)
-            if st[0] is not None and rows is not None and st[0] > rows:
+            if rows is not None and st[0] > rows:
                 # defense-in-depth (r15 advice): cumulative vectored
                 # positions EXCEED the file's immutable row count — a
                 # (file, position) pair repeated across tiers, or a
@@ -4566,7 +4564,7 @@ class Lakehouse:
                 )
                 out[rf] = ("join", None)
                 continue
-            if st[0] is not None and rows == st[0]:
+            if rows == st[0]:
                 out[rf] = ("dead", None)
             elif st[1]:
                 # run-shaped at ANY size (r15): the consolidated range
@@ -4576,10 +4574,6 @@ class Lakehouse:
                 out[rf] = ("range", st[1])
             else:
                 out[rf] = ("join", None)
-        with self._dv_cache_mu:
-            while len(self._dv_routing_cache) >= self._DV_ROUTING_CACHE_MAX:
-                self._dv_routing_cache.pop(next(iter(self._dv_routing_cache)))
-            self._dv_routing_cache[key] = out
         return out
 
     @staticmethod
@@ -4601,8 +4595,8 @@ class Lakehouse:
         entries: "list[tuple[str, int, str, bool]]",
         touched: "set[str] | None",
     ) -> "tuple[list[str], list[str]]":
-        """Partition/generation-level masked-vs-clean split shared by
-        the pruned readers (`_read_rels`, `scan`): an entry
+        """Partition/generation-level masked-vs-clean split of
+        `_read_entries` (table(), scan(), _read_rels): an entry
         ``(rel, seq, path, is_file)`` is CLEAN when the manifest proves
         no vector can touch it — its rel outside the affected-rel set,
         its generation outside the vector-generation set, or (for an
@@ -4653,13 +4647,8 @@ class Lakehouse:
         if len(need) > room:
             stats = self._dv_file_stats(meta) or {}
 
-            def rank(f: str):
-                st = stats.get(f)
-                # unknown counts (a coexisting legacy entry) rank last;
-                # deterministic under ties: (-count, rel) ascending
-                return (-(st[0] if st and st[0] is not None else -1), f)
-
-            need = sorted(need, key=rank)[:room]
+            # deterministic under ties: (-count, rel) ascending
+            need = sorted(need, key=lambda f: (-stats.get(f, [0])[0], f))[:room]
             need.sort()
         data_dir = f"{self._dir(name)}/data"
         schema_with_seq = T.StructType(
@@ -4799,7 +4788,7 @@ class Lakehouse:
     @staticmethod
     def _dv_vector_seqs(meta: TableMeta) -> "set[int] | None":
         """Generations whose files carry vectors — again manifest-only.
-        ``None`` = a key/entry we cannot parse: treat every generation
+        ``None`` = an inline key we cannot parse: treat every generation
         as possibly vectored (mask more, never less)."""
         seqs: set[int] = set()
         for key in meta.deletion_vectors:
@@ -4809,10 +4798,7 @@ class Lakehouse:
             except (ValueError, IndexError):
                 return None
         for e in meta.dv_sidecars:
-            try:
-                seqs.update(int(s) for s in e[2])
-            except (TypeError, ValueError, IndexError):
-                return None
+            seqs.update(e[2])
         return seqs
 
     def _write_dv_sidecar(self, name: str, fp_df: DataFrame) -> list:
@@ -4848,8 +4834,7 @@ class Lakehouse:
         # stored DECODED (r13): the parquet 'f' column keeps the
         # _metadata-encoded join form, but the entry's rel/file metadata
         # is compared against raw manifest rels and fs listings — store
-        # it in their namespace (readers treat 4-field r12 entries as
-        # encoded and decode on read)
+        # it in their namespace
         if len(files) > self._DV_SIDECAR_FILE_CAP:
             files = None
             leaves = [
@@ -4874,14 +4859,7 @@ class Lakehouse:
         # Only when the file list is complete (the routing that consumes
         # finfo is file-level and never engages without it)
         finfo = self._sidecar_finfo(back) if files is not None else None
-        # e[6] (r15): EXPLICIT format marker. Entry semantics were
-        # inferred from field count alone (3/4/5/6 fields ⇒ r11-r14) —
-        # an r14-advice-flagged fragility that becomes a trap the day a
-        # field is appended with unchanged meaning for the older ones.
-        # Every existing reader indexes e[0..5] behind `len(e) < k`
-        # guards, so appending is backward-compatible NOW; future
-        # format changes bump _DV_SIDECAR_FORMAT and switch on e[6]
-        # instead of len(). Legacy entries keep the len inference.
+        # e[6]: the format marker _meta_from_raw checks on every load
         return [rel, n, seqs, rels, files, finfo, self._DV_SIDECAR_FORMAT]
 
     def _sidecar_finfo(self, back: DataFrame) -> dict:
@@ -4959,10 +4937,10 @@ class Lakehouse:
             runs_df.unpersist()
         return finfo
 
-    #: sidecar entry format marker, stored as e[6] (r15). 1 = the r14
-    #: field layout [relpath, count, seqs, rels, files, finfo]. Bump on
-    #: any future semantic change and switch readers on e[6] — field
-    #: COUNT inference is frozen at the legacy (≤6-field) generations
+    #: sidecar entry format marker, stored as e[6]: 1 = the layout
+    #: [relpath, count, seqs, rels, files, finfo, 1]. The ONLY layout
+    #: readers accept — _meta_from_raw refuses any other entry with
+    #: LegacyLayoutError, so no reader infers meaning from field count
     _DV_SIDECAR_FORMAT = 1
 
     #: sidecar-count bound: past this many entries a delete/update
@@ -5048,7 +5026,7 @@ class Lakehouse:
         review find: internal callers pass tentative/mutated metas
         sharing a version with different DV content; a version-only key
         would hand them the other content's positions)."""
-        # digest passed down from _read_raw when available (review find:
+        # digest passed down from _plan_memo when available (review find:
         # it was recomputed 2-3x per masked read along this path)
         key = (
             name,
@@ -5056,11 +5034,16 @@ class Lakehouse:
             meta.version,
             digest if digest is not None else self._dv_state_digest(meta),
         )
-        with self._dv_cache_mu:
-            hit = self._dv_cache.pop(key, None)
-            if hit is not None:
-                self._dv_cache[key] = hit  # re-insert: LRU recency
-                return hit
+        return self._memo(
+            self._dv_cache,
+            key,
+            lambda: self._dv_build_side(name, meta),
+            self._DV_CACHE_MAX,
+            evict=DataFrame.unpersist,
+        )
+
+    def _dv_build_side(self, name: str, meta: TableMeta) -> DataFrame:
+        """`_dv_build_df`'s uncached build (returned persisted)."""
         dv_df = None
         if meta.deletion_vectors:
             import pandas as pd
@@ -5088,7 +5071,7 @@ class Lakehouse:
         # filter the materialized column instead. The join-key hashes
         # (see _apply_dvs) are also precomputed here, so the per-query
         # build side is a pure in-memory scan of three longs.
-        dv_df = (
+        return (
             dv_df.withColumn(
                 "__dvd_rel",
                 # url_decode strips the _metadata URI layer so the
@@ -5110,31 +5093,22 @@ class Lakehouse:
             )
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        with self._dv_cache_mu:
-            cur = self._dv_cache.get(key)
-            if cur is not None:  # raced another thread: keep theirs
-                dv_df.unpersist()
-                return cur
-            while len(self._dv_cache) >= self._DV_CACHE_MAX:
-                old = self._dv_cache.pop(next(iter(self._dv_cache)))
-                old.unpersist()
-            self._dv_cache[key] = dv_df
-        return dv_df
 
     def _dv_cache_purge(self, name: str) -> None:
         """Drop (and unpersist) every cached build side of one table —
         hygiene on drop()/create(replace); correctness never depends on
         it (the table_uuid in the key already isolates table lives)."""
         with self._dv_cache_mu:
-            dead = [k for k in self._dv_cache if k[0] == name]
-            for k in dead:
-                self._dv_cache.pop(k).unpersist()
-            for k in [k for k in self._dv_split_cache if k[0] == name]:
-                self._dv_split_cache.pop(k)
-            for k in [k for k in self._dv_routing_cache if k[0] == name]:
-                self._dv_routing_cache.pop(k)
-            for k in [k for k in self._plan_cache if k[0] == name]:
-                self._plan_cache.pop(k)
+            for store in (
+                self._dv_cache,
+                self._dv_split_cache,
+                self._dv_routing_cache,
+                self._plan_cache,
+            ):
+                for k in [k for k in store if k[0] == name]:
+                    v = store.pop(k)
+                    if store is self._dv_cache:
+                        v.unpersist()
 
     def _apply_dvs(
         self,
@@ -5188,16 +5162,7 @@ class Lakehouse:
                     in rels
                 }
             if sides:
-                sides = [
-                    e
-                    for e in sides
-                    if len(e) < 4
-                    or e[3] is None
-                    or {
-                        r if len(e) >= 5 else _uri_unquote(r) for r in e[3]
-                    }
-                    & rels
-                ]
+                sides = [e for e in sides if e[3] is None or rels & set(e[3])]
         df = df.withColumn(
             "__dv_f",
             F.substring_index(F.col("_metadata.file_path"), "/data/", -1),
@@ -5249,107 +5214,65 @@ class Lakehouse:
             ).drop("__dv_h1", "__dv_h2")
         return df if keep_pos else df.drop("__dv_f", "__dv_p")
 
-    def _visible_paths(self, name: str, meta: TableMeta) -> list[str]:
-        """Exactly the directories the manifest commits to — never a bare
-        scan of the data dir, so in-flight or crashed writes are
-        unreachable by construction."""
-        paths = [self._seq_dir(name, s) for s in meta.live_deltas]
+    def _visible_entries(
+        self, name: str, meta: TableMeta
+    ) -> "list[tuple[str, int, str, bool]]":
+        """Exactly the directories the manifest commits to, as reader
+        entries ``(rel, seq, path, is_file)`` — never a bare scan of the
+        data dir, so in-flight or crashed writes are unreachable by
+        construction. Live deltas carry rel "" (a generation dir spans
+        every partition it wrote)."""
+        out = [("", s, self._seq_dir(name, s), False) for s in meta.live_deltas]
         for rel, s in sorted(meta.committed.items()):
             base = self._seq_dir(name, s)
-            paths.append(base if rel == "" else f"{base}/{rel}")
-        return paths
+            out.append((rel, s, base if rel == "" else f"{base}/{rel}", False))
+        return out
+
+    def _visible_paths(self, name: str, meta: TableMeta) -> list[str]:
+        return [p for _, _, p, _ in self._visible_entries(name, meta)]
 
     def _read_rels(self, name: str, meta: TableMeta, rels) -> DataFrame:
         """Read ONLY the given partition rels of a manifest state: the
         committed base leaf per rel plus any live-delta leaf that exists
-        for it. Path-level restriction — nothing else is listed.
+        for it. Path-level restriction — nothing else is listed. The
+        CDC (``table_changes``) read; same DV confinement and plan memo
+        as ``table()`` (`_plan_memo`). The per-rel ``fs.exists`` probes
+        run inside the memoized build, so a memo hit does no I/O: the
+        path set is a pure function of the key (committed/live
+        generation dirs are immutable once the manifest names them)."""
 
-        r14: the pruned path gets the SAME deletion-vector confinement
-        ladder as the full-table read (it predated all three tiers —
-        before this, one vector anywhere in a scanned rel put every one
-        of its rows through the anti-join): rel/generation-level
-        masked-vs-clean split, then the shared `_dv_branch_union` tail
-        (file split, dead-file drop, range routing). scan()'s
-        zone/bloom-pruned point lookups are the hot consumer.
+        def entries() -> "list[tuple[str, int, str, bool]]":
+            out = []
+            for rel in sorted(rels):
+                s = meta.committed.get(rel)
+                if s is not None:
+                    base = self._seq_dir(name, s)
+                    # rel == "" (unpartitioned): the generation dir ITSELF —
+                    # appending "/{rel}" would leave a trailing slash whose
+                    # file-split rels ("_seq=N//part-x") never match the
+                    # touched set, routing a vectored file to the CLEAN
+                    # branch (a confirmed mask-LESS hazard)
+                    out.append((rel, s, base if rel == "" else f"{base}/{rel}", False))
+                for d in meta.live_deltas:
+                    base = self._seq_dir(name, d)
+                    p = base if rel == "" else f"{base}/{rel}"
+                    if self.fs.exists(p):
+                        out.append((rel, d, p, False))
+            return out
 
-        r15: memoized through `_plan_memo` — CDC poll loops and
-        repeated point lookups over an unchanged manifest version used
-        to re-pay Spark's eager InMemoryFileIndex listing on every
-        call. Sound because the path set is a pure function of the key:
-        committed/live generation dirs are immutable once the manifest
-        names them, so the per-rel `fs.exists` probes below can never
-        change answer within one (uuid, version)."""
         return self._plan_memo(
+            name,
+            meta,
+            "rels",
             (
-                name,
-                "rels",
-                meta.table_uuid,
-                meta.version,
                 tuple(sorted(rels)),
-                self._dv_state_digest(meta),
-                hash(meta.schema_json),
-                tuple(meta.partition_keys),
-                # the visibility pointers the build actually consults
-                # (r15 advice find: the 'raw' family carries its path
-                # tuple for the tentative-meta case — restore/DDL
-                # mutate meta before the version-bumping commit — but
-                # this key omitted them; current callers pass committed
-                # metas only, so this is hygiene, not a repro)
+                # the visibility pointers the build consults
                 tuple(meta.live_deltas),
                 tuple((r, meta.committed.get(r)) for r in sorted(rels)),
             ),
-            lambda: self._read_rels_build(name, meta, rels),
+            entries,
+            set(rels) if meta.partition_keys else None,
         )
-
-    def _read_rels_build(self, name: str, meta: TableMeta, rels) -> DataFrame:
-        prels = set(rels) if meta.partition_keys else None
-        rel_seq_paths: list[tuple[str, int, str]] = []
-        for rel in sorted(rels):
-            s = meta.committed.get(rel)
-            if s is not None:
-                base = self._seq_dir(name, s)
-                # rel == "" (unpartitioned): the generation dir ITSELF —
-                # appending "/{rel}" would leave a trailing slash whose
-                # file-split rels ("_seq=N//part-x") never match the
-                # touched set, routing a vectored file to the CLEAN
-                # branch (review find: a confirmed mask-LESS hazard,
-                # the one direction this module must never fail)
-                rel_seq_paths.append(
-                    (rel, s, base if rel == "" else f"{base}/{rel}")
-                )
-            for d in meta.live_deltas:
-                base = self._seq_dir(name, d)
-                p = base if rel == "" else f"{base}/{rel}"
-                if self.fs.exists(p):
-                    rel_seq_paths.append((rel, d, p))
-        schema_with_seq = T.StructType(
-            meta.schema.fields + [T.StructField(_SEQ_COL, T.LongType(), True)]
-        )
-        if not rel_seq_paths:
-            return self.spark.createDataFrame([], schema_with_seq)
-        paths = [p for _, _, p in rel_seq_paths]
-        if meta.deletion_vectors or meta.dv_sidecars:
-            touched = self._dv_touched_files(meta)
-            masked, clean = self._dv_masked_clean(
-                meta,
-                [(rel, s, p, False) for rel, s, p in rel_seq_paths],
-                touched,
-            )
-            if clean or touched is not None:
-                out = self._dv_branch_union(
-                    name, meta, masked, clean, touched, rels=prels
-                )
-                if out is not None:
-                    return out
-                # every file of every requested rel proved fully
-                # deleted: fall through to the unconditionally-correct
-                # full-mask read (same fail-safe as _read_raw_build)
-        df = (
-            self.spark.read.schema(schema_with_seq)
-            .option("basePath", f"{self._dir(name)}/data")
-            .parquet(*paths)
-        )
-        return self._apply_dvs(df, name, meta, rels=prels)
 
     def _read_raw_unmasked(
         self, name: str, meta: TableMeta, paths: list[str] | None = None
@@ -5375,9 +5298,9 @@ class Lakehouse:
 
     #: live entries in the per-handle reader-plan memo (plan OBJECTS
     #: only — no persisted Spark state, so eviction is a plain pop).
-    #: r15: three key families share it (raw/rels/scan — see
-    #: _plan_memo), so the bound doubles: a CDC poll loop cycling a few
-    #: rel sets plus point lookups plus full reads must all stay warm
+    #: Three key families share it (raw/rels/scan — see _plan_memo), so
+    #: a CDC poll loop cycling a few rel sets plus point lookups plus
+    #: full reads must all stay warm
     _PLAN_CACHE_MAX = 32
 
     #: live entries in the file-split listing memo. Each entry is two
@@ -5389,137 +5312,123 @@ class Lakehouse:
     _DV_SPLIT_CACHE_MAX = 8
 
     def _read_raw(self, name: str, meta: TableMeta) -> DataFrame:
-        """Memoizing wrapper (r13): constructing the raw reader is NOT
-        free — Spark eagerly lists every path into an InMemoryFileIndex
-        at DataFrame construction (a listing JOB when the path count
-        tops the parallel-discovery threshold: measured 0.88 s/query for
-        a 287-file DV file-split plan whose execution is 0.45 s), paid
-        per QUERY before r13. Plans and committed generations are both
-        immutable, so the built DataFrame is reusable until the manifest
-        changes. The key is CONTENT-addressed — visible paths + both DV
-        tiers — not just (uuid, version), because internal callers pass
-        tentative/mutated metas mid-commit (e.g. the rung's stripped
-        file lists) that share a version with different read shapes;
-        equal content returning the identical plan object is always
-        sound, a content miss is only a rebuild."""
-        paths = tuple(self._visible_paths(name, meta))
-        digest = self._dv_state_digest(meta)
-        fp = (
-            name,
-            "raw",
-            meta.table_uuid,
-            meta.version,
-            paths,
-            digest,
-            # schema/partition shape ride along for the same tentative-
-            # meta reason (restore and DDL mutate them before the commit
-            # that bumps the version)
-            hash(meta.schema_json),
-            tuple(meta.partition_keys),
-        )
+        """Every visible row of a manifest state, vectors masked, with
+        ``_SEQ_COL`` — the reader behind ``table()``. Build-side rels
+        stay None: live deltas enter with rel "", so rels derived from
+        the entries would prune away the vectors of a partition only a
+        live delta holds (mask-LESS)."""
+        entries = self._visible_entries(name, meta)
         return self._plan_memo(
-            fp,
-            lambda: self._read_raw_build(name, meta, list(paths), digest=digest),
+            name,
+            meta,
+            "raw",
+            tuple(p for _, _, p, _ in entries),
+            lambda: entries,
+            None,
         )
 
-    def _plan_memo(self, key: tuple, build) -> DataFrame:
-        """ONE content-addressed LRU for every reader-plan family
-        (r15): ``key[0]`` must be the table name (``_dv_cache_purge``
-        matches on it), ``key[1]`` the family marker ('raw' — the full
-        visible-paths read; 'rels' — the partition-pruned CDC/point-
-        lookup read; 'scan' — scan()'s zone/bloom-kept read). Plans and
-        committed generations are immutable, so equal content returning
-        the identical plan object is always sound; a content miss is
-        only a rebuild. The families share the LRU because they share
-        the cost being amortized: Spark eagerly lists every path into
-        an InMemoryFileIndex at DataFrame construction (a listing JOB
-        past the parallel-discovery threshold — r13 measured 0.88 s
-        construct vs 0.45 s exec on a 287-file split plan)."""
+    def _memo(self, store: dict, key: tuple, build, bound: int, evict=None):
+        """THE LRU behind the four per-handle memo stores (reader plans,
+        file splits, file routing, DV build sides): a hit moves to the
+        young end; a miss builds OUTSIDE the lock, keeps a racing
+        thread's value if one landed first, evicts oldest-first down to
+        ``bound`` and calls ``evict`` on every value it drops. A build
+        returning None is passed through uncached."""
         with self._dv_cache_mu:
-            hit = self._plan_cache.pop(key, None)
+            hit = store.pop(key, None)
             if hit is not None:
-                self._plan_cache[key] = hit  # re-insert: LRU recency
-        if hit is not None:
-            return hit
-        df = build()
+                store[key] = hit  # re-insert: LRU recency
+                return hit
+        val = build()
+        if val is None:
+            return None
         with self._dv_cache_mu:
-            while len(self._plan_cache) >= self._PLAN_CACHE_MAX:
-                self._plan_cache.pop(next(iter(self._plan_cache)))
-            self._plan_cache[key] = df
-        return df
+            cur = store.get(key)
+            if cur is not None:  # raced another thread: keep theirs
+                if evict is not None:
+                    evict(val)
+                return cur
+            while len(store) >= bound:
+                old = store.pop(next(iter(store)))
+                if evict is not None:
+                    evict(old)
+            store[key] = val
+        return val
 
-    def _read_raw_build(
+    def _plan_memo(
         self,
         name: str,
         meta: TableMeta,
-        paths: list[str],
-        digest: "str | None" = None,
+        family: str,
+        parts: tuple,
+        entries,
+        rels: "set[str] | None",
     ) -> DataFrame:
-        # the all-paths reader is built ONLY on the branches that return
-        # it — constructing a parquet DataFrame eagerly lists every path
-        # (InMemoryFileIndex), and the confined branch below re-lists
-        # the same paths as its masked/clean subsets (r12 review find:
-        # a DV-carrying table paid the O(partitions) listing twice)
+        """ONE content-addressed memo for every reader plan, family
+        'raw' (``table()``), 'rels' (``_read_rels``) or 'scan'
+        (``scan()``), built by `_read_entries` from ``entries()`` (called
+        only on a miss). Spark eagerly lists every path into an
+        InMemoryFileIndex at construction (r13: 0.88 s construct vs
+        0.45 s exec on a 287-file split plan), and plans and committed
+        generations are immutable, so equal content may share one plan
+        object. DV digest, schema and partition shape ride in the key
+        with the family's ``parts`` because restore and DDL pass
+        tentative metas that share a version. ``key[0]`` is the table
+        name (``_dv_cache_purge`` matches on it)."""
+        digest = self._dv_state_digest(meta)
+        key = (
+            name,
+            family,
+            meta.table_uuid,
+            meta.version,
+            digest,
+            hash(meta.schema_json),
+            tuple(meta.partition_keys),
+            parts,
+        )
+        return self._memo(
+            self._plan_cache,
+            key,
+            lambda: self._read_entries(name, meta, entries(), rels, digest),
+            self._PLAN_CACHE_MAX,
+        )
+
+    def _read_entries(
+        self,
+        name: str,
+        meta: TableMeta,
+        entries: "list[tuple[str, int, str, bool]]",
+        rels: "set[str] | None",
+        digest: str,
+    ) -> DataFrame:
+        """THE deletion-vector-aware reader over ``(rel, seq, path,
+        is_file)`` entries (keeps ``_SEQ_COL``). The broadcast anti-join
+        costs ~100 ns per PROBE row — the join operator breaking
+        whole-stage codegen — so rows that provably cannot match must
+        never enter it: the manifest-only masked-vs-clean split
+        (`_dv_masked_clean`), then the shared tail (`_dv_branch_union`:
+        file split, dead-file drop, range routing). Fallback, when no
+        split is provable or every file proved fully deleted: one masked
+        scan of every entry — unconditionally correct. ``rels`` prunes
+        the join's build side (None = every vector)."""
+        paths = [p for _, _, p, _ in entries]
         if not paths:
             return self._read_raw_unmasked(name, meta, paths)
-        if not (meta.deletion_vectors or meta.dv_sidecars):
-            return self._read_raw_unmasked(name, meta, paths)
-        # DV-confined read (r12, file-level r13): the broadcast anti-join
-        # costs ~100 ns per PROBE row — measured independent of key shape
-        # and build size, it is the join operator breaking whole-stage
-        # codegen — so rows that provably cannot match must never enter
-        # it. Two confinement levels, each engaging when its manifest
-        # evidence is complete: the PARTITION level routes committed
-        # bases outside the vector-carrying rel set (and vector-free
-        # live-delta generations) to the plain codegen path; the FILE
-        # level (_dv_file_split) then rescues the untouched part-files
-        # WITHIN vector-carrying dirs, using the manifest's exact
-        # touched-file set. Worst case (legacy/capped entries on an
-        # unpartitioned table) degrades to the old single masked scan.
-        affected = self._dv_affected_rels(meta)
-        touched = self._dv_touched_files(meta)
-        if affected is not None or touched is not None:
-            clean: list[str] = []
-            if affected is not None:
-                # a live delta whose GENERATION provably carries no
-                # vectors (vectors name their files' _seq) is clean too —
-                # without this, a streaming sink's every fresh micro-batch
-                # delta would pay the join after one dv delete on the base
-                vseqs = self._dv_vector_seqs(meta)
-                masked = [
-                    self._seq_dir(name, s)
-                    for s in meta.live_deltas
-                    if vseqs is None or s in vseqs
-                ]
-                clean += [
-                    self._seq_dir(name, s)
-                    for s in meta.live_deltas
-                    if not (vseqs is None or s in vseqs)
-                ]
-                for rel, s in sorted(meta.committed.items()):
-                    base = self._seq_dir(name, s)
-                    p = base if rel == "" else f"{base}/{rel}"
-                    (masked if (rel == "" or rel in affected) else clean).append(p)
-            else:
-                # no partition-level confinement (unpartitioned table, or
-                # an entry without a rel list) but the touched-FILE set is
-                # complete: every visible dir is a mask candidate and the
-                # file split below rescues its untouched part-files —
-                # before r13 an unpartitioned table always paid the full
-                # join on every row
-                masked = list(paths)
-            out = self._dv_branch_union(
-                name, meta, masked, clean, touched, digest=digest
-            )
-            if out is not None:
-                return out
-            # None ⇒ EVERY visible file proved fully deleted (rare: a
-            # whole-table DV wipe). Fall through to the plain masked
-            # read — unconditionally correct (the anti-join removes
-            # every row), and this shape is too rare to earn its own
-            # empty-relation fast path
+        if meta.deletion_vectors or meta.dv_sidecars:
+            touched = self._dv_touched_files(meta)
+            masked, clean = self._dv_masked_clean(meta, entries, touched)
+            if clean or touched is not None:
+                out = self._dv_branch_union(
+                    name, meta, masked, clean, touched, digest, rels
+                )
+                if out is not None:
+                    return out
         return self._apply_dvs(
-            self._read_raw_unmasked(name, meta, paths), name, meta, digest=digest
+            self._read_raw_unmasked(name, meta, paths),
+            name,
+            meta,
+            rels=rels,
+            digest=digest,
         )
 
     def _dv_branch_union(
@@ -5529,14 +5438,12 @@ class Lakehouse:
         masked: list[str],
         clean: list[str],
         touched: "set[str] | None",
-        digest: "str | None" = None,
-        rels: "set[str] | None" = None,
+        digest: str,
+        rels: "set[str] | None",
     ) -> "DataFrame | None":
-        """The shared TAIL of every DV-confined read — `_read_raw_build`
-        and `_read_rels` both feed their partition-level (masked, clean)
-        dir split through here, so the file split, the per-file routing
-        and the branch union can never drift between the full-table and
-        the pruned read paths. Steps: (1) split vector-carrying dirs
+        """The TAIL of `_read_entries` (the one reader behind table(),
+        scan() and _read_rels), fed its partition/generation-level
+        (masked, clean) split. Steps: (1) split vector-carrying dirs
         into explicit part-files (memoized — `_dv_split_cache`),
         rescuing untouched files onto the clean branch; (2) route each
         touched file by the manifest's per-file proof
@@ -5549,14 +5456,11 @@ class Lakehouse:
         branch is empty (all files proved dead) — the caller supplies
         its own fail-safe fallback. ``rels`` prunes the join branch's
         build side exactly as `_apply_dvs` documents."""
-        if (
-            touched is not None
-            and masked
-            # r15: the dir cap became the split's INTERNAL listing
-            # budget — leaves with a manifest file inventory (per-file
-            # zone keys) split without LISTing at any dir count, so the
-            # split always runs when a touched set exists
-        ):
+        # r15: the dir cap is the split's INTERNAL listing budget —
+        # leaves with a manifest file inventory (per-file zone keys)
+        # split without LISTing at any dir count, so the split always
+        # runs when a touched set exists
+        if touched is not None and masked:
             hit = self._dv_split_cached(name, meta, masked, touched)
             masked = list(hit[0])
             clean = clean + hit[1]
@@ -5704,18 +5608,14 @@ class Lakehouse:
                 h.update(b"\0")
             h.update(b"\1")
         ck = (name, meta.table_uuid, meta.version, h.hexdigest())
-        with self._dv_cache_mu:
-            hit = self._dv_split_cache.pop(ck, None)
-            if hit is not None:  # re-insert: LRU recency
-                self._dv_split_cache[ck] = hit
-        if hit is None:
+
+        def split() -> "tuple[list[str], list[str]]":
             extra: list[str] = []
-            hit = (self._dv_file_split(masked, touched, extra, meta), extra)
-            with self._dv_cache_mu:
-                while len(self._dv_split_cache) >= self._DV_SPLIT_CACHE_MAX:
-                    self._dv_split_cache.pop(next(iter(self._dv_split_cache)))
-                self._dv_split_cache[ck] = hit
-        return hit
+            return self._dv_file_split(masked, touched, extra, meta), extra
+
+        return self._memo(
+            self._dv_split_cache, ck, split, self._DV_SPLIT_CACHE_MAX
+        )
 
     def _dv_range_scan(
         self, name: str, meta: TableMeta, range_routed: "list[tuple[str, list]]"
@@ -5880,7 +5780,7 @@ class Lakehouse:
         vacuumed sidecar must surface as SnapshotExpiredError, not a raw
         Spark path error mid-read — and restore must refuse to commit a
         manifest pointing at a reclaimed sidecar; r12 review find)."""
-        meta, _ = self._load_version(name, version)
+        meta = self._meta_from_raw(self._load_version(name, version))
         refs = self._visible_paths(name, meta) + [
             f"{self._dir(name)}/{e[0]}" for e in meta.dv_sidecars
         ]
@@ -6163,12 +6063,10 @@ class Lakehouse:
             if _zone_key_file(zk) is not None:
                 file_keys.setdefault(zk.rsplit("/", 1)[0], []).append(zk)
         kept: list[tuple[str, int, str, bool]] = []  # (rel, seq, path, is_file)
-        kept_rels: set[str] = set()
         for p, zk in leaves:
             head, _, zrel = zk.partition("/")
             zseq = int(head.split("=", 1)[1])
             per_file = file_keys.get(zk)
-            hit = False
             if per_file:
                 # r16: leaf-granularity generations carry BOTH a leaf
                 # stats key and per-file INVENTORY keys (empty stats,
@@ -6184,35 +6082,20 @@ class Lakehouse:
                         kept.append(
                             (zrel, zseq, f"{p}/{fk.rsplit('/', 1)[1]}", True)
                         )
-                        hit = True
             elif not _excludes(meta.zone_maps.get(zk, {})):
                 kept.append((zrel, zseq, p, False))
-                hit = True
-            if hit:
-                kept_rels.add(zrel)
 
         if kept:
-            # r15: the kept-set reader memoizes like _read_raw/_read_rels
-            # — repeated point lookups with the same predicate shape
-            # (a dashboard refresh, a poll loop) used to re-pay the
-            # eager file-index listing per call; `kept` in the key makes
-            # it exact for any predicate that prunes to the same paths
+            # the vector build side prunes to the rels this scan can
+            # produce (None = unpartitioned); `kept` in the memo key makes
+            # the plan exact for any predicate that prunes to the same paths
             df = self._plan_memo(
-                (
-                    name,
-                    "scan",
-                    meta.table_uuid,
-                    meta.version,
-                    tuple(kept),
-                    self._dv_state_digest(meta),
-                    hash(meta.schema_json),
-                    # same tentative-meta hygiene as the 'raw' family
-                    # (r15 verdict nit): scan() only ever builds from a
-                    # freshly loaded committed meta today, but the key
-                    # asymmetry invited a future caller bug
-                    tuple(meta.partition_keys),
-                ),
-                lambda: self._scan_build(name, meta, kept, kept_rels),
+                name,
+                meta,
+                "scan",
+                tuple(kept),
+                lambda: kept,
+                {r for r, _, _, _ in kept} if meta.partition_keys else None,
             ).drop(_SEQ_COL)
         else:
             df = self.spark.createDataFrame([], meta.schema)
@@ -6234,43 +6117,6 @@ class Lakehouse:
                 piece = F.col(c) <= F.lit(hi)
                 cond = piece if cond is None else cond & piece
         return df.filter(cond) if cond is not None else df
-
-    def _scan_build(
-        self,
-        name: str,
-        meta: TableMeta,
-        kept: "list[tuple[str, int, str, bool]]",
-        kept_rels: "set[str]",
-    ) -> DataFrame:
-        """scan()'s kept-set reader (keeps ``_SEQ_COL``; the caller
-        drops it): the vector build side prunes to the rels this scan
-        can actually produce (None = unpartitioned), and the
-        point-lookup path gets the SAME DV confinement ladder as
-        table() (r14 review find: the docs claimed it, but scan() built
-        its own read and every kept row probed the join):
-        generation/rel/explicit-file masked-vs-clean split, then file
-        split + dead-file drop + range routing in the shared tail."""
-        prels = kept_rels if meta.partition_keys else None
-        if meta.deletion_vectors or meta.dv_sidecars:
-            touched = self._dv_touched_files(meta)
-            masked, clean = self._dv_masked_clean(meta, kept, touched)
-            if clean or touched is not None:
-                df = self._dv_branch_union(
-                    name, meta, masked, clean, touched, rels=prels
-                )
-                if df is not None:
-                    return df
-        schema_with_seq = T.StructType(
-            meta.schema.fields + [T.StructField(_SEQ_COL, T.LongType(), True)]
-        )
-        return self._apply_dvs(
-            self.spark.read.schema(schema_with_seq)
-            .option("basePath", f"{self._dir(name)}/data")
-            .parquet(*[pp for _, _, pp, _ in kept]),
-            name,
-            meta,
-            rels=prels,
-        )
 
     def query(self, df: DataFrame):
         """Reference ``db.query(lazy) -> eager frame`` (pipelines/utils/data.py:12).

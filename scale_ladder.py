@@ -1187,33 +1187,19 @@ def measure_dv_sidecar_read(spark, rows: int, n_delete: int) -> dict:
             # entries' file lists REBOUND away (never mutated in place —
             # _meta_from_raw shares nested lists with the raw-meta cache)
             # = the r12 dir-level confinement this shape's number is
-            # claimed against
-            legacy = lake._load_meta("t")
-            # faithful pre-r13 entries: 4 fields with URI-ENCODED rels
-            # (what pre-r13 writers actually stored — the read path
-            # decodes 4-field entries' rels, so a bare truncation keeps
-            # the decoded r13 rels and double-decodes; r13 advice find)
-            from urllib.parse import quote as _q
-
-            legacy.dv_sidecars = [
-                [
-                    e[0],
-                    e[1],
-                    e[2],
-                    None
-                    if e[3] is None
-                    else [_q(r, safe="/=") for r in e[3]],
-                ]
-                for e in legacy.dv_sidecars
+            # claimed against. The capped entry shape (files = finfo =
+            # None, rels and format marker kept) confines exactly there.
+            dirmeta = lake._load_meta("t")
+            dirmeta.dv_sidecars = [
+                [*e[:4], None, None, e[6]] for e in dirmeta.dv_sidecars
             ]
-            ldf = lake._read_raw("t", legacy)
-            agg(ldf)  # warm
-            legacy_runs = []
+            agg(lake._read_raw("t", dirmeta))  # warm
+            dir_runs = []
             for _ in range(3):
                 t0 = _time.perf_counter()
-                agg(lake._read_raw("t", legacy))
-                legacy_runs.append(_time.perf_counter() - t0)
-            out[shape]["read_s_warm_dir_level"] = round(min(legacy_runs), 3)
+                agg(lake._read_raw("t", dirmeta))
+                dir_runs.append(_time.perf_counter() - t0)
+            out[shape]["read_s_warm_dir_level"] = round(min(dir_runs), 3)
     return out
 
 

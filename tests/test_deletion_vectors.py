@@ -34,21 +34,6 @@ SCHEMA = T.StructType(
 )
 
 
-def _fake_legacy_entry(e: list) -> list:
-    """Fabricate a faithful pre-r13 4-field sidecar entry from a current
-    one: pre-r13 writers stored rels URI-ENCODED (straight off
-    ``_metadata.file_path``), and the read path decodes any 4-field
-    entry's rels accordingly — so the fake must RE-ENCODE the decoded
-    r13+ rels or the fallback coverage only holds for partition values
-    where encoding is the identity (r13 advice find)."""
-    from urllib.parse import quote
-
-    rels = e[3]
-    if rels is not None:
-        rels = [quote(r, safe="/=") for r in rels]
-    return [e[0], e[1], e[2], rels]
-
-
 @pytest.fixture
 def lake(spark, tmp_path):
     return Lakehouse(spark, str(tmp_path / "lake"))
@@ -1282,10 +1267,10 @@ def test_dv_file_split_confines_probe_to_touched_files(lake, spark):
     assert expected_probe < 4000, "file split must keep untouched rows out of the join"
 
 
-def test_dv_file_split_legacy_and_capped_entries_fall_back(lake, spark, monkeypatch):
-    """A pre-r13 4-element sidecar entry (no file list) or a capped one
-    (files=None) must disable the file split — dir-level confinement, and
-    the exact same rows — never a wrong answer."""
+def test_dv_file_split_capped_entries_fall_back(lake, spark, monkeypatch):
+    """A capped sidecar entry (files=None past _DV_SIDECAR_FILE_CAP) must
+    disable the file split — dir-level confinement, and the exact same
+    rows — never a wrong answer."""
     monkeypatch.setattr(Lakehouse, "_DV_INLINE_MAX_POSITIONS", 5)
     lake.create("t", SCHEMA, ["part"], [])
     for i in range(2):
@@ -1293,21 +1278,14 @@ def test_dv_file_split_legacy_and_capped_entries_fall_back(lake, spark, monkeypa
     lake.compact("t", zorder_by=["k"], zorder_files=4, full=True)
     lake.delete_where("t", F.col("k").between(100, 149), mode="dv")
     m = lake._load_meta("t")
-    # 6 data fields + the r15 explicit format marker (e[6])
+    # 6 data fields + the explicit format marker (e[6])
     assert len(m.dv_sidecars) == 1 and len(m.dv_sidecars[0]) == 7
     assert m.dv_sidecars[0][6] == Lakehouse._DV_SIDECAR_FORMAT
-    expect = [k for k in range(2000) if not 100 <= k <= 149]
-    # legacy shape: strip the file list in-memory and read via the meta
-    legacy = m
-    legacy.dv_sidecars = [_fake_legacy_entry(e) for e in legacy.dv_sidecars]
-    assert lake._dv_touched_files(legacy) is None
-    got = sorted(r.k for r in lake._read_raw("t", legacy).collect())
-    assert got == expect
     # capped at write time: a new delete spanning > cap files records None
     monkeypatch.setattr(Lakehouse, "_DV_SIDECAR_FILE_CAP", 1)
     lake.delete_where("t", F.col("k").between(150, 1199), mode="dv")
     m = lake._load_meta("t")
-    assert any(len(e) > 4 and e[4] is None for e in m.dv_sidecars)
+    assert any(e[4] is None and e[5] is None for e in m.dv_sidecars)
     assert lake._dv_touched_files(m) is None
     got = sorted(r.k for r in lake.table("t").collect())
     assert got == [k for k in range(2000) if not 100 <= k <= 1199]
@@ -1402,12 +1380,15 @@ def test_plan_cache_reuses_and_invalidates(lake, spark):
     lake.delete_where("t", F.col("k") < 20, mode="dv")
     assert lake.table("t").count() == 980, "second delete must invalidate"
     # a mutated meta with the same version must MISS (content-addressed),
-    # never return the other shape's plan
+    # never return the other shape's plan: rebind the entries to the
+    # capped shape (file list and per-file stats dropped, marker kept)
     m2 = lake._load_meta("t")
-    legacy = lake._load_meta("t")
-    legacy.dv_sidecars = [_fake_legacy_entry(e) for e in legacy.dv_sidecars]
-    if legacy.dv_sidecars != m2.dv_sidecars:
-        assert lake._read_raw("t", legacy) is not lake._read_raw("t", m2)
+    capped = lake._load_meta("t")
+    capped.dv_sidecars = [
+        [*e[:4], None, None, e[6]] for e in capped.dv_sidecars
+    ]
+    if capped.dv_sidecars != m2.dv_sidecars:
+        assert lake._read_raw("t", capped) is not lake._read_raw("t", m2)
 
 
 def test_dv_exact_on_uri_encoded_partition_values(lake, spark):
@@ -1667,23 +1648,6 @@ def test_dv_range_filter_equals_join_path_row_for_row(lake, spark, monkeypatch):
     lake._dv_cache_purge("t")
     got_join = sorted(r.k for r in lake.table("t").collect())
     assert got_join == got_range
-
-
-def test_dv_r13_entries_without_finfo_fall_back(lake, spark, monkeypatch):
-    """An r13 5-field sidecar entry (file list, no per-file stats) must
-    disable dead-prune and range routing for its files — same rows,
-    file-split confinement still engaged."""
-    monkeypatch.setattr(Lakehouse, "_DV_INLINE_MAX_POSITIONS", 5)
-    lake.create("t", SCHEMA, [], [])
-    lake.insert("t", _batch(spark, 0, 2_000, 0).coalesce(2))
-    lake.delete_where("t", F.col("k") < 1_000, mode="dv")  # file 1 dead
-    m = lake._load_meta("t")
-    r13 = m
-    r13.dv_sidecars = [list(e[:5]) for e in r13.dv_sidecars]
-    stats = lake._dv_file_stats(r13)
-    assert stats is not None and all(v[0] is None for v in stats.values())
-    got = sorted(r.k for r in lake._read_raw("t", r13).collect())
-    assert got == list(range(1_000, 2_000))
 
 
 def test_dv_file_rows_pruned_with_vectors(lake, spark):
@@ -2825,3 +2789,196 @@ def test_dv_split_expands_marker_complete_live_delta_generations(lake, spark):
     finally:
         Lakehouse._DV_FILE_SPLIT_DIR_CAP = old_budget
     assert sorted(still2) == sorted(monkey_masked) and extra2 == []
+
+
+def _retire_sidecar_entries(lake, path: str) -> None:
+    """Rewrite the manifest JSON at ``path`` with every sidecar entry cut
+    back to the retired pre-r13 layout ``[relpath, count, seqs, rels]``."""
+    import json
+
+    raw = lake._read_json_retry(path)
+    assert raw["dv_sidecars"], "fixture must hold a sidecar entry"
+    raw["dv_sidecars"] = [e[:4] for e in raw["dv_sidecars"]]
+    lake.fs.write_text_atomic(path, json.dumps(raw))
+
+
+def test_retired_sidecar_entry_on_disk_is_refused(lake, spark, monkeypatch):
+    """Exactly one sidecar-entry layout is accepted: a manifest holding a
+    retired 4-field entry is refused at load with LegacyLayoutError —
+    by table(), scan() and delete_where alike — instead of being read
+    through field-count inference."""
+    from at_data_pipelines_spark.catalog import LegacyLayoutError
+
+    monkeypatch.setattr(Lakehouse, "_DV_INLINE_MAX_POSITIONS", 5)
+    lake.create("t", SCHEMA, ["part"], [])
+    lake.insert("t", _batch(spark, 0, 100, 0))
+    lake.delete_where("t", F.col("k") < 20, mode="dv")
+    _retire_sidecar_entries(lake, lake._meta_path("t"))
+    fresh = Lakehouse(spark, lake.root)
+    for op in (
+        lambda: fresh.table("t"),
+        lambda: fresh.scan("t"),
+        lambda: fresh.delete_where("t", F.col("k") == 50, mode="dv"),
+    ):
+        with pytest.raises(LegacyLayoutError, match="sidecar entry"):
+            op()
+
+
+def test_time_travel_refuses_retired_sidecar_entry(spark, tmp_path, monkeypatch):
+    """Time travel loads archived manifests through the same validation
+    as the current one: table(version=N), restore and table_changes all
+    refuse an archived retired-layout sidecar entry."""
+    from at_data_pipelines_spark.catalog import LegacyLayoutError
+
+    monkeypatch.setattr(Lakehouse, "_DV_INLINE_MAX_POSITIONS", 5)
+    lake = Lakehouse(spark, str(tmp_path / "lake"))
+    lake.create("t", SCHEMA, ["part"], ["k", "part"], retain_versions=10)
+    lake.upsert("t", _batch(spark, 0, 100, 0))
+    lake.optimize("t")
+    v0 = lake._load_meta("t").version
+    lake.delete_where("t", F.col("k") < 20, mode="dv")
+    v = lake._load_meta("t").version
+    lake.upsert("t", _batch(spark, 100, 200, 1))
+    arch = f"{lake._history_dir('t')}/v{v:012d}.json"
+    assert lake.fs.exists(arch)
+    _retire_sidecar_entries(lake, arch)
+    with pytest.raises(LegacyLayoutError, match="sidecar entry"):
+        lake.table("t", version=v)
+    with pytest.raises(LegacyLayoutError, match="sidecar entry"):
+        lake.restore("t", v)
+    with pytest.raises(LegacyLayoutError, match="sidecar entry"):
+        lake.table_changes("t", v0, v)
+    # the current manifest is untouched and still reads
+    assert lake.table("t").count() == 180
+
+
+_HOSTILE_SCHEMA = T.StructType(
+    [
+        T.StructField("k", T.LongType()),
+        T.StructField("part", T.StringType()),
+        T.StructField("v", T.DoubleType()),
+    ]
+)
+
+
+@pytest.mark.parametrize("tier", ["inline", "sidecar"])
+@pytest.mark.parametrize(
+    "shape", ["committed_base", "live_delta_hostile", "unpartitioned"]
+)
+def test_three_readers_agree_with_kept_set_oracle(lake, spark, monkeypatch, tier, shape):
+    """table(), scan(name) with no predicate and _read_rels over every rel
+    build through the one DV-aware reader; each must return exactly the
+    rows a Python kept-set oracle (inserted rows minus deleted keys)
+    predicts. Shapes: vectors on a committed base (plus a vector-free
+    live delta), vectors on a live delta whose hostile-valued partition
+    has no committed base, and an unpartitioned table."""
+    if tier == "sidecar":
+        monkeypatch.setattr(Lakehouse, "_DV_INLINE_MAX_POSITIONS", 3)
+    # a contiguous run (range-routable) plus scattered keys
+    deleted = set(range(10, 20)) | {25, 31, 47, 130}
+    if shape == "committed_base":
+        lake.create("t", SCHEMA, ["part"], [])
+        lake.insert("t", _batch(spark, 0, 100, 0).coalesce(2))
+        lake.insert("t", _batch(spark, 100, 200, 1).coalesce(2))
+        lake.compact("t", full=True)
+        lake.delete_where("t", F.col("k").isin(sorted(deleted)), mode="dv")
+        lake.insert("t", _batch(spark, 200, 250, 1))  # vector-free delta
+        rows = [(k, k // 100 if k < 200 else 1, k * 1.0) for k in range(250)]
+    elif shape == "live_delta_hostile":
+        lake.create("t", _HOSTILE_SCHEMA, ["part"], [])
+
+        def batch(lo, hi, part):
+            return spark.range(lo, hi).select(
+                F.col("id").alias("k"),
+                F.lit(part).alias("part"),
+                (F.col("id") * 1.0).alias("v"),
+            )
+
+        lake.insert("t", batch(100, 200, "x"))
+        lake.compact("t", full=True)  # 'x' gets a committed base
+        lake.insert("t", batch(0, 100, "a b%").coalesce(2))  # delta only
+        deleted = {k for k in deleted if k < 100}
+        lake.delete_where("t", F.col("k").isin(sorted(deleted)), mode="dv")
+        m = lake._load_meta("t")
+        assert not any("a b" in r for r in m.committed), m.committed
+        rows = [(k, "a b%" if k < 100 else "x", k * 1.0) for k in range(200)]
+    else:
+        lake.create("t", SCHEMA, [], [])
+        lake.insert("t", _batch(spark, 0, 100, 0).coalesce(2))
+        lake.compact("t", full=True)
+        lake.insert("t", _batch(spark, 100, 200, 0).coalesce(2))
+        lake.delete_where("t", F.col("k").isin(sorted(deleted)), mode="dv")
+        rows = [(k, 0, k * 1.0) for k in range(200)]
+    m = lake._load_meta("t")
+    if tier == "sidecar":
+        assert m.dv_sidecars and not m.deletion_vectors
+    else:
+        assert m.deletion_vectors and not m.dv_sidecars
+    oracle = sorted(r for r in rows if r[0] not in deleted)
+    if m.partition_keys:
+        rels = set(m.committed)
+        for s in m.live_deltas:
+            rels |= set(lake.fs.list_subdirs(lake._seq_dir("t", s)))
+    else:
+        rels = {""}
+
+    def rows_of(df):
+        return sorted(tuple(r) for r in df.select("k", "part", "v").collect())
+
+    assert rows_of(lake.table("t")) == oracle
+    assert rows_of(lake.scan("t")) == oracle
+    assert rows_of(lake._read_rels("t", m, rels)) == oracle
+
+
+def test_memo_lru_bound_and_eviction_under_threads():
+    """`Lakehouse._memo`, the LRU behind the four memo stores, under
+    contention: a lookup returns its own key's value, the store never
+    exceeds its bound, and every value a build returned is either still
+    stored or was handed to the eviction hook exactly once (a racing
+    duplicate build, or an LRU eviction) — a lost update would leak a
+    value past the hook (for the DV build side, a never-unpersisted
+    DataFrame)."""
+    import random
+    import sys
+    import threading
+
+    lake = object.__new__(Lakehouse)  # _memo needs only the lock
+    lake._dv_cache_mu = threading.Lock()
+    store: dict = {}
+    built: list = []
+    evicted: list = []
+    errors: list = []
+
+    def worker(seed: int) -> None:
+        rng = random.Random(seed)
+        try:
+            for _ in range(2_000):
+                k = rng.randrange(12)
+
+                def build(k=k):
+                    v = (k, object())
+                    built.append(v)
+                    return v
+
+                v = lake._memo(store, (k,), build, 4, evict=evicted.append)
+                if v[0] != k:
+                    errors.append((k, v))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(store) <= 4
+    assert sorted(map(id, built)) == sorted(
+        map(id, evicted + list(store.values()))
+    )

@@ -1,13 +1,16 @@
-"""Every function and class in ``llmops/`` must be reachable from the
-engine's entry points.
+"""Every function and class in ``llmops/``, every private top-level
+function in ``catalog.py`` and every ``Lakehouse`` method and class
+attribute must be reachable from the engine's entry points.
 
 Pure AST walk: no import of the package, no Spark session. Roots are the
 entry scripts (``__spark_entry__.py``, ``__main__.py``, ``bench.py``,
 ``scale_ladder.py``, ``perfbench/*.py``), every ``@register``ed query and
 every public top-level name in the package outside ``llmops/`` (the
 operator inventory, the catalog and the connectors are public API by
-design), plus module-level code outside ``llmops/``. A top-level
-definition is reached when a reached body names it (``Name``,
+design), plus module-level code outside ``llmops/``. ``Lakehouse``'s
+public and dunder members are its API and count as roots too; its
+private members are reached only by name, like top-level definitions.
+A definition is reached when a reached body names it (``Name``,
 ``Attribute`` or ``from ... import``), transitively. Import statements in
 package ``__init__`` files are re-exports and do not count. Matching is by
 name only, so a shadowing local can hide dead code but never flags live
@@ -22,6 +25,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "at_data_pipelines_spark"
 LLMOPS = PKG / "llmops"
+CATALOG = PKG / "catalog.py"
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
@@ -48,11 +52,34 @@ def _is_registered(fn: ast.AST) -> bool:
     return False
 
 
-def unreached_llmops() -> list[str]:
-    """``module.name`` for each top-level llmops definition no root reaches."""
+def _members(cls: ast.ClassDef) -> tuple[dict[str, list[ast.AST]], list[ast.AST]]:
+    """``{member name -> defining statements}`` for a class's methods and
+    class attributes, plus the rest of the class (bases, decorators,
+    other statements), which is reached with the class itself."""
+    members: dict[str, list[ast.AST]] = {}
+    shell: list[ast.AST] = [*cls.decorator_list, *cls.bases]
+    for stmt in cls.body:
+        if isinstance(stmt, _DEFS):
+            members.setdefault(stmt.name, []).append(stmt)
+        elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+            targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+            for t in targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name):
+                        members.setdefault(n.id, []).append(stmt)
+        else:
+            shell.append(stmt)
+    return members, shell
+
+
+def _walk() -> tuple[set[str], dict[str, set[str]], set[str], set[str]]:
+    """(reached names, llmops name -> {module}, catalog private top-level
+    function names, ``Lakehouse`` member names)."""
     defs: dict[str, list[ast.AST]] = {}  # name -> bodies defining it
     owner: dict[str, set[str]] = {}  # llmops name -> {module}
     module_code: dict[str, list[ast.stmt]] = {}  # llmops module -> non-def stmts
+    catalog_private: set[str] = set()
+    lake_members: set[str] = set()
     seeds: set[str] = set()
 
     entry = [ROOT / "__spark_entry__.py", PKG / "__main__.py", ROOT / "bench.py",
@@ -67,7 +94,18 @@ def unreached_llmops() -> list[str]:
         mod = path.relative_to(LLMOPS).with_suffix("").as_posix() if in_llmops else ""
         for stmt in tree.body:
             if isinstance(stmt, _DEFS):
-                defs.setdefault(stmt.name, []).append(stmt)
+                body: ast.AST = stmt
+                if path == CATALOG and isinstance(stmt, ast.ClassDef) and stmt.name == "Lakehouse":
+                    members, shell = _members(stmt)
+                    body = ast.Module(body=shell, type_ignores=[])
+                    lake_members = set(members)
+                    for m, stmts in members.items():
+                        defs.setdefault(m, []).extend(stmts)
+                        if not m.startswith("_") or m.startswith("__"):
+                            seeds.add(m)
+                elif path == CATALOG and stmt.name.startswith("_") and not isinstance(stmt, ast.ClassDef):
+                    catalog_private.add(stmt.name)
+                defs.setdefault(stmt.name, []).append(body)
                 if in_llmops:
                     owner.setdefault(stmt.name, set()).add(mod)
                 elif not stmt.name.startswith("_") or _is_registered(stmt):
@@ -95,9 +133,22 @@ def unreached_llmops() -> list[str]:
                 live_modules.add(mod)
                 for stmt in module_code.get(mod, []):
                     todo.extend(_names(stmt))
+    return reached, owner, catalog_private, lake_members
 
+
+def unreached_llmops() -> list[str]:
+    """``module.name`` for each top-level llmops definition no root reaches."""
+    reached, owner, _, _ = _walk()
     return sorted(f"{mod}.{name}" for name, mods in owner.items()
                   if name not in reached for mod in mods)
+
+
+def unreached_catalog() -> list[str]:
+    """Each private top-level ``catalog.py`` function and each
+    ``Lakehouse`` member no root reaches."""
+    reached, _, private, members = _walk()
+    return sorted([f"catalog.{n}" for n in private - reached]
+                  + [f"catalog.Lakehouse.{n}" for n in members - reached])
 
 
 def test_llmops_has_no_unreached_code():
@@ -105,4 +156,12 @@ def test_llmops_has_no_unreached_code():
     assert not dead, (
         f"{len(dead)} llmops definitions are reached by no query, pipeline, "
         "stream, CLI or benchmark entry point; delete them or wire them in:\n  "
+        + "\n  ".join(dead))
+
+
+def test_catalog_has_no_unreached_private_code():
+    dead = unreached_catalog()
+    assert not dead, (
+        f"{len(dead)} catalog private functions or Lakehouse members are "
+        "reached by no root; delete them or wire them in:\n  "
         + "\n  ".join(dead))
