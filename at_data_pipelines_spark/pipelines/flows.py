@@ -202,11 +202,13 @@ def factor_model_flow(lake: Lakehouse, cfg: PipelineConfig) -> None:
     # r17 (guide §5 caching/lineage): the OLS output feeds TWO sinks
     # (loadings and idio_vol) committed as separate actions, so the
     # whole join+Arrow+numpy kernel stage executed twice per flow run.
-    # A lazy localCheckpoint materializes it once at the first upsert
-    # and the second branch reads the checkpointed partitions — a
-    # per-run ephemeral intermediate (freed with the DataFrame), not a
-    # cross-run cache. Values are byte-identical: the checkpoint only
-    # pins the rows the branches already computed.
+    # localCheckpoint(eager=False) stores it once and the second branch
+    # reads the stored partitions — a per-run ephemeral intermediate
+    # (freed with the DataFrame), not a cross-run cache. The call is not
+    # lazy under AQE: the stages below the kernel's input shuffle (scan,
+    # join, shuffle write) run inside it; the kernel stage runs at the
+    # first upsert. Values are byte-identical: the checkpoint only pins
+    # the rows the branches already computed.
     ols = rolling_ols_grouped(
         joined, "return", cfg.factors, cfg.window, "ticker", "date", coef_prefix="B_"
     ).localCheckpoint(eager=False)
@@ -645,8 +647,9 @@ def _daily_factor_model(lake, cfg, warm, emit) -> None:
     er = warm(lake.table("etf_returns")).filter(F.col("ticker").isin(cfg.factors))
     wide = er.groupBy("date").pivot("ticker", cfg.factors).agg(F.first("return"))
     joined = sr.join(F.broadcast(wide), "date").na.drop()
-    # lazy localCheckpoint: both daily sinks read one OLS materialization
-    # (see factor_model_flow) — halves the kernel stage per daily run
+    # localCheckpoint: both daily sinks read one OLS materialization (see
+    # factor_model_flow; under AQE the call itself runs the stages below
+    # the kernel's shuffle) — halves the kernel stage per daily run
     ols = rolling_ols_grouped(
         joined, "return", cfg.factors, cfg.window, "ticker", "date", coef_prefix="B_"
     ).localCheckpoint(eager=False)

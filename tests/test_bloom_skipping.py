@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from at_data_pipelines_spark.catalog import Lakehouse
+from tests.conftest import zone_stats
 
 SCHEMA = T.StructType(
     [
@@ -144,9 +145,9 @@ def test_fast_path_blooms_probe_identical(lake, spark):
     lake._fast_insert = orig
     lake.insert("b", rows, mode="append")  # small batch: arrow fast path
     # r16: zone_maps also carries per-file inventory keys (empty
-    # stats) — compare the STATS entries via the filtered accessor
-    za = list(lake.file_stats("a").values())
-    zb = list(lake.file_stats("b").values())
+    # stats) — compare the STATS entries via zone_stats
+    za = list(zone_stats(lake, "a").values())
+    zb = list(zone_stats(lake, "b").values())
     assert len(za) == len(zb) == 1
     for c in ("doc_id#bloom", "bucket#bloom"):
         assert za[0][c][0] == zb[0][c][0] and za[0][c][1] == zb[0][c][1]
@@ -363,34 +364,6 @@ def test_inlist_range_prunes_on_stats_only_table(lake, spark):
     assert len(got.inputFiles()) < len(lake.table("t").inputFiles())
 
 
-def test_set_bloom_columns_post_hoc(lake, spark):
-    """Enabling blooms on an existing table applies to future writes;
-    pre-existing generations stay readable (never excluded), and an
-    optimize(full=True) backfills them. Dropping the column prunes its
-    entries."""
-    lake.create("d", SCHEMA, [], ["doc_id"])
-    lake.insert("d", _docs(spark, 0, 50, 0), mode="append")  # pre-bloom gen
-    lake.set_bloom_columns("d", ["doc_id"])
-    lake.insert("d", _docs(spark, 50, 100, 1), mode="append")
-    # old generation has no entry -> must still be read
-    got = lake.scan("d", where={"doc_id": "doc-00007"})
-    assert [r.doc_id for r in got.collect()] == ["doc-00007"]
-    # backfill: full rewrite records filters for everything
-    lake.optimize("d", full=True)
-    meta = lake._load_meta("d")
-    assert any("doc_id#bloom" in s for s in meta.zone_maps.values())
-    got = lake.scan("d", where={"doc_id": "doc-00007"})
-    assert [r.doc_id for r in got.collect()] == ["doc-00007"]
-    # dropping the column prunes its entries
-    lake.set_bloom_columns("d", [])
-    meta = lake._load_meta("d")
-    assert not any(
-        c.endswith("#bloom") for s in meta.zone_maps.values() for c in s
-    )
-    with pytest.raises(ValueError, match="string/integer/date"):
-        lake.set_bloom_columns("d", ["score"])
-
-
 def test_partition_equality_prunes_at_the_driver(lake, spark):
     """Equality/IN on a partition key must drop the excluded partitions
     from the DRIVER-side path enumeration, not merely let Catalyst prune
@@ -443,8 +416,8 @@ def test_fast_path_date_and_int_blooms_match_spark_path(lake, spark):
     lake.insert("a", df, mode="append")  # Spark-job write path
     lake._fast_insert = orig
     lake.insert("b", df, mode="append")  # arrow fast path
-    (za,) = lake.file_stats("a").values()
-    (zb,) = lake.file_stats("b").values()
+    (za,) = zone_stats(lake, "a").values()
+    (zb,) = zone_stats(lake, "b").values()
     for c in ("day#bloom", "n#bloom"):
         assert {k: int(v) for k, v in za[c][2].items()} == {
             k: int(v) for k, v in zb[c][2].items()
@@ -499,9 +472,9 @@ def test_auto_sized_blooms_probe_identical_across_write_paths(lake, spark):
     lake._fast_insert = orig
     lake.insert("b", rows, mode="append")  # arrow fast path
     # r16: zone_maps also carries per-file inventory keys (empty
-    # stats) — compare the STATS entries via the filtered accessor
-    za = list(lake.file_stats("a").values())
-    zb = list(lake.file_stats("b").values())
+    # stats) — compare the STATS entries via zone_stats
+    za = list(zone_stats(lake, "a").values())
+    zb = list(zone_stats(lake, "b").values())
     assert len(za) == len(zb) == 1
     assert int(za[0]["doc_id#bloom"][0]) > 4096, "auto-sizing did not engage"
     for c in ("doc_id#bloom", "bucket#bloom"):
@@ -511,16 +484,9 @@ def test_auto_sized_blooms_probe_identical_across_write_paths(lake, spark):
         }, c
 
 
-def test_bloom_fpp_validation_and_set_bloom_columns_roundtrip(lake, spark):
+def test_bloom_fpp_validation(lake, spark):
     with pytest.raises(ValueError, match="bloom_fpp"):
         lake.create("t", SCHEMA, [], [], bloom_columns=["doc_id"], bloom_fpp=1.5)
-    lake.create("t", SCHEMA, [], [])
-    lake.set_bloom_columns("t", ["doc_id"], bloom_fpp=None)
-    assert lake._load_meta("t").properties["bloom.fpp"] is None
-    lake.set_bloom_columns("t", ["doc_id"], bloom_fpp=0.05)
-    assert lake._load_meta("t").properties["bloom.fpp"] == 0.05
-    lake.set_bloom_columns("t", ["doc_id"])  # keep current
-    assert lake._load_meta("t").properties["bloom.fpp"] == 0.05
 
 
 def test_extreme_fpp_underflow_takes_cap_instead_of_crashing(lake, spark):
@@ -559,9 +525,6 @@ def test_legacy_table_without_fpp_property_keeps_fixed_m(lake, spark):
     ms = [int(s["doc_id#bloom"][0]) for s in lake._load_meta("d").zone_maps.values()
           if "doc_id#bloom" in s]
     assert ms and all(m == 256 for m in ms), f"legacy fixed m violated: {ms}"
-    # and set_bloom_columns without an explicit fpp must NOT backfill one
-    lake.set_bloom_columns("d", ["doc_id"])
-    assert "bloom.fpp" not in lake._load_meta("d").properties
 
 
 def test_banked_blooms_repair_density_past_m_cap(lake, spark):
@@ -638,9 +601,9 @@ def test_banked_blooms_probe_identical_across_write_paths(lake, spark):
     lake._fast_insert = orig
     lake.insert("b", rows, mode="append")  # arrow fast path
     # r16: zone_maps also carries per-file inventory keys (empty
-    # stats) — compare the STATS entries via the filtered accessor
-    za = list(lake.file_stats("a").values())
-    zb = list(lake.file_stats("b").values())
+    # stats) — compare the STATS entries via zone_stats
+    za = list(zone_stats(lake, "a").values())
+    zb = list(zone_stats(lake, "b").values())
     assert len(za) == len(zb) == 1
     ea, eb = za[0]["doc_id#bloom"], zb[0]["doc_id#bloom"]
     assert len(ea) == len(eb) == 4 and int(ea[3]) == int(eb[3]) == 8

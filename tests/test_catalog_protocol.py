@@ -152,6 +152,29 @@ def test_legacy_layout_refused(lake, spark):
         lake.table("old")
 
 
+def test_retired_manifest_fields_on_disk_are_refused(lake, spark):
+    """A manifest declaring CHECK constraints (which nothing enforces) or a
+    dirty partition recorded as a value tuple (not a partition path) is
+    refused at load, by reads and writes alike, instead of silently
+    dropping the constraint or rewriting the entry."""
+    rows = [("AAA", "2024-01-02", 1.0)]
+    for name, field, value, match in (
+        ("ck", "checks", {"close_pos": "close > 0"}, "CHECK"),
+        ("dirty", "dirty_partitions", [[2024]], "dirty partition"),
+    ):
+        lake.create(name, SCHEMA, ["year"], ["ticker", "date"])
+        lake.insert(name, _df(spark, rows))
+        path = lake._meta_path(name)
+        raw = json.loads(lake.fs.read_text(path))
+        raw[field] = value
+        lake.fs.write_text_atomic(path, json.dumps(raw))
+        fresh = Lakehouse(spark, lake.root)
+        with pytest.raises(LegacyLayoutError, match=match):
+            fresh.table(name)
+        with pytest.raises(LegacyLayoutError, match=match):
+            fresh.upsert(name, _df(spark, rows))
+
+
 def test_insert_executes_input_exactly_once(lake, spark):
     """The insert path must evaluate the input plan exactly once (dirty
     partitions are read off the written directory names, not via a second

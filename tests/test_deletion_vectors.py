@@ -407,24 +407,6 @@ def test_update_where_rewrite_partition_move_keeps_target_rows(lake, spark):
     )
 
 
-def test_update_where_validates_checks(lake, spark):
-    """update_where writes NEW values, so it must validate CHECK
-    constraints pre-commit like every other value-producing write (a
-    delete only keeps a subset of already-valid rows and may skip)."""
-    from at_data_pipelines_spark.catalog import CheckViolationError
-
-    lake.create("t", SCHEMA, ["part"], [], checks={"v_nonneg": "v >= 0"})
-    lake.insert("t", _batch(spark, 0, 50, 0))
-    for mode in ("dv", "rewrite"):
-        with pytest.raises(CheckViolationError):
-            lake.update_where("t", F.col("k") < 3, {"v": F.lit(-1.0)}, mode=mode)
-        assert lake.table("t").filter("v < 0").count() == 0, mode
-        assert lake.table("t").count() == 50, mode
-    # a valid update still lands
-    lake.update_where("t", F.col("k") < 3, {"v": F.lit(0.5)}, mode="dv")
-    assert lake.table("t").filter("v = 0.5").count() == 3
-
-
 def test_dv_merge_and_analyze_see_masked_rows(lake, spark):
     """MERGE and ANALYZE both read through _read_raw, so they must see
     the post-delete rows: a merge keyed on a vector-deleted row treats

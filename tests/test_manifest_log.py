@@ -492,21 +492,3 @@ def test_vacuum_retains_generations_of_relocated_mid_segment_versions(
     # the retention window covers target: its snapshot must still read
     got = {r.close for r in lake.table("t", version=target).collect()}
     assert got == {float(supers.index(target))}, got
-
-
-def test_drop_columns_prunes_stats_through_the_segment_log(spark, tmp_path, lake):
-    """r10 review fix: drop_columns must REBIND zone-map leaf dicts, not
-    pop them in place — in log mode the cached raw shares those leaves
-    (_copy_raw copies one level), so an in-place pop both corrupted the
-    handle's cached fold and compared equal in the commit's diff
-    computation, silently omitting the prune from the segment. A fresh
-    handle folding checkpoint+segments must see the stats gone."""
-    lake.create("t", SCHEMA, ["year"], ["date", "ticker"], stats_columns=["close"])
-    lake.upsert("t", _df(spark, [("A", "2024-01-02", 1.0), ("B", "2023-03-04", 2.0)]))
-    assert any("close" in s for s in lake._load_meta("t").zone_maps.values())
-    lake.drop_columns("t", ["close"])
-    for handle in (lake, Lakehouse(spark, lake.root)):  # warm cache AND fresh fold
-        meta = handle._load_meta("t")
-        assert not any("close" in s for s in meta.zone_maps.values()), handle
-        assert meta.stats_columns == []
-        assert "close" not in meta.schema.fieldNames()

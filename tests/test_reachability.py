@@ -1,5 +1,5 @@
 """Every function and class in ``llmops/``, every private top-level
-function in ``catalog.py`` and every ``Lakehouse`` method and class
+function in the package and every ``Lakehouse`` method and class
 attribute must be reachable from the engine's entry points.
 
 Pure AST walk: no import of the package, no Spark session. Roots are the
@@ -8,13 +8,15 @@ entry scripts (``__spark_entry__.py``, ``__main__.py``, ``bench.py``,
 every public top-level name in the package outside ``llmops/`` (the
 operator inventory, the catalog and the connectors are public API by
 design), plus module-level code outside ``llmops/``. ``Lakehouse``'s
-public and dunder members are its API and count as roots too; its
-private members are reached only by name, like top-level definitions.
-A definition is reached when a reached body names it (``Name``,
-``Attribute`` or ``from ... import``), transitively. Import statements in
-package ``__init__`` files are re-exports and do not count. Matching is by
-name only, so a shadowing local can hide dead code but never flags live
-code.
+methods and class attributes, public or private, are reached only by
+name, like top-level definitions: a public method that only tests call
+is dead. Its dunder methods are called by the language, not by name, so
+they are reached with the class. The one named root is ``connect_s3``.
+A definition is reached when a reached body
+names it (``Name``, ``Attribute`` or ``from ... import``), transitively.
+Import statements in package ``__init__`` files are re-exports and do
+not count. Matching is by name only, so a shadowing local can hide dead
+code but never flags live code.
 """
 
 from __future__ import annotations
@@ -55,11 +57,14 @@ def _is_registered(fn: ast.AST) -> bool:
 def _members(cls: ast.ClassDef) -> tuple[dict[str, list[ast.AST]], list[ast.AST]]:
     """``{member name -> defining statements}`` for a class's methods and
     class attributes, plus the rest of the class (bases, decorators,
-    other statements), which is reached with the class itself."""
+    dunder methods, other statements), which is reached with the class
+    itself."""
     members: dict[str, list[ast.AST]] = {}
     shell: list[ast.AST] = [*cls.decorator_list, *cls.bases]
     for stmt in cls.body:
-        if isinstance(stmt, _DEFS):
+        if isinstance(stmt, _DEFS) and stmt.name.startswith("__"):
+            shell.append(stmt)
+        elif isinstance(stmt, _DEFS):
             members.setdefault(stmt.name, []).append(stmt)
         elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
             targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
@@ -72,13 +77,13 @@ def _members(cls: ast.ClassDef) -> tuple[dict[str, list[ast.AST]], list[ast.AST]
     return members, shell
 
 
-def _walk() -> tuple[set[str], dict[str, set[str]], set[str], set[str]]:
-    """(reached names, llmops name -> {module}, catalog private top-level
-    function names, ``Lakehouse`` member names)."""
+def _walk() -> tuple[set[str], dict[str, set[str]], dict[str, set[str]], set[str]]:
+    """(reached names, llmops name -> {module}, private top-level function
+    name -> {module} outside ``llmops/``, ``Lakehouse`` member names)."""
     defs: dict[str, list[ast.AST]] = {}  # name -> bodies defining it
     owner: dict[str, set[str]] = {}  # llmops name -> {module}
     module_code: dict[str, list[ast.stmt]] = {}  # llmops module -> non-def stmts
-    catalog_private: set[str] = set()
+    private: dict[str, set[str]] = {}  # private function -> {module}
     lake_members: set[str] = set()
     seeds: set[str] = set()
 
@@ -101,10 +106,14 @@ def _walk() -> tuple[set[str], dict[str, set[str]], set[str], set[str]]:
                     lake_members = set(members)
                     for m, stmts in members.items():
                         defs.setdefault(m, []).extend(stmts)
-                        if not m.startswith("_") or m.startswith("__"):
-                            seeds.add(m)
-                elif path == CATALOG and stmt.name.startswith("_") and not isinstance(stmt, ast.ClassDef):
-                    catalog_private.add(stmt.name)
+                    # the paper's ``bl.connect_s3(path, storage_options)``
+                    # entry point: how a user opens an object-store lake,
+                    # so it is API whether or not an in-repo script calls it
+                    seeds.add("connect_s3")
+                elif (not in_llmops and stmt.name.startswith("_")
+                      and not isinstance(stmt, ast.ClassDef)):
+                    private.setdefault(stmt.name, set()).add(
+                        ".".join(path.relative_to(PKG).with_suffix("").parts))
                 defs.setdefault(stmt.name, []).append(body)
                 if in_llmops:
                     owner.setdefault(stmt.name, set()).add(mod)
@@ -133,7 +142,7 @@ def _walk() -> tuple[set[str], dict[str, set[str]], set[str], set[str]]:
                 live_modules.add(mod)
                 for stmt in module_code.get(mod, []):
                     todo.extend(_names(stmt))
-    return reached, owner, catalog_private, lake_members
+    return reached, owner, private, lake_members
 
 
 def unreached_llmops() -> list[str]:
@@ -143,12 +152,18 @@ def unreached_llmops() -> list[str]:
                   if name not in reached for mod in mods)
 
 
-def unreached_catalog() -> list[str]:
-    """Each private top-level ``catalog.py`` function and each
-    ``Lakehouse`` member no root reaches."""
-    reached, _, private, members = _walk()
-    return sorted([f"catalog.{n}" for n in private - reached]
-                  + [f"catalog.Lakehouse.{n}" for n in members - reached])
+def unreached_private() -> list[str]:
+    """``module.name`` for each private top-level function outside
+    ``llmops/`` no root reaches."""
+    reached, _, private, _ = _walk()
+    return sorted(f"{mod}.{name}" for name, mods in private.items()
+                  if name not in reached for mod in mods)
+
+
+def unreached_lakehouse() -> list[str]:
+    """Each ``Lakehouse`` method or class attribute no root reaches."""
+    reached, _, _, members = _walk()
+    return sorted(f"catalog.Lakehouse.{n}" for n in members - reached)
 
 
 def test_llmops_has_no_unreached_code():
@@ -159,9 +174,16 @@ def test_llmops_has_no_unreached_code():
         + "\n  ".join(dead))
 
 
-def test_catalog_has_no_unreached_private_code():
-    dead = unreached_catalog()
+def test_package_has_no_unreached_private_functions():
+    dead = unreached_private()
     assert not dead, (
-        f"{len(dead)} catalog private functions or Lakehouse members are "
-        "reached by no root; delete them or wire them in:\n  "
-        + "\n  ".join(dead))
+        f"{len(dead)} private functions are reached by no root; delete "
+        "them or wire them in:\n  " + "\n  ".join(dead))
+
+
+def test_lakehouse_has_no_unreached_members():
+    dead = unreached_lakehouse()
+    assert not dead, (
+        f"{len(dead)} Lakehouse members are reached by no query, pipeline, "
+        "stream, CLI or benchmark entry point; delete them or wire them "
+        "in:\n  " + "\n  ".join(dead))

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from at_data_pipelines_spark.catalog import Lakehouse, SnapshotExpiredError
+from tests.conftest import zone_stats
 
 SCHEMA = T.StructType(
     [
@@ -92,8 +93,12 @@ def test_restore_rolls_back_as_new_commit(lake, spark):
     lake.upsert("t", _batch(spark, 0, 30, 2023, vbase=-1000.0))  # "bad" write
     bad = lake.table("t").orderBy("k").collect()
     assert bad != good
+    lake.analyze("t")
+    assert lake._load_meta("t").table_stats  # stamped
     lake.restore("t", 1)
     assert lake.table("t").orderBy("k").collect() == good
+    # stats stamped against the abandoned version are cleared
+    assert lake._load_meta("t").table_stats == {}
     hist = lake.history("t")
     assert hist[-1]["action"] == "restore(v1)"
     # the bad commit stays in history — restore is roll-forward, so it is
@@ -113,50 +118,6 @@ def test_post_restore_writes_do_not_collide(lake, spark):
     lake.upsert("t", _batch(spark, 100, 120, 2023))
     assert lake.table("t").count() == 40
     assert lake.table("t", version=2).count() == 40  # pre-restore state intact
-
-
-def test_restore_revalidates_current_checks(lake, spark):
-    """A CHECK added after the target version only validated then-current
-    data: restoring rows that would violate it must refuse (like
-    add_check), and table_stats stamped against the abandoned version
-    must be cleared."""
-    from at_data_pipelines_spark.catalog import CheckViolationError
-
-    lake.create("t", SCHEMA, ["year"], ["k", "year"], retain_versions=10)
-    lake.upsert("t", _batch(spark, 0, 20, 2023, vbase=-5000.0))  # v1: negatives
-    lake.delete_where("t", F.col("v") < 0)  # v2: clean
-    lake.upsert("t", _batch(spark, 0, 20, 2023, vbase=100.0))  # v3
-    lake.add_check("t", "v_nonneg", "v >= 0")  # validated current data only
-    lake.analyze("t")
-    assert lake._load_meta("t").table_stats  # stamped
-    with pytest.raises(CheckViolationError, match="v_nonneg"):
-        lake.restore("t", 1)  # v1 rows violate the newer check
-    # compliant version restores fine, and stats are cleared
-    lake.restore("t", 3)
-    meta = lake._load_meta("t")
-    assert meta.table_stats == {}
-    assert lake.table("t").filter(F.col("v") < 0).count() == 0
-
-
-def test_restore_check_probe_judges_logical_rows(lake, spark):
-    """Review fix: restore's check revalidation must see the snapshot's
-    LOGICAL content — a violating row shadowed by the snapshot's own
-    pending delta (same PK, newer generation) must not block a restore
-    whose keep-latest state is compliant."""
-    lake.create("t", SCHEMA, ["year"], ["k", "year"], retain_versions=10)
-    lake.insert("t", _batch(spark, 0, 5, 2023, vbase=-100.0))  # v1: negatives
-    lake.insert("t", _batch(spark, 0, 5, 2023, vbase=100.0))  # v2: shadows them
-    lake.optimize("t")  # v3
-    lake.upsert("t", _batch(spark, 5, 8, 2023, vbase=50.0))  # v4
-    lake.add_check("t", "v_nonneg", "v >= 0")
-    # v2's RAW rows include the shadowed negatives; its LOGICAL rows are
-    # all positive — the restore must go through
-    lake.restore("t", 2)
-    # compact the restored pending deltas: the keep-latest state is the
-    # compliant one the probe judged
-    lake.optimize("t")
-    vals = [r.v for r in lake.table("t").collect()]
-    assert vals and all(v >= 0 for v in vals)
 
 
 def test_create_replace_preserves_history(lake, spark):
@@ -358,7 +319,7 @@ def test_distributed_write_path_records_stats(lake, spark):
     # stats) — exactly one STATS entry, the generation's leaf
     (stats,) = [v for v in meta.zone_maps.values() if v]
     assert stats["k"] == [0, n - 1]
-    assert lake.file_stats("t") == {
+    assert zone_stats(lake, "t") == {
         k: v for k, v in meta.zone_maps.items() if v
     }
     lake.insert("t", _batch(spark, 10 * n, 10 * n + 10, 2023))  # fast path
@@ -408,42 +369,6 @@ def test_scan_differential_random(lake, spark):
         )
 
 
-# -- schema evolution ------------------------------------------------------
-
-
-def test_add_columns_metadata_only(lake, spark):
-    lake.create("t", SCHEMA, ["year"], ["k", "year"], retain_versions=10)
-    lake.upsert("t", _batch(spark, 0, 20, 2023))
-    v_old = lake._load_meta("t").version
-    lake.add_columns("t", [T.StructField("score", T.DoubleType())])
-    # old generations read the new column as NULL — no rewrite happened
-    assert lake.table("t").filter(F.col("score").isNull()).count() == 20
-    # new writes carry the column
-    wide = _batch(spark, 20, 30, 2023).withColumn("score", F.lit(0.5))
-    lake.upsert("t", wide)
-    got = lake.table("t")
-    assert got.filter(F.col("score") == 0.5).count() == 10
-    assert got.count() == 30
-    # time travel reads with the ARCHIVED (narrower) schema
-    old = lake.table("t", version=v_old)
-    assert "score" not in old.columns and old.count() == 20
-    with pytest.raises(ValueError, match="already exists"):
-        lake.add_columns("t", [T.StructField("score", T.DoubleType())])
-
-
-def test_set_stats_columns_applies_to_future_writes(lake, spark):
-    lake.create("t", SCHEMA, ["year"], ["k", "year"])
-    lake.insert("t", _batch(spark, 0, 100, 2023))  # pre-stats leaf
-    lake.set_stats_columns("t", ["k"])
-    lake.insert("t", _batch(spark, 5000, 5100, 2023))  # stats-bearing leaf
-    got = lake.scan("t", where={"k": (5000, 5050)})
-    exp = lake.table("t").filter((F.col("k") >= 5000) & (F.col("k") <= 5050))
-    # correctness holds; the pre-stats leaf stays (soundly) unpruned
-    assert sorted(r.k for r in got.collect()) == sorted(r.k for r in exp.collect())
-    with pytest.raises(ValueError, match="partition key"):
-        lake.set_stats_columns("t", ["year"])
-
-
 # -- change data feed ------------------------------------------------------
 
 
@@ -472,16 +397,13 @@ def test_table_changes_classifies_all_kinds(lake, spark):
     assert {r.k for r in ch} == set(range(15)) - {5, 6}
 
 
-def test_table_changes_between_two_versions_and_schema_evolution(lake, spark):
+def test_table_changes_between_two_versions(lake, spark):
     lake.create("t", SCHEMA, ["year"], ["k", "year"], retain_versions=10)
     lake.upsert("t", _batch(spark, 0, 5, 2023))
     v0 = lake._load_meta("t").version
-    lake.add_columns("t", [T.StructField("score", T.DoubleType())])
-    lake.upsert(
-        "t", _batch(spark, 3, 8, 2023, vbase=50.0).withColumn("score", F.lit(1.0))
-    )
+    lake.upsert("t", _batch(spark, 3, 8, 2023, vbase=50.0))
     v1 = lake._load_meta("t").version
-    lake.upsert("t", _batch(spark, 100, 101, 2023).withColumn("score", F.lit(2.0)))
+    lake.upsert("t", _batch(spark, 100, 101, 2023))
     # bounded window [v0, v1]: the 100-key insert is outside it
     ch = lake.table_changes("t", v0, to_version=v1).collect()
     kinds = {r._change_type for r in ch}
@@ -489,10 +411,6 @@ def test_table_changes_between_two_versions_and_schema_evolution(lake, spark):
     assert {r.k for r in ch if r._change_type == "insert"} == {5, 6, 7}
     assert {r.k for r in ch if r._change_type == "update_postimage"} == {3, 4}
     assert kinds == {"insert", "update_preimage", "update_postimage"}
-    # the old snapshot's missing 'score' aligns as NULL in preimages
-    assert all(
-        r.score is None for r in ch if r._change_type == "update_preimage"
-    )
 
 
 def test_table_changes_requires_primary_keys(lake, spark):
@@ -979,134 +897,22 @@ def test_zorder_rejects_unorderable_column(lake, spark):
     assert [r.k for r in got] == list(range(10))
 
 
-# -- CHECK constraints -----------------------------------------------------
-
-
-def test_check_constraints_block_bad_writes_on_all_paths(lake, spark):
-    from at_data_pipelines_spark.catalog import CheckViolationError
-
-    lake.create(
-        "t", SCHEMA, ["year"], ["k", "year"],
-        checks={"v_nonneg": "v >= 0", "k_bounded": "k < 100000"},
-    )
-    lake.upsert("t", _batch(spark, 0, 20, 2023))  # valid (fast path)
-    n0 = lake.table("t").count()
-    bad = _batch(spark, 20, 25, 2023, vbase=-1e6)  # v < 0
-    # fast upsert path
-    with pytest.raises(CheckViolationError, match="v_nonneg"):
-        lake.upsert("t", bad)
-    # fast insert path
-    with pytest.raises(CheckViolationError, match="v_nonneg"):
-        lake.insert("t", bad)
-    # distributed insert path (above the probe cap)
-    big_bad = _batch(spark, 0, Lakehouse._FAST_UPSERT_MAX_ROWS + 100, 2023).withColumn(
-        "v", F.lit(-1.0)
-    )
-    with pytest.raises(CheckViolationError, match="v_nonneg"):
-        lake.insert("t", big_bad)
-    # merge path
-    with pytest.raises(CheckViolationError, match="v_nonneg"):
-        lake.merge("t", bad)
-    # NOTHING committed by any failed attempt; manifest and data intact
-    assert lake.table("t").count() == n0
-    meta = lake._load_meta("t")
-    assert meta.live_deltas == [] or lake.table("t").count() == n0
-    # NULL check result counts as a violation
-    withnull = _batch(spark, 30, 32, 2023).withColumn("v", F.lit(None).cast("double"))
-    with pytest.raises(CheckViolationError, match="v_nonneg"):
-        lake.insert("t", withnull)
-    # failed generations are vacuumable orphans at worst
-    lake.vacuum("t", grace_s=0)
-    assert lake.table("t").count() == n0
-
-
-def test_add_and_drop_check(lake, spark):
-    from at_data_pipelines_spark.catalog import CheckViolationError
-
-    lake.create("t", SCHEMA, ["year"], ["k", "year"])
-    lake.upsert("t", _batch(spark, 0, 10, 2023))
-    # adding a check the data violates refuses
-    with pytest.raises(CheckViolationError, match="existing rows"):
-        lake.add_check("t", "v_big", "v > 100")
-    lake.add_check("t", "v_nonneg", "v >= 0")
-    with pytest.raises(CheckViolationError, match="v_nonneg"):
-        lake.upsert("t", _batch(spark, 50, 55, 2023, vbase=-1e6))
-    lake.drop_check("t", "v_nonneg")
-    lake.upsert("t", _batch(spark, 50, 55, 2023, vbase=-1e6))  # now passes
-    assert lake.table("t").filter(F.col("v") < 0).count() == 5
-    acts = [h["action"] for h in lake.history("t")]
-    assert "add_check(v_nonneg)" in acts and "drop_check(v_nonneg)" in acts
+# -- manifest accessors ----------------------------------------------------
 
 
 def test_file_stats_and_pending_deltas_accessors(lake, spark):
     lake.create("t", SCHEMA, ["year"], ["k", "year"], stats_columns=["k"])
-    assert lake.file_stats("t") == {} and lake.pending_deltas("t") == 0
+    assert zone_stats(lake, "t") == {} and lake.pending_deltas("t") == 0
     lake.insert("t", _batch(spark, 0, 50, 2023))
     lake.insert("t", _batch(spark, 50, 99, 2023))
     assert lake.pending_deltas("t") == 2
-    stats = lake.file_stats("t")
+    stats = zone_stats(lake, "t")
     assert len(stats) == 2
     assert sorted(v["k"] for v in stats.values()) == [[0, 49], [50, 98]]
     lake.optimize("t")
     assert lake.pending_deltas("t") == 0
-    (merged,) = lake.file_stats("t").values()
+    (merged,) = zone_stats(lake, "t").values()
     assert merged["k"] == [0, 98]
-
-
-def test_drop_columns_metadata_only(lake, spark):
-    """r10: the complement of add_columns — a dropped column vanishes
-    from current reads without any rewrite, survives in time travel
-    under the archived schema, loses its zone-map/stats declarations,
-    and is physically purged by the next full rewrite."""
-    lake.create(
-        "t", SCHEMA, ["year"], ["k", "year"], retain_versions=10, stats_columns=["k", "v"]
-    )
-    lake.upsert("t", _batch(spark, 0, 20, 2023))
-    v_old = lake._load_meta("t").version
-    assert any("v" in stats for stats in lake._load_meta("t").zone_maps.values())
-    lake.drop_columns("t", ["v", "s"])
-    cur = lake.table("t")
-    assert "v" not in cur.columns and "s" not in cur.columns
-    assert cur.count() == 20  # no rewrite, same rows
-    meta = lake._load_meta("t")
-    assert meta.stats_columns == ["k"]
-    assert not any("v" in stats for stats in meta.zone_maps.values())
-    # time travel reads the archived wider schema, bytes intact
-    old = lake.table("t", version=v_old)
-    assert "v" in old.columns and old.filter(F.col("v") >= 0).count() == 20
-    # new writes land without the dropped columns; scans stay consistent
-    lake.upsert("t", _batch(spark, 20, 25, 2023).drop("v", "s"))
-    assert lake.table("t").count() == 25
-    # a full rewrite physically purges the dropped columns (check the
-    # CURRENT generation's file — retention keeps older gens on disk)
-    lake.optimize("t", full=True)
-    import glob
-
-    import duckdb
-
-    seq = lake._load_meta("t").committed["year=2023"]
-    local = lake._dir("t").removeprefix("file://")
-    f = glob.glob(f"{local}/data/_seq={seq}/year=2023/*.parquet")[0]
-    con = duckdb.connect()
-    cols = {r[0] for r in con.sql(f"DESCRIBE SELECT * FROM '{f}'").fetchall()}
-    assert "v" not in cols and "s" not in cols
-
-
-def test_drop_columns_guards(lake, spark):
-    lake.create("t", SCHEMA, ["year"], ["k", "year"])
-    lake.insert("t", _batch(spark, 0, 5, 2023))
-    lake.add_check("t", "v_nonneg", "v >= 0")
-    with pytest.raises(ValueError, match="partition key"):
-        lake.drop_columns("t", ["year"])
-    with pytest.raises(ValueError, match="primary key"):
-        lake.drop_columns("t", ["k"])
-    with pytest.raises(ValueError, match="CHECK"):
-        lake.drop_columns("t", ["v"])
-    with pytest.raises(ValueError, match="not in schema"):
-        lake.drop_columns("t", ["nope"])
-    lake.drop_check("t", "v_nonneg")
-    lake.drop_columns("t", ["v"])  # now legal
-    assert "v" not in lake.table("t").columns
 
 
 def test_lake_cli_compact(lake, spark, capsys):
@@ -1122,22 +928,3 @@ def test_lake_cli_compact(lake, spark, capsys):
     assert lake.table("ev").count() == 20
     assert lake._load_meta("ev").live_deltas == []
     assert lake.history("ev")[-1]["action"] == "compact"
-
-
-def test_drop_then_readd_column_guarded(lake, spark):
-    """r10 review fix: pre-drop generations still hold the dropped
-    column's bytes, so re-adding the name would resurrect old values
-    (or crash the scan on a type change) instead of the documented NULL
-    fill. add_columns must refuse until a full rewrite purges the old
-    generations, then allow — and the re-added column reads NULL."""
-    lake.create("t", SCHEMA, ["year"], ["k", "year"])
-    lake.upsert("t", _batch(spark, 0, 10, 2023))
-    lake.drop_columns("t", ["v"])
-    with pytest.raises(ValueError, match="was dropped"):
-        lake.add_columns("t", [T.StructField("v", T.StringType())])
-    lake.optimize("t", full=True)  # physically purges the old bytes
-    lake.add_columns("t", [T.StructField("v", T.StringType())])
-    got = lake.table("t")
-    assert got.filter(F.col("v").isNull()).count() == 10  # NULL, not resurrected
-    # tombstone cleared: a second drop/re-add cycle behaves the same way
-    assert "__dropped_columns__" not in lake.get_properties("t")
