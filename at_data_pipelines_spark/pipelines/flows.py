@@ -1,11 +1,16 @@
 """The reference's flows re-expressed as Spark jobs over the Lakehouse.
 
-Each ``*_flow`` mirrors one reference flow file (cited per function);
-``run_backfill`` runs the full DAG in the reference's dependency order
-(pipelines/__main__.py:25-37). External connectors are injected
-DataFrames; everything else reads/writes lakehouse tables with the
-reference's schemas, partition keys, primary keys and create modes
-(SURVEY §1.3).
+Each ``*_flow`` mirrors one reference flow file (cited per function).
+External connectors are injected DataFrames; everything else
+reads/writes lakehouse tables with the reference's schemas, partition
+keys, primary keys and create modes (SURVEY §1.3).
+
+Both drivers run the same derived stages in the reference's dependency
+order (pipelines/__main__.py:25-37). Each derived ``*_flow`` takes a
+``DateScope``: ``run_backfill`` passes ``ALL_DATES`` (read and write
+every date); ``run_daily`` passes a trailing warm-up window to read and
+the last market date to write, the reference's daily pattern
+(pipelines/factor_model_flow.py:179-199).
 
 Scale notes: every flow is a declarative DataFrame plan — shuffles are
 per-entity (ticker) for windows/OLS, per-date for the QP fan-out, both
@@ -15,6 +20,7 @@ uniform keys. The ETF/factor side is 5 entities — always broadcast.
 from __future__ import annotations
 
 import datetime as dt
+from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
@@ -113,19 +119,42 @@ def create_all_tables(lake: Lakehouse) -> None:
         lake.create(name, spec["schema"], spec["parts"], spec["pk"], mode="skip")
 
 
-def _upsert(lake: Lakehouse, name: str, df: DataFrame) -> None:
-    lake.upsert(name, df)
-
-
 def _with_year(df: DataFrame) -> DataFrame:
     return df.withColumn("year", F.year("date").cast("int"))
+
+
+@dataclass(frozen=True)
+class DateScope:
+    """The dates one run of a derived stage covers.
+
+    ``history`` narrows the rows a stage reads for its lookback windows;
+    ``emit`` narrows the rows it writes. ``ALL_DATES``, the backfill's
+    scope, leaves both whole. The daily run reads
+    ``warm_start <= date <= target`` and writes ``target`` only (the
+    reference's warm-up pattern, pipelines/factor_model_flow.py:179-199).
+    The per-date stages (benchmark, portfolio) look back at nothing, so
+    they apply ``emit`` to their inputs instead."""
+
+    warm_start: dt.date | None = None
+    target: dt.date | None = None
+
+    def history(self, df: DataFrame) -> DataFrame:
+        if self.target is None:
+            return df
+        return df.filter(F.col("date").between(F.lit(self.warm_start), F.lit(self.target)))
+
+    def emit(self, df: DataFrame) -> DataFrame:
+        return df if self.target is None else df.filter(F.col("date") == F.lit(self.target))
+
+
+ALL_DATES = DateScope()
 
 
 # -- ingestion flows -------------------------------------------------------
 def calendar_flow(lake: Lakehouse, calendar_df: DataFrame) -> None:
     """pipelines/calendar_flow.py:11-45 (generator source injected)."""
     lake.create("calendar", TABLES["calendar"]["schema"], [], ["date"], mode="replace")
-    _upsert(lake, "calendar", calendar_df)
+    lake.upsert("calendar", calendar_df)
 
 
 def universe_flow(lake: Lakehouse, universe_df: DataFrame) -> None:
@@ -134,7 +163,7 @@ def universe_flow(lake: Lakehouse, universe_df: DataFrame) -> None:
     lake.create(
         "universe", TABLES["universe"]["schema"], ["year"], ["date", "ticker"], mode="replace"
     )
-    _upsert(lake, "universe", _with_year(universe_df))
+    lake.upsert("universe", _with_year(universe_df))
 
 
 def reconstruct_membership(
@@ -161,42 +190,44 @@ def reconstruct_membership(
 
 def stock_prices_flow(lake: Lakehouse, bars: DataFrame) -> None:
     """pipelines/stock_prices_flow.py:26-121 (REST source injected)."""
-    _upsert(lake, "stock_prices", _with_year(bars))
+    lake.upsert("stock_prices", _with_year(bars))
 
 
 def etf_prices_flow(lake: Lakehouse, bars: DataFrame) -> None:
     """pipelines/etf_prices_flow.py:15-104."""
-    _upsert(lake, "etf_prices", _with_year(bars))
+    lake.upsert("etf_prices", _with_year(bars))
 
 
 # -- derived flows ---------------------------------------------------------
-def returns_flow(lake: Lakehouse, cfg: PipelineConfig) -> None:
+def returns_flow(lake: Lakehouse, cfg: PipelineConfig, scope: DateScope = ALL_DATES) -> None:
     """pipelines/returns_flow.py:8-75 — close-to-close simple returns per
-    ticker (W1), null first row dropped, mode=replace."""
+    ticker (W1), null first row dropped. The backfill rebuilds both
+    tables (mode=replace); a daily run upserts its day into them."""
     for src, dst in [("stock_prices", "stock_returns"), ("etf_prices", "etf_returns")]:
-        prices = lake.table(src)
+        prices = scope.history(lake.table(src))
         w = entity_window(["ticker"], ["date"])
-        rets = (
+        rets = scope.emit(
             prices.select("ticker", "date", pct_change("close", w).alias("return"))
             .na.drop(subset=["return"])
         )
-        lake.create(dst, TABLES[dst]["schema"], ["year"], ["ticker", "date"], mode="replace")
-        _upsert(lake, dst, _with_year(rets))
+        if scope == ALL_DATES:
+            lake.create(dst, TABLES[dst]["schema"], ["year"], ["ticker", "date"], mode="replace")
+        lake.upsert(dst, _with_year(rets))
 
 
-def _etf_returns_wide(lake: Lakehouse, cfg: PipelineConfig) -> DataFrame:
+def _etf_returns_wide(lake: Lakehouse, cfg: PipelineConfig, scope: DateScope) -> DataFrame:
     """Pivot factor ETF returns long→wide on date (R2; explicit factor
     list ⇒ single pass, deterministic columns)."""
-    er = lake.table("etf_returns").filter(F.col("ticker").isin(cfg.factors))
+    er = scope.history(lake.table("etf_returns")).filter(F.col("ticker").isin(cfg.factors))
     return er.groupBy("date").pivot("ticker", cfg.factors).agg(F.first("return"))
 
 
-def factor_model_flow(lake: Lakehouse, cfg: PipelineConfig) -> None:
+def factor_model_flow(lake: Lakehouse, cfg: PipelineConfig, scope: DateScope = ALL_DATES) -> None:
     """pipelines/factor_model_flow.py — rolling multivariate OLS per ticker
     (U1/W6), loadings unpivoted + EWM-smoothed (R3/W4), residuals →
     rolling std → EWM = idio vol (W3/W5)."""
-    sr = lake.table("stock_returns")
-    wide = _etf_returns_wide(lake, cfg)
+    sr = scope.history(lake.table("stock_returns"))
+    wide = _etf_returns_wide(lake, cfg, scope)
     # 5-column wide side: always broadcast (J7)
     joined = sr.join(F.broadcast(wide), "date").na.drop()
     # r17 (guide §5 caching/lineage): the OLS output feeds TWO sinks
@@ -221,7 +252,7 @@ def factor_model_flow(lake: Lakehouse, cfg: PipelineConfig) -> None:
     smoothed = ewm_mean(
         loadings, "loading", cfg.ewm_half_life, ["ticker", "factor"], ["date"], out_col="sm"
     ).select("ticker", "date", "factor", F.col("sm").alias("loading"))
-    _upsert(lake, "factor_loadings", _with_year(smoothed))
+    lake.upsert("factor_loadings", _with_year(scope.emit(smoothed)))
 
     resid = ols.select("ticker", "date", "residual")
     w = entity_window(["ticker"], ["date"])
@@ -229,26 +260,28 @@ def factor_model_flow(lake: Lakehouse, cfg: PipelineConfig) -> None:
         "ticker", "date", rolling_std("residual", w, cfg.window).alias("rv")
     ).na.drop(subset=["rv"])
     ivol_sm = ewm_mean(ivol, "rv", cfg.ewm_half_life, ["ticker"], ["date"], out_col="idio_vol")
-    _upsert(lake, "idio_vol", _with_year(ivol_sm.select("ticker", "date", "idio_vol")))
+    lake.upsert("idio_vol", _with_year(scope.emit(ivol_sm.select("ticker", "date", "idio_vol"))))
 
 
-def factor_covariances_flow(lake: Lakehouse, cfg: PipelineConfig) -> None:
+def factor_covariances_flow(
+    lake: Lakehouse, cfg: PipelineConfig, scope: DateScope = ALL_DATES
+) -> None:
     """pipelines/factor_covariances_flow.py — rolling pairwise covariance
     of the 5 factor returns (U2/W8) + EWM smoothing."""
-    wide = _etf_returns_wide(lake, cfg)
+    wide = _etf_returns_wide(lake, cfg, scope)
     cov = rolling_pairwise_cov(wide, cfg.factors, "date", cfg.window).na.drop(
         subset=["covariance"]
     )
     sm = ewm_mean(
         cov, "covariance", cfg.ewm_half_life, ["factor_1", "factor_2"], ["date"], out_col="sm"
     ).select("date", "factor_1", "factor_2", F.col("sm").alias("covariance"))
-    _upsert(lake, "factor_covariances", _with_year(sm))
+    lake.upsert("factor_covariances", _with_year(scope.emit(sm)))
 
 
-def reversal_flow(lake: Lakehouse, cfg: PipelineConfig) -> None:
+def reversal_flow(lake: Lakehouse, cfg: PipelineConfig, scope: DateScope = ALL_DATES) -> None:
     """pipelines/reversal_flow.py — 21-day reversal signal (W2), global
     z-score (A3/F12 — whole-frame, not per-date), Grinold alpha (F13)."""
-    sr = lake.table("stock_returns")
+    sr = scope.history(lake.table("stock_returns"))
     w = entity_window(["ticker"], ["date"])
     sig = (
         sr.select(
@@ -259,23 +292,34 @@ def reversal_flow(lake: Lakehouse, cfg: PipelineConfig) -> None:
         .na.drop(subset=["value"])
         .withColumn("signal", F.lit("reversal"))
     )
-    if sig.isEmpty():
-        # reference's only runtime correctness guard
-        # (pipelines/reversal_flow.py:189-190)
+    # reference's only runtime correctness guard
+    # (pipelines/reversal_flow.py:189-190); a daily run skips its Spark job
+    if scope == ALL_DATES and sig.isEmpty():
         raise ValueError("No values found!")
-    _upsert(lake, "signals", _with_year(sig))
+    lake.upsert("signals", _with_year(scope.emit(sig)))
 
-    scores = zscore_global(sig, "value", "score").select("ticker", "date", "signal", "score")
-    _upsert(lake, "scores", _with_year(scores))
+    # reference parity: the z-score is over the WHOLE frame read
+    # (pipelines/reversal_flow.py:39-42), then narrowed to the emitted dates
+    scores = scope.emit(
+        zscore_global(sig, "value", "score").select("ticker", "date", "signal", "score")
+    )
+    lake.upsert("scores", _with_year(scores))
 
+    # alpha = IC·score·σ with a LEFT join like the reference
+    # (reversal_flow.py:50): score rows with no idio_vol are stored as
+    # null-alpha rows; the alphas accessor filters them out on read
     iv = lake.table("idio_vol").select("ticker", "date", "idio_vol")
-    alphas = _alphas_from_scores(scores, iv, cfg.ic)
-    _upsert(lake, "alphas", _with_year(alphas))
+    alphas = (
+        scores.join(iv, ["ticker", "date"], "left")
+        .withColumn("alpha", F.lit(cfg.ic) * F.col("score") * F.col("idio_vol"))
+        .select("ticker", "date", "signal", "alpha")
+    )
+    lake.upsert("alphas", _with_year(alphas))
 
 
-def _benchmark_weights_and_returns(uni: DataFrame, ret: DataFrame):
-    """ONE definition of the benchmark semantics, shared by the full flow
-    and the daily incremental path (they drifted once — r6 review):
+def benchmark_flow(lake: Lakehouse, cfg: PipelineConfig, scope: DateScope = ALL_DATES) -> None:
+    """pipelines/benchmark_flow.py — equal-weight benchmark over the
+    universe (A6/W10) and its weighted return (A1).
 
     - weights are 1/len over the FULL universe⟕returns LEFT join
       (reference benchmark_flow.py:16 ``pl.len().over("date")``):
@@ -285,6 +329,8 @@ def _benchmark_weights_and_returns(uni: DataFrame, ret: DataFrame):
       coalesces to 0.0 on an all-null date rather than Spark's NULL."""
     from pyspark.sql.window import Window as W
 
+    uni = scope.emit(lake.table("universe").select("date", "ticker"))
+    ret = lake.table("stock_returns").select("ticker", "date", "return")
     ur = uni.join(ret, ["date", "ticker"], "left")
     weights = ur.withColumn(
         "weight", F.lit(1.0) / F.count(F.lit(1)).over(W.partitionBy("date"))
@@ -292,37 +338,17 @@ def _benchmark_weights_and_returns(uni: DataFrame, ret: DataFrame):
     brets = weights.groupBy("date").agg(
         F.coalesce(F.sum(F.col("return") * F.col("weight")), F.lit(0.0)).alias("return")
     )
-    return weights, brets
+    lake.upsert("benchmark_weights", _with_year(weights.select("ticker", "date", "weight")))
+    lake.upsert("benchmark_returns", brets)
 
 
-def _alphas_from_scores(scores: DataFrame, iv: DataFrame, ic: float) -> DataFrame:
-    """ONE definition of alpha = IC·score·σ, shared by both paths: LEFT
-    join like the reference (reversal_flow.py:50) — score rows with no
-    idio_vol produce null-alpha rows that ARE stored; the alphas
-    accessor filters ``alpha IS NOT NULL`` on read, so downstream is
-    unchanged but the stored table matches the reference byte-for-byte."""
-    return (
-        scores.join(iv, ["ticker", "date"], "left")
-        .withColumn("alpha", F.lit(ic) * F.col("score") * F.col("idio_vol"))
-        .select("ticker", "date", "signal", "alpha")
-    )
-
-
-def benchmark_flow(lake: Lakehouse, cfg: PipelineConfig) -> None:
-    """pipelines/benchmark_flow.py — equal-weight benchmark over the
-    universe (A6/W10) and its weighted return (A1)."""
-    uni = lake.table("universe").select("date", "ticker")
-    ret = lake.table("stock_returns").select("ticker", "date", "return")
-    weights, brets = _benchmark_weights_and_returns(uni, ret)
-    _upsert(lake, "benchmark_weights", _with_year(weights.select("ticker", "date", "weight")))
-    _upsert(lake, "benchmark_returns", brets)
-
-
-def betas_flow(lake: Lakehouse, cfg: PipelineConfig) -> None:
+def betas_flow(lake: Lakehouse, cfg: PipelineConfig, scope: DateScope = ALL_DATES) -> None:
     """pipelines/betas_flow.py — rolling single-regressor OLS vs the
     benchmark (U1/W7), EWM-smoothed predicted beta (W4)."""
-    sr = lake.table("stock_returns")
-    br = lake.table("benchmark_returns").select("date", F.col("return").alias("bench"))
+    sr = scope.history(lake.table("stock_returns"))
+    br = scope.history(lake.table("benchmark_returns")).select(
+        "date", F.col("return").alias("bench")
+    )
     joined = sr.join(F.broadcast(br), "date")
     ols = rolling_ols_grouped(
         joined, "return", ["bench"], cfg.window, "ticker", "date", with_residual=False
@@ -333,10 +359,15 @@ def betas_flow(lake: Lakehouse, cfg: PipelineConfig) -> None:
     sm = ewm_mean(
         hist, "historical_beta", cfg.ewm_half_life, ["ticker"], ["date"], out_col="predicted_beta"
     )
-    _upsert(lake, "betas", _with_year(sm.select("ticker", "date", "historical_beta", "predicted_beta")))
+    lake.upsert(
+        "betas",
+        _with_year(scope.emit(sm.select("ticker", "date", "historical_beta", "predicted_beta"))),
+    )
 
 
-def portfolio_weights_flow(lake: Lakehouse, cfg: PipelineConfig) -> None:
+def portfolio_weights_flow(
+    lake: Lakehouse, cfg: PipelineConfig, scope: DateScope = ALL_DATES
+) -> None:
     """pipelines/portfolio_weights_flow.py — per-date QP fan-out.
 
     The reference ships every input table into Ray's object store and
@@ -345,31 +376,35 @@ def portfolio_weights_flow(lake: Lakehouse, cfg: PipelineConfig) -> None:
     — the shuffle delivers exactly each date's slice to one task, no
     object store, no driver materialization.
     """
+
+    def read(name: str) -> DataFrame:
+        return scope.emit(lake.table(name))
+
     # the alphas grain is (ticker, date, signal): select the configured
     # signal (a second signal would otherwise duplicate the per-ticker
     # alpha index inside solve_one_date), and only non-null alphas are
     # investable (a NaN would poison the QP's projection)
     alphas = (
-        lake.table("alphas")
+        read("alphas")
         .filter((F.col("signal") == cfg.signal) & F.col("alpha").isNotNull())
         .select(
             "date", "ticker", F.lit(None).cast("string").alias("factor2"),
             F.col("alpha").alias("value"), F.lit("alpha").alias("kind"),
         )
     )
-    load = lake.table("factor_loadings").select(
+    load = read("factor_loadings").select(
         "date", "ticker", F.col("factor").alias("factor2"),
         F.col("loading").alias("value"), F.lit("loading").alias("kind"),
     )
-    iv = lake.table("idio_vol").select(
+    iv = read("idio_vol").select(
         "date", "ticker", F.lit(None).cast("string").alias("factor2"),
         F.col("idio_vol").alias("value"), F.lit("idio").alias("kind"),
     )
-    fcov = lake.table("factor_covariances").select(
+    fcov = read("factor_covariances").select(
         "date", F.col("factor_1").alias("ticker"), F.col("factor_2").alias("factor2"),
         F.col("covariance").alias("value"), F.lit("fcov").alias("kind"),
     )
-    bw = lake.table("benchmark_weights").select(
+    bw = read("benchmark_weights").select(
         "date", "ticker", F.lit(None).cast("string").alias("factor2"),
         F.col("weight").alias("value"), F.lit("bench").alias("kind"),
     )
@@ -422,9 +457,9 @@ def portfolio_weights_flow(lake: Lakehouse, cfg: PipelineConfig) -> None:
 
     res = _grouped_apply(allin, ["date"], solve_one_date, out_schema)
     res = res.persist()
-    _upsert(lake, "portfolio_weights", _with_year(res.select("ticker", "date", "weight")))
+    lake.upsert("portfolio_weights", _with_year(res.select("ticker", "date", "weight")))
     metrics = res.select("date", "lambda", "active_risk").distinct()
-    _upsert(lake, "portfolio_metrics", metrics)
+    lake.upsert("portfolio_metrics", metrics)
     res.unpersist()
 
 
@@ -443,35 +478,6 @@ def should_run_daily(lake: Lakehouse, run_date: dt.date) -> bool:
     (reference pipelines/stock_prices_flow.py:140-144 — every daily flow
     starts with this check)."""
     return get_last_market_date(lake, before=run_date) == run_date - dt.timedelta(days=1)
-
-
-def daily_returns_flow(
-    lake: Lakehouse, cfg: PipelineConfig, run_date: dt.date, new_bars: DataFrame | None = None
-) -> bool:
-    """Incremental daily update — the reference's warm-up pattern
-    (pipelines/factor_model_flow.py:179-199): recompute over a trailing
-    ``window*2``-day re-read, keep only the last market date, upsert
-    (append + PK dedup ⇒ idempotent re-runs).
-
-    Returns False (no-op) when the market was closed.
-    """
-    if not should_run_daily(lake, run_date):
-        return False
-    if new_bars is not None:
-        stock_prices_flow(lake, new_bars)
-    target = get_last_market_date(lake, before=run_date)
-    warm_start = target - dt.timedelta(days=cfg.window * 2)
-    prices = lake.table("stock_prices").filter(
-        F.col("date").between(F.lit(warm_start), F.lit(target))
-    )
-    w = entity_window(["ticker"], ["date"])
-    rets = (
-        prices.select("ticker", "date", pct_change("close", w).alias("return"))
-        .na.drop(subset=["return"])
-        .filter(F.col("date") == F.lit(target))  # keep only the new date
-    )
-    lake.upsert("stock_returns", _with_year(rets))
-    return True
 
 
 def _run_stage_groups(groups: list[list[tuple[str, object]]], clock=None) -> None:
@@ -513,32 +519,41 @@ def _run_stage_groups(groups: list[list[tuple[str, object]]], clock=None) -> Non
                 f.result()
 
 
+def _stage_groups(
+    lake: Lakehouse, cfg: PipelineConfig, scope: DateScope
+) -> list[list[tuple[str, object]]]:
+    """The derived stages in dependency groups (see ``_run_stage_groups``),
+    one list for both drivers; every later stage reads the returns. Each
+    lambda looks its ``*_flow`` up in this module when it runs, so a
+    function rebound on the module after import (a tracing wrapper) is
+    the one called."""
+    return [
+        [("returns", lambda: returns_flow(lake, cfg, scope))],
+        [
+            ("factor_model", lambda: factor_model_flow(lake, cfg, scope)),
+            ("factor_cov", lambda: factor_covariances_flow(lake, cfg, scope)),
+            ("benchmark", lambda: benchmark_flow(lake, cfg, scope)),
+        ],
+        [
+            ("reversal", lambda: reversal_flow(lake, cfg, scope)),
+            ("betas", lambda: betas_flow(lake, cfg, scope)),
+        ],
+        [("portfolio", lambda: portfolio_weights_flow(lake, cfg, scope))],
+    ]
+
+
 def run_backfill(lake: Lakehouse, fixtures: dict[str, DataFrame], cfg: PipelineConfig) -> None:
     """Full-history replay of the reference DAG
-    (pipelines/__main__.py:25-37, backfill_flow :41-51). Ingest and
-    returns are sequential prerequisites; the derived stages run as
-    overlapped independent groups (see ``_run_stage_groups``) with the
-    same write→read order the sequential replay had."""
+    (pipelines/__main__.py:25-37, backfill_flow :41-51): ingest replaces
+    the calendar and universe and upserts the price panels, then every
+    derived stage runs over ``ALL_DATES``, the derived groups overlapped
+    (see ``_run_stage_groups``)."""
     create_all_tables(lake)
     calendar_flow(lake, fixtures["calendar"])
     universe_flow(lake, fixtures["universe"])
     stock_prices_flow(lake, fixtures["stock_bars"])
     etf_prices_flow(lake, fixtures["etf_bars"])
-    returns_flow(lake, cfg)
-    _run_stage_groups(
-        [
-            [
-                ("factor_model", lambda: factor_model_flow(lake, cfg)),
-                ("factor_cov", lambda: factor_covariances_flow(lake, cfg)),
-                ("benchmark", lambda: benchmark_flow(lake, cfg)),
-            ],
-            [
-                ("reversal", lambda: reversal_flow(lake, cfg)),
-                ("betas", lambda: betas_flow(lake, cfg)),
-            ],
-            [("portfolio", lambda: portfolio_weights_flow(lake, cfg))],
-        ]
-    )
+    _run_stage_groups(_stage_groups(lake, cfg, ALL_DATES))
 
 
 def run_daily(
@@ -552,10 +567,15 @@ def run_daily(
     warm_days: int | None = None,
     stage_times: dict[str, float] | None = None,
 ) -> bool:
-    """The reference's scheduled ``daily_flow`` (pipelines/__main__.py:22-37):
-    guard on the market calendar, ingest the new day, recompute every
-    derived table over a trailing warm-up re-read, keep only the last
-    market date's rows, upsert (idempotent).
+    """The reference's scheduled ``daily_flow`` (pipelines/__main__.py:22-37).
+
+    Upserts ``new_calendar``, then guards on it: the run's target is
+    ``run_date - 1 day``, and it returns False (writing nothing more)
+    unless that is the calendar's last market date before ``run_date``.
+    Otherwise it upserts the day's universe and bars and runs the same
+    stage groups as ``run_backfill`` over ``DateScope(target - warm_days,
+    target)``: each stage re-reads that warm-up window and upserts only
+    the target date's rows, so a re-run is idempotent. Returns True.
 
     ``warm_days`` defaults to ``window*2`` calendar days (reference
     pipelines/factor_model_flow.py:179). NOTE the same approximation the
@@ -579,11 +599,11 @@ def run_daily(
 
     if new_calendar is not None:
         lake.upsert("calendar", new_calendar)
-    if not should_run_daily(lake, run_date):
+    target = run_date - dt.timedelta(days=1)
+    if get_last_market_date(lake, before=run_date) != target:
         return False
-    target = get_last_market_date(lake, before=run_date)
     warm_days = cfg.window * 2 if warm_days is None else warm_days
-    warm_start = target - dt.timedelta(days=warm_days)
+    scope = DateScope(target - dt.timedelta(days=warm_days), target)
 
     def _ingest() -> None:
         if new_universe is not None:
@@ -594,160 +614,5 @@ def run_daily(
             etf_prices_flow(lake, new_etf_bars)
 
     _clock("ingest", _ingest)
-
-    emit = F.col("date") == F.lit(target)
-
-    def warm(df: DataFrame) -> DataFrame:
-        return df.filter(F.col("date").between(F.lit(warm_start), F.lit(target)))
-
-    def _returns() -> None:
-        # returns (both panels), emitted only for the target date
-        for src, dst in [
-            ("stock_prices", "stock_returns"),
-            ("etf_prices", "etf_returns"),
-        ]:
-            w = entity_window(["ticker"], ["date"])
-            rets = (
-                warm(lake.table(src))
-                .select("ticker", "date", pct_change("close", w).alias("return"))
-                .na.drop(subset=["return"])
-                .filter(emit)
-            )
-            lake.upsert(dst, _with_year(rets))
-
-    _clock("returns", _returns)
-
-    # derived flows: recompute over the warm slice, emit target rows only.
-    # Implemented by running the full-flow plans against warm-filtered
-    # inputs via temporary lakehouse reads; the write path filters to the
-    # target date before upserting.
-    # same dependency groups as run_backfill (guide §2.6 overlap):
-    # reversal needs factor_model's idio_vol, betas needs benchmark's
-    # benchmark_returns, portfolio needs everything
-    _run_stage_groups(
-        [
-            [
-                ("factor_model", lambda: _daily_factor_model(lake, cfg, warm, emit)),
-                ("factor_cov", lambda: _daily_factor_covariances(lake, cfg, warm, emit)),
-                ("benchmark", lambda: _daily_benchmark(lake, cfg, warm, emit)),
-            ],
-            [
-                ("reversal", lambda: _daily_reversal(lake, cfg, warm, emit)),
-                ("betas", lambda: _daily_betas(lake, cfg, warm, emit)),
-            ],
-            [("portfolio", lambda: _daily_portfolio(lake, cfg, emit))],
-        ],
-        clock=_clock,
-    )
+    _run_stage_groups(_stage_groups(lake, cfg, scope), clock=_clock)
     return True
-
-
-def _daily_factor_model(lake, cfg, warm, emit) -> None:
-    sr = warm(lake.table("stock_returns"))
-    er = warm(lake.table("etf_returns")).filter(F.col("ticker").isin(cfg.factors))
-    wide = er.groupBy("date").pivot("ticker", cfg.factors).agg(F.first("return"))
-    joined = sr.join(F.broadcast(wide), "date").na.drop()
-    # localCheckpoint: both daily sinks read one OLS materialization (see
-    # factor_model_flow; under AQE the call itself runs the stages below
-    # the kernel's shuffle) — halves the kernel stage per daily run
-    ols = rolling_ols_grouped(
-        joined, "return", cfg.factors, cfg.window, "ticker", "date", coef_prefix="B_"
-    ).localCheckpoint(eager=False)
-    loadings = ols.select(
-        "ticker", "date", *[F.col(f"B_{f}").alias(f) for f in cfg.factors]
-    ).unpivot(["ticker", "date"], cfg.factors, "factor", "loading").na.drop(subset=["loading"])
-    smoothed = ewm_mean(
-        loadings, "loading", cfg.ewm_half_life, ["ticker", "factor"], ["date"], out_col="sm"
-    ).select("ticker", "date", "factor", F.col("sm").alias("loading"))
-    lake.upsert("factor_loadings", _with_year(smoothed.filter(emit)))
-    resid = ols.select("ticker", "date", "residual")
-    w = entity_window(["ticker"], ["date"])
-    ivol = resid.select(
-        "ticker", "date", rolling_std("residual", w, cfg.window).alias("rv")
-    ).na.drop(subset=["rv"])
-    ivol_sm = ewm_mean(ivol, "rv", cfg.ewm_half_life, ["ticker"], ["date"], out_col="idio_vol")
-    lake.upsert(
-        "idio_vol", _with_year(ivol_sm.select("ticker", "date", "idio_vol").filter(emit))
-    )
-
-
-def _daily_factor_covariances(lake, cfg, warm, emit) -> None:
-    er = warm(lake.table("etf_returns")).filter(F.col("ticker").isin(cfg.factors))
-    wide = er.groupBy("date").pivot("ticker", cfg.factors).agg(F.first("return"))
-    cov = rolling_pairwise_cov(wide, cfg.factors, "date", cfg.window).na.drop(
-        subset=["covariance"]
-    )
-    sm = ewm_mean(
-        cov, "covariance", cfg.ewm_half_life, ["factor_1", "factor_2"], ["date"], out_col="sm"
-    ).select("date", "factor_1", "factor_2", F.col("sm").alias("covariance"))
-    lake.upsert("factor_covariances", _with_year(sm.filter(emit)))
-
-
-def _daily_reversal(lake, cfg, warm, emit) -> None:
-    sr = warm(lake.table("stock_returns"))
-    w = entity_window(["ticker"], ["date"])
-    sig = (
-        sr.select(
-            "ticker",
-            "date",
-            (rolling_sum(F.log1p(F.col("return")), w, cfg.reversal_window) * -1).alias("value"),
-        )
-        .na.drop(subset=["value"])
-        .withColumn("signal", F.lit("reversal"))
-    )
-    lake.upsert("signals", _with_year(sig.filter(emit)))
-    # reference parity: the z-score is over the WHOLE recomputed frame
-    # (pipelines/reversal_flow.py:39-42), then sliced to the day
-    scores = zscore_global(sig, "value", "score").select("ticker", "date", "signal", "score")
-    lake.upsert("scores", _with_year(scores.filter(emit)))
-    iv = lake.table("idio_vol").select("ticker", "date", "idio_vol")
-    alphas = _alphas_from_scores(scores.filter(emit), iv, cfg.ic)
-    lake.upsert("alphas", _with_year(alphas))
-
-
-def _daily_benchmark(lake, cfg, warm, emit) -> None:
-    uni = lake.table("universe").select("date", "ticker").filter(emit)
-    ret = lake.table("stock_returns").select("ticker", "date", "return")
-    weights, brets = _benchmark_weights_and_returns(uni, ret)
-    lake.upsert("benchmark_weights", _with_year(weights.select("ticker", "date", "weight")))
-    lake.upsert("benchmark_returns", brets)
-
-
-def _daily_betas(lake, cfg, warm, emit) -> None:
-    sr = warm(lake.table("stock_returns"))
-    br = warm(lake.table("benchmark_returns")).select("date", F.col("return").alias("bench"))
-    joined = sr.join(F.broadcast(br), "date")
-    ols = rolling_ols_grouped(
-        joined, "return", ["bench"], cfg.window, "ticker", "date", with_residual=False
-    )
-    hist = ols.select("ticker", "date", F.col("B_bench").alias("historical_beta")).na.drop(
-        subset=["historical_beta"]
-    )
-    sm = ewm_mean(
-        hist, "historical_beta", cfg.ewm_half_life, ["ticker"], ["date"], out_col="predicted_beta"
-    )
-    lake.upsert(
-        "betas",
-        _with_year(
-            sm.select("ticker", "date", "historical_beta", "predicted_beta").filter(emit)
-        ),
-    )
-
-
-def _daily_portfolio(lake, cfg, emit) -> None:
-    # the QP inputs are all per-date tables; slice every input to the day
-    # and reuse the full flow's fan-out (one group)
-    class _Sliced:
-        """Lakehouse view that filters per-date tables to the target day."""
-
-        def __init__(self, base):
-            self._base = base
-            self.spark = base.spark
-
-        def table(self, name):
-            return self._base.table(name).filter(emit)
-
-        def upsert(self, name, df):
-            self._base.upsert(name, df)
-
-    portfolio_weights_flow(_Sliced(lake), cfg)

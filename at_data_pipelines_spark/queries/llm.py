@@ -528,7 +528,7 @@ def q50_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q65_bm25_search",
     oracle="""
     WITH base AS (SELECT doc_id,
-                       list_filter(string_split_regex(text, '\s+'), t -> t <> '')
+                       list_filter(string_split_regex(text, '\\s+'), t -> t <> '')
                          AS toks FROM documents),
     dl AS (SELECT doc_id, len(toks) AS dl FROM base),
     corpus AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),

@@ -175,9 +175,9 @@ def test_stage_group_failure_semantics(spark, tmp_path):
 
 def test_daily_benchmark_matches_full_flow_with_missing_returns(spark, tmp_path):
     """r6 review: the daily path had drifted from benchmark_flow (dropped
-    null-return members, skipped the all-null coalesce). Both paths now
-    share one helper — a universe member with no return row must dilute
-    the denominator identically in both."""
+    null-return members, skipped the all-null coalesce). Both drivers now
+    run benchmark_flow — over one day, a universe member with no return
+    row must dilute the denominator as it does over all dates."""
     import datetime as dtm
 
     from at_data_pipelines_spark.catalog import Lakehouse
@@ -207,15 +207,56 @@ def test_daily_benchmark_matches_full_flow_with_missing_returns(spark, tmp_path)
         return w, b
 
     full_w, full_b = build(lambda lake: flows.benchmark_flow(lake, cfg))
-    daily_w, daily_b = build(
-        lambda lake: flows._daily_benchmark(
-            lake, cfg, lambda df: df, F.col("date") == F.lit(d)
-        )
-    )
+    daily_w, daily_b = build(lambda lake: flows.benchmark_flow(lake, cfg, flows.DateScope(d, d)))
     assert full_w == daily_w and set(full_w) == {"AAA", "BBB", "CCC"}
     assert abs(full_w["CCC"] - 1 / 3) < 1e-12  # null-return member still weighted
     assert full_b == daily_b
     assert abs(full_b[d] - (0.01 + 0.03) / 3) < 1e-12
+
+
+def test_backfill_and_daily_run_the_same_stages(monkeypatch):
+    """One definition per derived stage: both drivers call the same
+    ``*_flow`` functions, the backfill over ALL_DATES and the daily run
+    over its warm-up window and target date. Every flow, the table set-up
+    and the calendar read are replaced by recorders and the lake is a
+    stub, so no Spark job runs."""
+    import datetime as dtm
+
+    class StubLake:
+        def create(self, *args, **kwargs):
+            pass
+
+        def upsert(self, *args, **kwargs):
+            pass
+
+    calls: list[tuple[str, tuple]] = []
+    for name in [n for n in vars(flows) if n.endswith("_flow")]:
+        monkeypatch.setattr(flows, name, lambda *a, _n=name: calls.append((_n, a[1:])))
+    monkeypatch.setattr(flows, "create_all_tables", lambda lake: None)
+    target = dtm.date(2023, 3, 6)
+    monkeypatch.setattr(flows, "get_last_market_date", lambda lake, before=None: target)
+
+    def stages(run) -> dict[str, list]:
+        calls.clear()
+        run()
+        out: dict[str, list] = {}
+        for name, args in calls:
+            if args[:1] == (CFG,):  # derived stages take the config
+                out.setdefault(name, []).append(args[1:])
+        return out
+
+    fixtures = dict.fromkeys(["calendar", "universe", "stock_bars", "etf_bars"])
+    backfill = stages(lambda: flows.run_backfill(StubLake(), fixtures, CFG))
+    daily = stages(
+        lambda: flows.run_daily(StubLake(), CFG, target + dtm.timedelta(days=1), warm_days=10)
+    )
+    assert set(backfill) == set(daily) == {
+        "returns_flow", "factor_model_flow", "factor_covariances_flow", "benchmark_flow",
+        "reversal_flow", "betas_flow", "portfolio_weights_flow",
+    }
+    day = flows.DateScope(target - dtm.timedelta(days=10), target)
+    assert all(a == [(flows.ALL_DATES,)] for a in backfill.values())
+    assert all(a == [(day,)] for a in daily.values())
 
 
 def test_zscore_global_constant_column_is_null_not_crash(spark):

@@ -173,7 +173,7 @@ def daily_lake(spark, tmp_path_factory):
 def test_market_closed_guard(daily_lake):
     # a Sunday: Saturday was not a market day → no-op
     assert flows.should_run_daily(daily_lake, dt.date(2023, 3, 19)) is False
-    assert flows.daily_returns_flow(daily_lake, CFG, dt.date(2023, 3, 19)) is False
+    assert flows.run_daily(daily_lake, CFG, dt.date(2023, 3, 19)) is False
 
 
 def test_daily_rerun_is_idempotent(daily_lake):
@@ -183,10 +183,13 @@ def test_daily_rerun_is_idempotent(daily_lake):
         run_date = cal[-1]  # ensure yesterday-is-market-day holds
         while not flows.should_run_daily(daily_lake, run_date):
             run_date += dt.timedelta(days=1)
+    target = run_date - dt.timedelta(days=1)
+    day = flows.DateScope(target - dt.timedelta(days=CFG.window * 2), target)
     before = daily_lake.table("stock_returns").count()
-    assert flows.daily_returns_flow(daily_lake, CFG, run_date) is True
+    assert flows.should_run_daily(daily_lake, run_date) is True
+    flows.returns_flow(daily_lake, CFG, day)
     assert daily_lake.table("stock_returns").count() == before  # recompute of existing date
-    assert flows.daily_returns_flow(daily_lake, CFG, run_date) is True
+    flows.returns_flow(daily_lake, CFG, day)
     assert daily_lake.table("stock_returns").count() == before  # idempotent re-run
     dupes = (
         daily_lake.table("stock_returns")
