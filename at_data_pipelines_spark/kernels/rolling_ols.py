@@ -11,9 +11,13 @@ incrementally via prefix sums of the outer products — O(p²) per step, not
 O(window·p²) — matching RollingOLS's sliding algebra.
 
 Runs as ``groupBy(entity).applyInPandas``: one shuffle on the entity key,
-every group solved independently across executors. Groups shorter than
-``window`` emit all-null coefficients (statsmodels parity: those rows have
-no estimate).
+every group solved independently. The stage is not pinned to a partition
+count: AQE coalesces the shuffle by bytes, so a daily slice of a few
+thousand rows runs on one Python task instead of paying the per-task
+worker set-up once per core, and a large panel still splits up to
+``spark.sql.shuffle.partitions`` tasks. Groups shorter than ``window``
+emit all-null coefficients (statsmodels parity: those rows have no
+estimate).
 """
 
 from __future__ import annotations
@@ -100,6 +104,8 @@ def rolling_ols_grouped(
             out["residual"] = y - yhat
         return out
 
-    from ..ts.windows import _grouped_apply
-
-    return _grouped_apply(df.select(entity_col, order_col, y_col, *x_cols), [entity_col], fn, schema)
+    return (
+        df.select(entity_col, order_col, y_col, *x_cols)
+        .groupBy(entity_col)
+        .applyInPandas(fn, schema)
+    )

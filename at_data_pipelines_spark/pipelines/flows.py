@@ -422,7 +422,7 @@ def portfolio_weights_flow(
         ]
     )
 
-    def solve_one_date(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def solve_one_date(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (date,) = key
         by = {k: g for k, g in pdf.groupby("kind")}
         need = {"alpha", "loading", "idio", "fcov", "bench"}
@@ -453,10 +453,7 @@ def portfolio_weights_flow(
             {"date": date, "ticker": tickers, "weight": w, "lambda": lam, "active_risk": risk}
         )
 
-    from ..ts.windows import _grouped_apply
-
-    res = _grouped_apply(allin, ["date"], solve_one_date, out_schema)
-    res = res.persist()
+    res = allin.groupBy("date").applyInPandas(solve_one_date, out_schema).persist()
     lake.upsert("portfolio_weights", _with_year(res.select("ticker", "date", "weight")))
     metrics = res.select("date", "lambda", "active_risk").distinct()
     lake.upsert("portfolio_metrics", metrics)

@@ -4,6 +4,18 @@ Local-mode defaults tuned for the test harness (local[$SPARK_GRAFT_CPUS],
 shuffle partitions ~ cores); on a real cluster the same builder works with
 ``master`` overridden and shuffle partitions sized to the data (AQE coalesces
 them at runtime anyway).
+
+AQE's partition coalescing also sizes the pandas grouped-map stages
+(``applyInPandas``): each Python task pays a fixed worker set-up of about
+0.27 CPU-s (measured on a 4-core host), so a day's tiny inputs run on one
+task while a large panel still splits up to the shuffle parallelism.
+
+The generated-code cache holds ``_CODEGEN_CACHE_ENTRIES`` classes instead
+of Spark's default 100: one daily DAG run compiles about 190 classes, so
+at 100 entries a same-day rerun (or the next query pass in the same JVM)
+evicts and recompiles them all. The cache is per JVM, so this only helps
+a process that re-runs plans; a single run in a fresh JVM compiles the
+same number of classes at either size.
 """
 
 from __future__ import annotations
@@ -11,6 +23,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(
@@ -32,6 +46,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
         # the driver testdata's events table uses TIMESTAMP(NANOS) parquet,
         # which Spark only reads via this legacy conf (as raw nanos longs)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -17,8 +17,8 @@ Scale notes: all bounded-window ops are single-shuffle (hash by entity,
 sort by time within partition) and stay in whole-stage codegen. ewm_mean is
 a recursive scan with no bounded-frame equivalent, so it runs as an Arrow
 ``applyInPandas`` per entity — one shuffle, O(rows) per group, groups
-processed independently across executors (the panel has millions of
-entities at corpus scale, so parallelism is ample).
+processed independently, with AQE choosing the number of Python tasks from
+the shuffle bytes.
 """
 
 from __future__ import annotations
@@ -140,8 +140,12 @@ def ewm_mean(
     Values are identical (same per-group row order, same kernel); q28 at
     sf0.1 measured 0.72 s vs 0.91 s min and 6.7 s vs 11.5 s median under
     host pressure (interleaved min-of-4) — the per-group Python overhead,
-    not the math, was the cost. Buckets (4× the shuffle parallelism) keep
-    every core busy while bounding the per-task pandas frame.
+    not the math, was the cost. The bucket count (4× the shuffle
+    parallelism) bounds each call's pandas frame; how many Python tasks run
+    the buckets is left to AQE's partition coalescing, which sizes the
+    stage from its shuffle bytes: a daily slice runs on one task (each task
+    pays a fixed Python worker set-up, about 0.27 CPU-s), a large panel on
+    up to ``spark.sql.shuffle.partitions``.
     """
     parts = list(partition_cols)
     order = list(order_cols)
@@ -166,21 +170,8 @@ def ewm_mean(
     bucket = F.pmod(F.xxhash64(*parts), F.lit(n * 4))
     return (
         df.withColumn("_ewm_b", bucket)
-        .repartition(n, "_ewm_b")
         .groupBy("_ewm_b")
         .applyInPandas(fn, schema)
         .drop("_ewm_b")
     )
 
-
-def _grouped_apply(df: DataFrame, partition_cols: list, fn, schema) -> DataFrame:
-    """groupBy(...).applyInPandas with partitioning pinned to the session's
-    shuffle parallelism. Pandas stages are Python-CPU-bound per row, but
-    AQE coalesces shuffle partitions by BYTES — on a modest panel it
-    happily merges down to 1-2 partitions and serializes the whole stage
-    through 1-2 Python workers (measured 3× slower). An explicit
-    hash-repartition on the group key satisfies the groupBy's distribution
-    requirement (no second shuffle) and keeps all cores busy."""
-    spark = df.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return df.repartition(n, *partition_cols).groupBy(*partition_cols).applyInPandas(fn, schema)

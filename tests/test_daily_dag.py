@@ -93,3 +93,48 @@ def test_daily_equals_backfill(spark, tmp_path):
                 atol=1e-12,
                 err_msg=f"{name}.{v}",
             )
+
+
+def _compiles_and_jobs(spark) -> tuple[int, int]:
+    """Whole-JVM counters: generated classes compiled so far, and Spark
+    jobs submitted so far (AQE shuffle-stage submissions included)."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+    return compiles, jobs
+
+
+@pytest.mark.slow
+def test_same_day_rerun_compiles_nothing(spark, tmp_path):
+    """The session's codegen cache holds a whole daily run: re-running the
+    same day in the same JVM compiles no class and runs the same jobs
+    (at Spark's default 100 entries it recompiled ~190 classes)."""
+    fx = synthetic.generate_market(
+        spark, n_tickers=12, start=dt.date(2023, 1, 2), end=dt.date(2023, 7, 31)
+    )
+    last = max(r.date for r in fx["calendar"].collect())
+    before = {k: v.filter(F.col("date") < F.lit(last)) for k, v in fx.items()}
+    day = {k: v.filter(F.col("date") == F.lit(last)) for k, v in fx.items()}
+    lake = Lakehouse(spark, str(tmp_path / "lake"))
+    flows.run_backfill(lake, before, CFG)
+
+    def daily():
+        c0, j0 = _compiles_and_jobs(spark)
+        ran = flows.run_daily(
+            lake,
+            CFG,
+            run_date=last + dt.timedelta(days=1),
+            new_stock_bars=day["stock_bars"],
+            new_etf_bars=day["etf_bars"],
+            new_calendar=day["calendar"],
+            new_universe=day["universe"],
+            warm_days=10_000,
+        )
+        assert ran is True
+        c1, j1 = _compiles_and_jobs(spark)
+        return c1 - c0, j1 - j0
+
+    _, first_jobs = daily()
+    rerun_compiles, rerun_jobs = daily()
+    assert rerun_compiles == 0
+    assert rerun_jobs == first_jobs

@@ -17,6 +17,7 @@ from at_data_pipelines_spark.kernels import (
 )
 from at_data_pipelines_spark.kernels.portfolio import active_risk, project_simplex
 from at_data_pipelines_spark.kernels.rolling_cov import rolling_cov_pairs_sql
+from at_data_pipelines_spark.ts import ewm_mean
 
 
 @pytest.fixture(scope="module")
@@ -60,6 +61,17 @@ def test_rolling_ols_matches_direct_lstsq(spark, ols_panel):
             )
             resid = sub.loc[t, "ret"] - X[-1] @ coef
             np.testing.assert_allclose(g.loc[t, "residual"], resid, rtol=1e-6, atol=1e-12)
+
+
+def test_tiny_grouped_map_inputs_run_on_one_partition(spark, ols_panel):
+    """The pandas grouped-map stages are not pinned to the shuffle
+    parallelism: AQE coalesces a few hundred rows into one Python task,
+    instead of one task (and one worker set-up) per shuffle partition."""
+    sdf, _ = ols_panel
+    ols = rolling_ols_grouped(sdf, "ret", ["f1", "f2", "f3"], 60, "ticker", "t")
+    ewm = ewm_mean(sdf, "ret", 6.0, ["ticker"], ["t"])
+    assert ols.rdd.getNumPartitions() == 1
+    assert ewm.rdd.getNumPartitions() == 1
 
 
 def test_rolling_cov_matches_pandas_and_sql(spark):
