@@ -5,11 +5,6 @@ shuffle partitions ~ cores); on a real cluster the same builder works with
 ``master`` overridden and shuffle partitions sized to the data (AQE coalesces
 them at runtime anyway).
 
-AQE's partition coalescing also sizes the pandas grouped-map stages
-(``applyInPandas``): each Python task pays a fixed worker set-up of about
-0.27 CPU-s (measured on a 4-core host), so a day's tiny inputs run on one
-task while a large panel still splits up to the shuffle parallelism.
-
 The generated-code cache holds ``_CODEGEN_CACHE_ENTRIES`` classes instead
 of Spark's default 100: one daily DAG run compiles about 190 classes, so
 at 100 entries a same-day rerun (or the next query pass in the same JVM)
