@@ -751,7 +751,10 @@ def _escape_partition_value(v) -> str:
         return "__HIVE_DEFAULT_PARTITION__"
     if isinstance(v, bool):
         return "true" if v else "false"
-    s = str(v)
+    return _escape_path_name(str(v))
+
+
+def _escape_path_name(s: str) -> str:
     return "".join(
         "%%%02X" % ord(ch) if ch in _HIVE_ESCAPE or ord(ch) < 0x20 else ch for ch in s
     )
@@ -759,8 +762,13 @@ def _escape_partition_value(v) -> str:
 
 def _hive_rel(keys: list[str], vals) -> str:
     """``year=2024`` / ``year=2024/month=3`` — the hive directory path of
-    one partition value tuple."""
-    return "/".join(f"{k}={_escape_partition_value(v)}" for k, v in zip(keys, vals))
+    one partition value tuple. Key names are escaped too, as Spark's
+    ``getPartitionPathString`` does, so a rel built here equals the
+    directory a Spark write creates for the same partition."""
+    return "/".join(
+        f"{_escape_path_name(k)}={_escape_partition_value(v)}"
+        for k, v in zip(keys, vals)
+    )
 
 
 def _sql_ident(name: str) -> str:
@@ -2536,15 +2544,8 @@ class Lakehouse:
                     # through iff provably outside our footprint
                     if base_rels is None or not before.partition_keys:
                         return None
-                    depth = len(before.partition_keys)
-                    pattern = "/".join(["*=*"] * depth)
                     for s in extra:
-                        extra_rels |= set(
-                            self.fs.glob_dir_leaves(
-                                f"{self._seq_dir(before.name, s)}/{pattern}",
-                                depth,
-                            )
-                        )
+                        extra_rels.update(self._gen_rels(before.name, before, s))
                     if extra_rels & (set(base_rels) | set(repointed) | set(popped)):
                         return None
                 if set(fresh.dirty_partitions) != (
@@ -3259,6 +3260,184 @@ class Lakehouse:
         self.fs.write_text(token, "")
         return token
 
+    def _gen_rels(self, name: str, meta: TableMeta, seq: int) -> list[str]:
+        """The partition leaves generation ``seq`` holds, read off its
+        immutable directory (one driver glob, no Spark job; ``[""]`` on
+        an unpartitioned table)."""
+        depth = len(meta.partition_keys)
+        if not depth:
+            return [""]
+        pattern = "/".join(["*=*"] * depth)
+        return sorted(
+            self.fs.glob_dir_leaves(f"{self._seq_dir(name, seq)}/{pattern}", depth)
+        )
+
+    def _spark_written(
+        self, name: str, meta: TableMeta, seq: int, token, per_file: bool = False
+    ) -> "tuple[list[str], dict[str, dict]]":
+        """(rels, zone entries) of the generation a Spark job just wrote,
+        for ``_commit_append`` / ``_commit_replace``. The rels are the
+        hive directories the write created, not a second run of the
+        input plan; an empty batch (``token`` None) wrote nothing."""
+        if token is None:
+            return [], {}
+        rels = self._gen_rels(name, meta, seq)
+        return rels, self._collect_zone_maps(name, meta, seq, rels, per_file)
+
+    def _commit_append(
+        self,
+        name: str,
+        meta: TableMeta,
+        before: TableMeta,
+        seq: int,
+        token: "str | None",
+        rels: "list[str]",
+        zone: "dict[str, dict]",
+        mode: str,
+        properties: dict | None = None,
+    ) -> None:
+        """Commit generation ``seq`` as a live delta: the one commit of
+        ``insert`` and its driver-side fast path. ``rels`` are the
+        partitions the delta marks dirty (``""`` = an unpartitioned
+        table, so all of it) and ``zone`` its zone-map entries; both are
+        empty, and ``token`` None, for an empty batch, which must not
+        enter the manifest. ``mode='overwrite'`` first forgets every
+        prior generation (they become vacuumable orphans).
+
+        An append commutes with any structure-preserving concurrent
+        commit, so losing the PUT race rebases instead of raising. The
+        rebase replays the dirty set from ``rels`` (see
+        ``_make_rebase``)."""
+        if mode != "append":
+            meta.committed = {}
+            meta.live_deltas = []
+            meta.dirty_partitions = []
+            meta.all_dirty = False
+        if token is not None:
+            meta.live_deltas.append(seq)
+        meta.next_seq = max(meta.next_seq, seq + 1)
+        dirty = sorted(r for r in set(rels) if r)
+        seen = set(meta.dirty_partitions)
+        meta.dirty_partitions += [r for r in dirty if r not in seen]
+        if "" in rels:
+            meta.all_dirty = True
+        meta.zone_maps.update(zone)
+        self._prune_zone_maps(meta)
+        self._prune_deletion_vectors(meta)
+        if properties:
+            self._apply_properties(meta, properties)
+        rebase = (
+            self._make_rebase(
+                before,
+                meta,
+                "append",
+                properties=properties,
+                delta_rels=dirty,
+                delta_all_dirty="" in rels,
+            )
+            if mode == "append"
+            else None
+        )
+        self._commit_meta(meta, token, action=f"insert({mode})", rebase=rebase)
+
+    def _commit_replace(
+        self,
+        name: str,
+        meta: TableMeta,
+        before: TableMeta,
+        seq: int,
+        token: "str | None",
+        rels: "list[str]",
+        zone: "dict[str, dict]",
+        scope: "set[str] | None",
+        action: str,
+        properties: dict | None = None,
+    ) -> None:
+        """Commit generation ``seq`` as the new base of the partition
+        ``scope`` it was rewritten from (``None``: the whole table, and
+        every unpartitioned rewrite): the one commit of optimize/
+        compact, ``rewrite``, ``merge``, ``delete_where``,
+        ``update_where``'s rewrite and the upsert fast path. ``rels``
+        are the leaves the write created and ``zone`` their zone-map
+        entries. In one manifest PUT: the written leaves are repointed,
+        the scope's emptied partitions dropped, every live delta
+        absorbed, superseded zone maps and vectors pruned; superseded
+        generation dirs are deleted after the commit (a crash there only
+        leaves vacuumable orphans).
+
+        Two guards hold for every caller:
+
+        - output outside the scope is refused and nothing is committed.
+          The op read only the scope, so repointing a partition outside
+          it would replace that partition's base with a leaf holding only
+          the new rows (a nondeterministic partition-key assignment or
+          predicate produces this);
+        - a scope partition the write left empty is dropped only with
+          EVIDENCE the op read its rows: the emptied candidates'
+          pre-rewrite dirs read UNMASKED through the same ``_rel_filter``
+          the op's read used. ``_rel_filter`` matches strings, so if it
+          ever under-selected a rel, an unguarded drop would turn
+          "partition left unrewritten" into silent loss of its rows.
+          Unmasked, so a fully vector-deleted partition still shows its
+          on-disk rows and drops. The evidence costs one column-pruned
+          distinct over the candidates, only when a partition empties;
+          a whole-table scope read with no partition filter and needs
+          none.
+
+        The rebase re-applies this commit over a rival's only when the
+        rival touched none of the scope (``_make_rebase`` kind
+        ``'rmw'``)."""
+        written = set(rels)
+        stray = written - scope if scope is not None else set()
+        if stray:
+            self.fs.delete(self._seq_dir(name, seq))
+            raise ValueError(
+                f"{action} on {name!r}: the rewrite landed rows in "
+                f"partitions its read never covered ({sorted(stray)[:3]}...) "
+                "— partition-key assignments and predicates must be "
+                "deterministic on the rewrite path; nothing was committed"
+            )
+        old_committed = dict(meta.committed)
+        old_deltas = list(meta.live_deltas)
+        emptied = set(old_committed) if scope is None else scope & set(old_committed)
+        emptied -= written
+        if emptied and scope is not None:
+            ev = self._read_raw_unmasked(name, before).filter(
+                self._rel_filter(before, sorted(emptied))
+            )
+            emptied &= self._rels_of(ev, before.partition_keys)
+        for rel in written:
+            meta.committed[rel] = seq
+        for rel in emptied:
+            meta.committed.pop(rel)
+        meta.live_deltas = []
+        meta.dirty_partitions = []
+        meta.all_dirty = False
+        meta.next_seq = max(meta.next_seq, seq + 1)
+        meta.zone_maps.update(zone)
+        self._prune_zone_maps(meta)
+        self._prune_deletion_vectors(meta)
+        if properties:
+            self._apply_properties(meta, properties)
+        rebase = self._make_rebase(
+            before, meta, "rmw", base_rels=scope, properties=properties
+        )
+        meta = self._commit_meta(meta, token, action, rebase=rebase)
+        self._clean_superseded(name, meta, old_committed, old_deltas)
+
+    @staticmethod
+    def _rels_of(df: DataFrame, keys: "list[str]") -> "set[str]":
+        """The hive rels ``df``'s rows live in: one column-pruned distinct
+        over ``CAST(key AS STRING)``, Spark's own directory spelling, so
+        the rels equal the written and committed keys for every type
+        (Python ``str(0.0001)`` vs Java ``1.0E-4`` would not)."""
+        return {
+            _hive_rel(keys, tuple(r))
+            for r in df.select([_col(k).cast("string").alias(k) for k in keys])
+            .distinct()
+            .collect()
+        }
+
     def insert(
         self,
         name: str,
@@ -3307,61 +3486,10 @@ class Lakehouse:
         cols = [_col(f.name).cast(f.dataType).alias(f.name) for f in declared.fields]
         seq = self._reserve_seq(name, meta)
         token = self._write_seq(name, meta, df.select(*cols), seq)
-        # an empty batch writes no directory (token is None) — it must not
-        # enter the manifest, or readers would enumerate a nonexistent path
-        wrote_rows = token is not None
-        if mode != "append":
-            # truncation: visibility resets to this batch alone, and the
-            # next optimize() must only consider this batch
-            meta.committed = {}
-            meta.live_deltas = []
-            meta.dirty_partitions = []
-            meta.all_dirty = False
-        if wrote_rows:
-            meta.live_deltas.append(seq)
-        meta.next_seq = max(meta.next_seq, seq + 1)
-        written: list[str] = []
-        if wrote_rows and meta.partition_keys:
-            # the partition values this batch touched are literally the
-            # hive directory names the write just created — read them off
-            # the generation dir instead of re-executing the input plan
-            # (the old select(keys).distinct().collect() ran every
-            # upstream join/window a second time per ingest)
-            depth = len(meta.partition_keys)
-            pattern = "/".join(["*=*"] * depth)
-            written = sorted(
-                self.fs.glob_dir_leaves(f"{self._seq_dir(name, seq)}/{pattern}", depth)
-            )
-            if extra_dirty_rels:
-                written = sorted(set(written) | set(extra_dirty_rels))
-            seen = set(meta.dirty_partitions)
-            for rel in written:
-                if rel not in seen:
-                    meta.dirty_partitions.append(rel)
-                    seen.add(rel)
-        elif wrote_rows:
-            meta.all_dirty = True
-        if wrote_rows:
-            meta.zone_maps.update(self._collect_zone_maps(name, meta, seq))
-        self._prune_zone_maps(meta)
-        self._prune_deletion_vectors(meta)
-        if properties:
-            self._apply_properties(meta, properties)
-        # an append commutes with any structure-preserving concurrent
-        # commit: rebase instead of raising when we lose the PUT race
-        rebase = (
-            self._make_rebase(
-                before,
-                meta,
-                "append",
-                properties=properties,
-                delta_rels=written,
-                delta_all_dirty=wrote_rows and not meta.partition_keys,
-            )
-            if mode == "append"
-            else None
-        )
-        self._commit_meta(meta, token, action=f"insert({mode})", rebase=rebase)
+        rels, zone = self._spark_written(name, meta, seq, token)
+        if rels and extra_dirty_rels:
+            rels = rels + list(extra_dirty_rels)
+        self._commit_append(name, meta, before, seq, token, rels, zone, mode, properties)
 
     def _rel_filter(self, meta: TableMeta, rels) -> "F.Column | None":
         """Partition-pruning predicate selecting exactly the given hive rel
@@ -3480,12 +3608,18 @@ class Lakehouse:
         return stats
 
     def _collect_zone_maps(
-        self, name: str, meta: TableMeta, seq: int, per_file: bool = False
+        self,
+        name: str,
+        meta: TableMeta,
+        seq: int,
+        rels: "list[str]",
+        per_file: bool = False,
     ) -> dict[str, dict[str, list]]:
         """Per-leaf min/max of the stats columns for one freshly written
-        generation — a column-pruned aggregate over ONLY that generation's
-        files (grouped by partition value), so the cost scales with the
-        batch just written, never the table. Parquet min/max footers make
+        generation (whose leaves are ``rels``) — a column-pruned
+        aggregate over ONLY that generation's files (grouped by partition
+        value), so the cost scales with the batch just written, never the
+        table. Parquet min/max footers make
         this a near-metadata read for the scan side of the agg.
 
         r16: EVERY table (stats columns or not) additionally gets
@@ -3501,10 +3635,8 @@ class Lakehouse:
         job, so inventory is only collected for leaf-granularity
         generations."""
         seq_dir = self._seq_dir(name, seq)
-        if not self.fs.exists(seq_dir):
-            return {}
         if not (meta.stats_columns or meta.bloom_columns):
-            return self._collect_file_inventory(name, meta, seq)
+            return self._collect_file_inventory(name, meta, seq, rels)
         schema_with_seq = T.StructType(
             meta.schema.fields + [T.StructField(_SEQ_COL, T.LongType(), True)]
         )
@@ -3716,7 +3848,7 @@ class Lakehouse:
             # pruning on the leaf stats and uses the inventory only as
             # the file enumeration; the DV split uses it to confine
             # without LISTing
-            out.update(self._collect_file_inventory(name, meta, seq))
+            out.update(self._collect_file_inventory(name, meta, seq, rels))
         return out
 
     #: most per-file INVENTORY keys one table's manifest may hold
@@ -3744,11 +3876,11 @@ class Lakehouse:
     _FILE_INVENTORY_CAP = 65536
 
     def _collect_file_inventory(
-        self, name: str, meta: TableMeta, seq: int
+        self, name: str, meta: TableMeta, seq: int, rels: "list[str]"
     ) -> dict[str, dict]:
         """Per-file inventory zone keys (empty stats dicts) for one
         freshly written generation — pure DRIVER listing of exactly the
-        batch's leaf dirs (no Spark job; the glob + per-leaf LIST cost
+        batch's leaf dirs ``rels`` (no Spark job; the per-leaf LIST cost
         scales with the batch just written, never the table, and is
         paid ONCE at write time instead of on every read). Generations
         are immutable once committed, so the enumeration stays exact
@@ -3772,12 +3904,6 @@ class Lakehouse:
         )
         if room <= 0:
             return {}
-        if meta.partition_keys:
-            depth = len(meta.partition_keys)
-            pattern = "/".join(["*=*"] * depth)
-            rels = sorted(self.fs.glob_dir_leaves(f"{seq_dir}/{pattern}", depth))
-        else:
-            rels = [""]
         out: dict[str, dict] = {}
         complete = True
         for rel in rels:
@@ -4294,6 +4420,35 @@ class Lakehouse:
                 can = p.rsplit("/data/", 1)[-1] in touched
             (masked if can else clean).append(p)
         return masked, clean
+
+    def _dv_record_inline(self, name: str, meta: TableMeta, hits) -> "set[str]":
+        """Merge collected ``(__dv_f, __dv_p)`` hit rows into the inline
+        vectors (each file's new positions joined with its existing
+        entry), record the touched files' row counts, and return the
+        affected partition rels, decoded: they feed the rebase guard's
+        committed-pointer comparison, which is in the raw namespace."""
+        by_file: dict[str, list[int]] = {}
+        for r in hits:
+            by_file.setdefault(r["__dv_f"], []).append(int(r["__dv_p"]))
+        rels: set[str] = set()
+        for f, new_pos in by_file.items():
+            ent = meta.deletion_vectors.get(f)
+            if ent is not None:
+                new_pos = new_pos + _dv_decode(ent)
+            meta.deletion_vectors[f] = _dv_encode(new_pos)
+            rels.add(_uri_unquote(f.rsplit("/", 1)[0].partition("/")[2]))
+        self._dv_record_file_rows(name, meta, {_uri_unquote(f) for f in by_file})
+        return rels
+
+    def _dv_record_sidecar(self, name: str, meta: TableMeta, entry: list) -> "set[str]":
+        """Add a written sidecar ``entry`` to the manifest, record its
+        files' row counts, and return the partition rels it touches."""
+        meta.dv_sidecars.append(entry)
+        if entry[4] is not None:
+            self._dv_record_file_rows(name, meta, set(entry[4]))
+        if entry[3] is not None:
+            return set(entry[3])
+        return self._sidecar_rels(name, [entry])
 
     def _dv_record_file_rows(
         self, name: str, meta: TableMeta, files_decoded: "set[str]"
@@ -5689,19 +5844,11 @@ class Lakehouse:
             )
 
         # enumerate visible LEAF dirs with their zone-map keys
+        visible = [
+            (rel, s) for s in meta.live_deltas for rel in self._gen_rels(name, meta, s)
+        ] + sorted(meta.committed.items())
         leaves: list[tuple[str, str]] = []
-        depth = len(meta.partition_keys)
-        pattern = "/".join(["*=*"] * depth)
-        for s in meta.live_deltas:
-            base = self._seq_dir(name, s)
-            if depth:
-                for rel in self.fs.glob_dir_leaves(f"{base}/{pattern}", depth):
-                    if _rel_excludes(rel):
-                        continue
-                    leaves.append((f"{base}/{rel}", self._zone_key(s, rel)))
-            else:
-                leaves.append((base, self._zone_key(s, "")))
-        for rel, s in sorted(meta.committed.items()):
+        for rel, s in visible:
             if _rel_excludes(rel):
                 continue
             base = self._seq_dir(name, s)
@@ -5892,10 +6039,16 @@ class Lakehouse:
                         f"timestamp or string (got "
                         f"{meta.schema[c].dataType.simpleString()})"
                     )
+        # the rewrite reads the dirty partitions' bases (or the whole table
+        # for full/all-dirty/unpartitioned rewrites)
+        scope = (
+            set(meta.dirty_partitions)
+            if meta.partition_keys and not meta.all_dirty
+            else None
+        )
         raw = self._read_raw(name, meta)
-        if meta.partition_keys and not meta.all_dirty:
-            part_filter = self._rel_filter(meta, meta.dirty_partitions)
-            raw = raw.filter(part_filter)  # partition-pruned scan
+        if scope is not None:
+            raw = raw.filter(self._rel_filter(meta, sorted(scope)))
         out = self._keep_latest(raw, meta.primary_keys) if dedupe else raw
         if zorder_by:
             # Z-order layout: bucket bounds come from the (pruned) input
@@ -5951,95 +6104,10 @@ class Lakehouse:
             )
         seq = self._reserve_seq(name, meta)
         token = self._write_seq(name, meta, out.drop(_SEQ_COL), seq)
-        old_committed = dict(meta.committed)
-        old_deltas = list(meta.live_deltas)
-        if meta.partition_keys:
-            depth = len(meta.partition_keys)
-            pattern = "/".join(["*=*"] * depth)
-            written = self.fs.glob_dir_leaves(f"{self._seq_dir(name, seq)}/{pattern}", depth)
-            for rel in written:
-                meta.committed[rel] = seq
-            # a rewrite-scope partition that produced NO output was
-            # EMPTIED by the keep-latest (every one of its rows shadowed
-            # by a newer copy in another partition — update_where's
-            # partition-move shape) — its stale base pointer must drop
-            # or the moved rows read back duplicated forever (r12 review
-            # find; delete_where's rewrite always popped, this shared
-            # path never did)
-            scope = (
-                set(meta.committed)
-                if meta.all_dirty
-                else set(meta.dirty_partitions)
-            )
-            written_set = set(written)
-            candidates = {
-                r for r in scope if r not in written_set and r in meta.committed
-            }
-            if candidates:
-                # EVIDENCE-GUARDED pop (r12 advice): dropping a committed
-                # pointer is only sound if the rewrite actually READ the
-                # rel's rows (then absence from the output proves every
-                # row was shadowed/deleted). _rel_filter is string-
-                # matching; if it ever under-selected a dirty rel, an
-                # unguarded pop would turn that from "partition left
-                # uncompacted" (benign, and a kept pointer keeps its
-                # vectors referenced) into silent data loss. Evidence:
-                # the candidates' pre-rewrite dirs read UNMASKED through
-                # the SAME filter — unmasked, so a fully vector-deleted
-                # partition still shows its on-disk rows and pops (its
-                # files were read; the DV mask emptied it legitimately).
-                # Cost: one column-pruned distinct over the candidate
-                # rels only, and only on the rare emptied-partition path.
-                seen: set[str] = set()
-                pf = self._rel_filter(before, sorted(candidates))
-                if pf is not None:
-                    ev = self._read_raw_unmasked(name, before).filter(pf)
-                    seen = {
-                        _hive_rel(
-                            meta.partition_keys,
-                            tuple(r[k] for k in meta.partition_keys),
-                        )
-                        for r in ev.select(
-                            *[
-                                F.col(k).cast("string").alias(k)
-                                for k in meta.partition_keys
-                            ]
-                        )
-                        .distinct()
-                        .collect()
-                    }
-                for rel in candidates & seen:
-                    meta.committed.pop(rel, None)
-        elif token is not None:
-            meta.committed[""] = seq
-        else:
-            # rewrite output was empty (unreachable today — dirty implies
-            # rows — but the manifest must never point at a missing dir)
-            meta.committed.pop("", None)
-        # every dirty partition is (by definition) every partition the live
-        # deltas touched, so the rewrite absorbed all of them
-        meta.live_deltas = []
-        meta.dirty_partitions = []
-        meta.all_dirty = False
-        meta.next_seq = max(meta.next_seq, seq + 1)
-        if token is not None:
-            meta.zone_maps.update(
-                self._collect_zone_maps(name, meta, seq, per_file=bool(zorder_by))
-            )
-        self._prune_zone_maps(meta)
-        self._prune_deletion_vectors(meta)
+        rels, zone = self._spark_written(name, meta, seq, token, bool(zorder_by))
         verb = "optimize" if dedupe else "compact"
         action = f"{verb}(zorder={zorder_by})" if zorder_by else verb
-        # the rewrite read the dirty partitions' bases (or the whole table
-        # for full/all-dirty/unpartitioned rewrites)
-        base = (
-            None
-            if (before.all_dirty or full or not meta.partition_keys)
-            else set(before.dirty_partitions)
-        )
-        rebase = self._make_rebase(before, meta, "rmw", base_rels=base)
-        meta = self._commit_meta(meta, token, action, rebase=rebase)  # commit point
-        self._clean_superseded(name, meta, old_committed, old_deltas)
+        self._commit_replace(name, meta, before, seq, token, rels, zone, scope, action)
 
     def rewrite(self, name: str, transform) -> None:
         """Whole-table READ-MODIFY-WRITE with a caller-supplied
@@ -6063,30 +6131,8 @@ class Lakehouse:
         out = transform(self._read_raw(name, meta).drop(_SEQ_COL))
         seq = self._reserve_seq(name, meta)
         token = self._write_seq(name, meta, out, seq)
-        old_committed = dict(meta.committed)
-        old_deltas = list(meta.live_deltas)
-        if meta.partition_keys:
-            depth = len(meta.partition_keys)
-            pattern = "/".join(["*=*"] * depth)
-            written = self.fs.glob_dir_leaves(
-                f"{self._seq_dir(name, seq)}/{pattern}", depth
-            )
-            meta.committed = {rel: seq for rel in written}
-        elif token is not None:
-            meta.committed = {"": seq}
-        else:
-            meta.committed = {}
-        meta.live_deltas = []
-        meta.dirty_partitions = []
-        meta.all_dirty = False
-        meta.next_seq = max(meta.next_seq, seq + 1)
-        if token is not None:
-            meta.zone_maps.update(self._collect_zone_maps(name, meta, seq))
-        self._prune_zone_maps(meta)
-        self._prune_deletion_vectors(meta)
-        rebase = self._make_rebase(before, meta, "rmw", base_rels=None)
-        meta = self._commit_meta(meta, token, action="rewrite", rebase=rebase)
-        self._clean_superseded(name, meta, old_committed, old_deltas)
+        rels, zone = self._spark_written(name, meta, seq, token)
+        self._commit_replace(name, meta, before, seq, token, rels, zone, None, "rewrite")
 
     def _clean_superseded(
         self,
@@ -6155,7 +6201,7 @@ class Lakehouse:
             return df
         return df.localCheckpoint(eager=False)
 
-    def upsert(self, name: str, df: DataFrame, hint: str | None = None) -> None:
+    def upsert(self, name: str, df: DataFrame) -> None:
         """The reference's writer idiom: insert(append) + optimize().
 
         CONTRACT for partitioned PK tables whose partition keys are not
@@ -6186,14 +6232,7 @@ class Lakehouse:
         nodes, probe and fallback share one localCheckpointed input
         (``_shared_probe_input``; under AQE its upstream shuffle stages
         run inside that call), so the upstream DAG runs exactly once
-        however large the batch turns out to be. ``hint='large'``
-        skips the probe AND the checkpoint outright — the escape hatch
-        for callers that know the batch is huge and want neither the
-        20k-row collect nor an executor-storage materialization."""
-        if hint == "large":
-            self.insert(name, df, allow_fast=False)
-            self.optimize(name)
-            return
+        however large the batch turns out to be."""
         df = self._shared_probe_input(df)
         res = self._fast_upsert(name, df)
         if res is True:
@@ -6267,19 +6306,13 @@ class Lakehouse:
             # committed bases too big for a driver merge — the BATCH
             # itself is small, so insert()'s delta fast path still applies
             return "structural"
-        new_committed, new_zone = merged
+        rels, zone = merged
         token = f"{seq_dir}/_attempt-{uuid.uuid4().hex}"
         self.fs.write_text(token, "")
-        old_committed = dict(meta.committed)
-        meta.committed.update(new_committed)
-        meta.next_seq = max(meta.next_seq, seq + 1)
-        meta.zone_maps.update(new_zone)
-        self._prune_zone_maps(meta)
-        self._prune_deletion_vectors(meta)
         # the merge read exactly the committed bases of the rels it wrote
-        rebase = self._make_rebase(before, meta, "rmw", base_rels=set(new_committed))
-        meta = self._commit_meta(meta, token, action="upsert", rebase=rebase)
-        self._clean_superseded(name, meta, old_committed, [])
+        self._commit_replace(
+            name, meta, before, seq, token, rels, zone, set(rels), "upsert"
+        )
         return True
 
     def _probe_small_batch(self, meta, df):
@@ -6366,26 +6399,23 @@ class Lakehouse:
         meta: TableMeta,
         df: DataFrame,
         mode: str,
-        properties: dict | None = None,
-        before: "TableMeta | None" = None,
+        properties: dict | None,
+        before: TableMeta,
     ) -> bool:
         """Driver-side small-append path; True iff committed. Mirrors the
         distributed insert exactly — new ``_seq=K`` delta generation,
-        live_deltas/dirty_partitions bookkeeping, attempt token, one
-        manifest PUT (with append-rebase on commit races) — minus the
-        Spark write job."""
+        attempt token, the same ``_commit_append`` — minus the Spark
+        write job."""
         probed = self._probe_small_batch(meta, df)
         if probed is None:
             return False
-        if before is None:
-            before = self._snapshot_meta(meta)
         batch, arrow_schema = probed
         seq = self._reserve_seq(name, meta)
         seq_dir = self._seq_dir(name, seq)
-        wrote_rows = batch.num_rows > 0
         token = None
         written_rels: list[str] = []
-        if wrote_rows:
+        new_zone: dict[str, dict[str, list]] = {}
+        if batch.num_rows > 0:
             import pyarrow as pa
 
             try:
@@ -6396,7 +6426,6 @@ class Lakehouse:
             file_names = [f.name for f in meta.schema.fields if f.name not in part_cols]
             self.fs.delete(seq_dir)
             body = batch.select(file_names)
-            new_zone: dict[str, dict[str, list]] = {}
             inv_room = self._FILE_INVENTORY_CAP - sum(
                 1 for zk in meta.zone_maps if _zone_key_file(zk) is not None
             )
@@ -6423,47 +6452,15 @@ class Lakehouse:
                 new_zone[self._zone_key(seq, _INV_COMPLETE)] = {}
             token = f"{seq_dir}/_attempt-{uuid.uuid4().hex}"
             self.fs.write_text(token, "")
-        if mode != "append":
-            meta.committed = {}
-            meta.live_deltas = []
-            meta.dirty_partitions = []
-            meta.all_dirty = False
-        if wrote_rows:
-            meta.live_deltas.append(seq)
-        meta.next_seq = max(meta.next_seq, seq + 1)
-        if wrote_rows and meta.partition_keys:
-            seen = set(meta.dirty_partitions)
-            for rel in sorted(written_rels):
-                if rel != "" and rel not in seen:
-                    meta.dirty_partitions.append(rel)
-                    seen.add(rel)
-        elif wrote_rows:
-            meta.all_dirty = True
-        if wrote_rows:
-            meta.zone_maps.update(new_zone)
-        self._prune_zone_maps(meta)
-        self._prune_deletion_vectors(meta)
-        if properties:
-            self._apply_properties(meta, properties)
-        rebase = (
-            self._make_rebase(
-                before,
-                meta,
-                "append",
-                properties=properties,
-                delta_rels=[r for r in sorted(written_rels) if r != ""],
-                delta_all_dirty=wrote_rows and not meta.partition_keys,
-            )
-            if mode == "append"
-            else None
+        self._commit_append(
+            name, meta, before, seq, token, written_rels, new_zone, mode, properties
         )
-        self._commit_meta(meta, token, action=f"insert({mode})", rebase=rebase)
         return True
 
     def _fast_merge_write(self, meta, batch, arrow_schema, seq_dir):
         """Driver-side merge of a small arrow batch with the committed
         bases of the partitions it touches; writes the merged parquet
-        files under ``seq_dir``. Returns ({rel: seq} to commit, zone-map
+        files under ``seq_dir``. Returns (the written rels, zone-map
         entries for the written leaves), or None when a size guard says
         to go distributed. Raises _FastPathUnsuitable on any conversion
         surprise (caller falls back before anything is committed)."""
@@ -6506,7 +6503,7 @@ class Lakehouse:
 
         self.fs.delete(seq_dir)
         batch_files_only = batch.select([f.name for f in file_fields])
-        new_committed: dict[str, int] = {}
+        rels: list[str] = []
         new_zone: dict[str, dict[str, list]] = {}
         seq = int(seq_dir.rsplit("=", 1)[1])
         inv_room = self._FILE_INVENTORY_CAP - sum(
@@ -6534,7 +6531,7 @@ class Lakehouse:
                 fn = self._write_rel_file(
                     out, seq_dir if rel == "" else f"{seq_dir}/{rel}"
                 )
-                new_committed[rel] = seq
+                rels.append(rel)
                 if meta.stats_columns or meta.bloom_columns:
                     new_zone[self._zone_key(seq, rel)] = self._arrow_leaf_stats(
                         meta, out
@@ -6546,7 +6543,7 @@ class Lakehouse:
                     inv_room -= 1
         except Exception as e:
             raise _FastPathUnsuitable(str(e)) from e
-        return new_committed, new_zone
+        return rels, new_zone
 
     def vacuum(self, name: str | None = None, grace_s: int = 3600) -> list[str]:
         """Reclaim generation directories the manifest does not reference —
@@ -6660,11 +6657,7 @@ class Lakehouse:
                 elif meta.partition_keys:
                     # partially-referenced base generation: drop only the
                     # partition subdirs no longer pointed at
-                    depth = len(meta.partition_keys)
-                    pattern = "/".join(["*=*"] * depth)
-                    for rel in self.fs.glob_dir_leaves(
-                        f"{data_dir}/{d}/{pattern}", depth
-                    ):
+                    for rel in self._gen_rels(t, meta, s):
                         if rel not in rels:
                             candidates.append((f"{data_dir}/{d}/{rel}", s, rel))
             for path, s, rel in candidates:
@@ -6780,34 +6773,20 @@ class Lakehouse:
         # double-execution insert() was refactored to remove)
         src = src.localCheckpoint()
 
-        raw = self._read_raw(name, meta)
-        seq = self._reserve_seq(name, meta)
+        sub = self._read_raw(name, meta)
+        scope = None
         if meta.partition_keys:
-            vals = (
-                src.select(
-                    *[
-                        F.col(k).cast("string").alias(k)
-                        for k in meta.partition_keys
-                    ]
-                )
-                .distinct()
-                .collect()
+            scope = self._rels_of(src, meta.partition_keys) | set(
+                meta.dirty_partitions
             )
-            affected = {
-                _hive_rel(meta.partition_keys, tuple(r)) for r in vals
-            } | set(meta.dirty_partitions)
-            if not affected:
+            if not scope:
                 # empty merge rewrote nothing; still honor requested
                 # properties (their own commit — there is no data PUT
                 # to ride)
                 if properties:
                     self.set_properties(name, properties)
                 return
-            part_filter = self._rel_filter(meta, sorted(affected))
-            sub = raw.filter(part_filter)
-        else:
-            affected = set()
-            sub = raw
+            sub = sub.filter(self._rel_filter(meta, sorted(scope)))
         # absorb pending deltas: latest row per PK, as optimize() would
         tgt = self._keep_latest(sub, pk).drop(_SEQ_COL)
         # PK-only tables still need a payload struct for the chosen-row
@@ -6859,40 +6838,12 @@ class Lakehouse:
             .select(*pk, *[F.col(f"_row.{c}").alias(c) for c in non_pk])
             .select(*cols)
         )
+        seq = self._reserve_seq(name, meta)
         token = self._write_seq(name, meta, merged, seq)
-        old_committed = dict(meta.committed)
-        old_deltas = list(meta.live_deltas)
-        if meta.partition_keys:
-            depth = len(meta.partition_keys)
-            pattern = "/".join(["*=*"] * depth)
-            written = set(
-                self.fs.glob_dir_leaves(f"{self._seq_dir(name, seq)}/{pattern}", depth)
-            )
-            for rel in written:
-                meta.committed[rel] = seq
-            for rel in affected:
-                if rel not in written:
-                    meta.committed.pop(rel, None)  # partition fully deleted
-        elif token is not None:
-            meta.committed[""] = seq
-        else:
-            meta.committed.pop("", None)
-        meta.live_deltas = []
-        meta.dirty_partitions = []
-        meta.all_dirty = False
-        meta.next_seq = max(meta.next_seq, seq + 1)
-        if token is not None:
-            meta.zone_maps.update(self._collect_zone_maps(name, meta, seq))
-        self._prune_zone_maps(meta)
-        self._prune_deletion_vectors(meta)
-        if properties:
-            self._apply_properties(meta, properties)
-        base = set(affected) if meta.partition_keys else None
-        rebase = self._make_rebase(
-            before, meta, "rmw", base_rels=base, properties=properties
+        rels, zone = self._spark_written(name, meta, seq, token)
+        self._commit_replace(
+            name, meta, before, seq, token, rels, zone, scope, "merge", properties
         )
-        meta = self._commit_meta(meta, token, action="merge", rebase=rebase)
-        self._clean_superseded(name, meta, old_committed, old_deltas)
 
     def _delete_where_dv(
         self, name: str, meta: TableMeta, before: TableMeta, pred, mode: str
@@ -6931,7 +6882,6 @@ class Lakehouse:
         # caller is told to compact (dv).
         inline_now, _side_now = self._dv_position_totals(meta)
         existing = inline_now + _side_now
-        affected_rels: set[str] = set()
         if len(hits) > inline_cap:
             # big matched set: ONE fresh executor-side evaluation writes
             # the sidecar (the probe rows are discarded — the written
@@ -6961,14 +6911,7 @@ class Lakehouse:
                         "mode='rewrite'/'auto'."
                     )
                 return False
-            meta.dv_sidecars.append(entry)
-            affected_rels = (
-                set(entry[3])
-                if entry[3] is not None
-                else self._sidecar_rels(name, [entry])
-            )
-            if entry[4] is not None:
-                self._dv_record_file_rows(name, meta, set(entry[4]))
+            affected_rels = self._dv_record_sidecar(name, meta, entry)
         else:
             if existing + len(hits) > cap:
                 if mode == "dv":
@@ -6999,28 +6942,9 @@ class Lakehouse:
                     ),
                 )
                 entry = self._write_dv_sidecar(name, fp)
-                meta.dv_sidecars.append(entry)
-                for r in hits:
-                    # decoded: affected_rels feed the rebase guard's
-                    # committed-pointer comparison (raw namespace)
-                    leaf = r["__dv_f"].rsplit("/", 1)[0]
-                    affected_rels.add(_uri_unquote(leaf.partition("/")[2]))
-                if entry[4] is not None:
-                    self._dv_record_file_rows(name, meta, set(entry[4]))
+                affected_rels = self._dv_record_sidecar(name, meta, entry)
             else:
-                by_file: dict[str, list[int]] = {}
-                for r in hits:
-                    by_file.setdefault(r["__dv_f"], []).append(int(r["__dv_p"]))
-                for f, new_pos in by_file.items():
-                    ent = meta.deletion_vectors.get(f)
-                    if ent is not None:
-                        new_pos = new_pos + _dv_decode(ent)
-                    meta.deletion_vectors[f] = _dv_encode(new_pos)
-                    leaf = f.rsplit("/", 1)[0]
-                    affected_rels.add(_uri_unquote(leaf.partition("/")[2]))
-                self._dv_record_file_rows(
-                    name, meta, {_uri_unquote(f) for f in by_file}
-                )
+                affected_rels = self._dv_record_inline(name, meta, hits)
         self._merge_dv_sidecars(name, meta)
         base = affected_rels if meta.partition_keys else None
         rebase = self._make_rebase(before, meta, "rmw", base_rels=base)
@@ -7084,67 +7008,26 @@ class Lakehouse:
             meta = self._load_meta(name)
             before = self._snapshot_meta(meta)
         raw = self._read_raw(name, meta)
-        seq = self._reserve_seq(name, meta)
+        scope = None
         if meta.partition_keys:
-            # affected = partitions with matching rows (pruned aggregate,
+            # the scope = partitions with matching rows (pruned aggregate,
             # tiny collect) ∪ partitions with live delta data (the rewrite
             # absorbs the deltas, so every partition they touch must come
-            # along — they are exactly the dirty set).
-            # Collect CAST(col AS STRING) — the exact spelling Spark uses
-            # for the partition directory name — so these rels compare
-            # equal to 'written'/'committed' keys for every type (Python
-            # str(0.0001) vs Java '1.0E-4' would not).
-            vals = (
-                raw.filter(pred)
-                .select([F.col(k).cast("string").alias(k) for k in meta.partition_keys])
-                .distinct()
-                .collect()
-            )
-            affected = {_hive_rel(meta.partition_keys, tuple(r)) for r in vals} | set(
+            # along — they are exactly the dirty set)
+            scope = self._rels_of(raw.filter(pred), meta.partition_keys) | set(
                 meta.dirty_partitions
             )
-            if not affected:
+            if not scope:
                 return
-            part_filter = self._rel_filter(meta, sorted(affected))
-            sub = raw.filter(part_filter)
-            if meta.primary_keys:
-                sub = self._keep_latest(sub, meta.primary_keys)
-            kept = sub.filter(~pred)
-            token = self._write_seq(name, meta, kept.drop(_SEQ_COL), seq)
-            depth = len(meta.partition_keys)
-            pattern = "/".join(["*=*"] * depth)
-            written = set(self.fs.glob_dir_leaves(f"{self._seq_dir(name, seq)}/{pattern}", depth))
-            old_committed = dict(meta.committed)
-            old_deltas = list(meta.live_deltas)
-            for rel in written:
-                meta.committed[rel] = seq
-            for rel in affected:
-                if rel not in written:
-                    meta.committed.pop(rel, None)  # partition fully deleted
-        else:
-            sub = raw
-            if meta.primary_keys:
-                sub = self._keep_latest(sub, meta.primary_keys)
-            kept = sub.filter(~pred)
-            token = self._write_seq(name, meta, kept.drop(_SEQ_COL), seq)
-            old_committed = dict(meta.committed)
-            old_deltas = list(meta.live_deltas)
-            if token is not None:
-                meta.committed[""] = seq
-            else:
-                meta.committed.pop("", None)  # every row deleted
-        meta.live_deltas = []
-        meta.dirty_partitions = []
-        meta.all_dirty = False
-        meta.next_seq = max(meta.next_seq, seq + 1)
-        if token is not None:
-            meta.zone_maps.update(self._collect_zone_maps(name, meta, seq))
-        self._prune_zone_maps(meta)
-        self._prune_deletion_vectors(meta)
-        base = set(affected) if meta.partition_keys else None
-        rebase = self._make_rebase(before, meta, "rmw", base_rels=base)
-        meta = self._commit_meta(meta, token, action="delete_where", rebase=rebase)
-        self._clean_superseded(name, meta, old_committed, old_deltas)
+            raw = raw.filter(self._rel_filter(meta, sorted(scope)))
+        if meta.primary_keys:
+            raw = self._keep_latest(raw, meta.primary_keys)
+        seq = self._reserve_seq(name, meta)
+        token = self._write_seq(name, meta, raw.filter(~pred).drop(_SEQ_COL), seq)
+        rels, zone = self._spark_written(name, meta, seq, token)
+        self._commit_replace(
+            name, meta, before, seq, token, rels, zone, scope, "delete_where"
+        )
 
     def update_where(
         self, name: str, predicate, assignments: dict, mode: str = "auto"
@@ -7226,17 +7109,7 @@ class Lakehouse:
                 # absorbs the delta then keep-latests across source AND
                 # target together.
                 matched = matched.localCheckpoint(eager=True)
-                pks = meta.partition_keys
-                vals = (
-                    matched.select(
-                        [F.col(k).cast("string").alias(k) for k in pks]
-                    )
-                    .distinct()
-                    .collect()
-                )
-                src_rels = sorted(
-                    _hive_rel(pks, tuple(r[k] for k in pks)) for r in vals
-                )
+                src_rels = sorted(self._rels_of(matched, meta.partition_keys))
                 if not src_rels:
                     return  # nothing matched
                 self.insert(
@@ -7260,8 +7133,8 @@ class Lakehouse:
             before = self._snapshot_meta(meta)
         # rewrite path: delete_where's partition economics, keeping the
         # matched rows transformed instead of dropping them
-        raw = self._read_raw(name, meta)
-        seq = self._reserve_seq(name, meta)
+        sub = self._read_raw(name, meta)
+        scope = None
         moving = bool(set(sets) & set(meta.partition_keys))
         if meta.partition_keys:
             pks = meta.partition_keys
@@ -7286,18 +7159,14 @@ class Lakehouse:
                         ]
                     ).alias("t")
                 )
-            pairs = raw.filter(pred).select(*cols).distinct().collect()
-            rels = {_hive_rel(pks, tuple(r["s"][k] for k in pks)) for r in pairs}
+            pairs = sub.filter(pred).select(*cols).distinct().collect()
+            scope = {_hive_rel(pks, tuple(r["s"][k] for k in pks)) for r in pairs}
             if moving:
-                rels |= {_hive_rel(pks, tuple(r["t"][k] for k in pks)) for r in pairs}
-            affected = rels | set(meta.dirty_partitions)
-            if not affected:
+                scope |= {_hive_rel(pks, tuple(r["t"][k] for k in pks)) for r in pairs}
+            scope |= set(meta.dirty_partitions)
+            if not scope:
                 return
-            part_filter = self._rel_filter(meta, sorted(affected))
-            sub = raw.filter(part_filter)
-        else:
-            affected = set()
-            sub = raw
+            sub = sub.filter(self._rel_filter(meta, sorted(scope)))
         # ONE scan with the match bit computed once per row (r12 advice
         # fix): deriving keep/transform from two independent filter(pred)
         # evaluations let a nondeterministic predicate drop or duplicate
@@ -7319,52 +7188,12 @@ class Lakehouse:
                 for c in names
             ]
         )
+        seq = self._reserve_seq(name, meta)
         token = self._write_seq(name, meta, out, seq)
-        old_committed = dict(meta.committed)
-        old_deltas = list(meta.live_deltas)
-        if meta.partition_keys:
-            depth = len(meta.partition_keys)
-            pattern = "/".join(["*=*"] * depth)
-            written = set(
-                self.fs.glob_dir_leaves(f"{self._seq_dir(name, seq)}/{pattern}", depth)
-            )
-            stray = written - set(affected)
-            if stray:
-                # a NONDETERMINISTIC partition-key assignment (or
-                # predicate) produced different targets in the write job
-                # than the planning scan enumerated — committing would
-                # repoint partitions we never read (silent base loss).
-                # Refuse loudly; nothing was committed.
-                self.fs.delete(self._seq_dir(name, seq))
-                raise ValueError(
-                    f"update_where on {name!r}: the rewrite landed rows in "
-                    f"partitions the planning scan never enumerated "
-                    f"({sorted(stray)[:3]}...) — partition-key assignments "
-                    "and predicates must be deterministic on the rewrite "
-                    "path (the dv path checkpoints the matched set and has "
-                    "no such constraint)."
-                )
-            for rel in written:
-                meta.committed[rel] = seq
-            for rel in affected:
-                if rel not in written:
-                    meta.committed.pop(rel, None)
-        elif token is not None:
-            meta.committed[""] = seq
-        else:
-            meta.committed.pop("", None)
-        meta.live_deltas = []
-        meta.dirty_partitions = []
-        meta.all_dirty = False
-        meta.next_seq = max(meta.next_seq, seq + 1)
-        if token is not None:
-            meta.zone_maps.update(self._collect_zone_maps(name, meta, seq))
-        self._prune_zone_maps(meta)
-        self._prune_deletion_vectors(meta)
-        base = set(affected) if meta.partition_keys else None
-        rebase = self._make_rebase(before, meta, "rmw", base_rels=base)
-        meta = self._commit_meta(meta, token, action="update_where", rebase=rebase)
-        self._clean_superseded(name, meta, old_committed, old_deltas)
+        rels, zone = self._spark_written(name, meta, seq, token)
+        self._commit_replace(
+            name, meta, before, seq, token, rels, zone, scope, "update_where"
+        )
 
     def _update_where_dv(
         self, name: str, meta: TableMeta, before: TableMeta, pred, transformed, mode: str
@@ -7418,7 +7247,6 @@ class Lakehouse:
                 f"update_where on {name!r}: delta write produced no "
                 "directory for a non-empty matched set"
             )
-        affected_rels: set[str] = set()
         if use_sidecar:
             # past the inline tier the originals' identities never touch
             # the driver: the checkpointed matched set writes the sidecar
@@ -7426,47 +7254,19 @@ class Lakehouse:
             entry = self._write_dv_sidecar(
                 name, matched.select("__dv_f", "__dv_p")
             )
-            meta.dv_sidecars.append(entry)
-            affected_rels = (
-                set(entry[3])
-                if entry[3] is not None
-                else self._sidecar_rels(name, [entry])
-            )
-            if entry[4] is not None:
-                self._dv_record_file_rows(name, meta, set(entry[4]))
+            affected_rels = self._dv_record_sidecar(name, meta, entry)
         else:
-            hits = matched.select("__dv_f", "__dv_p").collect()
-            by_file: dict[str, list[int]] = {}
-            for r in hits:
-                by_file.setdefault(r["__dv_f"], []).append(int(r["__dv_p"]))
-            for f, new_pos in by_file.items():
-                ent = meta.deletion_vectors.get(f)
-                if ent is not None:
-                    new_pos = new_pos + _dv_decode(ent)
-                meta.deletion_vectors[f] = _dv_encode(new_pos)
-                leaf = f.rsplit("/", 1)[0]
-                affected_rels.add(_uri_unquote(leaf.partition("/")[2]))
-            self._dv_record_file_rows(
-                name, meta, {_uri_unquote(f) for f in by_file}
+            affected_rels = self._dv_record_inline(
+                name, meta, matched.select("__dv_f", "__dv_p").collect()
             )
-        depth = len(meta.partition_keys)
-        written_rels = (
-            self.fs.glob_dir_leaves(
-                f"{self._seq_dir(name, seq)}/{'/'.join(['*=*'] * depth)}", depth
-            )
-            if depth
-            else [""]
-        )
+        rels, zone = self._spark_written(name, meta, seq, token)
         meta.live_deltas.append(seq)
         seen = set(meta.dirty_partitions)
-        for rel in written_rels:
-            if rel and rel not in seen:
-                meta.dirty_partitions.append(rel)
-                seen.add(rel)
-        if not depth:
+        meta.dirty_partitions += [r for r in rels if r and r not in seen]
+        if "" in rels:
             meta.all_dirty = True
         meta.next_seq = max(meta.next_seq, seq + 1)
-        meta.zone_maps.update(self._collect_zone_maps(name, meta, seq))
+        meta.zone_maps.update(zone)
         self._merge_dv_sidecars(name, meta)
         base = affected_rels if meta.partition_keys else None
         rebase = self._make_rebase(before, meta, "rmw", base_rels=base)

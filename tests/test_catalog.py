@@ -504,9 +504,9 @@ def test_upsert_with_quote_and_backtick_partition_key(spark, tmp_path):
     """Partition-key NAMES reach the multi-key dirty-partition predicate
     as SQL text: a key holding a backtick and a single quote must be
     quoted as an identifier and as a struct field name, not spliced in
-    raw. Several dirty partitions force the struct-IN shape, and
-    ``hint="large"`` keeps the upserts off the driver-side fast path
-    (which never builds the predicate)."""
+    raw. Several dirty partitions force the struct-IN shape, and each
+    upsert is the distributed insert + optimize, off the driver-side fast
+    path (which never builds the predicate)."""
     key = "re`gi'on"
     schema = T.StructType(
         [
@@ -519,13 +519,22 @@ def test_upsert_with_quote_and_backtick_partition_key(spark, tmp_path):
     lake = Lakehouse(spark, str(tmp_path / "lake"))
     lake.create("t", schema, ["year", key], ["id", "year", key])
     first = [(i, 2020 + i % 3, f"r{i % 2}", float(i)) for i in range(12)]
-    lake.upsert("t", spark.createDataFrame(first, schema), hint="large")
+    lake.insert("t", spark.createDataFrame(first, schema), allow_fast=False)
+    lake.optimize("t")
     second = [(i, 2020 + i % 3, f"r{i % 2}", 100.0 + i) for i in range(0, 12, 2)]
     second += [(20, 2021, "r0", 7.0)]
-    lake.upsert("t", spark.createDataFrame(second, schema), hint="large")
+    lake.insert("t", spark.createDataFrame(second, schema), allow_fast=False)
+    lake.optimize("t")
 
     want = {(i, y, r): v for i, y, r, v in first}
     want.update({(i, y, r): v for i, y, r, v in second})
+    got = {(r["id"], r["year"], r[key]): r["v"] for r in lake.table("t").collect()}
+    assert got == want
+
+    # a partition-scoped rewrite names its scope with the same escaped
+    # key as the directories Spark wrote, so its output is inside it
+    lake.delete_where("t", F.col("id") == 4)
+    del want[(4, 2021, "r0")]
     got = {(r["id"], r["year"], r[key]): r["v"] for r in lake.table("t").collect()}
     assert got == want
 

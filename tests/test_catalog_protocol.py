@@ -229,30 +229,6 @@ def test_large_upsert_executes_expensive_plan_exactly_once(lake, spark):
     assert acc.value == n, f"expensive upstream plan executed {acc.value / n:.2f}x"
 
 
-def test_upsert_large_hint_skips_probe(lake, spark):
-    """hint='large' must go straight to the distributed path: no 20k-row
-    probe collect, no checkpoint materialization — the plan executes once
-    in the write itself."""
-    acc = spark.sparkContext.accumulator(0)
-
-    def bump(x):
-        acc.add(1)
-        return float(x)
-
-    u = F.udf(bump, "double")
-    schema = T.StructType(
-        [T.StructField("k", T.LongType()), T.StructField("v", T.DoubleType())]
-    )
-    lake.create("hinted", schema, [], ["k"])
-    df = spark.range(500).select(F.col("id").alias("k"), u(F.col("id")).alias("v"))
-    lake.upsert("hinted", df, hint="large")
-    assert lake.table("hinted").count() == 500
-    assert acc.value == 500, f"input plan executed {acc.value / 500:.2f}x"
-    # result identical to the probed path
-    lake.upsert("hinted", df)
-    assert lake.table("hinted").count() == 500
-
-
 DW_SCHEMA = T.StructType(
     [
         T.StructField("ticker", T.StringType()),

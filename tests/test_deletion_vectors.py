@@ -1151,19 +1151,58 @@ def test_dv_hash_key_join_never_cross_masks_same_positions(lake, spark, monkeypa
     assert r and not any(x.same for x in r), "salt must differentiate h2 from h1"
 
 
-def test_emptied_partition_pop_requires_read_evidence(lake, spark, monkeypatch):
+def _drift_update_pk(lake, spark):
+    lake.update_where(
+        "p", (F.col("part") == 0) & (F.col("k") < 5), {"part": F.lit(2)}
+    )
+
+
+def _drift_delete(lake, spark):
+    lake.delete_where("p", (F.col("part") == 0) & (F.col("k") < 5))
+
+
+def _drift_merge_delete(lake, spark):
+    lake.merge("p", _batch(spark, 0, 5, 0), delete_condition=F.lit(True))
+
+
+def _drift_update_rewrite(lake, spark):
+    lake.update_where(
+        "p",
+        (F.col("part") == 0) & (F.col("k") < 5),
+        {"part": F.lit(2)},
+        mode="rewrite",
+    )
+
+
+@pytest.mark.parametrize(
+    "op, pk",
+    [
+        pytest.param(_drift_update_pk, ["k"], id="update_where_pk"),
+        pytest.param(_drift_delete, ["k"], id="delete_where"),
+        pytest.param(_drift_merge_delete, ["k"], id="merge_delete"),
+        pytest.param(_drift_update_rewrite, [], id="update_where_rewrite"),
+    ],
+)
+def test_emptied_partition_pop_requires_read_evidence(lake, spark, monkeypatch, op, pk):
     """r12 advice pin: the emptied-partition pointer pop must only fire
-    with EVIDENCE the rewrite actually read the rel's rows. Simulate
-    _rel_filter encoding drift (it silently under-selects part=0) and
-    move SOME of part=0's keys out: without the guard the absorbing
-    optimize would pop part=0's pointer — losing the unmoved k5..9
+    with EVIDENCE the rewrite actually read the rel's rows, on every
+    write path that replaces a partition scope (they share one commit).
+    Simulate _rel_filter encoding drift (it silently under-selects
+    part=0) and delete or move SOME of part=0's keys: without the guard
+    the rewrite would pop part=0's pointer — losing the untouched k5..9
     forever. With it, the pointer is kept: the failure mode is a
-    duplicate-visible uncompacted partition (detectable via
-    analyze()['pk_duplicates']), never silent data loss."""
-    lake.create("p", SCHEMA, ["part"], ["k"])
-    lake.upsert("p", _batch(spark, 0, 10, 0))
-    lake.upsert("p", _batch(spark, 10, 20, 1))
-    lake.optimize("p")
+    partition left unrewritten (for a PK move, a duplicate-visible
+    uncompacted partition, detectable via analyze()['pk_duplicates']),
+    never silent data loss."""
+    lake.create("p", SCHEMA, ["part"], pk)
+    if pk:
+        lake.upsert("p", _batch(spark, 0, 10, 0))
+        lake.upsert("p", _batch(spark, 10, 20, 1))
+        lake.optimize("p")
+    else:
+        lake.insert("p", _batch(spark, 0, 10, 0))
+        lake.insert("p", _batch(spark, 10, 20, 1))
+        lake.compact("p")
 
     orig = Lakehouse._rel_filter
 
@@ -1172,18 +1211,21 @@ def test_emptied_partition_pop_requires_read_evidence(lake, spark, monkeypatch):
         return cond if cond is None else (cond & (F.col("part") != 0))
 
     monkeypatch.setattr(Lakehouse, "_rel_filter", drifted)
-    lake.update_where("p", (F.col("part") == 0) & (F.col("k") < 5), {"part": F.lit(2)})
+    op(lake, spark)
     m = lake._load_meta("p")
     assert "part=0" in m.committed, (
         "pointer popped without read evidence — silent data loss"
     )
-    ks = sorted({r.k for r in lake.table("p").collect()})
-    assert ks == list(range(20)), f"rows lost: {ks}"
-    # moved keys now live in part=2; unmoved k5..9 still in part=0
-    assert sorted(
-        r.k for r in lake.table("p").filter("part = 2").collect()
-    ) == [0, 1, 2, 3, 4]
+    ks = sorted(r.k for r in lake.table("p").collect())
+    assert set(range(5, 20)) <= set(ks) <= set(range(20)), f"rows lost: {ks}"
+    # the untouched k5..9 still in part=0
     assert {5, 6, 7, 8, 9} <= {r.k for r in lake.table("p").filter("part = 0").collect()}
+    if op is _drift_update_pk:
+        # the PK move itself landed: moved keys now live in part=2
+        assert sorted(set(ks)) == list(range(20))
+        assert sorted(
+            r.k for r in lake.table("p").filter("part = 2").collect()
+        ) == [0, 1, 2, 3, 4]
 
 
 # ---------------------------------------------------------------------------

@@ -140,9 +140,7 @@ def test_resample_bars_matches_pandas(spark):
     pdf = pd.DataFrame(rows, columns=cols)
     pdf["notional"] = pdf.vwap * pdf.volume
     ref = (
-        pdf.set_index("timestamp")
-        .groupby("ticker")
-        .resample("5min")
+        pdf.groupby(["ticker", pd.Grouper(key="timestamp", freq="5min")])
         .agg(open=("open", "first"), high=("high", "max"), low=("low", "min"),
              close=("close", "last"), volume=("volume", "sum"),
              trade_count=("trade_count", "sum"), notional=("notional", "sum"))
