@@ -62,7 +62,7 @@ restated in a plain hive layout):
   second PUT silently drops the first commit — observed ~1 run in 10
   by the two-thread race test), re-reads the version inside it, and
   on a moved version REBASES provably-disjoint commits (appends always
-  commute; optimize/upsert/merge/delete_where rebase iff every base
+  commute; optimize/upsert/delete_where rebase iff every base
   partition pointer, the pending-delta list, and the dirty set they
   read are untouched — the op supplies the closure via
   ``_make_rebase``). Conflicting commits raise ``ConcurrentWriteError``
@@ -1401,9 +1401,9 @@ class TableMeta:
     # min/max, KMV distinct estimate, stamped with the manifest version
     # it was computed against — the CBO-stats slot of the manifest.
     table_stats: dict = field(default_factory=dict)
-    # free-form table properties (the Delta TBLPROPERTIES slot) — used by
-    # e.g. incremental view maintenance to record the last source
-    # version applied; committed like any other manifest change.
+    # free-form table properties (the Delta TBLPROPERTIES slot): create()
+    # records the bloom.* sizing here; committed like any other manifest
+    # change.
     properties: dict = field(default_factory=dict)
     # stable identity minted at create(): distinguishes two LIVES of the
     # same table name (drop+recreate, create(replace)) so the log-mode
@@ -2449,7 +2449,6 @@ class Lakehouse:
         after: TableMeta,
         kind: str,
         base_rels: "set[str] | None" = None,
-        properties: dict | None = None,
         delta_rels: "list[str] | None" = None,
         delta_all_dirty: bool = False,
     ):
@@ -2469,7 +2468,7 @@ class Lakehouse:
         later partition-pruned optimize() would silently drop (data
         loss). ``delta_all_dirty`` is the unpartitioned analogue.
 
-        ``kind='rmw'`` (optimize/compact/upsert/merge/delete_where): the
+        ``kind='rmw'`` (optimize/compact/upsert/delete_where): the
         rewrite was derived from a snapshot of ``base_rels`` (None = the
         whole table), the pending deltas, and the dirty set; rebase only
         when the fresh manifest proves the other commit touched NONE of
@@ -2633,8 +2632,6 @@ class Lakehouse:
             fresh.next_seq = max(fresh.next_seq, after.next_seq)
             self._prune_zone_maps(fresh)
             self._prune_deletion_vectors(fresh)
-            if properties:
-                self._apply_properties(fresh, properties)
             return fresh
 
         return rebase
@@ -2815,54 +2812,6 @@ class Lakehouse:
         self._dv_cache_purge(name)
         with self._meta_cache_mu:
             self._meta_cache.pop(name, None)
-
-    def set_primary_keys(
-        self, name: str, primary_keys: list[str], force: bool = False
-    ) -> None:
-        """Change the table's primary-key declaration — METADATA-ONLY, no
-        data rewrite. The PKs drive ``optimize()``'s keep-latest dedup
-        and ``upsert()``'s merge identity for FUTURE operations; rows
-        already written are untouched (declaring new PKs does not
-        retroactively dedup — run ``optimize()`` for that). Dropping the
-        PKs (``[]``) turns the table append-only with duplicates as
-        state — the LSM-aggregate shape (e.g. the persisted Bloom
-        filter), where keep-latest would LOSE information.
-
-        GUARD: declaring PKs over a table whose LOGICAL rows are not
-        already unique under them arms exactly that trap — the next
-        routine ``optimize()`` keep-latests the duplicates and silently
-        drops rows that were data, not shadowed versions. So a changed,
-        non-empty declaration probes for duplicates first (one
-        ``groupBy(pks).count()`` job over the logical rows — current-PK
-        shadowing is applied, since those duplicates are commit state,
-        not data) and refuses if any exist; pass ``force=True`` to
-        declare anyway and accept that ``optimize()`` will keep-latest
-        them. Clearing PKs never probes — that direction cannot lose
-        rows."""
-        meta = self._load_meta(name)
-        names = set(meta.schema.fieldNames())
-        for c in primary_keys:
-            if c not in names:
-                raise ValueError(f"primary key {c!r} not in schema for {name!r}")
-        if primary_keys and list(primary_keys) != meta.primary_keys and not force:
-            dupes = (
-                self._read_logical(name, meta)
-                .groupBy(*primary_keys)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .count()
-            )
-            if dupes:
-                raise ValueError(
-                    f"table {name!r} has rows that are duplicates under the "
-                    f"proposed primary keys {list(primary_keys)!r}; declaring "
-                    "them would make the next optimize() silently keep-latest "
-                    "real data rows. Deduplicate first, or pass force=True to "
-                    "accept keep-latest semantics over the existing duplicates"
-                )
-        meta.primary_keys = list(primary_keys)
-        self._commit_meta(meta, None, action=f"set_primary_keys({primary_keys})")
 
     # column types analyze() computes full stats for (orderable atomics);
     # anything else gets null counts only
@@ -3075,25 +3024,6 @@ class Lakehouse:
                     sat[f"{leaf}:{key[: -len('#bloom')]}"] = round(est, 4)
         return sat
 
-    @staticmethod
-    def _apply_properties(meta: TableMeta, props: dict) -> None:
-        for k, v in props.items():
-            if v is None:
-                meta.properties.pop(k, None)
-            else:
-                meta.properties[k] = v
-
-    def set_properties(self, name: str, props: dict) -> None:
-        """Merge key/value pairs into the table's properties (a None value
-        deletes the key). One manifest commit. For properties that must
-        move WITH a data change (e.g. IVM's last-applied source version),
-        pass ``properties=`` to insert()/merge() instead — a separate
-        set_properties commit leaves a crash window in which the data
-        change is visible but the property is stale."""
-        meta = self._load_meta(name)
-        self._apply_properties(meta, props)
-        self._commit_meta(meta, None, action=f"set_properties({sorted(props)})")
-
     def get_properties(self, name: str) -> dict:
         return dict(self._load_meta(name).properties)
 
@@ -3198,8 +3128,8 @@ class Lakehouse:
         n_vals = new.select(
             *pk, *[F.col(c).alias(f"_new_{c}") for c in value_cols], "_n"
         ).alias("_ncdc")
-        # null-safe PK equality, same reason as merge(): NULL keys must
-        # pair up, not appear as a spurious insert+delete
+        # null-safe PK equality: NULL keys must pair up, not appear as
+        # a spurious insert+delete
         cond = F.lit(True)
         for k in pk:
             cond = cond & F.col(f"_ncdc.{k}").eqNullSafe(F.col(f"_ocdc.{k}"))
@@ -3294,7 +3224,6 @@ class Lakehouse:
         rels: "list[str]",
         zone: "dict[str, dict]",
         mode: str,
-        properties: dict | None = None,
     ) -> None:
         """Commit generation ``seq`` as a live delta: the one commit of
         ``insert`` and its driver-side fast path. ``rels`` are the
@@ -3324,14 +3253,11 @@ class Lakehouse:
         meta.zone_maps.update(zone)
         self._prune_zone_maps(meta)
         self._prune_deletion_vectors(meta)
-        if properties:
-            self._apply_properties(meta, properties)
         rebase = (
             self._make_rebase(
                 before,
                 meta,
                 "append",
-                properties=properties,
                 delta_rels=dirty,
                 delta_all_dirty="" in rels,
             )
@@ -3351,19 +3277,17 @@ class Lakehouse:
         zone: "dict[str, dict]",
         scope: "set[str] | None",
         action: str,
-        properties: dict | None = None,
     ) -> None:
         """Commit generation ``seq`` as the new base of the partition
         ``scope`` it was rewritten from (``None``: the whole table, and
         every unpartitioned rewrite): the one commit of optimize/
-        compact, ``rewrite``, ``merge``, ``delete_where``,
-        ``update_where``'s rewrite and the upsert fast path. ``rels``
-        are the leaves the write created and ``zone`` their zone-map
-        entries. In one manifest PUT: the written leaves are repointed,
-        the scope's emptied partitions dropped, every live delta
-        absorbed, superseded zone maps and vectors pruned; superseded
-        generation dirs are deleted after the commit (a crash there only
-        leaves vacuumable orphans).
+        compact, ``delete_where``, ``update_where``'s rewrite and the
+        upsert fast path. ``rels`` are the leaves the write created and
+        ``zone`` their zone-map entries. In one manifest PUT: the written
+        leaves are repointed, the scope's emptied partitions dropped,
+        every live delta absorbed, superseded zone maps and vectors
+        pruned; superseded generation dirs are deleted after the commit
+        (a crash there only leaves vacuumable orphans).
 
         Two guards hold for every caller:
 
@@ -3417,11 +3341,7 @@ class Lakehouse:
         meta.zone_maps.update(zone)
         self._prune_zone_maps(meta)
         self._prune_deletion_vectors(meta)
-        if properties:
-            self._apply_properties(meta, properties)
-        rebase = self._make_rebase(
-            before, meta, "rmw", base_rels=scope, properties=properties
-        )
+        rebase = self._make_rebase(before, meta, "rmw", base_rels=scope)
         meta = self._commit_meta(meta, token, action, rebase=rebase)
         self._clean_superseded(name, meta, old_committed, old_deltas)
 
@@ -3444,7 +3364,6 @@ class Lakehouse:
         df: DataFrame,
         mode: str = "append",
         allow_fast: bool = True,
-        properties: dict | None = None,
         extra_dirty_rels: list[str] | None = None,
     ) -> None:
         """Append a batch as a new ``_seq=K`` delta directory (the sequence
@@ -3458,11 +3377,6 @@ class Lakehouse:
         fixed cost dominates tiny appends. ``allow_fast=False`` skips the
         probe — upsert() passes it when its own probe already rejected
         the batch, so a large upstream plan isn't executed twice.
-
-        ``properties`` (set_properties semantics) are applied in the SAME
-        manifest PUT as the data — the atomic data+metadata commit that
-        incremental consumers (ops/ivm.py) need so a crash can never leave
-        the data applied but its watermark property stale.
 
         ``extra_dirty_rels`` (internal, r12): additional partition rels
         marked dirty IN THE SAME COMMIT as the delta — update_where's
@@ -3480,7 +3394,7 @@ class Lakehouse:
             # fallback write share one input (no-op for a df upsert()
             # already checkpointed — its plan is a plain RDD scan)
             df = self._shared_probe_input(df)
-            if self._fast_insert(name, meta, df, mode, properties, before):
+            if self._fast_insert(name, meta, df, mode, before):
                 return
         declared = meta.schema
         cols = [_col(f.name).cast(f.dataType).alias(f.name) for f in declared.fields]
@@ -3489,7 +3403,7 @@ class Lakehouse:
         rels, zone = self._spark_written(name, meta, seq, token)
         if rels and extra_dirty_rels:
             rels = rels + list(extra_dirty_rels)
-        self._commit_append(name, meta, before, seq, token, rels, zone, mode, properties)
+        self._commit_append(name, meta, before, seq, token, rels, zone, mode)
 
     def _rel_filter(self, meta: TableMeta, rels) -> "F.Column | None":
         """Partition-pruning predicate selecting exactly the given hive rel
@@ -3648,7 +3562,7 @@ class Lakehouse:
         out: dict[str, dict[str, list]] = {}
         # group by CAST(key AS STRING) — Spark's own hive-dir spelling,
         # so the rebuilt rel strings match the directories exactly
-        grp = [F.col(k).cast("string").alias(k) for k in meta.partition_keys]
+        grp = [_col(k).cast("string").alias(k) for k in meta.partition_keys]
         if per_file:
             # file-granularity stats (Z-ordered compactions): one zone
             # entry per output file, keyed leaf/<filename>
@@ -5586,10 +5500,10 @@ class Lakehouse:
     def _keep_latest(df: DataFrame, primary_keys: list[str]) -> DataFrame:
         """THE keep-latest-per-PK dedup (newest generation wins via
         ``_seq``): every consumer of snapshot semantics — optimize's
-        rewrite, delete_where's absorb, merge's target, the CDC
-        snapshots, logical reads — shares this one window so the tie
-        rule can never drift between them. Input must carry ``_seq``;
-        it is preserved in the output."""
+        rewrite, delete_where's absorb, the CDC snapshots, logical
+        reads — shares this one window so the tie rule can never drift
+        between them. Input must carry ``_seq``; it is preserved in the
+        output."""
         w = W.partitionBy(*map(_col, primary_keys)).orderBy(F.desc(_SEQ_COL))
         return (
             df.withColumn("_rn", F.row_number().over(w))
@@ -5601,8 +5515,7 @@ class Lakehouse:
         """The manifest state's LOGICAL rows: latest per primary key when
         un-absorbed deltas shadow older rows (``table()`` exposes the raw
         duplicates until optimize()). Consumers that must see snapshot
-        semantics (``set_primary_keys``' duplicate probe, IVM's
-        recompute/build reads) go through here."""
+        semantics (``update_where``'s matched set) go through here."""
         raw = self._read_raw(name, meta)
         if meta.primary_keys and meta.live_deltas:
             raw = self._keep_latest(raw, meta.primary_keys)
@@ -6004,10 +5917,10 @@ class Lakehouse:
 
         The dedupe decision is made HERE, against the same manifest
         load the rewrite snapshots — deciding it in the public entry
-        points opened a TOCTOU window where a rival's
-        ``set_primary_keys(name, [])`` between the two loads made
-        ``_keep_latest`` run with an empty window and collapse every
-        dirty partition to one row."""
+        points opened a TOCTOU window where a rival that dropped the
+        primary keys between the two loads made ``_keep_latest`` run
+        with an empty window and collapse every dirty partition to one
+        row."""
         meta = self._load_meta(name)
         dedupe = bool(meta.primary_keys)
         if want == "optimize" and not dedupe:
@@ -6071,10 +5984,10 @@ class Lakehouse:
             n_rewritten = len(meta.dirty_partitions) or len(meta.committed) or 1
             nparts = n_rewritten * int(zorder_files)
             out = out.withColumn("_z", _morton_expr(zcols))
-            range_keys = [F.col(k) for k in meta.partition_keys] + [F.col("_z")]
+            range_keys = [_col(k) for k in meta.partition_keys] + [F.col("_z")]
             out = (
                 out.repartitionByRange(nparts, *range_keys)
-                .sortWithinPartitions(*meta.partition_keys, "_z")
+                .sortWithinPartitions(*range_keys)
                 .drop("_z")
             )
         elif dedupe:
@@ -6108,31 +6021,6 @@ class Lakehouse:
         verb = "optimize" if dedupe else "compact"
         action = f"{verb}(zorder={zorder_by})" if zorder_by else verb
         self._commit_replace(name, meta, before, seq, token, rels, zone, scope, action)
-
-    def rewrite(self, name: str, transform) -> None:
-        """Whole-table READ-MODIFY-WRITE with a caller-supplied
-        ``transform(df) -> DataFrame`` (same schema): read the table's
-        current rows — pending deltas included — PINNED to the manifest
-        loaded at entry, land the transformed result as one new
-        generation, and commit it as the table's entire visible state in
-        one manifest PUT. The commit carries the whole-table rmw guard:
-        ANY concurrent commit, even a plain append, raises
-        ConcurrentWriteError instead of being silently absorbed by the
-        rewrite (an append landing between a naive read and a naive
-        overwrite's own manifest load would pass the version check yet
-        be missing from the output — the r8 review's Bloom-compaction
-        race). This is the compaction primitive for LSM-style aggregate
-        tables (the persisted Bloom filter's bit_or collapse, custom
-        roll-ups) where ``optimize()``'s keep-latest-per-PK would be the
-        wrong merge; for routine PK dedup use ``optimize()``, which
-        prunes to dirty partitions instead of rewriting everything."""
-        meta = self._load_meta(name)
-        before = self._snapshot_meta(meta)
-        out = transform(self._read_raw(name, meta).drop(_SEQ_COL))
-        seq = self._reserve_seq(name, meta)
-        token = self._write_seq(name, meta, out, seq)
-        rels, zone = self._spark_written(name, meta, seq, token)
-        self._commit_replace(name, meta, before, seq, token, rels, zone, None, "rewrite")
 
     def _clean_superseded(
         self,
@@ -6399,7 +6287,6 @@ class Lakehouse:
         meta: TableMeta,
         df: DataFrame,
         mode: str,
-        properties: dict | None,
         before: TableMeta,
     ) -> bool:
         """Driver-side small-append path; True iff committed. Mirrors the
@@ -6453,7 +6340,7 @@ class Lakehouse:
             token = f"{seq_dir}/_attempt-{uuid.uuid4().hex}"
             self.fs.write_text(token, "")
         self._commit_append(
-            name, meta, before, seq, token, written_rels, new_zone, mode, properties
+            name, meta, before, seq, token, written_rels, new_zone, mode
         )
         return True
 
@@ -6696,155 +6583,6 @@ class Lakehouse:
                     removed.append(f"{dv_dir}/{d}")
         return removed
 
-    def merge(
-        self,
-        name: str,
-        source: DataFrame,
-        delete_condition=None,
-        insert_unmatched: bool = True,
-        update_matched: bool = True,
-        properties: dict | None = None,
-    ) -> None:
-        """Delta-style MERGE INTO, keyed on the table's primary keys:
-
-        - MATCHED and ``delete_condition`` (a Column/SQL string over the
-          SOURCE row) → row deleted;
-        - MATCHED otherwise → updated to the source row
-          (``update_matched=False`` keeps the target row — insert-only
-          merge);
-        - NOT MATCHED (source-only) → inserted unless
-          ``insert_unmatched=False``;
-        - target rows never named by the source pass through unchanged.
-
-        One read-modify-write commit: only the partitions the SOURCE
-        touches (plus any with un-absorbed deltas) are rewritten, like
-        ``delete_where``; rewrite cost ∝ source's partition footprint,
-        not table size. Source must carry the full table schema (it IS
-        the post-image for updates/inserts). Duplicate source keys are
-        collapsed to one arbitrary-but-deterministic winner (highest
-        sort order) before merging.
-
-        HARD PRECONDITION on partitioned tables (shared with upsert/
-        optimize, but MERGE's framing invites violating it): a primary
-        key's partition values must be stable — the source row for a
-        matched PK must land in the SAME partition the stored row lives
-        in (partition keys functionally determined by the PK, e.g.
-        year = year(date) with date in the PK). The rewrite is pruned to
-        the partitions the source names; a matched PK whose stored row
-        lives in a partition the source doesn't name is never joined, so
-        the source row would insert into the new partition while the
-        stale row survives in the old one — duplicate primary keys.
-        Moving a row across partitions requires delete_where + merge.
-
-        ``properties`` (set_properties semantics) commit in the SAME
-        manifest PUT as the merged data — the atomic data+watermark
-        commit ops/ivm.py's idempotence depends on."""
-        meta = self._load_meta(name)
-        if not meta.primary_keys:
-            raise ValueError(f"merge needs primary keys on {name!r}")
-        before = self._snapshot_meta(meta)
-        pk = list(meta.primary_keys)
-        cols = meta.schema.fieldNames()
-        declared = meta.schema
-        src = source.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in declared.fields]
-        )
-        # collapse duplicate source keys deterministically (max over the
-        # non-key tuple — order-free, so layout can't change the winner)
-        non_pk = [c for c in cols if c not in pk]
-        if non_pk:
-            src = src.groupBy(*pk).agg(
-                F.max(F.struct(*non_pk)).alias("_s")
-            ).select(*pk, *[F.col(f"_s.{c}").alias(c) for c in non_pk])
-        else:
-            src = src.dropDuplicates(pk)
-        if delete_condition is not None:
-            dcond = (
-                F.expr(delete_condition)
-                if isinstance(delete_condition, str)
-                else delete_condition
-            )
-            src = src.withColumn("_del", F.coalesce(dcond, F.lit(False)))
-        else:
-            src = src.withColumn("_del", F.lit(False))
-        # materialize the prepared source ONCE: both the affected-partition
-        # collect below and the diff join reuse it, instead of re-running
-        # an arbitrarily expensive upstream plan twice (the same
-        # double-execution insert() was refactored to remove)
-        src = src.localCheckpoint()
-
-        sub = self._read_raw(name, meta)
-        scope = None
-        if meta.partition_keys:
-            scope = self._rels_of(src, meta.partition_keys) | set(
-                meta.dirty_partitions
-            )
-            if not scope:
-                # empty merge rewrote nothing; still honor requested
-                # properties (their own commit — there is no data PUT
-                # to ride)
-                if properties:
-                    self.set_properties(name, properties)
-                return
-            sub = sub.filter(self._rel_filter(meta, sorted(scope)))
-        # absorb pending deltas: latest row per PK, as optimize() would
-        tgt = self._keep_latest(sub, pk).drop(_SEQ_COL)
-        # PK-only tables still need a payload struct for the chosen-row
-        # logic; a constant field keeps the shape without changing output
-        payload = [F.col(c) for c in non_pk] or [F.lit(0).alias("_nop")]
-        t = tgt.select(
-            *pk, F.struct(*payload).alias("_t"), F.lit(1).alias("_has_t")
-        ).alias("_tside")
-        s = src.select(
-            *pk,
-            F.struct(*payload).alias("_sv"),
-            "_del",
-            F.lit(1).alias("_has_s"),
-        ).alias("_sside")
-        # null-SAFE key equality: a plain equi-join never matches NULL to
-        # NULL, which would both duplicate NULL-keyed rows (matched row
-        # re-inserted) and lose their updates
-        cond = F.lit(True)
-        for k in pk:
-            cond = cond & F.col(f"_tside.{k}").eqNullSafe(F.col(f"_sside.{k}"))
-        j = t.join(s, cond, "full_outer").select(
-            *[
-                F.coalesce(F.col(f"_tside.{k}"), F.col(f"_sside.{k}")).alias(k)
-                for k in pk
-            ],
-            F.col("_tside._t").alias("_t"),
-            F.col("_tside._has_t").alias("_has_t"),
-            F.col("_sside._sv").alias("_sv"),
-            F.col("_sside._del").alias("_del"),
-            F.col("_sside._has_s").alias("_has_s"),
-        )
-        matched = F.col("_has_t").isNotNull() & F.col("_has_s").isNotNull()
-        keep = F.when(
-            matched & F.col("_del"), F.lit(False)
-        ).otherwise(
-            # source-only rows insert (unless disabled, or flagged delete —
-            # a delete of an absent key is a no-op)
-            F.when(
-                F.col("_has_t").isNull(),
-                F.lit(insert_unmatched) & ~F.col("_del"),
-            ).otherwise(F.lit(True))
-        )
-        chosen = F.when(
-            matched, F.col("_sv") if update_matched else F.col("_t")
-        ).otherwise(F.coalesce(F.col("_t"), F.col("_sv")))
-        merged = (
-            j.filter(keep)
-            .select(*pk, chosen.alias("_row"))
-            .select(*pk, *[F.col(f"_row.{c}").alias(c) for c in non_pk])
-            .select(*cols)
-        )
-        seq = self._reserve_seq(name, meta)
-        token = self._write_seq(name, meta, merged, seq)
-        rels, zone = self._spark_written(name, meta, seq, token)
-        self._commit_replace(
-            name, meta, before, seq, token, rels, zone, scope, "merge", properties
-        )
-
     def _delete_where_dv(
         self, name: str, meta: TableMeta, before: TableMeta, pred, mode: str
     ) -> bool:
@@ -7075,7 +6813,7 @@ class Lakehouse:
         def transformed(df: DataFrame) -> DataFrame:
             return df.select(
                 *[
-                    (sets[c] if c in sets else F.col(c)).cast(
+                    (sets[c] if c in sets else _col(c)).cast(
                         meta.schema[c].dataType
                     ).alias(c)
                     for c in names
@@ -7146,12 +6884,12 @@ class Lakehouse:
             # hazard, its originals stay in place). Source and target
             # keys come out of ONE scan (a struct pair per row), so
             # they are a consistent per-row snapshot.
-            cols = [F.struct(*[F.col(k).cast("string").alias(k) for k in pks]).alias("s")]
+            cols = [F.struct(*[_col(k).cast("string").alias(k) for k in pks]).alias("s")]
             if moving:
                 cols.append(
                     F.struct(
                         *[
-                            (sets[k] if k in sets else F.col(k))
+                            (sets[k] if k in sets else _col(k))
                             .cast(meta.schema[k].dataType)
                             .cast("string")
                             .alias(k)
@@ -7179,11 +6917,11 @@ class Lakehouse:
             *[
                 F.when(
                     F.col("__uw_m"),
-                    (sets[c] if c in sets else F.col(c)).cast(
+                    (sets[c] if c in sets else _col(c)).cast(
                         meta.schema[c].dataType
                     ),
                 )
-                .otherwise(F.col(c))
+                .otherwise(_col(c))
                 .alias(c)
                 for c in names
             ]

@@ -38,34 +38,3 @@ def assemble_covariance(
     )
     return B @ Fm @ B.T + np.diag(sigma**2)
 
-
-def risk_attribution(
-    w: np.ndarray,
-    B: np.ndarray,
-    F: np.ndarray,
-    idio_var: np.ndarray,
-    factors: list[str] | None = None,
-) -> dict:
-    """Decompose portfolio variance w'Σw under Σ = B F Bᵀ + diag(σ²)
-    into per-factor and idiosyncratic contributions.
-
-    Factor k's marginal contribution uses the symmetric allocation
-    x_k·(F x)_k with x = Bᵀw (factor exposures): the cross terms split
-    evenly between the two factors involved, so contributions sum
-    EXACTLY to total factor variance — the additivity every risk report
-    relies on. Returns variances (not vols): variances are additive,
-    vols are not; callers sqrt at the edge.
-    """
-    w = np.asarray(w, dtype=np.float64)
-    x = np.asarray(B, dtype=np.float64).T @ w  # factor exposures
-    Fx = np.asarray(F, dtype=np.float64) @ x
-    factor_contrib = x * Fx  # symmetric split of cross terms
-    idio = float(w @ (np.asarray(idio_var, dtype=np.float64) * w))
-    total = float(factor_contrib.sum() + idio)
-    names = factors if factors is not None else [f"f{k}" for k in range(len(x))]
-    return {
-        "total_variance": total,
-        "factor_variance": float(factor_contrib.sum()),
-        "idio_variance": idio,
-        "per_factor": dict(zip(names, factor_contrib.tolist())),
-    }

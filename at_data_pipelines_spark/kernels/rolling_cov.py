@@ -6,9 +6,7 @@ Reference: pandas ``.rolling(252, min_periods=252).cov()`` on the wide
 
 The factor panel is intrinsically tiny (n_dates × 5), so the kernel runs
 as a single-group ``applyInPandas`` (stays in the Spark job for
-composability; the data never justifies a shuffle). For a wide-asset
-version (hundreds of columns) the scalable shape is the self-join +
-``covar_samp`` window per pair — provided by ``rolling_cov_pairs_sql``.
+composability; the data never justifies a shuffle).
 """
 
 from __future__ import annotations
@@ -20,7 +18,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window as W
 
 
 def rolling_pairwise_cov(
@@ -56,30 +53,3 @@ def rolling_pairwise_cov(
         .applyInPandas(lambda _, pdf: fn(pdf.drop(columns="_g")), schema)
     )
 
-
-def rolling_cov_pairs_sql(
-    long_df: DataFrame,
-    entity_col: str,
-    date_col: str,
-    value_col: str,
-    window: int = 252,
-) -> DataFrame:
-    """Scalable alternative: all entity pairs via self-join on date, then
-    ``covar_samp`` over a bounded row window per pair — shuffle on the
-    pair key, no wide frame ever materialized."""
-    a = long_df.select(
-        F.col(date_col), F.col(entity_col).alias("factor_1"), F.col(value_col).alias("x")
-    )
-    b = long_df.select(
-        F.col(date_col), F.col(entity_col).alias("factor_2"), F.col(value_col).alias("y")
-    )
-    pairs = a.join(b, date_col)
-    w = (
-        W.partitionBy("factor_1", "factor_2")
-        .orderBy(date_col)
-        .rowsBetween(-(window - 1), 0)
-    )
-    guarded = F.when(
-        F.count(F.lit(1)).over(w) >= window, F.covar_samp("x", "y").over(w)
-    )
-    return pairs.select(date_col, "factor_1", "factor_2", guarded.alias("covariance"))

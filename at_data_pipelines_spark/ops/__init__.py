@@ -1,7 +1,4 @@
 from .asof import asof_join  # noqa: F401
-from .graph import pagerank  # noqa: F401
-from .ivm import build_aggregate, refresh_aggregate  # noqa: F401
 from .range_join import range_join  # noqa: F401
 from .rank import ntile_from, percent_rank_from, with_global_rank  # noqa: F401
 from .sketch import kmv_distinct, uniform_hash  # noqa: F401
-from .skew import salted_join, two_phase_agg, with_salt  # noqa: F401

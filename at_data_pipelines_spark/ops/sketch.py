@@ -25,20 +25,11 @@ hash itself is uniform by construction.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 _HEX_BITS = 48  # 12 hex chars: exact in a double (< 2^53), cheap to compare
-
-# per-Lakehouse-handle memo of Bloom words tables already verified PK-free
-# (see bloom_update_table's migration guard); weak so a dropped handle
-# frees its entry rather than pinning the Lakehouse object forever
-_BLOOM_PK_MIGRATED: "weakref.WeakKeyDictionary[object, dict]" = (
-    weakref.WeakKeyDictionary()
-)
 
 
 def uniform_hash(col: F.Column | str) -> F.Column:
@@ -210,7 +201,7 @@ def bloom_build(
     (a dense m=2^33 filter is just more rows). md5-derived positions
     make the sketch bit-reproducible across engines, like the KMV/CMS
     sketches. NULL is never a member. Mergeable: union two sketches and
-    re-aggregate (``bloom_merge``) — exactly equal to building from the
+    re-aggregate with ``bit_or`` — exactly equal to building from the
     union, since bit_or is associative and the hashes deterministic.
 
     Why alongside KMV/CMS: the membership sketch a 100 TB incremental
@@ -252,10 +243,9 @@ def bloom_probe(
     hashes to k NULL positions, whose NULL words never join and whose
     NULL-mask hits are NULL, so the final coalesced bool_and is False —
     no special-case branch needed. Duplicate ``word`` rows in the
-    sketch (the append-only LSM shape ``bloom_update_table`` writes
-    between compactions) are OR-collapsed before the mask test, so
-    probing an uncompacted filter is exactly as correct as probing a
-    compacted one."""
+    sketch (a union of sketches not yet re-aggregated) are OR-collapsed
+    before the mask test, so probing such a union is exactly as correct
+    as probing its merged sketch."""
     if value_col in ("word", "bits"):
         raise ValueError(
             f"value_col {value_col!r} collides with the sketch's internal "
@@ -285,145 +275,6 @@ def bloom_probe(
     )
 
 
-def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR-merge two Bloom sketches built with identical (m, k, salt):
-    exactly the sketch of the union of their inputs."""
-    return (
-        a.unionByName(b)
-        .groupBy("word")
-        .agg(F.expr("bit_or(bits)").alias("bits"))
-    )
-
-
-def bloom_table_sketch(lake, table: str) -> DataFrame:
-    """The persisted filter's LOGICAL (word, bits) view: OR-collapse the
-    append-only word rows ``bloom_update_table`` wrote. bit_or over
-    duplicate word rows is exact (associative, idempotent), so the view
-    equals the one-shot build of everything ever ingested, compacted or
-    not. Feed this to ``bloom_probe``/``bloom_merge`` (probe also
-    collapses internally, so passing the raw table works too)."""
-    return (
-        lake.table(table)
-        .groupBy("word")
-        .agg(F.expr("bit_or(bits)").alias("bits"))
-    )
-
-
-def bloom_compact_table(lake, table: str) -> None:
-    """Rewrite the persisted filter to one row per word (bit_or of the
-    accumulated deltas) in a single read-modify-write commit — the LSM
-    compaction. NOT keep-latest-per-PK (that would drop bits recorded
-    by older rows), which is why the table is created WITHOUT primary
-    keys: ``optimize()`` must never touch it. Built on
-    ``Lakehouse.rewrite``, whose read is pinned to one manifest load
-    and whose commit conflicts with ANY concurrent commit — an append
-    landing mid-compaction raises ConcurrentWriteError rather than
-    being silently dropped from the compacted output (r8 review: a
-    bloom_table_sketch-then-overwrite compaction had a read/load gap an
-    append could fall into)."""
-    lake.rewrite(
-        table,
-        lambda df: df.groupBy("word").agg(F.expr("bit_or(bits)").alias("bits")),
-    )
-
-
-def bloom_update_table(
-    lake,
-    table: str,
-    df: DataFrame,
-    value_col: str,
-    m_bits: int = 1 << 20,
-    k: int = 5,
-    salt: str = "bloom",
-    compact_every: int = 8,
-) -> None:
-    """Incrementally maintain a lakehouse-PERSISTED Bloom filter (the
-    'have we ever ingested this?' membership set of an incremental
-    corpus dedup) in LSM shape: APPEND the batch's sparse (word, bits)
-    sketch as a new delta generation — cost truly O(batch's distinct
-    words) per update, never O(filter) — and compact to one row per
-    word every ``compact_every`` pending deltas (cadence read from the
-    table manifest, so it is restart-proof). The r7 version PK-upserted
-    into an unpartitioned words table, which recompacted the WHOLE
-    filter on every batch — O(filter) per update for the dense multi-GB
-    filters this module advertises.
-
-    Readers use ``bloom_table_sketch`` (or ``bloom_probe`` directly,
-    which OR-collapses duplicate word rows itself). bit_or is
-    idempotent and associative, so replayed and out-of-order batches
-    converge to exactly the union filter regardless of when compaction
-    runs. Appends commute (the commit protocol rebases them), so
-    concurrent updaters never conflict; a compaction racing an append
-    surfaces as ConcurrentWriteError and is simply skipped — the next
-    update retries it. The table is created WITHOUT primary keys:
-    duplicate words are state, and keep-latest dedup would lose bits
-    (mirrors ann_index_maintenance_stream's compact_every design,
-    streaming/ingest.py)."""
-    from pyspark.sql import types as T
-
-    from ..catalog import ConcurrentWriteError
-
-    lake.create(
-        table,
-        T.StructType(
-            [T.StructField("word", T.LongType()), T.StructField("bits", T.LongType())]
-        ),
-        [],
-        [],
-        mode="skip",
-    )
-    # Migration guard: a words table created by the r7 (PK-upsert) layout
-    # carries primary_keys=["word"]. Appending duplicate-word deltas into
-    # a PK table is a trap — any routine optimize() would keep-latest and
-    # silently DROP OR'd bits (Bloom false negatives). Migrate in place:
-    # collapse to one row per word (bit_or preserves every bit present),
-    # then clear the PK so duplicates become legitimate LSM state. Both
-    # steps are idempotent — a crash between them re-runs the (no-op)
-    # collapse on the next update before the PK is cleared, and no append
-    # lands in between because the guard runs before this batch's insert.
-    # The check needs a manifest load, which on the hot append path would
-    # cost one read PER BATCH just to re-learn a one-time fact — so each
-    # handle remembers which tables passed the check and skips it after
-    # the first clean pass. The memo is stamped with the handle's DDL
-    # epoch (bumped by every drop()/real create()), so a SAME-handle
-    # drop + recreate — possibly WITH the r7 primary keys — invalidates
-    # it and the guard re-verifies instead of trusting a memo about a
-    # dead table life. A recreate through a DIFFERENT handle remains
-    # out-of-band, the same hazard class set_primary_keys itself guards.
-    migrated = _BLOOM_PK_MIGRATED.setdefault(lake, {})
-    epoch = getattr(lake, "_ddl_epoch", 0)
-    if migrated.get(table) != epoch:
-        if lake._load_meta(table).primary_keys:
-            try:
-                lake.rewrite(
-                    table,
-                    lambda d: d.groupBy("word").agg(
-                        F.expr("bit_or(bits)").alias("bits")
-                    ),
-                )
-                lake.set_primary_keys(table, [])
-            except ConcurrentWriteError as e:
-                # refusing to append is right (the PK trap is still
-                # armed), but tell the caller the fix is just to retry:
-                # the migration is idempotent and a rival updater's own
-                # guard may already have completed it.
-                raise ConcurrentWriteError(
-                    f"the one-time r7→r9 Bloom-table layout migration of "
-                    f"{table!r} raced a concurrent commit; retry "
-                    "bloom_update_table — the migration is idempotent and "
-                    "the batch was NOT appended (appending into the "
-                    "primary-key layout risks Bloom false negatives)"
-                ) from e
-        migrated[table] = epoch
-    batch = bloom_build(df, value_col, m_bits=m_bits, k=k, salt=salt)
-    lake.insert(table, batch, mode="append")
-    if compact_every and lake.pending_deltas(table) >= compact_every:
-        try:
-            bloom_compact_table(lake, table)
-        except ConcurrentWriteError:
-            pass  # a concurrent append won the commit; next update recompacts
-
-
 def quantile_sketch(
     df: DataFrame,
     value_col: str,
@@ -439,11 +290,11 @@ def quantile_sketch(
     sample estimates the population quantile with the standard
     O(1/sqrt(k)) error; because it is md5-derived it is deterministic,
     layout-independent, engine-reproducible, and MERGEABLE: union two
-    sketches and re-take the bottom-k (``quantile_sketch_merge``) —
-    exactly the sketch of the union. Spark's builtin approx_percentile
-    does this job faster but with engine-private internals no oracle
-    can replay. NULL values and NULL keys are excluded (a quantile of
-    NULLs is undefined; a NULL key cannot be hashed).
+    sketches and re-take the bottom-k — exactly the sketch of the
+    union. Spark's builtin approx_percentile does this job faster but
+    with engine-private internals no oracle can replay. NULL values and
+    NULL keys are excluded (a quantile of NULLs is undefined; a NULL key
+    cannot be hashed).
 
     ``key_col`` MUST identify rows uniquely (a PK or row id): the hash
     draws once per KEY, so duplicate keys share one draw and the
@@ -464,13 +315,6 @@ def quantile_sketch(
     # never a global single-task window. `value` tiebreak keeps
     # duplicate-key ties deterministic.
     return base.orderBy("h", "value").limit(k)
-
-
-def quantile_sketch_merge(a: DataFrame, b: DataFrame, k: int = 256) -> DataFrame:
-    """Bottom-k of the union of two sketches — exactly the sketch of the
-    combined input (hashes are deterministic, so the k smallest of the
-    union's rows are the k smallest among the two bottom-k sets)."""
-    return a.unionByName(b).orderBy("h", "value").limit(k)
 
 
 def quantile_estimate(

@@ -11,6 +11,11 @@ at 100 entries a same-day rerun (or the next query pass in the same JVM)
 evicts and recompiles them all. The cache is per JVM, so this only helps
 a process that re-runs plans; a single run in a fresh JVM compiles the
 same number of classes at either size.
+
+The driver heap defaults to half the host's ``MemTotal``, capped at
+``_DRIVER_MEMORY_CAP_MB`` (48 GB); ``SPARK_DRIVER_MEMORY`` overrides it.
+A heap larger than the host lets the JVM put off garbage collection until
+the kernel kills it.
 """
 
 from __future__ import annotations
@@ -20,6 +25,25 @@ import os
 from pyspark.sql import SparkSession
 
 _CODEGEN_CACHE_ENTRIES = 2000
+_DRIVER_MEMORY_CAP_MB = 48 * 1024
+
+
+def _driver_memory(meminfo: str) -> str:
+    """Half of ``MemTotal`` in a ``/proc/meminfo`` text, capped at
+    ``_DRIVER_MEMORY_CAP_MB``; the cap when the text has no ``MemTotal``."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            half_mb = int(line.split()[1]) // 2048  # kB -> MB, halved
+            return f"{min(half_mb, _DRIVER_MEMORY_CAP_MB)}m"
+    return f"{_DRIVER_MEMORY_CAP_MB}m"
+
+
+def _host_meminfo() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            return f.read()
+    except OSError:
+        return ""
 
 
 def get_spark(
@@ -39,7 +63,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _driver_memory(_host_meminfo()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
         # the driver testdata's events table uses TIMESTAMP(NANOS) parquet,

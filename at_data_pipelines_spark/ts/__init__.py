@@ -8,7 +8,6 @@ from .windows import (  # noqa: F401
     entity_window,
     ewm_mean,
     pct_change,
-    rolling_mean,
     rolling_std,
     rolling_sum,
     zscore_global,

@@ -76,14 +76,6 @@ def rolling_sum(
     return _rolling(F.sum(c).over(frame), c, w, window, min_periods)
 
 
-def rolling_mean(
-    col: str | Column, w: WindowSpec, window: int, min_periods: int | None = None
-) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    frame = w.rowsBetween(-(window - 1), 0)
-    return _rolling(F.avg(c).over(frame), c, w, window, min_periods)
-
-
 def rolling_std(
     col: str | Column, w: WindowSpec, window: int, min_periods: int | None = None
 ) -> Column:

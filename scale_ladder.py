@@ -238,68 +238,6 @@ def measure_bloom_skip(spark, gens: int, rows_per_gen: int = 20_000) -> dict:
     return out
 
 
-def measure_ivm(spark, src_rows: int, change_rows: int = 200) -> dict:
-    """Incremental view maintenance cost vs source size: build a source
-    of ``src_rows`` and its materialized per-group aggregate, apply one
-    fixed-size change batch, and time refresh_aggregate against a full
-    rebuild. The claim under test: refresh cost tracks the CHANGE size
-    (flat across source sizes), rebuild cost tracks the SOURCE."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from at_data_pipelines_spark.catalog import Lakehouse
-    from at_data_pipelines_spark.ops.ivm import build_aggregate, refresh_aggregate
-
-    lake = Lakehouse(spark, tempfile.mkdtemp(prefix=f"ivm_{src_rows}_"))
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("part", T.IntegerType()),
-            T.StructField("grp", T.StringType()),
-            T.StructField("v", T.DoubleType()),
-        ]
-    )
-    # date-like layout: FIXED partition size, so a bigger table has MORE
-    # partitions — and a change batch touching one partition exercises
-    # table_changes' manifest-proven pruning (only moved pointers scan)
-    rows_per_part = 25_000
-    lake.create("src", schema, ["part"], ["k", "part"], retain_versions=50)
-    base = spark.range(src_rows).select(
-        F.col("id").alias("k"),
-        (F.col("id") / rows_per_part).cast("int").alias("part"),
-        F.concat(F.lit("g"), (F.col("id") % 64).cast("string")).alias("grp"),
-        (F.col("id") * 0.25).alias("v"),
-    )
-    lake.insert("src", base)
-    # compact before the baseline version: with a live delta pending, the
-    # build version's manifest has every partition dirty and table_changes
-    # could not prune anything — after optimize, only partitions the
-    # change batch actually moves are diffed (the mechanism under test)
-    lake.optimize("src")
-    t0 = time.perf_counter()
-    build_aggregate(lake, "src", "view", ["grp"], ["v"])
-    build_s = time.perf_counter() - t0
-    change = spark.range(change_rows).select(
-        F.col("id").alias("k"),  # keys 0..change_rows: all in partition 0
-        F.lit(0).alias("part"),
-        F.concat(F.lit("g"), (F.col("id") % 64).cast("string")).alias("grp"),
-        (F.col("id") * 1.5).alias("v"),
-    )
-    lake.upsert("src", change)
-    t0 = time.perf_counter()
-    refresh_aggregate(lake, "src", "view", ["grp"], ["v"])
-    refresh_s = time.perf_counter() - t0
-    return {
-        "src_rows": src_rows,
-        "partitions": src_rows // rows_per_part,
-        "change_rows": change_rows,
-        "build_s": round(build_s, 3),
-        "refresh_s": round(refresh_s, 3),
-    }
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--runs", type=int, default=2)
@@ -313,8 +251,8 @@ def main() -> None:
         "--sections",
         default="all",
         help=(
-            "comma list of {queries,persist,ann_stream,zone,bloomskip,ivm,"
-            "pagerank,bloom,manifest,coldparse,objstore,dvdelete,dvrange,"
+            "comma list of {queries,persist,ann_stream,zone,bloomskip,"
+            "manifest,coldparse,objstore,dvdelete,dvrange,"
             "inventory,contention,contention_wide,compaction} (default all)"
         ),
     )
@@ -325,9 +263,6 @@ def main() -> None:
             "persist",
             "ann_stream",
             "zone",
-            "ivm",
-            "pagerank",
-            "bloom",
             "bloomskip",
             "manifest",
             "coldparse",
@@ -471,26 +406,6 @@ def main() -> None:
             str(g): measure_bloom_skip(spark, g) for g in (10, 50)
         }
 
-    if "ivm" in sections:
-        _section_control(spark, out, "ivm")
-        out["ivm_refresh"] = {
-            str(n): measure_ivm(spark, n) for n in (100_000, 500_000, 1_000_000)
-        }
-
-    if "pagerank" in sections:
-        _section_control(spark, out, "pagerank")
-        out["pagerank"] = {
-            tag: measure_pagerank(spark, n)
-            for tag, n in [("1M_edges", 1_000_000), ("5M_edges", 5_000_000)]
-        }
-
-    if "bloom" in sections:
-        _section_control(spark, out, "bloom")
-        out["bloom_updates"] = {
-            tag: measure_bloom_updates(spark, n)
-            for tag, n in [("100k_prefill", 100_000), ("1M_prefill", 1_000_000)]
-        }
-
     if "manifest" in sections:
         _section_control(spark, out, "manifest")
         out["manifest_loads"] = {
@@ -594,86 +509,6 @@ def main() -> None:
     spark.stop()
 
 
-def measure_pagerank(spark, n_edges: int, iters=(4, 12, 20)) -> dict:
-    """r7 ladder rung: per-iteration wall must be FLAT across iterations
-    (the r6 defect was partial lineage re-execution growing with the
-    distance to the last checkpoint). Protocol: run pagerank to
-    increasing max_iter on the same synthetic graph and difference the
-    walls — per_iter_s segments should agree (the first segment absorbs
-    JIT warmup)."""
-    from pyspark.sql import functions as F
-
-    from at_data_pipelines_spark.ops.graph import pagerank
-
-    nodes = max(1000, n_edges // 10)
-    edges = (
-        spark.range(n_edges)
-        .select(
-            (F.col("id") % nodes).alias("src"),
-            ((F.col("id") * 2654435761) % nodes).alias("dst"),
-        )
-        .localCheckpoint()
-    )
-    walls = {}
-    for it in iters:
-        samples = []
-        for _ in range(3):  # min-of-3: JIT/GC noise rivals one iteration
-            t0 = time.perf_counter()
-            pagerank(edges, max_iter=it, tol=0.0, check_every=100).count()
-            samples.append(time.perf_counter() - t0)
-        walls[str(it)] = round(min(samples), 3)
-    per_iter = {
-        f"{a}->{b}": round((walls[str(b)] - walls[str(a)]) / (b - a), 3)
-        for a, b in zip(iters, iters[1:])
-    }
-    return {"edges": n_edges, "nodes": nodes, "walls_s": walls, "per_iter_s": per_iter}
-
-
-def measure_bloom_updates(spark, prefill_words: int, n_updates: int = 8) -> dict:
-    """Per-update wall time of the LSM persisted-Bloom maintenance
-    (ops/sketch.py bloom_update_table) against a pre-filled filter.
-    Run at two prefill sizes (e.g. 100k / 1M member prefill → ~10×
-    filter words): a flat per-update time is the O(batch)-not-O(filter)
-    evidence — the r7 PK-upsert shape recompacted the whole filter per
-    batch and grew linearly with the prefill here."""
-    import tempfile
-    import time as _time
-
-    import pyspark.sql.functions as F
-
-    from at_data_pipelines_spark.catalog import Lakehouse
-    from at_data_pipelines_spark.ops.sketch import bloom_update_table
-
-    work = tempfile.mkdtemp(prefix=f"bloomlsm_{prefill_words}_")
-    lake = Lakehouse(spark, f"{work}/lake")
-    m = 1 << 24  # 16M bits / 256k words: dense enough to dwarf a batch
-    prefill = spark.range(prefill_words).select(
-        F.concat(F.lit("member-"), F.col("id")).alias("v")
-    )
-    bloom_update_table(lake, "bloom", prefill, "v", m_bits=m, k=5, compact_every=0)
-    filter_words = lake.table("bloom").count()
-
-    walls = []
-    for b in range(n_updates):
-        batch = spark.range(500).select(
-            F.concat(F.lit(f"new-{b}-"), F.col("id")).alias("v")
-        )
-        t0 = _time.perf_counter()
-        # compaction cadence disabled so the rung isolates the per-update
-        # append cost (the compaction itself is amortized and measured by
-        # the ann_stream rung's identical policy)
-        bloom_update_table(lake, "bloom", batch, "v", m_bits=m, k=5, compact_every=0)
-        walls.append(_time.perf_counter() - t0)
-    return {
-        "prefill_members": prefill_words,
-        "filter_words": filter_words,
-        "updates": n_updates,
-        "batch_rows": 500,
-        "per_update_s_min": round(min(walls), 3),
-        "per_update_s_median": round(sorted(walls)[len(walls) // 2], 3),
-    }
-
-
 def measure_manifest_loads(spark, n_commits: int) -> dict:
     """r9 ladder rung (the r8 task-#3 'done' criterion): manifest-load
     wall must be FLAT vs TOTAL historical commits on a log-mode table.
@@ -711,7 +546,9 @@ def measure_manifest_loads(spark, n_commits: int) -> dict:
         )
         t0 = _time.perf_counter()
         for i in range(n_commits):
-            lake.set_properties("t", {"tick": str(i)})
+            meta = lake._load_meta("t")
+            meta.properties["tick"] = str(i)
+            lake._commit_meta(meta, None, action="tick")
         commit_wall = _time.perf_counter() - t0
         warm = []
         for _ in range(7):

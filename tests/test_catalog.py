@@ -337,53 +337,6 @@ def test_unreferenced_generation_invisible_and_vacuumed(lake, spark):
     assert {r.ticker for r in lake.table("prices").collect()} == {"A"}
 
 
-def test_set_primary_keys_guards_against_duplicates(spark, tmp_path):
-    """Declaring PKs over a table with duplicate rows arms the silent
-    keep-latest trap: the next optimize() would drop real data rows.
-    set_primary_keys must probe and refuse (force=True overrides);
-    clearing PKs never probes — that direction cannot lose rows."""
-    lake = Lakehouse(spark, str(tmp_path / "lake"))
-    lake.create("t", SCHEMA, [], [])
-    lake.insert(
-        "t",
-        _df(
-            spark,
-            [("A", "2024-01-02", 1.0), ("A", "2024-01-02", 2.0), ("B", "2024-01-03", 3.0)],
-        ),
-    )
-    # ("A", 2024-01-02) appears twice -> refuse to declare those PKs
-    with pytest.raises(ValueError, match="duplicates under the proposed"):
-        lake.set_primary_keys("t", ["ticker", "date"])
-    assert lake._load_meta("t").primary_keys == []
-    # unique under a stricter identity -> allowed
-    lake.set_primary_keys("t", ["ticker", "date", "close"])
-    assert lake._load_meta("t").primary_keys == ["ticker", "date", "close"]
-    # clearing is always allowed, duplicates or not
-    lake.set_primary_keys("t", [])
-    assert lake._load_meta("t").primary_keys == []
-    # force declares anyway; optimize() then keep-latests as documented
-    lake.set_primary_keys("t", ["ticker", "date"], force=True)
-    lake.optimize("t")
-    assert lake.table("t").count() == 2
-
-
-def test_set_primary_keys_probe_uses_logical_rows(spark, tmp_path):
-    """Un-absorbed upsert deltas duplicate rows under the CURRENT PKs by
-    design (shadowing, resolved by keep-latest). Re-keying to a set the
-    LOGICAL rows are unique under must succeed — the probe must apply
-    current-PK shadowing first, not count raw commit state."""
-    lake = Lakehouse(spark, str(tmp_path / "lake"))
-    lake.create("t", SCHEMA, [], ["ticker", "date"])
-    lake.insert("t", _df(spark, [("A", "2024-01-02", 1.0), ("B", "2024-01-03", 2.0)]))
-    # append the same PK -> raw storage now holds two ("A", 2024-01-02)
-    # rows, shadow-resolved by keep-latest until optimize() absorbs them
-    lake.insert("t", _df(spark, [("A", "2024-01-02", 9.0)]), mode="append")
-    assert lake._load_meta("t").live_deltas, "precondition: un-absorbed delta"
-    assert lake.table("t").count() == 3, "precondition: raw duplicates visible"
-    lake.set_primary_keys("t", ["date", "ticker"])
-    assert lake._load_meta("t").primary_keys == ["date", "ticker"]
-
-
 def test_compact_merges_deltas_preserving_all_rows(lake, spark):
     """compact() on a PK-LESS table merges every pending delta into the
     base of the touched partitions WITHOUT deduplicating — append-only
@@ -506,7 +459,9 @@ def test_upsert_with_quote_and_backtick_partition_key(spark, tmp_path):
     quoted as an identifier and as a struct field name, not spliced in
     raw. Several dirty partitions force the struct-IN shape, and each
     upsert is the distributed insert + optimize, off the driver-side fast
-    path (which never builds the predicate)."""
+    path (which never builds the predicate). Every other write path that
+    builds a column from the key (zone maps, Z-order, the rewrite
+    ``update_where``) must quote it too."""
     key = "re`gi'on"
     schema = T.StructType(
         [
@@ -537,6 +492,21 @@ def test_upsert_with_quote_and_backtick_partition_key(spark, tmp_path):
     del want[(4, 2021, "r0")]
     got = {(r["id"], r["year"], r[key]): r["v"] for r in lake.table("t").collect()}
     assert got == want
+
+    # a Z-ordered optimize range-partitions and sorts by the key
+    lake.optimize("t", zorder_by=["v"], zorder_files=2, full=True)
+    got = {(r["id"], r["year"], r[key]): r["v"] for r in lake.table("t").collect()}
+    assert got == want
+
+    # zone maps are collected per partition of a distributed write, and a
+    # rewrite update_where scans its scope by the key (PK-less: the
+    # rewrite path); moving a row's key reads the target partition too
+    lake.create("z", schema, ["year", key], [], stats_columns=["v"])
+    lake.insert("z", spark.createDataFrame(first, schema), allow_fast=False)
+    assert sorted(r["id"] for r in lake.scan("z", where={"v": (3.0, 5.0)}).collect()) == [3, 4, 5]
+    lake.update_where("z", F.col("id") == 3, {key: F.lit("r9")}, mode="rewrite")
+    moved = {(r["id"], r["year"], r[key]) for r in lake.table("z").collect()}
+    assert moved == {(i, y, "r9" if i == 3 else r) for i, y, r, _ in first}
 
 
 def test_compact_zorder_layout_on_pkless_table(lake, spark):

@@ -1,9 +1,8 @@
 """Model-based protocol test: a seeded random sequence of lakehouse
-mutations (upsert, merge with update/delete/insert, delete_where,
-optimize incl. Z-order, restore) executed against BOTH the real
-Lakehouse and a plain-Python dict model, with full-state equality
-asserted after EVERY commit and zone-map scans spot-checked against the
-model along the way. One divergence anywhere in the op stream fails —
+mutations (upsert, delete_where, optimize incl. Z-order, restore)
+executed against BOTH the real Lakehouse and a plain-Python dict model,
+with full-state equality asserted after EVERY commit and zone-map scans
+spot-checked against the model along the way. One divergence anywhere in the op stream fails —
 the strongest single check that the manifest protocol, snapshot
 history, and pruning never disagree about table contents."""
 
@@ -68,40 +67,13 @@ def test_lakehouse_random_ops_match_model(spark, tmp_path, seed):
     n_ops = 22
     for step in range(n_ops):
         op = rng.choice(
-            ["upsert", "upsert", "merge", "merge_del", "delete_where", "optimize", "restore"]
+            ["upsert", "upsert", "delete_where", "optimize", "restore"]
         )
         if op == "upsert":
             rows = batch(rng.randrange(1, 30))
             lake.upsert("t", _rows_df(spark, rows))
             for k, v, s in rows:
                 model[k] = (k % 3, v, s)
-        elif op == "merge":
-            rows = batch(rng.randrange(1, 25))
-            insert_unmatched = rng.random() < 0.8
-            update_matched = rng.random() < 0.8
-            lake.merge(
-                "t",
-                _rows_df(spark, rows),
-                insert_unmatched=insert_unmatched,
-                update_matched=update_matched,
-            )
-            for k, v, s in rows:
-                if k in model:
-                    if update_matched:
-                        model[k] = (k % 3, v, s)
-                elif insert_unmatched:
-                    model[k] = (k % 3, v, s)
-        elif op == "merge_del":
-            rows = batch(rng.randrange(1, 25))
-            cut = rng.uniform(-50, 50)
-            lake.merge(
-                "t", _rows_df(spark, rows), delete_condition=F.col("v") > cut
-            )
-            for k, v, s in rows:
-                if v > cut:
-                    model.pop(k, None)
-                else:
-                    model[k] = (k % 3, v, s)
         elif op == "delete_where":
             lo = rng.randrange(0, KEYSPACE)
             hi = lo + rng.randrange(10, 80)

@@ -1,7 +1,7 @@
 """Deletion vectors (r11): ``delete_where(mode='dv')`` records matched
 rows as (file, row position) pairs in the manifest instead of rewriting
 partitions — the Delta/Iceberg-v2 metadata-only row delete. Every
-reader (table/scan/_read_rels, and therefore CDC, IVM, merge, optimize)
+reader (table/scan/_read_rels, and therefore CDC, analyze, optimize)
 anti-joins them out; the next rewrite of a partition materializes the
 deletes and drops its files' vectors.
 
@@ -407,21 +407,14 @@ def test_update_where_rewrite_partition_move_keeps_target_rows(lake, spark):
     )
 
 
-def test_dv_merge_and_analyze_see_masked_rows(lake, spark):
-    """MERGE and ANALYZE both read through _read_raw, so they must see
-    the post-delete rows: a merge keyed on a vector-deleted row treats
-    it as unmatched (insert, not update), and analyze counts exclude it."""
+def test_dv_analyze_sees_masked_rows(lake, spark):
+    """ANALYZE reads through _read_raw, so it must see the post-delete
+    rows: its counts exclude a vector-deleted row."""
     lake.create("p", SCHEMA, [], ["k"])
     lake.upsert("p", _batch(spark, 0, 10, 0))
     lake.delete_where("p", F.col("k") == 4, mode="dv")
     stats = lake.analyze("p")
     assert stats["rows"] == 9
-    src = spark.createDataFrame([(4, 0, 100.0), (5, 0, 200.0)], SCHEMA)
-    lake.merge("p", src, update_matched=True, insert_unmatched=True)
-    got = {r.k: r.v for r in lake.table("p").collect()}
-    assert got[4] == 100.0, "vector-deleted key must merge as a fresh insert"
-    assert got[5] == 200.0, "live key must merge as an update"
-    assert len(got) == 10
 
 
 def test_dv_free_tables_pay_zero_plan_nodes(lake, spark, monkeypatch):
@@ -1161,10 +1154,6 @@ def _drift_delete(lake, spark):
     lake.delete_where("p", (F.col("part") == 0) & (F.col("k") < 5))
 
 
-def _drift_merge_delete(lake, spark):
-    lake.merge("p", _batch(spark, 0, 5, 0), delete_condition=F.lit(True))
-
-
 def _drift_update_rewrite(lake, spark):
     lake.update_where(
         "p",
@@ -1179,7 +1168,6 @@ def _drift_update_rewrite(lake, spark):
     [
         pytest.param(_drift_update_pk, ["k"], id="update_where_pk"),
         pytest.param(_drift_delete, ["k"], id="delete_where"),
-        pytest.param(_drift_merge_delete, ["k"], id="merge_delete"),
         pytest.param(_drift_update_rewrite, [], id="update_where_rewrite"),
     ],
 )

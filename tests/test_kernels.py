@@ -1,5 +1,5 @@
 """Numerical kernel tests: rolling OLS vs direct per-window lstsq,
-rolling covariance (pandas + SQL variants agree), QP via KKT conditions,
+rolling covariance vs pandas, QP via KKT conditions,
 λ-calibrated risk targeting."""
 
 from __future__ import annotations
@@ -16,7 +16,6 @@ from at_data_pipelines_spark.kernels import (
     solve_qp_simplex,
 )
 from at_data_pipelines_spark.kernels.portfolio import active_risk, project_simplex
-from at_data_pipelines_spark.kernels.rolling_cov import rolling_cov_pairs_sql
 from at_data_pipelines_spark.ts import ewm_mean
 
 
@@ -74,7 +73,7 @@ def test_tiny_grouped_map_inputs_run_on_one_partition(spark, ols_panel):
     assert ewm.rdd.getNumPartitions() == 1
 
 
-def test_rolling_cov_matches_pandas_and_sql(spark):
+def test_rolling_cov_matches_pandas(spark):
     rng = np.random.default_rng(5)
     n = 80
     dates = pd.date_range("2024-01-01", periods=n).date
@@ -99,12 +98,6 @@ def test_rolling_cov_matches_pandas_and_sql(spark):
     m = got.merge(exp, on=["date", "factor_1", "factor_2"], suffixes=("_g", "_e"))
     assert len(m) == len(exp)
     np.testing.assert_allclose(m.covariance_g, m.covariance_e, rtol=1e-10)
-
-    long = sdf.melt("date", ["F1", "F2", "F3"], "factor", "value")
-    got_sql = rolling_cov_pairs_sql(long, "factor", "date", "value", window=30).toPandas()
-    m2 = got_sql.dropna().merge(exp.dropna(), on=["date", "factor_1", "factor_2"])
-    assert len(m2) == len(exp.dropna())
-    np.testing.assert_allclose(m2.covariance_x, m2.covariance_y, rtol=1e-8)
 
 
 def test_project_simplex():
@@ -196,25 +189,3 @@ def test_assemble_covariance():
     exp = B @ Fm @ B.T + np.diag([0.01, 0.04])
     np.testing.assert_allclose(sigma, exp)
 
-
-def test_risk_attribution_sums_exactly():
-    """Factor + idio contributions must reconstruct w'Σw exactly, and the
-    per-factor terms must sum to the factor variance (additivity)."""
-    import numpy as np
-
-    from at_data_pipelines_spark.kernels.covariance import risk_attribution
-
-    rng = np.random.default_rng(12)
-    n, k = 25, 4
-    B = rng.normal(size=(n, k))
-    A = rng.normal(size=(k, k))
-    Fc = A @ A.T  # PSD factor covariance
-    idio = rng.uniform(0.01, 0.05, size=n)
-    w = rng.uniform(size=n)
-    w /= w.sum()
-    sigma = B @ Fc @ B.T + np.diag(idio)
-    out = risk_attribution(w, B, Fc, idio, ["mom", "val", "size", "qual"])
-    assert out["total_variance"] == pytest.approx(float(w @ sigma @ w), rel=1e-12)
-    assert sum(out["per_factor"].values()) == pytest.approx(out["factor_variance"], rel=1e-12)
-    assert set(out["per_factor"]) == {"mom", "val", "size", "qual"}
-    assert out["idio_variance"] > 0

@@ -79,6 +79,13 @@ def _state(lake, name):
     )
 
 
+def _meta_commit(lake, name, key, value):
+    """One metadata-only manifest commit: a table property, no data."""
+    meta = lake._load_meta(name)
+    meta.properties[key] = value
+    lake._commit_meta(meta, None, action=f"property({key})")
+
+
 def test_segmented_differential_vs_classic(spark, tmp_path, segmented):
     """The same op sequence through the segmented log and the classic
     protocol must produce identical table contents AND identical logical
@@ -113,7 +120,7 @@ def test_segmented_differential_vs_classic(spark, tmp_path, segmented):
         step(lambda lk: lk.upsert("t", _df(spark, [("A", "2023-01-02", 3.0)])))
         step(lambda lk: lk.upsert("t", _df(spark, [("C", "2024-02-02", 4.0)])))
         step(lambda lk: lk.delete_where("t", F.col("ticker") == "B"))
-        step(lambda lk: lk.set_properties("t", {"owner": "x"}))
+        step(lambda lk: _meta_commit(lk, "t", "owner", "x"))
         step(lambda lk: lk.insert("t", _df(spark, [("D", "2025-01-02", 5.0)])))
         step(lambda lk: lk.optimize("t"))
     finally:
@@ -481,7 +488,7 @@ def test_vacuum_retains_generations_of_relocated_mid_segment_versions(
     # drive the log well past a checkpoint so those versions' segments
     # relocate out of _log/
     for i in range(2 * Lakehouse._LOG_CHECKPOINT_EVERY + 3):
-        lake.set_properties("t", {"tick": str(i)})
+        _meta_commit(lake, "t", "tick", str(i))
     relocated = set(lake._archived_segments("t"))
     anchors = set(lake._history_versions("t"))
     target = next(v for v in supers if v in relocated and v not in anchors)

@@ -1,22 +1,28 @@
-"""Every function and class in ``llmops/``, every private top-level
-function in the package and every ``Lakehouse`` method and class
-attribute must be reachable from the engine's entry points.
+"""Every top-level function and class in the package, and every
+``Lakehouse`` method and class attribute, must be reachable from the
+engine's roots.
 
-Pure AST walk: no import of the package, no Spark session. Roots are the
-entry scripts (``__spark_entry__.py``, ``__main__.py``, ``bench.py``,
-``scale_ladder.py``, ``perfbench/*.py``), every ``@register``ed query and
-every public top-level name in the package outside ``llmops/`` (the
-operator inventory, the catalog and the connectors are public API by
-design), plus module-level code outside ``llmops/``. ``Lakehouse``'s
-methods and class attributes, public or private, are reached only by
-name, like top-level definitions: a public method that only tests call
-is dead. Its dunder methods are called by the language, not by name, so
-they are reached with the class. The one named root is ``connect_s3``.
-A definition is reached when a reached body
-names it (``Name``, ``Attribute`` or ``from ... import``), transitively.
-Import statements in package ``__init__`` files are re-exports and do
-not count. Matching is by name only, so a shadowing local can hide dead
-code but never flags live code.
+Pure AST walk: no import of the package, no Spark session. The roots are:
+
+- the entry scripts (``__spark_entry__.py``, ``__main__.py``,
+  ``bench.py``, ``perfbench/*.py``): every name they mention;
+- every ``@register``ed query;
+- module-level code outside ``llmops/`` (import statements excepted: an
+  import binds a name, it does not use it);
+- ``ROOTS``: the names a user of the engine calls that no in-repo entry
+  point does, each with its reason.
+
+A public name is not a root by being public, and a benchmark harness
+that only measures a feature (``scale_ladder.py``) is not a user of it:
+code that nothing above reaches is dead, whatever its visibility.
+
+``Lakehouse``'s methods and class attributes are reached only by name,
+like top-level definitions. Its dunder methods are called by the
+language, not by name, so they are reached with the class. A definition
+is reached when a reached body names it (``Name``, ``Attribute`` or
+``from ... import``), transitively; a name bound by ``import ... as``
+reaches what it aliases. Matching is by name only, so a shadowing name
+can hide dead code but never flags live code.
 """
 
 from __future__ import annotations
@@ -31,6 +37,45 @@ CATALOG = PKG / "catalog.py"
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
+_REF = "the reference's"
+_SINK = "streaming operator or sink on the fixed surface (COVERAGE §2.9)"
+_ACCESSOR = (f"research accessor, {_REF} pipelines/utils/data.py (COVERAGE "
+             "§3.3); perfbench wraps every get_* through vars(accessors)")
+
+# name -> why it is API although no entry script, query or module-level
+# code calls it
+ROOTS: dict[str, str] = {
+    "connect_s3": "the paper's bl.connect_s3(path, storage_options): how a "
+                  "user opens an object-store lake",
+    **{name: _SINK for name in (
+        "windowed_aggregation", "sessionize_stream", "running_user_stats",
+        "dedup_stream", "enrich_stream", "purchase_attribution_stream",
+        "stream_to_lakehouse", "windowed_distinct_users", "run_sessions_daily",
+        "create_ingest_tables", "near_dup_ingest_stream",
+        "ann_index_maintenance_stream")},
+    **{name: _ACCESSOR for name in (
+        "get_universe_returns", "get_alphas", "get_benchmark_weights",
+        "get_factor_loadings", "get_idio_vol", "get_prices",
+        "get_factor_covariances", "get_last_market_dates")},
+    **{name: f"{_REF} minute-bar and equity history flows (COVERAGE S6, S7)"
+       for name in ("create_history_tables", "history_flow", "portfolio_history_flow")},
+    **{name: f"{_REF} notification sink (COVERAGE S11)"
+       for name in ("with_failure_notification", "daily_summary",
+                    "actual_trades_summary", "daily_trading_summary",
+                    "compute_target_trades")},
+    **{name: f"{_REF} REST connector: daily bars, filled orders (COVERAGE S5, S8)"
+       for name in ("RestBarSource", "filled_orders_frame")},
+    "parse_constituent_tables": f"{_REF} constituents scrape (COVERAGE S9)",
+    "reconstruct_membership": "point-in-time index membership (COVERAGE U8)",
+    "should_run_daily": "market-closed guard of the daily run (COVERAGE §2.9)",
+    **{name: "bar resampling, adjustment and calendar alignment (COVERAGE §2.5)"
+       for name in ("resample_bars", "adjust_bars", "align_to_calendar")},
+    **{name: "builds and saves the IVF-PQ index that "
+             "ann_index_maintenance_stream loads (COVERAGE: ANN index persistence)"
+       for name in ("train_index", "save_index")},
+    "topk": "probes the persisted IVF-PQ index (COVERAGE: ANN index persistence)",
+}
+
 
 def _names(node: ast.AST) -> set[str]:
     """Every identifier a subtree refers to."""
@@ -42,6 +87,18 @@ def _names(node: ast.AST) -> set[str]:
             out.add(n.attr)
         elif isinstance(n, ast.ImportFrom):
             out.update(a.name for a in n.names)
+    return out
+
+
+def _aliases(trees) -> dict[str, set[str]]:
+    """``{alias -> {imported name}}`` for every ``import ... as``."""
+    out: dict[str, set[str]] = {}
+    for tree in trees:
+        for n in ast.walk(tree):
+            if isinstance(n, (ast.Import, ast.ImportFrom)):
+                for a in n.names:
+                    if a.asname:
+                        out.setdefault(a.asname, set()).add(a.name.rpartition(".")[2])
     return out
 
 
@@ -77,49 +134,42 @@ def _members(cls: ast.ClassDef) -> tuple[dict[str, list[ast.AST]], list[ast.AST]
     return members, shell
 
 
-def _walk() -> tuple[set[str], dict[str, set[str]], dict[str, set[str]], set[str]]:
-    """(reached names, llmops name -> {module}, private top-level function
-    name -> {module} outside ``llmops/``, ``Lakehouse`` member names)."""
+def _walk() -> tuple[set[str], dict[str, set[str]]]:
+    """(reached names, ``{definition name -> {qualified name}}`` for every
+    top-level definition and every ``Lakehouse`` member)."""
     defs: dict[str, list[ast.AST]] = {}  # name -> bodies defining it
+    where: dict[str, set[str]] = {}  # name -> {module.name}
     owner: dict[str, set[str]] = {}  # llmops name -> {module}
     module_code: dict[str, list[ast.stmt]] = {}  # llmops module -> non-def stmts
-    private: dict[str, set[str]] = {}  # private function -> {module}
-    lake_members: set[str] = set()
-    seeds: set[str] = set()
+    seeds: set[str] = set(ROOTS)
 
     entry = [ROOT / "__spark_entry__.py", PKG / "__main__.py", ROOT / "bench.py",
-             ROOT / "scale_ladder.py", *sorted((ROOT / "perfbench").glob("*.py"))]
+             *sorted((ROOT / "perfbench").glob("*.py"))]
+    trees = {path: ast.parse(path.read_text())
+             for path in [*entry, *sorted(PKG.rglob("*.py"))]}
+    aliases = _aliases(trees.values())
     for path in entry:
-        seeds |= _names(ast.parse(path.read_text()))
+        seeds |= _names(trees.pop(path))
 
-    for path in sorted(PKG.rglob("*.py")):
-        tree = ast.parse(path.read_text())
+    for path, tree in trees.items():
         in_llmops = LLMOPS in path.parents
-        is_init = path.name == "__init__.py"
-        mod = path.relative_to(LLMOPS).with_suffix("").as_posix() if in_llmops else ""
+        mod = ".".join(path.relative_to(PKG).with_suffix("").parts)
         for stmt in tree.body:
             if isinstance(stmt, _DEFS):
                 body: ast.AST = stmt
                 if path == CATALOG and isinstance(stmt, ast.ClassDef) and stmt.name == "Lakehouse":
                     members, shell = _members(stmt)
                     body = ast.Module(body=shell, type_ignores=[])
-                    lake_members = set(members)
                     for m, stmts in members.items():
                         defs.setdefault(m, []).extend(stmts)
-                    # the paper's ``bl.connect_s3(path, storage_options)``
-                    # entry point: how a user opens an object-store lake,
-                    # so it is API whether or not an in-repo script calls it
-                    seeds.add("connect_s3")
-                elif (not in_llmops and stmt.name.startswith("_")
-                      and not isinstance(stmt, ast.ClassDef)):
-                    private.setdefault(stmt.name, set()).add(
-                        ".".join(path.relative_to(PKG).with_suffix("").parts))
+                        where.setdefault(m, set()).add(f"catalog.Lakehouse.{m}")
                 defs.setdefault(stmt.name, []).append(body)
+                where.setdefault(stmt.name, set()).add(f"{mod}.{stmt.name}")
                 if in_llmops:
                     owner.setdefault(stmt.name, set()).add(mod)
-                elif not stmt.name.startswith("_") or _is_registered(stmt):
+                elif _is_registered(stmt):
                     seeds.add(stmt.name)
-            elif is_init and isinstance(stmt, (ast.Import, ast.ImportFrom)):
+            elif isinstance(stmt, (ast.Import, ast.ImportFrom)):
                 continue
             elif in_llmops:
                 module_code.setdefault(mod, []).append(stmt)
@@ -131,10 +181,11 @@ def _walk() -> tuple[set[str], dict[str, set[str]], dict[str, set[str]], set[str
     todo = list(seeds)
     while todo:
         name = todo.pop()
-        if name in reached or name not in defs:
+        if name in reached:
             continue
         reached.add(name)
-        for body in defs[name]:
+        todo.extend(aliases.get(name, ()))
+        for body in defs.get(name, ()):
             todo.extend(_names(body))
         # a reached llmops module runs its module-level code on import
         for mod in owner.get(name, ()):
@@ -142,48 +193,40 @@ def _walk() -> tuple[set[str], dict[str, set[str]], dict[str, set[str]], set[str
                 live_modules.add(mod)
                 for stmt in module_code.get(mod, []):
                     todo.extend(_names(stmt))
-    return reached, owner, private, lake_members
+    return reached, where
 
 
-def unreached_llmops() -> list[str]:
-    """``module.name`` for each top-level llmops definition no root reaches."""
-    reached, owner, _, _ = _walk()
-    return sorted(f"{mod}.{name}" for name, mods in owner.items()
-                  if name not in reached for mod in mods)
+def unreached() -> list[str]:
+    """``module.name`` for each definition no root reaches."""
+    reached, where = _walk()
+    return sorted(q for name, qs in where.items() if name not in reached for q in qs)
 
 
-def unreached_private() -> list[str]:
-    """``module.name`` for each private top-level function outside
-    ``llmops/`` no root reaches."""
-    reached, _, private, _ = _walk()
-    return sorted(f"{mod}.{name}" for name, mods in private.items()
-                  if name not in reached for mod in mods)
-
-
-def unreached_lakehouse() -> list[str]:
-    """Each ``Lakehouse`` method or class attribute no root reaches."""
-    reached, _, _, members = _walk()
-    return sorted(f"catalog.Lakehouse.{n}" for n in members - reached)
+def _report(dead: list[str], what: str) -> str:
+    return (f"{len(dead)} {what} are reached by no query, pipeline, stream, "
+            "CLI, benchmark entry point or ROOTS entry; delete them or wire "
+            "them in:\n  " + "\n  ".join(dead))
 
 
 def test_llmops_has_no_unreached_code():
-    dead = unreached_llmops()
-    assert not dead, (
-        f"{len(dead)} llmops definitions are reached by no query, pipeline, "
-        "stream, CLI or benchmark entry point; delete them or wire them in:\n  "
-        + "\n  ".join(dead))
-
-
-def test_package_has_no_unreached_private_functions():
-    dead = unreached_private()
-    assert not dead, (
-        f"{len(dead)} private functions are reached by no root; delete "
-        "them or wire them in:\n  " + "\n  ".join(dead))
+    dead = [q for q in unreached() if q.startswith("llmops.")]
+    assert not dead, _report(dead, "llmops definitions")
 
 
 def test_lakehouse_has_no_unreached_members():
-    dead = unreached_lakehouse()
-    assert not dead, (
-        f"{len(dead)} Lakehouse members are reached by no query, pipeline, "
-        "stream, CLI or benchmark entry point; delete them or wire them "
-        "in:\n  " + "\n  ".join(dead))
+    dead = [q for q in unreached() if q.startswith("catalog.Lakehouse.")]
+    assert not dead, _report(dead, "Lakehouse members")
+
+
+def test_package_has_no_unreached_definitions():
+    dead = [q for q in unreached()
+            if not q.startswith(("llmops.", "catalog.Lakehouse."))]
+    assert not dead, _report(dead, "top-level definitions")
+
+
+def test_every_root_names_a_definition():
+    _, where = _walk()
+    stale = sorted(set(ROOTS) - set(where))
+    assert not stale, (
+        "ROOTS names definitions that do not exist; a stale root could hide "
+        "dead code under a reused name:\n  " + "\n  ".join(stale))

@@ -205,69 +205,6 @@ def test_weighted_sample_grouped(spark):
     assert Counter(r.g for r in out) == {"a": 5, "b": 5}
 
 
-# -- PageRank --------------------------------------------------------------
-
-
-def _pagerank_reference(edges, damping=0.85, iters=24):
-    """Dense numpy power iteration, ranks summing to N."""
-    import numpy as np
-
-    nodes = sorted({x for e in edges for x in e})
-    idx = {v: i for i, v in enumerate(nodes)}
-    n = len(nodes)
-    out = np.zeros(n)
-    for s, _ in edges:
-        out[idx[s]] += 1
-    r = np.ones(n)
-    for _ in range(iters):
-        contrib = np.zeros(n)
-        for s, d in edges:
-            contrib[idx[d]] += r[idx[s]] / out[idx[s]]
-        dangling = r[out == 0].sum()
-        r = (1 - damping) + damping * (contrib + dangling / n)
-    return {v: r[idx[v]] for v in nodes}
-
-
-def test_pagerank_matches_numpy_reference(spark):
-    from at_data_pipelines_spark.ops.graph import pagerank
-
-    edges = [
-        (1, 2), (1, 3), (2, 3), (3, 1), (4, 3), (5, 4), (5, 3), (6, 5),
-        (7, 1),  # 7 has no in-links; 6 dangles into the chain
-    ]
-    got = {
-        r.id: r.rank
-        for r in pagerank(
-            spark.createDataFrame(edges, ["src", "dst"]), max_iter=24, tol=0.0
-        ).collect()
-    }
-    ref = _pagerank_reference(edges)
-    assert set(got) == set(ref)
-    for v in ref:
-        # identical iteration counts => identical partial sums up to fp assoc
-        assert abs(got[v] - ref[v]) < 1e-9, (v, got[v], ref[v])
-    # mass conservation: ranks sum to N
-    assert abs(sum(got.values()) - len(got)) < 1e-9
-    # the hub (3) outranks everything; friendless 7 is at the floor
-    assert got[3] == max(got.values())
-    assert got[7] == min(got.values())
-
-
-def test_pagerank_dangling_nodes_conserve_mass(spark):
-    from at_data_pipelines_spark.ops.graph import pagerank
-
-    # star into a sink: 0..4 -> 9 (9 dangles)
-    edges = [(i, 9) for i in range(5)]
-    got = {
-        r.id: r.rank
-        for r in pagerank(
-            spark.createDataFrame(edges, ["src", "dst"]), max_iter=16, tol=0.0
-        ).collect()
-    }
-    assert abs(sum(got.values()) - 6) < 1e-9
-    assert got[9] == max(got.values())
-
-
 # -- count-min sketch ------------------------------------------------------
 
 
@@ -366,17 +303,16 @@ def test_bloom_merge_equals_union_build(spark):
     """bit_or is associative and the hashes deterministic, so merging
     two sketches equals building one from the union EXACTLY (sketch
     row-for-row), and NULLs are never members."""
-    from at_data_pipelines_spark.ops.sketch import (
-        bloom_build,
-        bloom_merge,
-        bloom_probe,
-    )
+    from at_data_pipelines_spark.ops.sketch import bloom_build, bloom_probe
 
     a = spark.createDataFrame([("x",), ("y",), (None,)], ["v"])
     b = spark.createDataFrame([("y",), ("z",)], ["v"])
     m, k = 1 << 10, 3
-    merged = bloom_merge(
-        bloom_build(a, "v", m_bits=m, k=k), bloom_build(b, "v", m_bits=m, k=k)
+    merged = (
+        bloom_build(a, "v", m_bits=m, k=k)
+        .unionByName(bloom_build(b, "v", m_bits=m, k=k))
+        .groupBy("word")
+        .agg(F.expr("bit_or(bits)").alias("bits"))
     )
     direct = bloom_build(a.unionByName(b), "v", m_bits=m, k=k)
     assert sorted(map(tuple, merged.collect())) == sorted(
@@ -404,87 +340,6 @@ def test_bloom_plan_is_codegen_joins(spark):
     assert "BroadcastNestedLoop" not in plan
 
 
-def test_bloom_update_table_incremental(spark, tmp_path):
-    """Lakehouse-persisted filter in LSM shape: incremental batches are
-    APPENDED (O(batch) per update), the logical OR-collapsed view must
-    equal the one-shot union build exactly, probes through the RAW
-    uncompacted table (duplicate word rows present) must still see every
-    member with no false negatives, replays must be no-ops on the bits,
-    and compaction must leave one row per word == the direct build."""
-    from at_data_pipelines_spark.catalog import Lakehouse
-    from at_data_pipelines_spark.ops.sketch import (
-        bloom_build,
-        bloom_compact_table,
-        bloom_probe,
-        bloom_table_sketch,
-        bloom_update_table,
-    )
-
-    lake = Lakehouse(spark, str(tmp_path / "lake"))
-    m, k = 1 << 10, 3
-    batches = [
-        spark.createDataFrame([(f"doc-{i}",) for i in range(lo, lo + 40)], ["v"])
-        for lo in (0, 40, 80)
-    ]
-    for b in batches:
-        bloom_update_table(lake, "bloom", b, "v", m_bits=m, k=k, compact_every=0)
-    bloom_update_table(
-        lake, "bloom", batches[1], "v", m_bits=m, k=k, compact_every=0
-    )  # replay
-    # append-only: 4 pending deltas, duplicate word rows in the raw table
-    assert lake.pending_deltas("bloom") == 4
-    union = batches[0].unionByName(batches[1]).unionByName(batches[2])
-    direct = sorted(map(tuple, bloom_build(union, "v", m_bits=m, k=k).collect()))
-    logical = sorted(map(tuple, bloom_table_sketch(lake, "bloom").collect()))
-    assert logical == direct
-    # probing the RAW table (duplicates present) is exactly as correct
-    probed = bloom_probe(lake.table("bloom"), union, "v", m_bits=m, k=k)
-    assert all(r.maybe_member for r in probed.collect())
-    absent = spark.createDataFrame([(f"nope-{i}",) for i in range(200)], ["v"])
-    raw_fpr = {
-        r.v: r.maybe_member
-        for r in bloom_probe(lake.table("bloom"), absent, "v", m_bits=m, k=k).collect()
-    }
-    compact_fpr = {
-        r.v: r.maybe_member
-        for r in bloom_probe(
-            bloom_table_sketch(lake, "bloom"), absent, "v", m_bits=m, k=k
-        ).collect()
-    }
-    assert raw_fpr == compact_fpr, "raw and collapsed probes must agree exactly"
-    # compaction: one rewrite() commit, one row per word, bits unchanged.
-    # Data check FIRST (the point of the test), cadence bookkeeping after:
-    # rewrite() commits the compacted output as the table BASE, so no
-    # pending deltas remain.
-    bloom_compact_table(lake, "bloom")
-    stored = sorted(map(tuple, lake.table("bloom").collect()))
-    assert stored == direct
-    assert lake.pending_deltas("bloom") == 0
-
-
-def test_bloom_update_table_compaction_cadence_from_manifest(spark, tmp_path):
-    """compact_every is driven by the table manifest (restart-proof):
-    pending deltas accumulate to the threshold, then one compaction
-    collapses them; a fresh Lakehouse handle (simulated restart)
-    continues the cadence with no driver-local state."""
-    from at_data_pipelines_spark.catalog import Lakehouse
-    from at_data_pipelines_spark.ops.sketch import bloom_update_table
-
-    lake = Lakehouse(spark, str(tmp_path / "lake"))
-    m, k = 1 << 9, 3
-
-    def upd(handle, lo):
-        df = spark.createDataFrame([(f"d{i}",) for i in range(lo, lo + 10)], ["v"])
-        bloom_update_table(handle, "bloom", df, "v", m_bits=m, k=k, compact_every=3)
-
-    upd(lake, 0)
-    upd(lake, 10)
-    assert lake.pending_deltas("bloom") == 2
-    upd(Lakehouse(spark, lake.root), 20)  # restart: cadence from manifest
-    # compacted at threshold 3: rewrite() folds all deltas into the base
-    assert lake.pending_deltas("bloom") == 0
-
-
 # -- quantile sketch (ops/sketch.py, r7) ------------------------------------
 
 
@@ -494,11 +349,7 @@ def test_quantile_sketch_accuracy_merge_and_plan(spark):
     build exactly, deterministic across layouts, and the bottom-k
     compiles to TakeOrderedAndProject (never a global one-task
     window)."""
-    from at_data_pipelines_spark.ops.sketch import (
-        quantile_estimate,
-        quantile_sketch,
-        quantile_sketch_merge,
-    )
+    from at_data_pipelines_spark.ops.sketch import quantile_estimate, quantile_sketch
 
     n = 20_000
     df = spark.range(n).select(
@@ -520,9 +371,9 @@ def test_quantile_sketch_accuracy_merge_and_plan(spark):
     # merge ≡ union build, row for row (deterministic hashes)
     a = spark.range(0, 5000).select(F.col("id").alias("k"), F.col("id").cast("double").alias("v"))
     b = spark.range(5000, 10000).select(F.col("id").alias("k"), F.col("id").cast("double").alias("v"))
-    merged = sorted(map(tuple, quantile_sketch_merge(
-        quantile_sketch(a, "v", "k", k=128), quantile_sketch(b, "v", "k", k=128), k=128
-    ).collect()))
+    merged = sorted(map(tuple, quantile_sketch(a, "v", "k", k=128).unionByName(
+        quantile_sketch(b, "v", "k", k=128)
+    ).orderBy("h", "value").limit(128).collect()))
     direct = sorted(map(tuple, quantile_sketch(a.unionByName(b), "v", "k", k=128).collect()))
     assert merged == direct
 
@@ -536,154 +387,3 @@ def test_quantile_sketch_accuracy_merge_and_plan(spark):
     plan = quantile_sketch(df, "v", "k", k=512)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     assert "Window" not in plan
-
-
-def test_bloom_update_table_migrates_r7_pk_layout(spark, tmp_path):
-    """A words table created by the r7 layout carries primary_keys=
-    ['word']; feeding it through the r8 append path without a guard
-    would let any routine optimize() keep-latest and silently drop OR'd
-    bits (false negatives). The guard must collapse + clear the PK on
-    first touch, and probes must stay exact through optimize()."""
-    from pyspark.sql import types as T
-
-    from at_data_pipelines_spark.catalog import Lakehouse
-    from at_data_pipelines_spark.ops.sketch import (
-        bloom_build,
-        bloom_probe,
-        bloom_table_sketch,
-        bloom_update_table,
-    )
-
-    lake = Lakehouse(spark, str(tmp_path / "lake"))
-    m, k = 1 << 10, 3
-    b0 = spark.createDataFrame([(f"doc-{i}",) for i in range(40)], ["v"])
-    b1 = spark.createDataFrame([(f"doc-{i}",) for i in range(20, 60)], ["v"])
-    # r7 shape: PK-upserted words table holding batch0's filter
-    lake.create(
-        "bloom",
-        T.StructType(
-            [T.StructField("word", T.LongType()), T.StructField("bits", T.LongType())]
-        ),
-        [],
-        ["word"],
-    )
-    lake.insert("bloom", bloom_build(b0, "v", m_bits=m, k=k))
-    # r8 update path must migrate (collapse + drop PK) before appending
-    bloom_update_table(lake, "bloom", b1, "v", m_bits=m, k=k, compact_every=0)
-    assert lake._load_meta("bloom").primary_keys == []
-    # the hazard the guard closes: optimize() must now be bit-preserving
-    lake.optimize("bloom")
-    union = b0.unionByName(b1)
-    direct = sorted(map(tuple, bloom_build(union, "v", m_bits=m, k=k).collect()))
-    logical = sorted(map(tuple, bloom_table_sketch(lake, "bloom").collect()))
-    assert logical == direct, "bits lost across migration + optimize()"
-    probed = bloom_probe(lake.table("bloom"), union, "v", m_bits=m, k=k)
-    assert all(r.maybe_member for r in probed.collect()), "false negatives"
-    # idempotent: a second update through the migrated table stays clean
-    bloom_update_table(lake, "bloom", b0, "v", m_bits=m, k=k, compact_every=0)
-    logical = sorted(map(tuple, bloom_table_sketch(lake, "bloom").collect()))
-    assert logical == direct
-
-
-def test_bloom_migration_check_memoized_per_handle(spark, tmp_path):
-    """The migration guard needs a manifest load to learn a ONE-TIME
-    fact; on the hot append path that would cost a read per batch. After
-    the first clean pass the handle must memoize and stop loading."""
-    from pyspark.sql import types as T
-
-    from at_data_pipelines_spark.catalog import Lakehouse
-    from at_data_pipelines_spark.ops.sketch import bloom_update_table
-
-    from at_data_pipelines_spark.ops import sketch as sk
-
-    lake = Lakehouse(spark, str(tmp_path / "lake"))
-    b = spark.createDataFrame([(f"doc-{i}",) for i in range(10)], ["v"])
-    bloom_update_table(lake, "bloom", b, "v", m_bits=1 << 10, k=3, compact_every=0)
-    assert "bloom" in sk._BLOOM_PK_MIGRATED[lake]
-    calls = []
-    orig = lake._load_meta
-    lake._load_meta = lambda name: (calls.append(name), orig(name))[1]
-    bloom_update_table(lake, "bloom", b, "v", m_bits=1 << 10, k=3, compact_every=0)
-    memoized_loads = len(calls)
-    # same call with the memo cleared pays exactly one EXTRA load — the
-    # guard's pre-append check; everything else (insert's own commit
-    # loads) is identical
-    sk._BLOOM_PK_MIGRATED[lake].pop("bloom", None)
-    calls.clear()
-    bloom_update_table(lake, "bloom", b, "v", m_bits=1 << 10, k=3, compact_every=0)
-    assert len(calls) == memoized_loads + 1, (
-        f"memoized call did {memoized_loads} manifest loads, unmemoized "
-        f"{len(calls)} — the guard's per-batch load was not elided"
-    )
-    # a FRESH handle re-checks once (no cross-handle bleed of the memo)
-    lake2 = Lakehouse(spark, lake.root)
-    assert lake2 not in sk._BLOOM_PK_MIGRATED
-    bloom_update_table(lake2, "bloom", b, "v", m_bits=1 << 10, k=3, compact_every=0)
-    assert "bloom" in sk._BLOOM_PK_MIGRATED[lake2]
-
-
-def test_bloom_migration_race_says_retry(spark, tmp_path):
-    """A concurrent commit landing mid-migration must surface as
-    ConcurrentWriteError (refusing the append is correct — the PK trap
-    is still armed) with a message telling the caller a plain retry
-    completes the one-time migration."""
-    import pytest as _pytest
-    from pyspark.sql import types as T
-
-    from at_data_pipelines_spark.catalog import ConcurrentWriteError, Lakehouse
-    from at_data_pipelines_spark.ops.sketch import bloom_build, bloom_update_table
-
-    lake = Lakehouse(spark, str(tmp_path / "lake"))
-    b = spark.createDataFrame([(f"doc-{i}",) for i in range(10)], ["v"])
-    lake.create(
-        "bloom",
-        T.StructType(
-            [T.StructField("word", T.LongType()), T.StructField("bits", T.LongType())]
-        ),
-        [],
-        ["word"],
-    )
-    lake.insert("bloom", bloom_build(b, "v", m_bits=1 << 10, k=3))
-
-    def racing_rewrite(table, fn):
-        raise ConcurrentWriteError("simulated rival commit")
-
-    lake.rewrite = racing_rewrite
-    with _pytest.raises(ConcurrentWriteError, match="retry"):
-        bloom_update_table(lake, "bloom", b, "v", m_bits=1 << 10, k=3)
-    del lake.rewrite
-    # the batch was NOT appended into the PK layout (trap still closed)
-    assert lake.table("bloom").groupBy("word").count().filter("count > 1").count() == 0
-    # and the plain retry completes the migration and the append
-    bloom_update_table(lake, "bloom", b, "v", m_bits=1 << 10, k=3, compact_every=0)
-    assert lake._load_meta("bloom").primary_keys == []
-
-
-def test_bloom_migration_memo_invalidated_by_same_handle_recreate(spark, tmp_path):
-    """Review r10 #3: the migration memo must not outlive the table LIFE
-    it verified — a same-handle drop + recreate WITH the r7 primary keys
-    must re-trigger the guard, not append duplicate-word deltas into a
-    PK table (the Bloom false-negative trap)."""
-    from pyspark.sql import types as T
-
-    from at_data_pipelines_spark.catalog import Lakehouse
-    from at_data_pipelines_spark.ops.sketch import bloom_build, bloom_update_table
-
-    lake = Lakehouse(spark, str(tmp_path / "lake"))
-    b = spark.createDataFrame([(f"doc-{i}",) for i in range(10)], ["v"])
-    bloom_update_table(lake, "bloom", b, "v", m_bits=1 << 10, k=3, compact_every=0)
-    # same handle: recreate the r7 PK layout
-    lake.drop("bloom")
-    lake.create(
-        "bloom",
-        T.StructType(
-            [T.StructField("word", T.LongType()), T.StructField("bits", T.LongType())]
-        ),
-        [],
-        ["word"],
-    )
-    lake.insert("bloom", bloom_build(b, "v", m_bits=1 << 10, k=3))
-    bloom_update_table(lake, "bloom", b, "v", m_bits=1 << 10, k=3, compact_every=0)
-    assert lake._load_meta("bloom").primary_keys == [], (
-        "memo from the dead table life skipped the migration guard"
-    )

@@ -693,100 +693,6 @@ def test_scan_timestamp_bounds(lake, spark):
     assert len(got.inputFiles()) < len(lake.table("tt").inputFiles())
 
 
-# -- MERGE INTO ------------------------------------------------------------
-
-
-def test_merge_update_insert_delete(lake, spark):
-    lake.create("t", SCHEMA, ["year"], ["k", "year"], stats_columns=["k"])
-    lake.upsert("t", _batch(spark, 0, 10, 2023))
-    # source: update 0-2 (v += 1000), delete 3-4, insert 20-21;
-    # rows 5-9 are untouched pass-through
-    src = _batch(spark, 0, 5, 2023, vbase=1000.0).unionByName(
-        _batch(spark, 20, 22, 2023)
-    )
-    lake.merge("t", src, delete_condition=(F.col("k") >= 3) & (F.col("k") <= 4))
-    got = {r.k: r.v for r in lake.table("t").collect()}
-    assert set(got) == {0, 1, 2, 5, 6, 7, 8, 9, 20, 21}
-    assert got[0] == 1000.0 and got[2] == 1002.0  # updated
-    assert got[5] == 5.0 and got[9] == 9.0  # untouched
-    assert got[20] == 20.0  # inserted
-    assert lake.history("t")[-1]["action"] == "merge"
-    # zone maps stayed consistent through the rewrite
-    s = lake.scan("t", where={"k": (20, None)})
-    assert sorted(r.k for r in s.collect()) == [20, 21]
-
-
-def test_merge_insert_only_and_no_insert(lake, spark):
-    lake.create("t", SCHEMA, ["year"], ["k", "year"])
-    lake.upsert("t", _batch(spark, 0, 5, 2023))
-    # update_matched=False: existing rows keep their values
-    lake.merge(
-        "t",
-        _batch(spark, 3, 8, 2023, vbase=500.0),
-        update_matched=False,
-    )
-    got = {r.k: r.v for r in lake.table("t").collect()}
-    assert got[3] == 3.0 and got[4] == 4.0  # kept, not updated
-    assert got[5] == 505.0 and got[7] == 507.0  # inserted
-    # insert_unmatched=False: pure-update merge ignores new keys
-    lake.merge(
-        "t",
-        _batch(spark, 7, 12, 2023, vbase=900.0),
-        insert_unmatched=False,
-    )
-    got = {r.k: r.v for r in lake.table("t").collect()}
-    assert got[7] == 907.0 and 10 not in got and 11 not in got
-
-
-def test_merge_absorbs_pending_deltas_and_duplicate_source_keys(lake, spark):
-    lake.create("t", SCHEMA, ["year"], ["k", "year"])
-    lake.insert("t", _batch(spark, 0, 5, 2023))  # un-optimized delta
-    lake.insert("t", _batch(spark, 0, 3, 2023, vbase=50.0))  # newer delta
-    dup_src = _batch(spark, 0, 2, 2023, vbase=100.0).unionByName(
-        _batch(spark, 0, 2, 2023, vbase=200.0)
-    )
-    lake.merge("t", dup_src)
-    got = {r.k: r.v for r in lake.table("t").collect()}
-    # duplicate source keys collapsed deterministically (max tuple wins)
-    assert got[0] == 200.0 and got[1] == 201.0
-    # pending-delta state was absorbed: key 2 has its newest delta value
-    assert got[2] == 52.0 and got[3] == 3.0
-    meta = lake._load_meta("t")
-    assert meta.live_deltas == [] and meta.dirty_partitions == []
-
-
-def test_merge_vs_duckdb_differential(lake, spark):
-    """Randomized differential: merge() vs a DuckDB FULL OUTER replica of
-    the same MATCHED/NOT-MATCHED semantics."""
-    import duckdb
-
-    rng = random.Random(11)
-    lake.create("t", SCHEMA, ["year"], ["k", "year"])
-    tgt_rows = sorted(rng.sample(range(100), 40))
-    src_rows = sorted(rng.sample(range(130), 40))
-    lake.upsert("t", spark.createDataFrame(
-        [(k, 2023, float(k), dt.date(2024, 1, 1), f"t{k}") for k in tgt_rows], SCHEMA))
-    src = spark.createDataFrame(
-        [(k, 2023, 1000.0 + k, dt.date(2024, 1, 2), f"s{k}") for k in src_rows], SCHEMA)
-    lake.merge("t", src, delete_condition=F.col("k") % 7 == 0)
-    got = sorted((r.k, r.v, r.s) for r in lake.table("t").collect())
-    con = duckdb.connect()
-    con.execute("CREATE TABLE tgt(k BIGINT, v DOUBLE, s VARCHAR)")
-    con.executemany("INSERT INTO tgt VALUES (?, ?, ?)",
-                    [(k, float(k), f"t{k}") for k in tgt_rows])
-    con.execute("CREATE TABLE src(k BIGINT, v DOUBLE, s VARCHAR)")
-    con.executemany("INSERT INTO src VALUES (?, ?, ?)",
-                    [(k, 1000.0 + k, f"s{k}") for k in src_rows])
-    ref = sorted(con.execute("""
-        SELECT COALESCE(t.k, s.k) AS k,
-               CASE WHEN s.k IS NOT NULL THEN s.v ELSE t.v END AS v,
-               CASE WHEN s.k IS NOT NULL THEN s.s ELSE t.s END AS s
-        FROM tgt t FULL OUTER JOIN src s USING (k)
-        WHERE NOT (s.k IS NOT NULL AND s.k % 7 = 0)
-    """).fetchall())
-    assert got == ref
-
-
 def test_table_changes_prunes_unchanged_partitions(lake, spark):
     """Generations are immutable, so a partition whose committed pointer
     is identical in both manifests is provably unchanged — table_changes
@@ -831,28 +737,6 @@ def test_table_changes_absorbs_live_deltas(lake, spark):
     assert set(kinds) == {"update_preimage", "update_postimage"}
     post = {r.k: r.v for r in ch if r._change_type == "update_postimage"}
     assert post == {0: 70.0, 1: 71.0}
-
-
-def test_merge_with_null_pk_values(lake, spark):
-    """NULL primary-key components must pair up null-safely: updates
-    apply once, no duplicate NULL-keyed rows appear."""
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("v", T.DoubleType()),
-        ]
-    )
-    lake.create("t", schema, [], ["k"])
-    lake.upsert(
-        "t", spark.createDataFrame([(None, 1.0), (1, 10.0)], schema)
-    )
-    lake.merge(
-        "t", spark.createDataFrame([(None, 2.0), (2, 20.0)], schema)
-    )
-    rows = sorted(
-        ((r.k if r.k is not None else -1), r.v) for r in lake.table("t").collect()
-    )
-    assert rows == [(-1, 2.0), (1, 10.0), (2, 20.0)]
 
 
 def test_table_changes_null_pk_pairs_as_update(lake, spark):
