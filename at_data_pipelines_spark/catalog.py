@@ -1261,15 +1261,15 @@ def _zorder_ordinal(dtype) -> "F.Column":
 
     def make(c: str) -> F.Column:
         if isinstance(dtype, T.DateType):
-            return F.unix_date(F.col(c)).cast("double")
+            return F.unix_date(_col(c)).cast("double")
         if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-            return F.unix_micros(F.col(c).cast("timestamp")).cast("double")
+            return F.unix_micros(_col(c).cast("timestamp")).cast("double")
         if isinstance(dtype, T.StringType):
             hexpfx = F.rpad(
-                F.hex(F.substring(F.encode(F.col(c), "UTF-8"), 1, 6)), 12, "0"
+                F.hex(F.substring(F.encode(_col(c), "UTF-8"), 1, 6)), 12, "0"
             )
             return F.conv(hexpfx, 16, 10).cast("double")
-        return F.col(c).cast("double")
+        return _col(c).cast("double")
 
     return make
 
@@ -1371,7 +1371,7 @@ class TableMeta:
     dv_sidecars: list[list] = field(default_factory=list)
     # Per-file TOTAL row counts for files carrying deletion vectors
     # (r14): DECODED data-relative file path -> the file's immutable
-    # row count, recorded by the DV write paths (one zero-column count
+    # row count, recorded by the vector writer (one zero-column count
     # job over just the files a delete touches). Lets readers PROVE a
     # file is 100%-deleted (cumulative vectored positions == row count)
     # and drop it at LISTING time instead of scanning every row into
@@ -1437,13 +1437,8 @@ class Lakehouse:
         # tables this handle has seen columnar-checkpoint sidecars for:
         # lets an INLINE save know it must sweep the now-unreferenced
         # sidecars (threshold lowered / table shrank) without paying a
-        # LIST on every small-table save. DDL epoch: bumped by drop()
-        # and a real create(), so derived per-handle memos (e.g. the
-        # Bloom-table migration guard in ops/sketch.py) can detect a
-        # same-handle drop+recreate and re-verify instead of trusting
-        # a memo about a dead table life.
+        # LIST on every small-table save.
         self._sidecar_tables: set[str] = set()
-        self._ddl_epoch = 0
         # persisted deletion-vector build sides (r13 — the masked-read
         # build-floor amortization): (name, table_uuid, version) -> a
         # persisted (__dvd_f, __dvd_p, __dvd_rel) DataFrame. Keyed by
@@ -1455,18 +1450,9 @@ class Lakehouse:
         # handles are shared across writer threads.
         self._dv_cache: dict[tuple, DataFrame] = {}
         self._dv_cache_mu = threading.Lock()
-        # file-split routing memo (r13): (name, uuid, version, dirs) ->
-        # (still-masked paths, clean file paths). A split lists up to
-        # _DV_FILE_SPLIT_DIR_CAP directories on the DRIVER per read —
-        # ~free on file:// but a serial RPC apiece on an object store —
-        # and committed generations are immutable, so the routing of one
-        # manifest version never changes. Plain lists, no Spark state.
-        self._dv_split_cache: dict[tuple, tuple[list[str], list[str]]] = {}
-        # content-addressed per-version routing memo — see _dv_file_routing
-        self._dv_routing_cache: dict[tuple, dict] = {}
         # reader-plan memo (_plan_memo): content-addressed constructed
         # reader DataFrames — plan objects only, no persisted blocks.
-        # All four stores go through _memo's LRU.
+        # Both stores go through _memo's LRU.
         self._plan_cache: dict[tuple, DataFrame] = {}
 
     # fsspec/Polars-style option names → Hadoop s3a configuration keys
@@ -2800,14 +2786,12 @@ class Lakehouse:
             hist = self._history_versions(name)
             meta.version = max([replaced.version] + hist) + 1
             meta.next_seq = replaced.next_seq
-        self._ddl_epoch += 1  # a REAL create (skip-on-exists returned above)
         self._save_meta(meta)
         self._archive_meta(meta, "create(replace)" if replaced is not None else "create")
 
     def drop(self, name: str) -> None:
         if self.exists(name):
             self.fs.delete(self._dir(name))
-        self._ddl_epoch += 1
         self._sidecar_tables.discard(name)
         self._dv_cache_purge(name)
         with self._meta_cache_mu:
@@ -2867,9 +2851,9 @@ class Lakehouse:
         df = self._read_raw(name, meta).drop(_SEQ_COL)
         aggs = [F.count(F.lit(1)).alias("__rows")]
         for c in cols:
-            aggs.append(F.count(c).alias(f"__ct__{c}"))
+            aggs.append(F.count(_col(c)).alias(f"__ct__{c}"))
         for c in orderable:
-            aggs += [F.min(c).alias(f"__mn__{c}"), F.max(c).alias(f"__mx__{c}")]
+            aggs += [F.min(_col(c)).alias(f"__mn__{c}"), F.max(_col(c)).alias(f"__mx__{c}")]
         r = df.agg(*aggs).collect()[0]
         rows = r["__rows"]
         # one shared sketch pass: (column name, value) pairs — every
@@ -2881,7 +2865,7 @@ class Lakehouse:
                         *[
                             F.struct(
                                 F.lit(c).alias("column"),
-                                F.col(c).cast("string").alias("val"),
+                                _col(c).cast("string").alias("val"),
                             )
                             for c in orderable
                         ]
@@ -3123,10 +3107,10 @@ class Lakehouse:
         old = _latest(old_df).withColumn("_o", F.lit(1))
         new = _latest(new_df).withColumn("_n", F.lit(1))
         o_vals = old.select(
-            *pk, *[F.col(c).alias(f"_old_{c}") for c in value_cols], "_o"
+            *pk, *[_col(c).alias(f"_old_{c}") for c in value_cols], "_o"
         ).alias("_ocdc")
         n_vals = new.select(
-            *pk, *[F.col(c).alias(f"_new_{c}") for c in value_cols], "_n"
+            *pk, *[_col(c).alias(f"_new_{c}") for c in value_cols], "_n"
         ).alias("_ncdc")
         # null-safe PK equality: NULL keys must pair up, not appear as
         # a spurious insert+delete
@@ -3138,19 +3122,19 @@ class Lakehouse:
                 F.coalesce(F.col(f"_ncdc.{k}"), F.col(f"_ocdc.{k}")).alias(k)
                 for k in pk
             ],
-            *[F.col(f"_new_{c}") for c in value_cols],
-            *[F.col(f"_old_{c}") for c in value_cols],
+            *[_col(f"_new_{c}") for c in value_cols],
+            *[_col(f"_old_{c}") for c in value_cols],
             "_n",
             "_o",
         )
         same = F.lit(True)
         for c in value_cols:
-            same = same & F.col(f"_new_{c}").eqNullSafe(F.col(f"_old_{c}"))
+            same = same & _col(f"_new_{c}").eqNullSafe(_col(f"_old_{c}"))
 
         def _emit(side: str, rows: DataFrame, tag: str) -> DataFrame:
             return rows.select(
                 *pk,
-                *[F.col(f"_{side}_{c}").alias(c) for c in value_cols],
+                *[_col(f"_{side}_{c}").alias(c) for c in value_cols],
                 F.lit(tag).alias("_change_type"),
             )
 
@@ -3162,7 +3146,7 @@ class Lakehouse:
         pre = _emit("old", updated, "update_preimage")
         post = _emit("new", updated, "update_postimage")
         out = inserts.unionByName(deletes).unionByName(pre).unionByName(post)
-        return out.select(*cols, "_change_type")
+        return out.select(*[_col(c) for c in cols], "_change_type")
 
     # -- DML ---------------------------------------------------------------
     def _seq_dir(self, name: str, seq: int) -> str:
@@ -3242,15 +3226,7 @@ class Lakehouse:
             meta.live_deltas = []
             meta.dirty_partitions = []
             meta.all_dirty = False
-        if token is not None:
-            meta.live_deltas.append(seq)
-        meta.next_seq = max(meta.next_seq, seq + 1)
-        dirty = sorted(r for r in set(rels) if r)
-        seen = set(meta.dirty_partitions)
-        meta.dirty_partitions += [r for r in dirty if r not in seen]
-        if "" in rels:
-            meta.all_dirty = True
-        meta.zone_maps.update(zone)
+        dirty = self._stage_delta(meta, seq, token, rels, zone)
         self._prune_zone_maps(meta)
         self._prune_deletion_vectors(meta)
         rebase = (
@@ -3265,6 +3241,31 @@ class Lakehouse:
             else None
         )
         self._commit_meta(meta, token, action=f"insert({mode})", rebase=rebase)
+
+    @staticmethod
+    def _stage_delta(
+        meta: TableMeta,
+        seq: int,
+        token: "str | None",
+        rels: "list[str]",
+        zone: "dict[str, dict]",
+    ) -> "list[str]":
+        """Add generation ``seq`` to ``meta`` as a live delta: the one
+        place a write lists a delta, shared by ``_commit_append`` and
+        the vector writer's update. Marks ``rels`` dirty (``""`` = the
+        whole table) and records ``zone``; an empty batch (``token``
+        None) only advances ``next_seq``. Returns the sorted dirty
+        partition rels."""
+        if token is not None:
+            meta.live_deltas.append(seq)
+        meta.next_seq = max(meta.next_seq, seq + 1)
+        dirty = sorted(r for r in set(rels) if r)
+        seen = set(meta.dirty_partitions)
+        meta.dirty_partitions += [r for r in dirty if r not in seen]
+        if "" in rels:
+            meta.all_dirty = True
+        meta.zone_maps.update(zone)
+        return dirty
 
     def _commit_replace(
         self,
@@ -3581,9 +3582,9 @@ class Lakehouse:
             aggs = []
             for c in meta.stats_columns:
                 aggs += [
-                    F.min(c).alias(f"__mn__{c}"),
-                    F.max(c).alias(f"__mx__{c}"),
-                    F.count(c).alias(f"__ct__{c}"),
+                    F.min(_col(c)).alias(f"__mn__{c}"),
+                    F.max(_col(c)).alias(f"__mx__{c}"),
+                    F.count(_col(c)).alias(f"__ct__{c}"),
                 ]
             if grp:
                 for r in df.groupBy(*grp).agg(*aggs).collect():
@@ -4044,13 +4045,6 @@ class Lakehouse:
     #: only — leaves whose generation recorded per-file zone keys
     #: (z-ordered compactions) split manifest-only at any dir count
     _DV_FILE_SPLIT_DIR_CAP = 256
-    # r15 carried a 4096-masked-dir cap here (_DV_SPLIT_KEY_PATHS_MAX)
-    # past which the split ran UNMEMOIZED, because the raw path tuples
-    # in the cache key were themselves real driver memory at 8 LRU
-    # entries. r16 digests the variable-width key inputs into one md5,
-    # so the cap (and the per-read driver-CPU re-pass it forced on
-    # wide-mask tables) is gone — keys are a few dozen bytes at any
-    # width.
     #: most dv_file_rows entries the manifest carries (r14). Each is
     #: ~80 bytes of JSON; the cap bounds manifest bloat the way the
     #: rel/file caps do. A table at the cap just stops recording new
@@ -4203,13 +4197,8 @@ class Lakehouse:
                     ent[1] = None
         return stats
 
-    #: live entries in the routing memo — same sizing rationale as
-    #: _DV_SPLIT_CACHE_MAX (a miss re-pays the driver-side inline
-    #: decode + run coalescing, up to 100k varints)
-    _DV_ROUTING_CACHE_MAX = 8
-
     def _dv_file_routing(
-        self, meta: TableMeta, digest: "str | None" = None
+        self, meta: TableMeta
     ) -> "dict[str, tuple[str, list | None]] | None":
         """Classify every vector-carrying file for the read path (r14):
         ``{decoded file rel: ('dead', None) | ('range', runs) |
@@ -4232,27 +4221,6 @@ class Lakehouse:
             # only arises at the dv_file_rows cap overflow — too rare to
             # pay the inline decode for on every count-less plan-memo miss
             return None
-        # content-addressed memo: routing is a pure function of the DV
-        # tiers + file rows (all inside the digest); each plan-memo miss
-        # (and analyze(), the ladder) would otherwise re-pay the
-        # driver-side inline decode. Callers treat the dict as read-only.
-        key = (
-            meta.name,
-            meta.table_uuid,
-            meta.version,
-            digest if digest is not None else self._dv_state_digest(meta),
-        )
-        return self._memo(
-            self._dv_routing_cache,
-            key,
-            lambda: self._dv_route_files(meta),
-            self._DV_ROUTING_CACHE_MAX,
-        )
-
-    def _dv_route_files(
-        self, meta: TableMeta
-    ) -> "dict[str, tuple[str, list | None]] | None":
-        """`_dv_file_routing`'s uncached classification."""
         stats = self._dv_file_stats(meta)
         if stats is None:
             return None
@@ -4335,35 +4303,6 @@ class Lakehouse:
             (masked if can else clean).append(p)
         return masked, clean
 
-    def _dv_record_inline(self, name: str, meta: TableMeta, hits) -> "set[str]":
-        """Merge collected ``(__dv_f, __dv_p)`` hit rows into the inline
-        vectors (each file's new positions joined with its existing
-        entry), record the touched files' row counts, and return the
-        affected partition rels, decoded: they feed the rebase guard's
-        committed-pointer comparison, which is in the raw namespace."""
-        by_file: dict[str, list[int]] = {}
-        for r in hits:
-            by_file.setdefault(r["__dv_f"], []).append(int(r["__dv_p"]))
-        rels: set[str] = set()
-        for f, new_pos in by_file.items():
-            ent = meta.deletion_vectors.get(f)
-            if ent is not None:
-                new_pos = new_pos + _dv_decode(ent)
-            meta.deletion_vectors[f] = _dv_encode(new_pos)
-            rels.add(_uri_unquote(f.rsplit("/", 1)[0].partition("/")[2]))
-        self._dv_record_file_rows(name, meta, {_uri_unquote(f) for f in by_file})
-        return rels
-
-    def _dv_record_sidecar(self, name: str, meta: TableMeta, entry: list) -> "set[str]":
-        """Add a written sidecar ``entry`` to the manifest, record its
-        files' row counts, and return the partition rels it touches."""
-        meta.dv_sidecars.append(entry)
-        if entry[4] is not None:
-            self._dv_record_file_rows(name, meta, set(entry[4]))
-        if entry[3] is not None:
-            return set(entry[3])
-        return self._sidecar_rels(name, [entry])
-
     def _dv_record_file_rows(
         self, name: str, meta: TableMeta, files_decoded: "set[str]"
     ) -> None:
@@ -4371,7 +4310,7 @@ class Lakehouse:
         vectors into ``meta.dv_file_rows`` — ONE zero-column count job
         over exactly those files (the parquet reader materializes no
         data columns for it, so the job is footer/row-group driven).
-        Called by the DV write paths right before their commit, so the
+        Called by the vector writer right before its commit, so the
         counts ride the same manifest PUT that publishes the vectors.
         Files are immutable, so already-recorded counts are never
         re-measured; the cap bounds manifest growth and skipping only
@@ -4380,7 +4319,7 @@ class Lakehouse:
         remaining slots go to the MOST-VECTORED new files first, ranked
         by the cumulative per-file position counts already on the
         driver (r16 — was byte sizes from one LIST per parent dir; the
-        callers append their sidecar/inline entry BEFORE this call, so
+        writer adds its sidecar/inline entry BEFORE this call, so
         `_dv_file_stats` sees the new vectors, and the position count
         is both a lower bound on the file's rows and the direct
         measure of how much the file gains from dead-prune and range
@@ -4486,7 +4425,7 @@ class Lakehouse:
             if inv is None:
                 # lazy one-pass index of the manifest's per-file zone
                 # keys: {leaf -> [file names]} — built at most once per
-                # split (the split cache amortizes it across reads) —
+                # split (the plan memo amortizes it across reads) —
                 # plus {marker'd generation -> [its leaves]} for the
                 # live-delta gen-dir expansion
                 inv = {}
@@ -4847,12 +4786,7 @@ class Lakehouse:
         hygiene on drop()/create(replace); correctness never depends on
         it (the table_uuid in the key already isolates table lives)."""
         with self._dv_cache_mu:
-            for store in (
-                self._dv_cache,
-                self._dv_split_cache,
-                self._dv_routing_cache,
-                self._plan_cache,
-            ):
+            for store in (self._dv_cache, self._plan_cache):
                 for k in [k for k in store if k[0] == name]:
                     v = store.pop(k)
                     if store is self._dv_cache:
@@ -4873,7 +4807,7 @@ class Lakehouse:
         both from the hidden ``_metadata`` file-source column, resolved
         here BEFORE any join/projection can detach it from the scan.
         ``keep_pos=True`` keeps the ``__dv_f``/``__dv_p`` identity
-        columns visible (delete_where's DV builder needs them).
+        columns visible (the vector writer needs them).
         Sidecar vectors (r12) union into the same build side — read
         executor-side from their parquet, never decoded on the driver.
 
@@ -5051,14 +4985,6 @@ class Lakehouse:
     #: full reads must all stay warm
     _PLAN_CACHE_MAX = 32
 
-    #: live entries in the file-split listing memo. Each entry is two
-    #: path lists for one (table, version, mask shape) — cheap to hold,
-    #: but a miss re-pays up to _DV_FILE_SPLIT_DIR_CAP driver LISTs, so
-    #: the bound exists to cap memory on handles cycling many tables/
-    #: versions, not as a hit-rate tune; 8 covers the live version of
-    #: several concurrently-read tables plus a time-travel read or two
-    _DV_SPLIT_CACHE_MAX = 8
-
     def _read_raw(self, name: str, meta: TableMeta) -> DataFrame:
         """Every visible row of a manifest state, vectors masked, with
         ``_SEQ_COL`` — the reader behind ``table()``. Build-side rels
@@ -5076,8 +5002,8 @@ class Lakehouse:
         )
 
     def _memo(self, store: dict, key: tuple, build, bound: int, evict=None):
-        """THE LRU behind the four per-handle memo stores (reader plans,
-        file splits, file routing, DV build sides): a hit moves to the
+        """THE LRU behind the two per-handle memo stores (reader plans,
+        DV build sides): a hit moves to the
         young end; a miss builds OUTSIDE the lock, keeps a racing
         thread's value if one landed first, evicts oldest-first down to
         ``bound`` and calls ``evict`` on every value it drops. A build
@@ -5191,10 +5117,11 @@ class Lakehouse:
     ) -> "DataFrame | None":
         """The TAIL of `_read_entries` (the one reader behind table(),
         scan() and _read_rels), fed its partition/generation-level
-        (masked, clean) split. Steps: (1) split vector-carrying dirs
-        into explicit part-files (memoized — `_dv_split_cache`),
-        rescuing untouched files onto the clean branch; (2) route each
-        touched file by the manifest's per-file proof
+        (masked, clean) split; it runs only on a plan-memo miss. Steps:
+        (1) split vector-carrying dirs into explicit part-files
+        (`_dv_file_split`), rescuing untouched files onto the clean
+        branch; (2) route each touched file by the manifest's per-file
+        proof
         (`_dv_file_routing`): 100%-deleted files are DROPPED at listing
         time, run-shaped files take the consolidated codegen
         NOT-BETWEEN scans (`_dv_range_scan` — r16: encoding-unsafe
@@ -5209,9 +5136,7 @@ class Lakehouse:
         # split without LISTing at any dir count, so the split always
         # runs when a touched set exists
         if touched is not None and masked:
-            hit = self._dv_split_cached(name, meta, masked, touched)
-            masked = list(hit[0])
-            clean = clean + hit[1]
+            masked = self._dv_file_split(masked, touched, clean, meta)
         # per-file routing past the split (r14): with complete
         # per-file stats, a masked FILE whose cumulative vectored
         # positions equal its recorded row count is 100%-DELETED —
@@ -5225,7 +5150,7 @@ class Lakehouse:
         # in the anti-join — mask more, never less.
         range_routed: "list[tuple[str, list]]" = []
         if touched is not None and masked:
-            routing = self._dv_file_routing(meta, digest=digest)
+            routing = self._dv_file_routing(meta)
             if routing is not None:
                 still: list[str] = []
                 for p in masked:
@@ -5308,62 +5233,6 @@ class Lakehouse:
     #: proven plans (32 x 3-unit leaves) while fat-run groups shrink
     #: to ~5 files and stay compiled.
     _DV_RANGE_GROUP_UNITS = 96
-
-    def _dv_split_cached(
-        self,
-        name: str,
-        meta: TableMeta,
-        masked: list[str],
-        touched: "set[str]",
-    ) -> "tuple[list[str], list[str]]":
-        """Memoizing wrapper around `_dv_file_split` — returns the
-        ``(still_masked, rescued_clean)`` pair for one mask shape.
-        Content-addressed over the touched set too (review find #3:
-        same-version mutated metas must not reuse the other content's
-        routing); the per-file ZONE-KEY SET rides along because the
-        inventory split reads ``meta.zone_maps``, which the DV digest
-        does not cover — the full sorted set, not a count (r15 advice
-        find: two metas whose key sets differ but counts match — one
-        key removed, one added — would silently reuse a stale split).
-
-        r16: the variable-width inputs (masked paths, touched files,
-        inventory keys) enter the key as ONE fixed-size md5, so
-        memoization holds at ANY mask width — r15 skipped the memo
-        past 4096 masked dirs because the raw key tuples (100k paths
-        x 8 LRU entries) were real driver memory, and wide-mask tables
-        re-paid the split's driver-CPU pass on every read. ``masked``
-        enters IN CALLER ORDER (it determines the output lists'
-        order); a same-set reorder is only a cache miss. Callers must
-        treat the returned lists as immutable (the cache shares
-        them)."""
-        import hashlib
-
-        h = hashlib.md5()
-        for part in (
-            masked,
-            sorted(touched),
-            # every zone key the split's behavior depends on: per-file
-            # inventory entries AND generation-completeness markers
-            sorted(
-                zk
-                for zk in meta.zone_maps
-                if _zone_key_file(zk) is not None
-                or zk.endswith("/" + _INV_COMPLETE)
-            ),
-        ):
-            for s in part:
-                h.update(s.encode())
-                h.update(b"\0")
-            h.update(b"\1")
-        ck = (name, meta.table_uuid, meta.version, h.hexdigest())
-
-        def split() -> "tuple[list[str], list[str]]":
-            extra: list[str] = []
-            return self._dv_file_split(masked, touched, extra, meta), extra
-
-        return self._memo(
-            self._dv_split_cache, ck, split, self._DV_SPLIT_CACHE_MAX
-        )
 
     def _dv_range_scan(
         self, name: str, meta: TableMeta, range_routed: "list[tuple[str, list]]"
@@ -5815,20 +5684,20 @@ class Lakehouse:
             df = self.spark.createDataFrame([], meta.schema)
         cond = None
         for c, vals in inlist.items():
-            piece = F.col(c).isin(vals)
+            piece = _col(c).isin(vals)
             cond = piece if cond is None else cond & piece
         for c, (lo, hi) in where.items():
             if c in eq:
-                piece = F.col(c) == F.lit(eq[c])
+                piece = _col(c) == F.lit(eq[c])
                 cond = piece if cond is None else cond & piece
                 continue
             if c in inlist:
                 continue  # isin above IS the predicate; (lo,hi) was prune-only
             if lo is not None:
-                piece = F.col(c) >= F.lit(lo)
+                piece = _col(c) >= F.lit(lo)
                 cond = piece if cond is None else cond & piece
             if hi is not None:
-                piece = F.col(c) <= F.lit(hi)
+                piece = _col(c) <= F.lit(hi)
                 cond = piece if cond is None else cond & piece
         return df.filter(cond) if cond is not None else df
 
@@ -6583,110 +6452,104 @@ class Lakehouse:
                     removed.append(f"{dv_dir}/{d}")
         return removed
 
-    def _delete_where_dv(
-        self, name: str, meta: TableMeta, before: TableMeta, pred, mode: str
+    def _write_vectors(
+        self,
+        name: str,
+        meta: TableMeta,
+        before: TableMeta,
+        pred,
+        mode: str,
+        verb: str,
+        transformed=None,
     ) -> bool:
-        """Deletion-vector half of ``delete_where``; True iff committed
-        (or provably nothing to delete). False = over the row bound in
-        'auto' mode — the caller falls back to the rewrite. The matched
-        rows are collected as (file, position) pairs from the DV-masked
-        scan, so re-deleting already-vectored rows is a no-op and
-        successive vector deletes on one file MERGE."""
+        """The one deletion-vector write: ``delete_where``'s, and with
+        ``transformed`` ``update_where``'s merge-on-read (PK-less
+        tables). True iff committed, or nothing matched; False = over
+        the vector budget in 'auto' mode, and the caller falls back to
+        the rewrite.
+
+        The matched rows come off the DV-masked scan as (file, position)
+        pairs, so re-deleting vectored rows is a no-op and successive
+        deletes on one file merge. They are evaluated exactly once: an
+        eager ``localCheckpoint`` bounded at ``cap + 1`` rows feeds the
+        budget count, the vectors and the transformed copies, so a
+        nondeterministic predicate cannot desync them. The checkpointed
+        blocks are released by the ContextCleaner when ``matched`` goes
+        out of scope (the lifecycle _shared_probe_input documents).
+
+        The budget bounds the TABLE's total vectored positions, inline
+        plus sidecars, not only this call's: a per-call cap alone lets
+        under-cap deletes pile vectors onto a partition no compaction
+        touches, and every read would broadcast the lot. Positions ride
+        base64-inline in the manifest while the inline total stays
+        within ``_DV_INLINE_MAX_POSITIONS``; past it this call's
+        positions go to a parquet sidecar written executor-side. An
+        update's transformed copies land as one live delta. Vectors,
+        delta and file row counts commit in one manifest PUT, so a
+        reader sees the old rows or the new rows, never both."""
         cap = self._DV_AUTO_MAX_ROWS
-        # the probe is bounded by the inline tier: past it the matched
-        # set is never collected — it goes straight to a sidecar built
-        # executor-side (r12; the r11 100k driver collect was the bound)
-        inline_cap = min(self._DV_INLINE_MAX_POSITIONS, cap)
         vis = self._visible_paths(name, meta)
         if not vis:
-            return True  # empty table: nothing to delete
-        raw = self._apply_dvs(
+            return True  # empty table: nothing matches
+        matched = self._apply_dvs(
             self._read_raw_unmasked(name, meta, vis), name, meta, keep_pos=True
-        )
-        hits = (
-            raw.filter(pred)
-            .select("__dv_f", "__dv_p")
-            .limit(inline_cap + 1)
-            .collect()
-        )
-        if not hits:
-            return True  # nothing to delete, nothing to commit
-        # cumulative bound (r11 review find): the per-call cap alone lets
-        # a nightly under-cap delete accumulate unbounded vectors on a
-        # partition no compaction touches — every read would then
-        # broadcast the lot, the exact state the cap exists to prevent.
-        # Bound the TABLE's total post-merge position count (inline +
-        # sidecars); past it the rewrite path materializes (auto) or the
-        # caller is told to compact (dv).
-        inline_now, _side_now = self._dv_position_totals(meta)
-        existing = inline_now + _side_now
-        if len(hits) > inline_cap:
-            # big matched set: ONE fresh executor-side evaluation writes
-            # the sidecar (the probe rows are discarded — the written
-            # parquet is the single authoritative matched set, so a
-            # nondeterministic predicate stays self-consistent). The
-            # limit bounds the wasted write when the match blows the
-            # budget: one row past it proves the overflow.
-            budget = max(cap - existing, 0)
-            entry = self._write_dv_sidecar(
-                name, raw.filter(pred).limit(budget + 1)
-            )
-            if entry[1] == 0:
-                # a nondeterministic predicate matched in the probe but
-                # not in the authoritative write: nothing to delete
-                self.fs.delete(f"{self._dir(name)}/{entry[0]}")
-                return True
-            if existing + entry[1] > cap:
-                self.fs.delete(f"{self._dir(name)}/{entry[0]}")
-                if mode == "dv":
-                    raise ValueError(
-                        f"delete_where(mode='dv') on {name!r} matched more "
-                        f"than the table's vector budget ({existing} "
-                        f"accumulated + {entry[1]} new vs cap {cap}) — "
-                        "vectors past this size stop being cheap relative "
-                        "to the rewrite; run optimize()/compact() to "
-                        "materialize the backlog, or use "
-                        "mode='rewrite'/'auto'."
-                    )
-                return False
-            affected_rels = self._dv_record_sidecar(name, meta, entry)
-        else:
-            if existing + len(hits) > cap:
-                if mode == "dv":
-                    raise ValueError(
-                        f"delete_where(mode='dv') on {name!r}: the table "
-                        f"would carry more than {cap} vectored positions in "
-                        f"total ({existing} accumulated + {len(hits)} new) "
-                        "— run optimize()/compact() to materialize the "
-                        "backlog, or use mode='rewrite'/'auto'."
-                    )
-                return False
-            if inline_now + len(hits) > inline_cap:
-                # inline tier would overflow: spill THIS call's hits to a
-                # sidecar (tiny bounded createDataFrame — ≤ inline_cap
-                # rows already on the driver from the probe)
-                import pandas as pd
-
-                fp = self.spark.createDataFrame(
-                    pd.DataFrame(
-                        [(r["__dv_f"], int(r["__dv_p"])) for r in hits],
-                        columns=["__dv_f", "__dv_p"],
-                    ),
-                    T.StructType(
-                        [
-                            T.StructField("__dv_f", T.StringType()),
-                            T.StructField("__dv_p", T.LongType()),
-                        ]
-                    ),
+        ).filter(pred)
+        if transformed is None:
+            matched = matched.select("__dv_f", "__dv_p")
+        matched = matched.limit(cap + 1).localCheckpoint(eager=True)
+        n = matched.count()
+        if n == 0:
+            return True
+        inline_now, side_now = self._dv_position_totals(meta)
+        existing = inline_now + side_now
+        if existing + n > cap:
+            if mode == "dv":
+                over = f"{cap}+" if n > cap else str(n)
+                raise ValueError(
+                    f"{verb}(mode='dv') on {name!r} matched more than the "
+                    f"vector bound allows ({existing} accumulated + {over} "
+                    f"new vs cap {cap}) — run optimize()/compact() to "
+                    "materialize the backlog, or use mode='rewrite'/'auto'."
                 )
-                entry = self._write_dv_sidecar(name, fp)
-                affected_rels = self._dv_record_sidecar(name, meta, entry)
-            else:
-                affected_rels = self._dv_record_inline(name, meta, hits)
+            return False
+        token = None
+        if transformed is not None:
+            seq = self._reserve_seq(name, meta)
+            token = self._write_seq(
+                name, meta, transformed(matched.drop("__dv_f", "__dv_p", _SEQ_COL)), seq
+            )
+            if token is None:
+                # unreachable (matched is checkpointed non-empty), but
+                # committing the vectors alone would lose the rows
+                raise RuntimeError(
+                    f"{verb} on {name!r}: delta write produced no "
+                    "directory for a non-empty matched set"
+                )
+            self._stage_delta(meta, seq, token, *self._spark_written(name, meta, seq, token))
+        ids = matched.select("__dv_f", "__dv_p")
+        if inline_now + n > min(self._DV_INLINE_MAX_POSITIONS, cap):
+            entry = self._write_dv_sidecar(name, ids)
+            meta.dv_sidecars.append(entry)
+            files = set(entry[4] or ())
+            rels = set(entry[3]) if entry[3] is not None else self._sidecar_rels(name, [entry])
+        else:
+            by_file: dict[str, list[int]] = {}
+            for r in ids.collect():
+                by_file.setdefault(r["__dv_f"], []).append(int(r["__dv_p"]))
+            for f, pos in by_file.items():
+                ent = meta.deletion_vectors.get(f)
+                if ent is not None:
+                    pos = pos + _dv_decode(ent)
+                meta.deletion_vectors[f] = _dv_encode(pos)
+            files = {_uri_unquote(f) for f in by_file}
+            # decoded: the rebase guard compares them with the raw
+            # committed pointers
+            rels = {_uri_unquote(f.rsplit("/", 1)[0].partition("/")[2]) for f in by_file}
+        self._dv_record_file_rows(name, meta, files)
         self._merge_dv_sidecars(name, meta)
-        base = affected_rels if meta.partition_keys else None
+        base = rels if meta.partition_keys else None
         rebase = self._make_rebase(before, meta, "rmw", base_rels=base)
-        self._commit_meta(meta, None, action="delete_where(dv)", rebase=rebase)
+        self._commit_meta(meta, token, action=f"{verb}(dv)", rebase=rebase)
         return True
 
     def delete_where(self, name: str, predicate, mode: str = "rewrite") -> None:
@@ -6740,7 +6603,9 @@ class Lakehouse:
                     "the newest copy would resurrect the shadowed older "
                     "row. optimize() first, or use mode='rewrite'/'auto'."
                 )
-            if dv_ok and self._delete_where_dv(name, meta, before, pred, mode):
+            if dv_ok and self._write_vectors(
+                name, meta, before, pred, mode, "delete_where"
+            ):
                 return
             # auto fell back (over the row bound, or PK shadows pending)
             meta = self._load_meta(name)
@@ -6862,8 +6727,8 @@ class Lakehouse:
             return
 
         before = self._snapshot_meta(meta)
-        if mode in ("dv", "auto") and self._update_where_dv(
-            name, meta, before, pred, transformed, mode
+        if mode in ("dv", "auto") and self._write_vectors(
+            name, meta, before, pred, mode, "update_where", transformed
         ):
             return
         if mode == "auto":  # over the bounds: fall through to the rewrite
@@ -6932,81 +6797,3 @@ class Lakehouse:
         self._commit_replace(
             name, meta, before, seq, token, rels, zone, scope, "update_where"
         )
-
-    def _update_where_dv(
-        self, name: str, meta: TableMeta, before: TableMeta, pred, transformed, mode: str
-    ) -> bool:
-        """Merge-on-read half of ``update_where`` (PK-less tables); True
-        iff committed (or nothing matched). The matched rows' identities
-        AND values are collected in one pass; their transformed copies
-        are written as a delta generation, the originals vector-deleted,
-        one manifest PUT commits both — atomic by construction."""
-        cap = self._DV_AUTO_MAX_ROWS
-        inline_cap = min(self._DV_INLINE_MAX_POSITIONS, cap)
-        vis = self._visible_paths(name, meta)
-        if not vis:
-            return True
-        raw = self._apply_dvs(
-            self._read_raw_unmasked(name, meta, vis), name, meta, keep_pos=True
-        )
-        # eager localCheckpoint: the matched set is evaluated EXACTLY
-        # once, so the vector-deleted originals and the written copies
-        # are the same rows even under a nondeterministic predicate
-        # (review find — two independent jobs could desync them, losing
-        # or duplicating rows inside one "atomic" commit). Bounded by
-        # the limit before it materializes; the checkpointed blocks
-        # (≤ cap+1 rows) are released by the ContextCleaner when
-        # ``matched`` goes out of scope — the lifecycle
-        # _shared_probe_input documents.
-        matched = raw.filter(pred).limit(cap + 1).localCheckpoint(eager=True)
-        n_matched = matched.count()
-        if n_matched == 0:
-            return True
-        inline_now, _side_now = self._dv_position_totals(meta)
-        existing = inline_now + _side_now
-        if existing + n_matched > cap:
-            if mode == "dv":
-                over = f"{cap}+" if n_matched > cap else str(n_matched)
-                raise ValueError(
-                    f"update_where(mode='dv') on {name!r}: over the vector "
-                    f"bound ({existing} accumulated + {over} matched vs "
-                    f"cap {cap}) — use mode='rewrite'/'auto', or "
-                    "optimize()/compact() the backlog first."
-                )
-            return False
-        use_sidecar = inline_now + n_matched > inline_cap
-        new_rows = transformed(matched.drop("__dv_f", "__dv_p").drop(_SEQ_COL))
-        seq = self._reserve_seq(name, meta)
-        token = self._write_seq(name, meta, new_rows, seq)
-        if token is None:
-            # unreachable — matched is checkpointed non-empty — but a
-            # silent True here would report success without a commit
-            raise RuntimeError(
-                f"update_where on {name!r}: delta write produced no "
-                "directory for a non-empty matched set"
-            )
-        if use_sidecar:
-            # past the inline tier the originals' identities never touch
-            # the driver: the checkpointed matched set writes the sidecar
-            # executor-side (r12 — the r11 collect was the 100k bound)
-            entry = self._write_dv_sidecar(
-                name, matched.select("__dv_f", "__dv_p")
-            )
-            affected_rels = self._dv_record_sidecar(name, meta, entry)
-        else:
-            affected_rels = self._dv_record_inline(
-                name, meta, matched.select("__dv_f", "__dv_p").collect()
-            )
-        rels, zone = self._spark_written(name, meta, seq, token)
-        meta.live_deltas.append(seq)
-        seen = set(meta.dirty_partitions)
-        meta.dirty_partitions += [r for r in rels if r and r not in seen]
-        if "" in rels:
-            meta.all_dirty = True
-        meta.next_seq = max(meta.next_seq, seq + 1)
-        meta.zone_maps.update(zone)
-        self._merge_dv_sidecars(name, meta)
-        base = affected_rels if meta.partition_keys else None
-        rebase = self._make_rebase(before, meta, "rmw", base_rels=base)
-        self._commit_meta(meta, token, action="update_where(dv)", rebase=rebase)
-        return True

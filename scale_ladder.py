@@ -463,7 +463,6 @@ def main() -> None:
             measure_dv_range_consolidated(spark, 64, hostile=True)
         )
         out["pruned_plan_memo"] = measure_plan_memo_pruned(spark)
-        out["dv_split_memo_wide"] = measure_dv_split_memo_wide(spark)
         # r16: the runs-cap boundary re-mapped under the consolidated
         # scan — at the cap (16 runs/file) the budgeted scan must be
         # at-or-below the r15 fixed-32-leaf plan; past the cap
@@ -1183,84 +1182,6 @@ def measure_dv_range_consolidated(
     finally:
         Lakehouse._DV_RANGE_MAX_RUNS = old_cap
         lake._dv_cache_purge("t")
-    lake.drop("t")
-    return sec
-
-
-def measure_dv_split_memo_wide(spark, ndirs: int = 8192) -> dict:
-    """r16 rung (r15 verdict task #2): the split-cache key digests its
-    variable-width inputs into one md5, so memoization holds at ANY
-    mask width — r15 skipped the memo past 4096 masked dirs (the raw
-    key tuples were real driver memory) and a wide-mask table re-ran
-    the split's driver-CPU pass on EVERY read. Protocol: one committed
-    meta carrying a synthetic 2x``ndirs``-file manifest inventory
-    (so the pass is pure driver CPU — the r16 common case; zero I/O
-    either way), ``ndirs`` masked dirs, one touched file per dir.
-    ``split_rebuild_s`` (cache cleared per call) is the r15 per-read
-    cost at this width; ``split_memo_hit_s`` is the r16 steady state
-    (md5 over the key inputs + one dict hit)."""
-    import tempfile
-    import time as _time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from at_data_pipelines_spark.catalog import Lakehouse
-
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("part", T.StringType()),
-            T.StructField("v", T.DoubleType()),
-        ]
-    )
-    work = tempfile.mkdtemp(prefix="dvsplitmemo_")
-    lake = Lakehouse(spark, work)
-    lake.create("t", schema, ["part"], [])
-    lake.insert(
-        "t",
-        spark.range(100).select(
-            F.col("id").alias("k"),
-            F.lit("p0").alias("part"),
-            (F.col("id") * 1.0).alias("v"),
-        ),
-    )
-    meta = lake._load_meta("t")
-    base = f"{lake._dir('t')}/data"
-    masked: list[str] = []
-    touched: set[str] = set()
-    for i in range(ndirs):
-        leaf = f"_seq=0/part=w{i}"
-        masked.append(f"{base}/{leaf}")
-        for j in range(2):
-            meta.zone_maps[f"{leaf}/part-0000{j}-cafe{i}.c000.parquet"] = {}
-        touched.add(f"{leaf}/part-00000-cafe{i}.c000.parquet")
-    sec: dict = {
-        "control_s": round(_pinned_control(spark), 3),
-        "masked_dirs": ndirs,
-        "inventory_keys": 2 * ndirs,
-    }
-
-    def timed(fn, n=5):
-        fn()  # warm
-        return round(min(_timeit(fn) for _ in range(n)), 4)
-
-    def _timeit(fn):
-        t0 = _time.perf_counter()
-        fn()
-        return _time.perf_counter() - t0
-
-    def rebuild():
-        lake._dv_split_cache.clear()
-        lake._dv_split_cached("t", meta, masked, touched)
-
-    sec["split_rebuild_s"] = timed(rebuild)
-    lake._dv_split_cached("t", meta, masked, touched)
-    sec["split_memo_hit_s"] = timed(
-        lambda: lake._dv_split_cached("t", meta, masked, touched)
-    )
-    still, extra = lake._dv_split_cached("t", meta, masked, touched)
-    assert len(still) == ndirs and len(extra) == ndirs, (len(still), len(extra))
     lake.drop("t")
     return sec
 

@@ -509,6 +509,40 @@ def test_upsert_with_quote_and_backtick_partition_key(spark, tmp_path):
     assert moved == {(i, y, "r9" if i == 3 else r) for i, y, r, _ in first}
 
 
+
+def test_backtick_value_column_reads_and_maintenance(spark, tmp_path, monkeypatch):
+    """A VALUE column name holding a backtick reaches five builders that
+    make a Column from it: the zone-map aggregate of a distributed write,
+    ``scan(where=)``, ``optimize(zorder_by=)``'s ordinal, ``analyze()``
+    and ``table_changes``' value columns. Each must quote the name, not
+    parse it as SQL. Small batches take the driver-side fast path, which
+    builds no zone-map aggregate, so the writes are forced distributed."""
+    monkeypatch.setattr(Lakehouse, "_FAST_UPSERT_MAX_ROWS", 0)
+    col = "v`al"
+    schema = T.StructType(
+        [
+            T.StructField("id", T.IntegerType()),
+            T.StructField("part", T.IntegerType()),
+            T.StructField(col, T.DoubleType()),
+        ]
+    )
+    lake = Lakehouse(spark, str(tmp_path / "lake"))
+    lake.create("t", schema, ["part"], ["id"], stats_columns=[col], retain_versions=10)
+    rows = [(i, i % 2, float(i)) for i in range(10)]
+    lake.upsert("t", spark.createDataFrame(rows, schema))
+    assert sorted(r["id"] for r in lake.scan("t", where={col: (3.0, 5.0)}).collect()) == [3, 4, 5]
+    v0 = lake._load_meta("t").version
+    lake.upsert("t", spark.createDataFrame([(4, 0, 40.0)], schema))
+    lake.optimize("t", zorder_by=[col], zorder_files=2, full=True)
+    want = {i: float(i) for i in range(10)} | {4: 40.0}
+    assert {r["id"]: r[col] for r in lake.table("t").collect()} == want
+    stats = lake.analyze("t")
+    assert stats["rows"] == 10 and stats["columns"][col]["nulls"] == 0
+    changes = sorted(
+        (r["id"], r[col], r["_change_type"]) for r in lake.table_changes("t", v0).collect()
+    )
+    assert changes == [(4, 4.0, "update_preimage"), (4, 40.0, "update_postimage")]
+
 def test_compact_zorder_layout_on_pkless_table(lake, spark):
     """compact(zorder_by=...) lays a PK-less table out Morton-ordered
     with per-file zone maps, preserving every row — the re-clustering

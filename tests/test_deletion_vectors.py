@@ -219,7 +219,7 @@ def test_dv_rival_append_elsewhere_rebases(lake, spark):
     rival.insert("t", _batch(spark, 100, 110, 1), mode="append")
     # drive the DV path against the STALE meta: the commit must rebase
     pred = F.coalesce(F.col("k") < 5, F.lit(False))
-    assert lake._delete_where_dv("t", meta, before, pred, "dv") is True
+    assert lake._write_vectors("t", meta, before, pred, "dv", "delete_where") is True
     fresh = Lakehouse(lake.spark, lake.root)
     assert fresh.table("t").count() == 110 - 5
     assert sorted(r.k for r in fresh.table("t").filter("part = 0").collect()) == list(range(5, 50))
@@ -2114,9 +2114,10 @@ def test_dv_routing_overshoot_forces_join_and_warns(lake, spark, monkeypatch):
     with pytest.warns(RuntimeWarning, match="invariant broken"):
         routing = lake._dv_file_routing(m)
     assert routing == {f: ("join", None)}
-    # and the read over the corrupt meta still answers correctly —
-    # the anti-join never trusted the per-file proof
-    got = sorted(r.k for r in lake._read_raw("t", m).collect())
+    # and the read over the corrupt meta warns too, and still answers
+    # correctly — the anti-join never trusted the per-file proof
+    with pytest.warns(RuntimeWarning, match="invariant broken"):
+        got = sorted(r.k for r in lake._read_raw("t", m).collect())
     assert got == list(range(1_000, 2_000))
 
 
@@ -2485,73 +2486,6 @@ def test_dv_range_mixed_safe_and_unsafe_rels_one_read(lake, spark):
     assert "Join" not in plan, plan
 
 
-def test_dv_split_cache_memoizes_at_any_width_digest_key(lake, spark, monkeypatch):
-    """r16: the split-cache key digests its variable-width inputs
-    (masked paths, touched files, inventory key set) into one md5 —
-    r15 skipped the memo past 4096 masked dirs because the raw path
-    tuples were real driver memory, so wide-mask tables re-ran the
-    split's driver-CPU pass on every read. Pins: (a) same content
-    reuses the SAME split object at 5,000 masked dirs (above the old
-    bound), (b) any content change — including a per-file zone-key
-    SET swap that keeps the COUNT equal (r15 advice find: the old key
-    held only the count) — re-runs the split."""
-    import copy
-
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("part", T.IntegerType()),
-            T.StructField("v", T.DoubleType()),
-        ]
-    )
-    lake.create("t", schema, ["part"], [], stats_columns=["k"])
-    lake.insert(
-        "t",
-        spark.range(4_000).select(
-            F.col("id").alias("k"),
-            (F.col("id") % 4).cast("int").alias("part"),
-            (F.col("id") * 1.0).alias("v"),
-        ),
-    )
-    lake.compact("t", zorder_by=["k"], zorder_files=2, full=True)
-    lake.delete_where("t", F.col("k") < 100, mode="dv")
-    m = lake._load_meta("t")
-    touched = lake._dv_touched_files(m)
-    assert touched is not None
-    calls = []
-    orig = Lakehouse._dv_file_split
-    monkeypatch.setattr(
-        Lakehouse,
-        "_dv_file_split",
-        lambda self, *a: (calls.append(1), orig(self, *a))[1],
-    )
-    # (a) 5,000 masked dirs — above the dead r15 bound. The fake dirs
-    # carry no inventory and the LIST budget is zeroed, so the split
-    # keeps them whole without touching the filesystem.
-    monkeypatch.setattr(Lakehouse, "_DV_FILE_SPLIT_DIR_CAP", 0)
-    base = f"{lake._dir('t')}/data"
-    wide = [f"{base}/_seq=0/part={i}" for i in range(5_000)]
-    a = lake._dv_split_cached("t", m, wide, touched)
-    assert len(a[0]) == 5_000 and a[1] == []
-    assert lake._dv_split_cached("t", m, wide, touched) is a, (
-        "same content above the old 4096-dir bound must hit the memo"
-    )
-    assert len(calls) == 1
-    # (b) same version, same masked/touched, per-file zone-key SET
-    # swapped with COUNT unchanged: one real key out, one fake key in
-    # (under an unmasked leaf, so only the digest sees it) — a count
-    # key would reuse the stale split; the set digest must miss
-    m2 = copy.deepcopy(m)
-    real = next(zk for zk in m2.zone_maps if zk.endswith(".parquet"))
-    m2.zone_maps.pop(real)
-    m2.zone_maps["_seq=999/part-deadbeef.c000.snappy.parquet"] = {}
-    assert sum(1 for zk in m2.zone_maps if zk.endswith(".parquet")) == sum(
-        1 for zk in m.zone_maps if zk.endswith(".parquet")
-    )
-    lake._dv_split_cached("t", m2, wide, touched)
-    assert len(calls) == 2, "equal-count key-set swap must re-run the split"
-
-
 def test_file_inventory_recorded_for_every_table_split_never_lists(
     lake, spark, monkeypatch
 ):
@@ -2772,8 +2706,9 @@ def test_dv_split_expands_marker_complete_live_delta_generations(lake, spark):
     orig = lake.fs.list_dir
     lake.fs.list_dir = lambda p: (calls.append(p), orig(p))[1]
     try:
-        still, extra = lake._dv_split_cached(
-            "t", m, [f"{base}/_seq=0", f"{base}/_seq=1"], touched
+        extra: list[str] = []
+        still = lake._dv_file_split(
+            [f"{base}/_seq=0", f"{base}/_seq=1"], touched, extra, m
         )
         lake._dv_cache_purge("t")
         got = sorted(r.k for r in lake.table("t").collect())
@@ -2797,7 +2732,8 @@ def test_dv_split_expands_marker_complete_live_delta_generations(lake, spark):
     old_budget = Lakehouse._DV_FILE_SPLIT_DIR_CAP
     Lakehouse._DV_FILE_SPLIT_DIR_CAP = 0  # and no LIST rescue either
     try:
-        still2, extra2 = lake._dv_split_cached("t", m2, monkey_masked, touched)
+        extra2: list[str] = []
+        still2 = lake._dv_file_split(monkey_masked, touched, extra2, m2)
     finally:
         Lakehouse._DV_FILE_SPLIT_DIR_CAP = old_budget
     assert sorted(still2) == sorted(monkey_masked) and extra2 == []
@@ -2943,7 +2879,7 @@ def test_three_readers_agree_with_kept_set_oracle(lake, spark, monkeypatch, tier
 
 
 def test_memo_lru_bound_and_eviction_under_threads():
-    """`Lakehouse._memo`, the LRU behind the four memo stores, under
+    """`Lakehouse._memo`, the LRU behind the two memo stores, under
     contention: a lookup returns its own key's value, the store never
     exceeds its bound, and every value a build returned is either still
     stored or was handed to the eviction hook exactly once (a racing

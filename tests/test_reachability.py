@@ -230,3 +230,31 @@ def test_every_root_names_a_definition():
     assert not stale, (
         "ROOTS names definitions that do not exist; a stale root could hide "
         "dead code under a reused name:\n  " + "\n  ".join(stale))
+
+
+def write_only_attributes() -> list[str]:
+    """``module.attr`` for each ``self.<attr>`` the package assigns (plain,
+    annotated or augmented) and never loads, on any object, anywhere in
+    the package."""
+    stored: dict[str, set[str]] = {}
+    loaded: set[str] = set()
+    for path in sorted(PKG.rglob("*.py")):
+        mod = ".".join(path.relative_to(PKG).with_suffix("").parts)
+        for n in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(n, ast.Attribute):
+                continue
+            if isinstance(n.ctx, ast.Load):
+                loaded.add(n.attr)
+            elif isinstance(n.value, ast.Name) and n.value.id == "self":
+                stored.setdefault(n.attr, set()).add(mod)
+    return sorted(f"{m}.{a}" for a, mods in stored.items() if a not in loaded for m in mods)
+
+
+def test_no_instance_attribute_is_write_only():
+    """Instance state that is written but never read is dead code the
+    definition walk cannot see: each write is wasted work, and its
+    comment tends to cite a reader that is gone."""
+    dead = write_only_attributes()
+    assert not dead, (
+        "instance attributes assigned but never read; delete them or read "
+        "them:\n  " + "\n  ".join(dead))
